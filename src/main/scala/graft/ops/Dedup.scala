@@ -1972,20 +1972,12 @@ object Dedup {
     * thresholds can't express (a~b, b~c does not imply a~c passes the
     * threshold).
     *
-    * Algorithm: min-label propagation with POINTER JUMPING. Each round
-    * (a) relaxes every node's label to the min over its neighbors'
-    * labels, then (b) jumps each label to its label's own label
-    * (label(x) <- label(label(x)) — sound because labels are node ids of
-    * the same component and label(y) <= y monotonically). Relaxation
-    * alone needs eccentricity(min-node) rounds (measured 8 on the sf0.1
-    * SimHash graph's 3721-node giant component); jumping halves the
-    * remaining depth each round, so the loop converges in O(log d)
-    * rounds (4 on that same graph). Each round is two shuffles of the
-    * label table (|V| rows) plus one of the edge list (2|E| rows) —
-    * at 100 TB both are orders of magnitude smaller than the corpus the
-    * pairs came from, and the edge list is materialized ONCE so the
-    * upstream near-dup pipeline never re-runs
-    * across iterations. Iterative-algorithm hygiene: the per-round
+    * Algorithm, chosen by the observed pair count alone: driver-side
+    * union-find ([[localCcFinished]]) at or below
+    * spark.graft.cc.localThreshold pairs, large-star/small-star
+    * contraction ([[starContractionLabels]]) above it. The pair table
+    * is materialized ONCE so the upstream near-dup pipeline never
+    * re-runs across rounds. Iterative-algorithm hygiene: the per-round
     * materialization also truncates lineage, keeping plan size constant
     * — localCheckpoint by default, reliable checkpoint() when
     * spark.graft.cc.checkpointDir is set.
@@ -2011,7 +2003,7 @@ object Dedup {
     // materialization; observe() fills the same number during the
     // materialization job itself — one scheduler round saved on EVERY
     // CC invocation (the merge/build/retract paths all funnel here).
-    // Reliable-checkpoint caveat (the observedSum contract below):
+    // Reliable-checkpoint caveat (see [[starContractionLabels]]):
     // checkpoint() executes the plan twice, so the observed count
     // reads ~2x there — which only ever routes borderline graphs
     // (localThreshold/2 .. localThreshold pairs) to the distributed
@@ -2058,267 +2050,45 @@ object Dedup {
   private[graft] def connectedComponentsMaterialized(pairs0: DataFrame,
       pairCount: Long): DataFrame = {
     val ss = pairs0.sparkSession
-    val ckptDir = ss.conf.getOption("spark.graft.cc.checkpointDir")
-    ckptDir.foreach(ss.sparkContext.setCheckpointDir)
-    val debug = sys.env.contains("GRAFT_CC_DEBUG")
-    def timed[T](what: String)(body: => T): T = ccTimed(what)(body)
-    def materialize(df: DataFrame): DataFrame = ccMaterialize(ss, df)
     // SMALL-GRAPH FAST PATH (round 10). Below a size threshold the
-    // distributed loops' cost is pure scheduler-round latency
-    // (~0.3-0.5s per materialized round, 4-6 rounds — the measured
-    // q61 floor that showed up identically under q61b/q61c/q89/s15),
-    // not data volume. So: materialize the self-loop-filtered pair
-    // table ONCE (upstream — the signature pipelines — runs exactly
-    // once, as before; the table is pair-graph-bounded, the same bound
-    // every CC round already holds in executor memory), count it, and
-    // when the graph is small run min-root union-find ON THE DRIVER —
-    // the very reference algorithm PropertiesSpec pins both
-    // distributed paths against. 100k pairs = 1.6 MB of longs, a
-    // bounded collect by the documented nprobe/bucket-ids convention.
-    // At 100 TB the near-dup graph blows past the threshold and takes
-    // the star path unchanged — this is scale-ADAPTIVE dispatch, the
-    // same posture as AQE's local-relation shortcuts. Opt out (or
-    // retune) via spark.graft.cc.localThreshold; an explicitly set
-    // spark.graft.cc.algo also bypasses it (see below).
+    // distributed rounds' cost is pure scheduler-round latency
+    // (~0.3-0.5s per materialized round — the measured q61 floor that
+    // showed up identically under q61b/q61c/q89/s15), not data volume.
+    // So when the (already materialized, counted) pair table is small,
+    // run min-root union-find ON THE DRIVER — the very reference
+    // algorithm PropertiesSpec pins the star path against. 100k pairs
+    // = 1.6 MB of longs, a bounded collect by the documented
+    // nprobe/bucket-ids convention. At 100 TB the near-dup graph blows
+    // past the threshold and takes the star path unchanged — this is
+    // scale-ADAPTIVE dispatch, the same posture as AQE's local-relation
+    // shortcuts. Opt out (or retune) via spark.graft.cc.localThreshold.
     //
     // doc_a != doc_b (applied in the public wrapper) makes the
-    // node-domain contract identical across all three paths: a
-    // self-pair carries no connectivity and registers no node
-    // (asserted on random graphs with planted self-loops in
-    // PropertiesSpec).
+    // node-domain contract identical across both paths: a self-pair
+    // carries no connectivity and registers no node (asserted on random
+    // graphs with planted self-loops in PropertiesSpec).
     val localThreshold = ss.conf
       .getOption("spark.graft.cc.localThreshold")
       .map(_.toLong).getOrElse(100000L)
-    // an EXPLICIT spark.graft.cc.algo wins over the size dispatch
-    // (ADVICE r10): a caller pinning 'jump' or 'star' for an A/B or a
-    // debug run gets that path even on a small graph, without also
-    // having to know about localThreshold
-    val algoConf = ss.conf.getOption("spark.graft.cc.algo")
-    if (algoConf.isEmpty && localThreshold > 0 &&
-        pairCount <= localThreshold)
-      return timed("local")(localCcFinished(ss, pairs0))
-    // Algorithm switch (VERDICT r6/r7: the jump loop is at its measured
-    // floor — 5 x ~0.42s scheduler rounds + labels0 — so the round-count
-    // cut has to come from a structurally different algorithm):
-    //   star (default) — two-phase large-star/small-star contraction
-    //                    (Kiveris et al., MapReduce-and-Beyond), which
-    //                    rewrites the EDGE SET toward a star forest
-    //                    instead of propagating labels over a fixed one;
-    //                    4 materialized jobs on the sf0.1 SimHash graph
-    //                    (3 working + 1 confirm) vs the jump loop's 6
-    //                    (labels0 + 4 working + 1 confirm). Measured
-    //                    same-session A/B (AbQ61, min of 3 warm runs,
-    //                    two interleaved blocks): star 2.41-2.69s vs
-    //                    jump 2.66-3.19s; per-round 270-520ms both.
-    //   jump           — the min-label + pointer-jumping loop below,
-    //                    kept as the measured-baseline opt-out.
-    if (algoConf.getOrElse("star") == "star")
-      return ccFinish(starContractionLabels(pairs0, materialize, debug))
-    val realPairs = pairs0
-    val edgesPlan = realPairs
-      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(realPairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .repartition(col("src"))
-      .observe("cc_edge_count", count(lit(1)).as("n"))
-    var edges = timed("edges")(materialize(edgesPlan))
-    val edgeCount = {
-      val row = edgesPlan.queryExecution.observedMetrics("cc_edge_count")
-      if (row.isNullAt(0)) 0L else row.getLong(0)
-    }
-    // LOOP-SCOPED SHUFFLE WIDTH, auto-sized from the observed edge
-    // count (free: the metric fills during the edges materialization
-    // job). The iterative stages only ever shuffle the edge and label
-    // tables — bounded by the PAIR GRAPH, typically orders smaller
-    // than the corpus that produced it — so running them at the
-    // session's corpus-sized width just pays 32-way task launch +
-    // AQE bookkeeping per round for KB-sized partitions (measured at
-    // sf0.1: 8-way loop beats 32-way by ~0.3s over 5 rounds). Sizing:
-    // ~4M edge rows (~128MB) per reducer, floor 8, capped at the
-    // session width so a 100 TB pair graph (billions of edges) keeps
-    // full parallelism. Reliable-checkpoint mode observes 2x the true
-    // count (see observedSum caveat) — only ever widens, harmless.
-    // The narrowed edge re-checkpoint is one tiny extra job, skipped
-    // entirely when the widths already agree (tests at 4, clusters at
-    // scale).
-    val sessionSp = ss.conf.get("spark.sql.shuffle.partitions")
-    val loopSp = math.min(
-      scala.util.Try(sessionSp.toLong).getOrElse(Long.MaxValue),
-      math.max(8L, edgeCount / 4000000L + 1L)).toString
-    if (loopSp != sessionSp) {
-      edges = timed("edges-narrow")(materialize(
-        edges.repartition(loopSp.toInt, col("src"))))
-      ss.conf.set("spark.sql.shuffle.partitions", loopSp)
-    }
-    // Initial labels carry round 1's relaxation for free: the edge list
-    // is symmetric, so every node occurs as dst and min(id, min(src))
-    // over its group IS label_1 — same single shuffle that a bare
-    // node-set distinct would cost.
-    /** label(x) <- label(label(x)). Sound because every label is a node
-      * id of the same component and label(y) <= y monotonically; the
-      * shortcut compresses label chains so propagation distance
-      * compounds per round instead of advancing one hop. The probe side
-      * is the (tiny) label table itself — AQE turns it into a broadcast
-      * — so jumps add no shuffle. */
-    def jump(l: DataFrame): DataFrame = {
-      val parent = l.select(col("id").as("jp"), col("label").as("jl"))
-      l.join(parent, col("label") === col("jp"))
-        .select(col("id"), least(col("label"), col("jl")).as("label"))
-    }
-
-    // (Measured, not shipped: double-jumping THIS initial table, or a
-    // third jump per round, both cost a round instead of saving one on
-    // the sf0.1 SimHash graph — 6 and 5 rounds respectively vs 5. The
-    // jump count is an empirical knob, not monotone.)
-    /** Exact label-sum as an OBSERVED metric: strict monotone decrease
-      * while any label changes, so an unchanged sum IS convergence.
-      * DECIMAL(38,0): a 100 TB edge list can carry ~2^40 nodes of
-      * ~2^63-scale ids — a long sum would wrap.
-      *
-      * observe() instead of a separate agg action (VERDICT r4 #7): the
-      * CollectMetrics node is a pass-through whose accumulators fill
-      * DURING the round's own materialization job, so each round costs
-      * ONE job, not two — at this scale a round is ~0.4s of scheduler
-      * floor, so the removed per-round labelSum job is a direct ~0.4s/
-      * round saving. observedMetrics is read post-hoc from the executed
-      * QueryExecution (non-blocking; the checkpoint already ran).
-      *
-      * RELIABLE-CHECKPOINT CAVEAT (ADVICE r5): with
-      * spark.graft.cc.checkpointDir set, `df.checkpoint()` executes the
-      * plan TWICE (the eager materializing count, then the checkpoint
-      * job recomputing the unpersisted RDD), so the CollectMetrics
-      * accumulator sums two passes and observedSum reports ~2x the true
-      * label sum in that mode. Convergence is unaffected — both sides
-      * of every compare are equally scaled, and the compare is exact
-      * equality of a deterministic sum — but the GRAFT_CC_DEBUG sums
-      * are execution-count-scaled, and any future ABSOLUTE use of the
-      * metric must divide by the execution count. Asserted by
-      * MinhashStoreSpec's reliable-checkpoint case, whose long-chain
-      * graph drives several rounds of the compare in that mode.
-      * (Persisting before
-      * checkpoint would de-scale it at the cost of caching every
-      * round's labels; the metric is only ever compared, so the
-      * documented scale is the cheaper contract.) */
-    def sumCol = sum(col("label").cast("decimal(38,0)")).as("s")
-    def observedSum(df: DataFrame, name: String): java.math.BigDecimal = {
-      val row = df.queryExecution.observedMetrics(name)
-      if (row.isNullAt(0)) java.math.BigDecimal.ZERO else row.getDecimal(0)
-    }
-
-    // labels0 + the loop run under the narrowed width; restored below
-    // before returning (the final window/sort plan is lazy and executes
-    // at the caller's session width)
-    val labels = try {
-    val labels0 = edges
-      .groupBy(col("dst").as("id"))
-      .agg(least(col("dst"), min(col("src"))).as("label"))
-      .observe("cc_sum_init", sumCol)
-    var labels = timed("labels0")(materialize(labels0))
-
-    /** One propagation step: edge relaxation (one shuffle — the
-      * min-aggregation over neighbor labels) followed by two pointer
-      * jumps over the freshly relaxed table. Measured on the sf0.1
-      * SimHash giant component (3721 nodes, min-node eccentricity 8):
-      * relax-only needs 9 materialized rounds, relax+jump 7,
-      * relax+jump+jump 5; each extra jump is a broadcast probe while
-      * each saved round is a full checkpoint cycle. */
-    def relaxJump(l: DataFrame): DataFrame = {
-      val nbrMin = edges
-        .join(l.select(col("id").as("src"), col("label").as("nl")), "src")
-        .groupBy(col("dst").as("id")).agg(min(col("nl")).as("nbr"))
-      val relaxed = l
-        .join(nbrMin, Seq("id"), "left_outer")
-        .select(col("id"),
-          least(col("label"), coalesce(col("nbr"), col("label")))
-            .as("label"))
-      jump(jump(relaxed))
-    }
-
-    // Steps per MATERIALIZED round. The amortize-the-scheduler-floor
-    // idea (chain several relax+jump+jump steps into one job so fewer
-    // materializations pay the ~0.4s fixed cost) is MEASURED NEGATIVE
-    // on the sf0.1 graph: steps=1 4.2-4.8s, steps=2 5.0-5.9s, steps=3
-    // 57-76s (!) — each unmaterialized step stacks three more
-    // self-joins onto a plan Catalyst must re-optimize whole, and past
-    // ~2 steps optimizer time dwarfs the saved scheduling; wasted
-    // overshoot steps after convergence also grow with the block size.
-    // Convergence stays sound at any setting (the sum is compared per
-    // block; an unchanged block sum means no step inside it changed
-    // anything), so the knob remains for bigger graphs where relaxation
-    // work could dominate fixed cost — default 1.
-    // malformed env values fall back to the default instead of failing
-    // q61 with a NumberFormatException (ADVICE r5)
-    val stepsPerRound = math.max(1, scala.util.Try(
-      sys.env.getOrElse("GRAFT_CC_STEPS", "1").toInt).getOrElse(1))
-
-    var round = 0
-    var prevSum = observedSum(labels0, "cc_sum_init")
-    // No up-front isEmpty action: an empty label table sums to ZERO and
-    // the first round's unchanged-ZERO compare converges immediately —
-    // one cheap round on empty input instead of one extra job on every
-    // input.
-    var converged = false
-    while (!converged) {
-      val t0 = System.nanoTime()
-      val stepped = (1 to stepsPerRound).foldLeft(labels)((l, _) =>
-        relaxJump(l))
-      val jumped = stepped.observe(s"cc_sum_$round", sumCol)
-      val next = materialize(jumped)
-      val newSum = observedSum(jumped, s"cc_sum_$round")
-      converged = newSum.compareTo(prevSum) == 0
-      prevSum = newSum
-      labels = next
-      round += 1
-      if (debug) System.err.println(s"[graft.cc] round $round: " +
-        s"sum=$newSum ${(System.nanoTime() - t0) / 1000000} ms")
-    }
-    labels
-    } finally if (loopSp != sessionSp)
-      ss.conf.set("spark.sql.shuffle.partitions", sessionSp)
-    ccFinish(labels)
+    if (localThreshold > 0 && pairCount <= localThreshold)
+      ccTimed("local")(localCcFinished(ss, pairs0))
+    else ccFinish(starContractionLabels(pairs0))
   }
 
-  /** Driver-side union-find labels for the small-graph fast path:
-    * iterative find with path compression, min-root union (the root IS
-    * the component min, inductively: every union makes the smaller
-    * root the parent), nodes = endpoints of the collected
-    * (already self-loop-filtered) pair table. Identical label contract
-    * to both distributed paths — PropertiesSpec checks all three
-    * against the same reference on random graphs. */
-  private def localCcLabels(ss: SparkSession,
-      pairs0: DataFrame): DataFrame = {
-    val edges = pairs0.collect().map(r => (r.getLong(0), r.getLong(1)))
-    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-    def find(x: Long): Long = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent(r)
-      var c = x
-      while (parent.getOrElse(c, c) != r) {
-        val n = parent(c); parent(c) = r; c = n
-      }
-      r
-    }
-    edges.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-    }
-    val labels = edges.iterator
-      .flatMap(e => Iterator(e._1, e._2)).toArray.distinct
-      .map(x => (x, find(x))).toSeq
-    import ss.implicits._
-    labels.toDF("id", "label")
-  }
-
-  /** The small-graph fast path FINISHED driver-side (round 18):
-    * cluster sizes and the canonical flag are trivial folds over the
-    * already-collected union-find labels, so the local path emits the
-    * full (doc_id, cluster_id, cluster_size, is_canonical) contract
-    * as ONE sorted LocalRelation instead of handing [[ccFinish]] a
-    * label table — that window + sort re-entered every consumer's
-    * plan as two extra exchanges, a per-merge scheduler tax on the
-    * store protocols whose touched subgraphs route here. Identical
-    * rows and (cluster_id, doc_id) order to ccFinish over the same
-    * labels: size = member count per root, canonical = id == root
-    * (the root IS the component min, see [[localCcLabels]]). */
+  /** The small-graph fast path, FINISHED driver-side (round 18):
+    * union-find over the collected (already self-loop-filtered) pair
+    * table — iterative find with path compression, min-root union (the
+    * root IS the component min, inductively: every union makes the
+    * smaller root the parent), nodes = endpoints of the pairs. Cluster
+    * sizes and the canonical flag are trivial folds over those labels,
+    * so the local path emits the full (doc_id, cluster_id,
+    * cluster_size, is_canonical) contract as ONE sorted LocalRelation
+    * instead of handing [[ccFinish]] a label table — that window + sort
+    * re-entered every consumer's plan as two extra exchanges, a
+    * per-merge scheduler tax on the store protocols whose touched
+    * subgraphs route here. Identical rows and (cluster_id, doc_id)
+    * order to ccFinish over the same labels: size = member count per
+    * root, canonical = id == root. */
   private def localCcFinished(ss: SparkSession,
       pairs0: DataFrame): DataFrame = {
     val edges = pairs0.collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -2348,9 +2118,9 @@ object Dedup {
     rows.toDF("doc_id", "cluster_id", "cluster_size", "is_canonical")
   }
 
-  /** Shared CC presentation: label table (id, label) -> the
-    * (doc_id, cluster_id, cluster_size, is_canonical) contract both
-    * algorithms emit. */
+  /** CC presentation for the distributed path: label table
+    * (id, label) -> the (doc_id, cluster_id, cluster_size,
+    * is_canonical) contract [[localCcFinished]] also emits. */
   private def ccFinish(labels: DataFrame): DataFrame =
     labels
       .withColumn("cluster_size",
@@ -2368,37 +2138,50 @@ object Dedup {
     * the label table falls straight out of the edges with no separate
     * propagation structure.
     *
-    * Why it can beat the jump loop: each LS+SS pair is chained into ONE
-    * materialized job (4 tiny-table shuffles), and contraction squares
-    * effective pointer depth per pair, so a diameter-d graph needs
-    * ~log2(d)+1 materializations + 1 confirmation vs the jump loop's 5
-    * (4 working + 1 confirm on the sf0.1 SimHash graph). The per-round
-    * tables are the same KB-sized edge/label tables; at 100 TB the
-    * same bound holds — every shuffle is over the pair graph, never the
-    * corpus.
+    * Round count: each LS+SS pair is chained into ONE materialized job
+    * (4 tiny-table shuffles), and contraction squares effective pointer
+    * depth per pair, so a diameter-d graph needs ~log2(d)+1
+    * materializations + 1 confirmation (3 working + 1 confirm on the
+    * sf0.1 SimHash graph). The per-round tables are KB-sized edge
+    * tables; at 100 TB the same bound holds — every shuffle is over the
+    * pair graph, never the corpus.
     *
     * Convergence certificate: the observed triple (edge count, sum(src),
     * sum(dst)) — all three unchanged across one LS+SS application is
-    * treated as the fixpoint (the confirmation round, same information-
-    * theoretic shape as the jump loop's label-sum). Star steps only ever
-    * re-hang a node on a neighbor-min that is <= its current parent
+    * treated as the fixpoint (the confirmation round). Star steps only
+    * ever re-hang a node on a neighbor-min that is <= its current parent
     * (per-node parent values are non-increasing), so an edge-set change
     * that preserves BOTH coordinate sums and the count would need some
     * parent to rise exactly compensating another's fall — excluded by
-    * monotonicity. DECIMAL(38,0) sums for the same overflow reason as
-    * the jump loop's label sum. Validated against the recursive-CTE
-    * oracle (q61) and the planted long-chain graph (MinhashStoreSpec).
+    * monotonicity. DECIMAL(38,0) sums: a 100 TB edge list can carry
+    * ~2^40 nodes of ~2^63-scale ids — a long sum would wrap. observe()
+    * instead of a separate agg action: the CollectMetrics node is a
+    * pass-through whose accumulators fill DURING the round's own
+    * materialization job, so each round costs ONE job, not two.
+    *
+    * RELIABLE-CHECKPOINT CAVEAT (ADVICE r5): with
+    * spark.graft.cc.checkpointDir set, `df.checkpoint()` executes the
+    * plan TWICE (the eager materializing count, then the checkpoint job
+    * recomputing the unpersisted RDD), so every CollectMetrics
+    * accumulator sums two passes and the observed triple reads ~2x the
+    * true values in that mode. Convergence is unaffected — both sides of
+    * every compare are equally scaled, and the compare is exact equality
+    * of deterministic sums — but any ABSOLUTE use of an observed metric
+    * is execution-count-scaled: the loop-width sizing below only ever
+    * widens, and the pair-count dispatch only ever routes to this path,
+    * both the safe direction. Asserted by MinhashStoreSpec's
+    * reliable-checkpoint case, whose long-chain graph drives several
+    * rounds of the compare in that mode. (Persisting before checkpoint
+    * would de-scale it at the cost of caching every round's edges; the
+    * metrics are only ever compared, so the documented scale is the
+    * cheaper contract.)
+    *
+    * Validated against the recursive-CTE oracle (q61), the driver
+    * union-find (PropertiesSpec, GenericApiSpec) and the planted
+    * long-chain graph (MinhashStoreSpec).
     */
-  private def starContractionLabels(pairs: DataFrame,
-      materialize: DataFrame => DataFrame, debug: Boolean): DataFrame = {
+  private def starContractionLabels(pairs: DataFrame): DataFrame = {
     val ss = pairs.sparkSession
-    def timed[T](what: String)(body: => T): T = {
-      val t0 = System.nanoTime()
-      val r = body
-      if (debug) System.err.println(s"[graft.cc.star] $what " +
-        s"${(System.nanoTime() - t0) / 1000000} ms")
-      r
-    }
     // canonical parent-pointer orientation (src > dst) from the start:
     // both star steps preserve it, so no re-canonicalization per round
     val edges0 = pairs
@@ -2406,51 +2189,33 @@ object Dedup {
         least(col("doc_a"), col("doc_b")).as("dst"))
       .filter(col("src") =!= col("dst"))
       .distinct()
-    // FUSED-FIRST-ROUND knob, MEASURED NEGATIVE (default off;
-    // spark.graft.cc.star.fuse=on for A/B): since the star loop consumes
-    // each round's OUTPUT as the next round's input, the canonical edge
-    // list is only ever read by round 1 — so fusing round 1 onto the
-    // unmaterialized edge plan looked like a free saved scheduler round.
-    // It isn't: the fused round-1 job measured 1.37-2.32s vs
-    // 0.79-1.07s (edges) + 0.31-0.72s (round 1) split, interleaved
-    // same-session blocks (AbQ61; fused min 2.35 vs split min 2.14
-    // end-to-end) — one big 32-wide job with the pair pipeline, both
-    // star steps, and two distinct exchanges replans and schedules
-    // worse than two lean jobs whose loop half runs at the narrowed
-    // width. Same lesson as the jump loop's GRAFT_CC_STEPS chaining.
-    // The knob stays for graphs big enough that a scheduler round is
-    // noise; the split prologue is the default.
-    val fuse =
-      ss.conf.getOption("spark.graft.cc.star.fuse").contains("on")
-    // same loop-scoped shuffle-width policy as the jump loop (KB-sized
-    // tables want narrow rounds; 100 TB pair graphs keep session width).
-    // Unlike the jump loop there is NO narrowed re-checkpoint of the
-    // edge table: only round 1 ever reads it (each later round reads its
-    // predecessor's output, already produced at the narrowed width), so
-    // re-materializing it bought one round's input width for a whole
-    // extra job — dropped, worth ~0.1-0.3s of the measured q61 gain.
-    // Fused mode learns the width from round 1's own observed output
-    // count instead of a separate edges job.
-    val sessionSp = ss.conf.get("spark.sql.shuffle.partitions")
-    var widthNarrowed = false
-    def narrowConf(n: Long): Unit = {
-      val sp = math.min(
-        scala.util.Try(sessionSp.toLong).getOrElse(Long.MaxValue),
-        math.max(8L, n / 4000000L + 1L)).toString
-      if (sp != sessionSp) {
-        ss.conf.set("spark.sql.shuffle.partitions", sp)
-        widthNarrowed = true
-      }
+      .observe("ccs_edges", count(lit(1)).as("n"))
+    var edges = ccTimed("star edges")(ccMaterialize(ss, edges0))
+    val edgeCount = {
+      val row = edges0.queryExecution.observedMetrics("ccs_edges")
+      if (row.isNullAt(0)) 0L else row.getLong(0)
     }
-    var edges: DataFrame =
-      if (fuse) null // round 1 reads the raw canonical plan
-      else {
-        val observed = edges0.observe("ccs_edges", count(lit(1)).as("n"))
-        val e = timed("edges")(materialize(observed))
-        val row = observed.queryExecution.observedMetrics("ccs_edges")
-        narrowConf(if (row.isNullAt(0)) 0L else row.getLong(0))
-        e
-      }
+    // LOOP-SCOPED SHUFFLE WIDTH, auto-sized from the observed edge
+    // count (free: the metric fills during the edges materialization
+    // job). The rounds only ever shuffle the edge table — bounded by
+    // the PAIR GRAPH, typically orders smaller than the corpus that
+    // produced it — so running them at the session's corpus-sized width
+    // just pays 32-way task launch + AQE bookkeeping per round for
+    // KB-sized partitions. Sizing: ~4M edge rows (~128MB) per reducer,
+    // floor 8, capped at the session width so a 100 TB pair graph
+    // (billions of edges) keeps full parallelism. There is NO narrowed
+    // re-checkpoint of the edge table: only round 1 ever reads it (each
+    // later round reads its predecessor's output, already produced at
+    // the narrowed width), so re-materializing it would buy one round's
+    // input width for a whole extra job.
+    val sessionSp = ss.conf.get("spark.sql.shuffle.partitions")
+    val loopSp = math.min(
+      scala.util.Try(sessionSp.toLong).getOrElse(Long.MaxValue),
+      math.max(8L, edgeCount / 4000000L + 1L)).toString
+    // the rounds run under the narrowed width; restored before returning
+    // (the caller's window/sort plan is lazy and executes at the
+    // session width)
+    if (loopSp != sessionSp) ss.conf.set("spark.sql.shuffle.partitions", loopSp)
     try {
       def metricExprs = Seq(
         count(lit(1)).cast("decimal(38,0)").as("n"),
@@ -2463,13 +2228,11 @@ object Dedup {
         java.math.BigDecimal) = null
       var converged = false
       while (!converged) {
-        val t0 = System.nanoTime()
-        val base = if (edges == null) edges0 else edges
         // LARGE-STAR: symmetrize; per node u, m = min(N(u) ∪ {u});
         // emit (v, m) for every neighbor v > u. Keeps src > dst
         // (m <= u < v) and strictly shrinks long chains' depth.
-        val sym = base.select(col("src"), col("dst"))
-          .union(base.select(col("dst").as("src"), col("src").as("dst")))
+        val sym = edges.select(col("src"), col("dst"))
+          .union(edges.select(col("dst").as("src"), col("src").as("dst")))
         val lsMin = sym.groupBy(col("src"))
           .agg(least(col("src"), min(col("dst"))).as("m"))
         val ls = sym.join(lsMin, "src")
@@ -2486,23 +2249,21 @@ object Dedup {
           .union(ssMin.select(col("src"), col("m").as("dst")))
           .distinct()
           .observe(s"ccs_$round", metricExprs.head, metricExprs.tail: _*)
-        val next = materialize(ssOut)
+        val next = ccTimed(s"star round ${round + 1}")(
+          ccMaterialize(ss, ssOut))
         val row = ssOut.queryExecution.observedMetrics(s"ccs_$round")
         val cur = (dec(row, 0), dec(row, 1), dec(row, 2))
-        if (round == 0 && fuse) narrowConf(cur._1.longValue())
         converged = cur == prev
         prev = cur
         edges = next
         round += 1
-        if (debug) System.err.println(s"[graft.cc.star] round $round: " +
-          s"n=${cur._1} ${(System.nanoTime() - t0) / 1000000} ms")
       }
       // fixpoint = star forest: every non-root appears exactly once as
       // src with its root as dst; roots appear only as dst
       edges.select(col("src").as("id"), col("dst").as("label"))
         .union(edges.select(col("dst").as("id"), col("dst").as("label"))
           .distinct())
-    } finally if (widthNarrowed)
+    } finally if (loopSp != sessionSp)
       ss.conf.set("spark.sql.shuffle.partitions", sessionSp)
   }
 
@@ -3368,7 +3129,7 @@ object Dedup {
           Seq("content_hash"), "left_semi"))
     val survCarriers = carriers.join(delIds, Seq("doc_id"), "left_anti")
     // exact index: a deleted hash leaves ONLY when no survivor
-    // carries it
+    // carries it (rewritten once, inside the wave below)
     val (dropHashes, hashKeys) = materializeWithKeys(
       delHp.select(col("content_hash")).distinct()
         .join(survCarriers.select(col("content_hash")),
@@ -3376,15 +3137,6 @@ object Dedup {
         .withColumn("bucket",
           pmod(xxhash64(col("content_hash")), lit(64)).cast("int")),
       "bucket")
-    if (hashKeys.nonEmpty)
-      retractBucketRewrite(s, s"$stores/exact",
-        s.read.schema("content_hash STRING, bucket INT")
-          .parquet(s"$stores/exact")
-          .filter(col("bucket").isin(hashKeys: _*))
-          .join(dropHashes.select(col("content_hash")),
-            Seq("content_hash"), "left_anti")
-          .select(col("content_hash"), col("bucket")),
-        "bucket", hashKeys, Seq("content_hash"))
     // promotion: deleted MANIFESTED survivors hand survivorship to
     // their exact group's min-id surviving member (schema'd read: a
     // previous retraction can have emptied every manifest bucket)
@@ -5056,9 +4808,9 @@ $attCtes         |tkR AS (SELECT doc_id, $qtoksSql AS w FROM $ndOut),
          |ORDER BY doc_a, doc_b""".stripMargin,
     // Transitive closure by recursive CTE: reach(id, l) accumulates every
     // node label reachable from id; min(l) per id == the component's min
-    // node == Spark's converged propagation label. O(sum of comp_size^2)
-    // rows — fine at oracle scale, which is exactly why the Spark side
-    // uses log-round pointer jumping instead.
+    // node == Spark's cluster_id. O(sum of comp_size^2) rows — fine at
+    // oracle scale, which is exactly why the Spark side uses driver
+    // union-find or log-round star contraction instead.
     "q61_dedup_clusters" ->
       s"""WITH RECURSIVE $simhashCtesSql,
          |prs AS (

@@ -118,7 +118,15 @@ object UnifiedClusters {
     // jobs submitted from the shared pool otherwise lose them —
     // StreamingQuery.stop() could no longer cancel in-flight append
     // jobs for its query, and UI attribution of the appends was lost.
+    // All four keys are copied on EVERY call, unset ones as null
+    // (setLocalProperty(k, null) removes k): the pool threads are
+    // shared, and Spark's local properties are inheritable, so a pool
+    // thread created during a tagged wave starts with that wave's tag —
+    // only an unconditional copy keeps an earlier wave's group from
+    // leaking into a later one. The default session covers callers
+    // with no active session (a fresh thread).
     val callerProps = org.apache.spark.sql.SparkSession.getActiveSession
+      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
       .map(_.sparkContext).map { sc =>
         val keys = Seq("spark.jobGroup.id", "spark.job.description",
           "spark.job.interruptOnCancel", "spark.scheduler.pool")

@@ -253,8 +253,8 @@ class GenericApiSpec extends SparkSpec {
 
   test("connectedComponents resolves transitive chains and singleton pairs") {
     import spark.implicits._
-    // chain 1-2-3-4 (min label must travel 3 hops -> exercises the
-    // pointer-jumping iterations), disjoint pair 9-8, pair 5-6
+    // chain 1-2-3-4 (min label must travel 3 hops), disjoint pair 9-8,
+    // pair 5-6
     val pairs = Seq((2L, 3L), (1L, 2L), (3L, 4L), (9L, 8L), (5L, 6L))
       .toDF("doc_a", "doc_b")
     val out = ops.Dedup.connectedComponents(pairs).collect()
@@ -670,29 +670,20 @@ class GenericApiSpec extends SparkSpec {
     assert(admitted.select("doc_id").as[Long].collect().toSeq === Seq(9003L))
   }
 
-  test("star-contraction CC agrees with the jump loop on planted graphs") {
+  test("star-contraction CC agrees with the driver union-find on " +
+    "planted graphs") {
     import spark.implicits._
     def both(pairs: org.apache.spark.sql.DataFrame) = {
-      def run(algo: String) =
+      // default dispatch: these graphs sit under the local threshold,
+      // so this is the driver-side union-find
+      val local = ops.Dedup.connectedComponents(pairs).collect().map(_.toSeq)
+      val star =
         try {
-          spark.conf.set("spark.graft.cc.algo", algo)
-          // keep exercising the DISTRIBUTED loops on these small graphs
+          // threshold 0 keeps the DISTRIBUTED star path on small graphs
           spark.conf.set("spark.graft.cc.localThreshold", "0")
           ops.Dedup.connectedComponents(pairs).collect().map(_.toSeq)
-        } finally {
-          spark.conf.unset("spark.graft.cc.algo")
-          spark.conf.unset("spark.graft.cc.localThreshold")
-        }
-      val jump = run("jump")
-      val star = run("star")
-      assert(star.toSeq === jump.toSeq)
-      // the measured-negative fused-first-round knob must stay CORRECT
-      // even though it is off by default
-      spark.conf.set("spark.graft.cc.star.fuse", "on")
-      val fused =
-        try run("star")
-        finally spark.conf.unset("spark.graft.cc.star.fuse")
-      assert(fused.toSeq === jump.toSeq)
+        } finally spark.conf.unset("spark.graft.cc.localThreshold")
+      assert(star.toSeq === local.toSeq)
       star
     }
     // deep path (25 hops — well past one contraction round), a binary
@@ -710,7 +701,7 @@ class GenericApiSpec extends SparkSpec {
     assert((101L to 115L).forall(labels(_) == 101L))
     assert((200L to 205L).forall(labels(_) == 200L))
     assert(labels(301L) == 300L && labels(401L) == 400L)
-    // empty input converges to empty under star too
+    // empty input converges to empty under both paths
     both(Seq.empty[(Long, Long)].toDF("doc_a", "doc_b"))
     // the real near-dup graph: full-output agreement on sf0.001 SimHash
     both(ops.Dedup.simhashPairsUnordered(

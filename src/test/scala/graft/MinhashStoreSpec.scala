@@ -61,7 +61,8 @@ class MinhashStoreSpec extends SparkSpec {
     try {
       // a 12-node path forces several materialized rounds, so the
       // convergence compare runs repeatedly under reliable mode's 2x
-      // observed-metric scale (see observedSum scaladoc): both sides of
+      // observed-metric scale (see the starContractionLabels
+      // scaladoc's reliable-checkpoint caveat): both sides of
       // each compare are equally scaled, so the loop must still stop
       // exactly at the true fixpoint
       val pairs = ((1L to 11L).map(i => (i, i + 1)) ++ Seq((20L, 21L)))

@@ -564,21 +564,16 @@ class PropertiesSpec extends SparkSpec {
       val pairs = edges.toDF("doc_a", "doc_b")
       // "local" exercises the round-10 small-graph fast path (these
       // graphs sit under the default threshold); for the distributed
-      // paths the threshold is forced to 0 so they can't silently
-      // delegate to the driver-side reference they're checked against
-      for (algo <- Seq("jump", "star", "local")) {
-        if (algo != "local") {
-          spark.conf.set("spark.graft.cc.algo", algo)
+      // star path the threshold is forced to 0 so it can't silently
+      // delegate to the driver-side union-find
+      for (algo <- Seq("star", "local")) {
+        if (algo == "star")
           spark.conf.set("spark.graft.cc.localThreshold", "0")
-        }
         val got =
           try ops.Dedup.connectedComponents(pairs)
             .select("doc_id", "cluster_id")
             .as[(Long, Long)].collect().toMap
-          finally {
-            spark.conf.unset("spark.graft.cc.algo")
-            spark.conf.unset("spark.graft.cc.localThreshold")
-          }
+          finally spark.conf.unset("spark.graft.cc.localThreshold")
         assert(got === expected,
           s"[$algo] mismatch on ${edges.size} edges: " +
             s"got ${got.toSeq.sorted.take(20)} " +

@@ -451,4 +451,36 @@ class UnifiedClustersSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("torn"))
   }
+
+  test("inParallel: a wave from a thread with no active session and no " +
+    "job group does not keep an earlier wave's group") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val sc = spark.sparkContext
+    val poolWidth = 8
+    // every task of a wave blocks until all have started, so each wave
+    // occupies every pool thread once; each task reports the job group
+    // its thread sees
+    def wave(): Seq[String] = {
+      val started = new CountDownLatch(poolWidth)
+      ops.UnifiedClusters.inParallel(Seq.fill(poolWidth)(() => {
+        started.countDown()
+        assert(started.await(60, TimeUnit.SECONDS), "pool not fully held")
+        sc.getLocalProperty("spark.jobGroup.id")
+      }))
+    }
+    sc.setJobGroup("g1", "tagged wave")
+    val first = try wave() finally sc.clearJobGroup()
+    assert(first === Seq.fill(poolWidth)("g1"))
+    var second: Seq[String] = Nil
+    var failure: Throwable = null
+    val caller = new Thread(() =>
+      try {
+        org.apache.spark.sql.SparkSession.clearActiveSession()
+        second = wave()
+      } catch { case e: Throwable => failure = e })
+    caller.start()
+    caller.join()
+    if (failure != null) throw failure
+    assert(!second.contains("g1"), s"stale job group in $second")
+  }
 }
