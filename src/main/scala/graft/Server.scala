@@ -3,6 +3,9 @@ package graft
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 
+import scala.util.control.NonFatal
+
+import com.fasterxml.jackson.databind.ObjectMapper
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.SparkSession
 
@@ -18,6 +21,7 @@ import org.apache.spark.sql.SparkSession
   * Trigger.AvailableNow semantics via Pipeline.incremental).
   */
 object Server {
+  private val Json = new ObjectMapper()
 
   /** Start serving; port 0 binds an ephemeral port. Returns the server
     * (caller stops it). */
@@ -40,8 +44,11 @@ object Server {
         respond(ex, 200,
           s"""{"status":"ok","updates":${nb + ne}}""")
       } catch {
-        case e: Throwable =>
-          respond(ex, 500, s"""{"status":"error"}""")
+        case NonFatal(e) =>
+          e.printStackTrace()
+          val cause = Json.writeValueAsString(
+            s"${e.getClass.getName}: ${e.getMessage}")
+          respond(ex, 500, s"""{"status":"error","error":$cause}""")
       })
     server.start()
     server

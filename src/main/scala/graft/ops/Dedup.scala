@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Span
+
 /** Document deduplication family (SURVEY.md §2.11 O-58/O-59; driver
   * north-star: exact, n-gram Jaccard, MinHash+LSH, SimHash).
   *
@@ -1190,21 +1192,20 @@ object Dedup {
     // (pre-satisfied by hash(doc_id), which survives the broadcast freq
     // join — its heavy exchange disappears). Round 3 shipped
     // repartition(h) here to share one exchange with q36's join; measured
-    // A/B (ProfileQ36e, sf0.1, warm): repartition(h) 5.0s, none 2.8s,
+    // A/B (sf0.1, warm): repartition(h) 5.0s, none 2.8s,
     // repartition(doc_id) 2.8s warm and 3x better than none on a cold
     // JVM, because the exchange still dedups the shingling+digest pass
     // across both consumers.
     nearDupPairsPrefixFrom(
       hashedShingles(docs).repartition(col("doc_id")), tNum, tDen)
 
-  /** q36e pipeline from a prepared (doc_id, h) hashed-shingle table —
-    * package-visible so ProfileQ36e can A/B exchange placements. The
+  /** q36e pipeline from a prepared (doc_id, h) hashed-shingle table. The
     * Jaccard threshold is the RATIONAL tNum/tDen (default 1/2, q36e's
     * 0.5): every prune below — prefix length, size filter, positional
     * bound, final verification — is integer cross-multiplied from it,
     * so a sweep floor like 3/10 (q94) reuses the whole pipeline with
     * no float boundary anywhere. */
-  private[graft] def nearDupPairsPrefixFrom(sh: DataFrame, tNum: Int = 1,
+  private def nearDupPairsPrefixFrom(sh: DataFrame, tNum: Int = 1,
       tDen: Int = 2): DataFrame = {
     require(tNum >= 1 && tNum < tDen, s"need 0 < t < 1, got $tNum/$tDen")
     // global doc-frequency table is tiny relative to the corpus (distinct
@@ -2011,24 +2012,13 @@ object Dedup {
     val pairs0Plan = pairs.filter(col("doc_a") =!= col("doc_b"))
       .select(col("doc_a"), col("doc_b"))
       .observe("cc_pair_count", count(lit(1)).as("n"))
-    val pairs0 = ccTimed("pairs")(ccMaterialize(pairs.sparkSession,
-      pairs0Plan))
+    val pairs0 = Span(pairs.sparkSession, "cc.pairs")(
+      ccMaterialize(pairs.sparkSession, pairs0Plan))
     val pairCount = {
       val row = pairs0Plan.queryExecution.observedMetrics("cc_pair_count")
       if (row.isNullAt(0)) 0L else row.getLong(0)
     }
     connectedComponentsMaterialized(pairs0, pairCount)
-  }
-
-  private def ccTimed[T](what: String)(body: => T): T = {
-    if (!sys.env.contains("GRAFT_CC_DEBUG")) body
-    else {
-      val t0 = System.nanoTime()
-      val r = body
-      System.err.println(s"[graft.cc] $what " +
-        s"${(System.nanoTime() - t0) / 1000000} ms")
-      r
-    }
   }
 
   private def ccMaterialize(ss: SparkSession, df: DataFrame): DataFrame = {
@@ -2071,7 +2061,7 @@ object Dedup {
       .getOption("spark.graft.cc.localThreshold")
       .map(_.toLong).getOrElse(100000L)
     if (localThreshold > 0 && pairCount <= localThreshold)
-      ccTimed("local")(localCcFinished(ss, pairs0))
+      Span(ss, "cc.local")(localCcFinished(ss, pairs0))
     else ccFinish(starContractionLabels(pairs0))
   }
 
@@ -2190,7 +2180,7 @@ object Dedup {
       .filter(col("src") =!= col("dst"))
       .distinct()
       .observe("ccs_edges", count(lit(1)).as("n"))
-    var edges = ccTimed("star edges")(ccMaterialize(ss, edges0))
+    var edges = Span(ss, "cc.star edges")(ccMaterialize(ss, edges0))
     val edgeCount = {
       val row = edges0.queryExecution.observedMetrics("ccs_edges")
       if (row.isNullAt(0)) 0L else row.getLong(0)
@@ -2249,7 +2239,7 @@ object Dedup {
           .union(ssMin.select(col("src"), col("m").as("dst")))
           .distinct()
           .observe(s"ccs_$round", metricExprs.head, metricExprs.tail: _*)
-        val next = ccTimed(s"star round ${round + 1}")(
+        val next = Span(ss, s"cc.star round ${round + 1}")(
           ccMaterialize(ss, ssOut))
         val row = ssOut.queryExecution.observedMetrics(s"ccs_$round")
         val cur = (dec(row, 0), dec(row, 1), dec(row, 2))
@@ -2710,29 +2700,13 @@ object Dedup {
   private def fusedRepetitionQuality(in: DataFrame,
       tag: String): (DataFrame, DataFrame) = {
     val inCols = in.columns.map(col).toIndexedSeq
-    val flagged = stageTimed(tag)(materializeBounded(in
+    val flagged = Span(in.sparkSession, tag)(materializeBounded(in
       .join(TextAnalysis.repetitionFilter(in)
         .select(col("doc_id"), col("keep").as("rep_keep")), Seq("doc_id"))
       .join(TextAnalysis.qualityFilter(in)
         .select(col("doc_id"), col("keep").as("q_keep")), Seq("doc_id"))))
     (flagged.filter(col("rep_keep")).select(inCols: _*),
       flagged.filter(col("rep_keep") && col("q_keep")).select(inCols: _*))
-  }
-
-  /** GRAFT_FUNNEL_DEBUG: per-stage stderr timings (materializeBounded
-    * is eager, so each stage's real cost lands at construction) —
-    * dev-only, zero cost when unset; ProfileQ87c drives THIS
-    * definition so the profiler cannot drift from the query
-    * (round-13 review finding). */
-  private def stageTimed(what: String)(body: => DataFrame): DataFrame = {
-    if (!sys.env.contains("GRAFT_FUNNEL_DEBUG")) body
-    else {
-      val t0 = System.nanoTime()
-      val df = body
-      System.err.println(s"[graft.funnel] $what " +
-        s"${(System.nanoTime() - t0) / 1000000} ms")
-      df
-    }
   }
 
   /** @param attDrop the NON-CANONICAL attachment doc ids under the
@@ -2758,13 +2732,14 @@ object Dedup {
       attDrop: Option[DataFrame] = None,
       ndOverride: Option[(String, DataFrame => DataFrame)] = None)
       : Seq[(Int, String, DataFrame)] = {
-    val d0 = stageTimed("d0")(
+    val s = docs0.sparkSession
+    val d0 = Span(s, "funnel.d0")(
       materializeBounded(docs0.filter(col("doc_id").isNotNull)))
     // 1: scrub IN PLACE — no docs drop, the corpus transforms
-    val s1 = stageTimed("s1_scrub")(
+    val s1 = Span(s, "funnel.s1_scrub")(
       materializeBounded(TextAnalysis.piiScrubText(d0)))
     val w = Window.partitionBy(col("content_hash")).orderBy(col("doc_id"))
-    val s2 = stageTimed("s2_exact")(materializeBounded(s1
+    val s2 = Span(s, "funnel.s2_exact")(materializeBounded(s1
       .withColumn("content_hash", sha2(col("text").cast("binary"), 256))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
@@ -2789,25 +2764,26 @@ object Dedup {
       attDrop: Option[DataFrame],
       ndOverride: Option[(String, DataFrame => DataFrame)])
       : Seq[(Int, String, DataFrame)] = {
+    val s = s2.sparkSession
     val (ndName, ndDropOf) = ndOverride.getOrElse(
       ("near_dup", (surv: DataFrame) => nearDupPairs(surv)
         .select(col("doc_b").as("doc_id")).distinct()))
-    val s3 = stageTimed("s3_neardup")(
+    val s3 = Span(s, "funnel.s3_neardup")(
       materializeBounded(s2.join(ndDropOf(s2), Seq("doc_id"),
         "left_anti")))
     // 3b (optional): multimodal attachment dedup
-    val sAtt = attDrop.map(drop => stageTimed("s3b_attachment")(
+    val sAtt = attDrop.map(drop => Span(s, "funnel.s3b_attachment")(
       materializeBounded(s3.join(
         drop.select(col("doc_id")), Seq("doc_id"), "left_anti"))))
     val ndOut = sAtt.getOrElse(s3)
     val off = if (sAtt.isDefined) 1 else 0
     // stages 4+5 fused into one materialization (round 18, §2.4 —
     // see fusedRepetitionQuality)
-    val (s4, s5) = fusedRepetitionQuality(ndOut, "s4s5_flags")
+    val (s4, s5) = fusedRepetitionQuality(ndOut, "funnel.s4s5_flags")
     // 6: segment dedup REWRITES text to the kept segments (token set
     // preserved up to whitespace normalization — downstream stages
     // are token-keyed); docs whose every segment is shared drop here
-    val s6 = stageTimed("s6_segment")(materializeBounded(s5
+    val s6 = Span(s, "funnel.s6_segment")(materializeBounded(s5
       .join(segmentDedup(s5).select(col("doc_id"), col("clean_text")),
         Seq("doc_id"))
       .withColumn("text", col("clean_text")).drop("clean_text")))
@@ -2819,7 +2795,7 @@ object Dedup {
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= 10)
       .select(col("doc_id"))
-    val s7 = stageTimed("s7_decontaminate")(materializeBounded(s6
+    val s7 = Span(s, "funnel.s7_decontaminate")(materializeBounded(s6
       .filter(col("source") =!= "src0")
       .join(flagged, Seq("doc_id"), "left_anti")))
     val s8 = s7.join(
@@ -3028,7 +3004,7 @@ object Dedup {
     * not the admission path a deployment runs daily). */
   private[graft] def incrementalStoresBuildFrom(s: SparkSession,
       corpus: DataFrame, dir: String)(ndStore: DataFrame => Unit)
-      : Unit = {
+      : Unit = Span(s, "funnel.store_build") {
     val scrubbed = materializeBounded(TextAnalysis.piiScrubText(
       corpus.filter(col("doc_id").isNotNull)))
     dedupIndexWrite(scrubbed, s"$dir/exact")
@@ -3064,18 +3040,16 @@ object Dedup {
     * (exact hash index, near-dup band index, eval-suite shingle set,
     * generation manifest, full-corpus hash ledger). `corpusScrubbed`
     * is the SAME scrubbed corpus view the build used (the build's
-    * caller contract). When the store carries the hash LEDGER a
-    * round-17 build writes (VERDICT r16 #3), the retraction is
-    * O(deleted + promoted): corpus text is read for exactly the
-    * deleted docs (their own hash + band rows — signatures are
-    * deterministic, so they name the touched buckets) and the
-    * promoted docs (their manifest/band appends), and every other
-    * doc's hash comes from the ledger PRUNED to the deleted hashes'
-    * <= 64 buckets — no corpus-wide scan of any kind
-    * (IncrementalFunnelSpec pins this behaviorally: corrupting every
-    * non-deleted/non-promoted doc's text changes nothing). A store
-    * without the ledger falls back to the legacy ONE 40 B/doc
-    * hash-projection pass (the q95 envelope). The eval suite
+    * caller contract). Every store build writes the hash LEDGER
+    * (VERDICT r16 #3), so the retraction is O(deleted + promoted):
+    * corpus text is read for exactly the deleted docs (their own
+    * hash + band rows — signatures are deterministic, so they name
+    * the touched buckets) and the promoted docs (their manifest/band
+    * appends), and every other doc's hash comes from the ledger
+    * PRUNED to the deleted hashes' <= 64 buckets — no corpus-wide
+    * scan of any kind (IncrementalFunnelSpec pins this behaviorally:
+    * corrupting every non-deleted/non-promoted doc's text changes
+    * nothing). A store without the ledger is refused. The eval suite
     * recomputes wholesale from the surviving src0 slice — suite-
     * sized by definition. Replay-idempotent: removals are
     * anti-joins; a replayed promotion append lands value-identical
@@ -3086,7 +3060,10 @@ object Dedup {
     * the q87h oracle replays it at the driver gate). */
   private[graft] def incrementalStoresRetract(s: SparkSession,
       stores: String, corpusScrubbed: DataFrame,
-      delIds0: DataFrame): Unit = {
+      delIds0: DataFrame): Unit = Span(s, "funnel.retract") {
+    val ledger = new org.apache.hadoop.fs.Path(s"$stores/hashes")
+    require(ledger.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .exists(ledger), s"retraction: no hash ledger at $ledger")
     // the deleted ids' manifest-bucket set rides the materialization
     // (round 17, materializeWithKeys; consumed by the manifest
     // rewrite below)
@@ -3096,35 +3073,23 @@ object Dedup {
           pmod(xxhash64(col("doc_id")), lit(64)).cast("int")), "kb")
     val delIds = delIdsM.select(col("doc_id"))
     // the deleted docs' own hash rows: text reads for EXACTLY the
-    // deleted docs, ledger or not — their ledger hb set observed in
-    // the same job (round 17)
-    val (delHp, delHbs) = materializeWithKeys(corpusScrubbed
+    // deleted docs — their ledger hb set observed in the same job
+    // (round 17)
+    val (delHp, ledgerHbs) = materializeWithKeys(corpusScrubbed
       .filter(col("doc_id").isNotNull)
       .join(delIds, Seq("doc_id"), "left_semi")
       .select(col("doc_id"),
         sha2(col("text").cast("binary"), 256).as("content_hash"))
       .withColumn("hb",
         pmod(xxhash64(col("content_hash")), lit(64)).cast("int")), "hb")
-    val fsStores = new org.apache.hadoop.fs.Path(stores)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val hasLedger =
-      fsStores.exists(new org.apache.hadoop.fs.Path(s"$stores/hashes"))
-    val ledgerHbs: IndexedSeq[Int] =
-      if (!hasLedger) IndexedSeq.empty else delHbs.toIndexedSeq
     // every corpus doc CARRYING a deleted hash — survivorship and
-    // promotion are decided entirely inside this set. Ledger path:
-    // hb-pruned point-reads, O(deleted hashes' buckets); legacy path:
-    // the full 40 B/doc projection
+    // promotion are decided entirely inside this set: hb-pruned
+    // ledger point-reads, O(deleted hashes' buckets)
     val carriers = materializeBounded(
-      (if (hasLedger)
-        (if (ledgerHbs.isEmpty) hashLedgerTable(s, stores).limit(0)
-         else hashLedgerTable(s, stores)
-           .filter(col("hb").isin(ledgerHbs: _*)))
-          .select(col("doc_id"), col("h").as("content_hash"))
-      else corpusScrubbed
-        .filter(col("doc_id").isNotNull)
-        .select(col("doc_id"),
-          sha2(col("text").cast("binary"), 256).as("content_hash")))
+      (if (ledgerHbs.isEmpty) hashLedgerTable(s, stores).limit(0)
+       else hashLedgerTable(s, stores)
+         .filter(col("hb").isin(ledgerHbs: _*)))
+        .select(col("doc_id"), col("h").as("content_hash"))
         .join(delHp.select(col("content_hash")).distinct(),
           Seq("content_hash"), "left_semi"))
     val survCarriers = carriers.join(delIds, Seq("doc_id"), "left_anti")
@@ -3158,13 +3123,11 @@ object Dedup {
         Seq("content_hash"), "left_semi")
         .groupBy(col("content_hash")).agg(min(col("doc_id")).as("doc_id"))
         .select(col("doc_id")))
-    val hasPromoted = nPromoted > 0
     // materialized once (round 18): both promoted appends (band index
     // + manifest) read the same corpus-slice scan
-    val promotedDocs = if (!hasPromoted)
-      corpusScrubbed.join(promotedIds, Seq("doc_id"), "left_semi")
-    else materializeBounded(
-      corpusScrubbed.join(promotedIds, Seq("doc_id"), "left_semi"))
+    val promotedDocs = if (nPromoted == 0) None else Some(
+      materializeBounded(
+        corpusScrubbed.join(promotedIds, Seq("doc_id"), "left_semi")))
     // The five store surfaces rewrite as ONE concurrent wave (round
     // 18, §2.6): exact index, band index, manifest, hash ledger, and
     // the eval suite are mutually independent tables, and every input
@@ -3206,9 +3169,8 @@ object Dedup {
               .select(col("doc_id"), col("mins"), col("band"),
                 col("k1"), col("k2"), col("kb")),
             "kb", bandKeys, Seq("band", "k1", "k2"))
-        if (hasPromoted)
-          neardupIndexWrite(promotedDocs, s"$stores/neardup",
-            mode = "append")
+        promotedDocs.foreach(
+          neardupIndexWrite(_, s"$stores/neardup", mode = "append"))
       },
       () => {
         // manifest: drop the deleted rows, admit the promoted ones
@@ -3219,15 +3181,14 @@ object Dedup {
               .select(col("doc_id"), col("source"), col("h"),
                 col("kb")),
             "kb", delKb, Seq("doc_id"))
-        if (hasPromoted)
-          manifestWrite(promotedDocs, s"$stores/manifest",
-            mode = "append")
+        promotedDocs.foreach(
+          manifestWrite(_, s"$stores/manifest", mode = "append"))
       },
       // hash ledger: drop the deleted rows from their hashes' buckets
       // (same touched-bucket pass — the ledger stays exactly the
       // surviving corpus's projection, so the NEXT retraction prunes
       // correctly too)
-      () => if (hasLedger && ledgerHbs.nonEmpty)
+      () => if (ledgerHbs.nonEmpty)
         retractBucketRewrite(s, s"$stores/hashes",
           hashLedgerTable(s, stores)
             .filter(col("hb").isin(ledgerHbs: _*))
@@ -3404,18 +3365,18 @@ object Dedup {
       stores: String, batch0: DataFrame,
       ndScreen: Option[(String, DataFrame => DataFrame)] = None)
       : Seq[(Int, String, DataFrame)] = {
-    val d0 = stageTimed("e_d0")(
+    val d0 = Span(s, "funnel.e_d0")(
       materializeBounded(batch0.filter(col("doc_id").isNotNull)))
-    val s1 = stageTimed("e_s1_scrub")(
+    val s1 = Span(s, "funnel.e_s1_scrub")(
       materializeBounded(TextAnalysis.piiScrubText(d0)))
-    val s2 = stageTimed("e_s2_exact")(materializeBounded(s1.join(
+    val s2 = Span(s, "funnel.e_s2_exact")(materializeBounded(s1.join(
       corpusMerge(s, s"$stores/exact", s1).select(col("doc_id")),
       Seq("doc_id"), "left_semi")))
     val (ndName, ndOf) = ndScreen.getOrElse(
       ("neardup_screen", (surv: DataFrame) => surv.join(
         neardupMerge(s, s"$stores/neardup", surv).select(col("doc_id")),
         Seq("doc_id"), "left_semi")))
-    val s3 = stageTimed("e_s3_neardup")(materializeBounded(ndOf(s2)))
+    val s3 = Span(s, "funnel.e_s3_neardup")(materializeBounded(ndOf(s2)))
     // stages 4+5 FUSED into one materialization (round 18, §2.4):
     // both filters are row-local, so quality-over-s4 equals
     // quality-over-s3 restricted to the repetition survivors — one
@@ -3423,7 +3384,7 @@ object Dedup {
     // the shared leaf. Counts and downstream rows are unchanged
     // (doc_id is unique by the corpus contract, so the inner flag
     // joins are exactly the previous semi joins).
-    val (s4, s5) = fusedRepetitionQuality(s3, "e_s4s5_flags")
+    val (s4, s5) = fusedRepetitionQuality(s3, "funnel.e_s4s5_flags")
     // the suite is id-list sized by construction (a benchmark set,
     // not a corpus) — same broadcast posture as q87c's bench side
     val bench = s.read.parquet(s"$stores/bench")
@@ -3434,7 +3395,7 @@ object Dedup {
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= 10)
       .select(col("doc_id"))
-    val s6 = stageTimed("e_s6_decon")(
+    val s6 = Span(s, "funnel.e_s6_decon")(
       materializeBounded(s5.filter(col("source") =!= "src0")
         .join(flagged, Seq("doc_id"), "left_anti")))
     Seq((0, "input", d0), (1, "pii_scrub", s1), (2, "exact_screen", s2),
@@ -3450,16 +3411,13 @@ object Dedup {
     * gate point (the s21 idiom). */
   private[graft] def manifestAppendReadBack(s: SparkSession,
       stores: String, admitted: DataFrame,
-      batchIds: DataFrame): DataFrame = {
+      batchIds: DataFrame): DataFrame = Span(s, "funnel.manifest_append") {
     manifestWrite(admitted, s"$stores/manifest", mode = "append")
     manifestCompact(s, s"$stores/manifest")
     // the hash ledger compacts at the same gate point (round 17): the
     // stream steady state appends one file-set per batch into its
     // touched hb buckets, the same growth every bucket family bounds
-    if (new org.apache.hadoop.fs.Path(s"$stores/hashes")
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-        .exists(new org.apache.hadoop.fs.Path(s"$stores/hashes")))
-      hashLedgerCompact(s, stores): Unit
+    hashLedgerCompact(s, stores)
     val kbs = batchIds
       .select(pmod(xxhash64(col("doc_id")), lit(64)).cast("int").as("kb"))
       .distinct().collect().map(_.getInt(0))

@@ -208,8 +208,8 @@ object Relational {
   // the bench measures the sketch alone: rejected, because a declared
   // query without the in-query cross-check would be rows-only under the
   // driver's gate (re-opening the hole q14b closed), and the measured
-  // cost of the extra exact branch is ~0.1s at sf0.1 — CheckQ14b times
-  // the sketch-only form for the record. The within_2pct oracle's
+  // cost of the extra exact branch is ~0.1s at sf0.1 over the
+  // sketch-only form. The within_2pct oracle's
   // dependence on HLL++ estimate stability across Spark upgrades is
   // accepted and documented: a changed estimate that still lands within
   // 2% keeps the oracle green (the assertion is the bound, not the

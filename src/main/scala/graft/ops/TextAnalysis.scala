@@ -723,7 +723,8 @@ object TextAnalysis {
       val p = tfHwmPath(store)
       val fs = p.getFileSystem(
         docs.sparkSession.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) { fs.delete(p, false); () }
+      Seq(p, tfHwmStaging(p)).filter(fs.exists)
+        .foreach(fs.delete(_, false))
     }
     tokenPositions(docs)
       .groupBy(col("tok")).agg((count(lit(1)) * lit(sign)).as("c"))
@@ -739,19 +740,30 @@ object TextAnalysis {
   private def tfHwmPath(store: String): org.apache.hadoop.fs.Path =
     new org.apache.hadoop.fs.Path(s"$store/_graft_compacted_hwm")
 
+  private def tfHwmStaging(p: org.apache.hadoop.fs.Path) =
+    new org.apache.hadoop.fs.Path(p.getParent, p.getName + "_staging")
+
   /** Last-compacted-epoch high-water mark; Long.MinValue for a store
     * that has never compacted. Epochs are the caller's batch ids
-    * (>= 0 by the foreachBatch contract). */
+    * (>= 0 by the foreachBatch contract). The mark is the larger of
+    * the committed sidecar and its staged successor: a crash between
+    * [[tfStoreWriteHwm]]'s delete and rename leaves only the staged
+    * file, which was complete before the delete began. A staged file
+    * that does not parse is torn, and a torn one can only exist while
+    * the committed mark still does, so it is ignored. */
   private[graft] def tfStoreHwm(s: SparkSession, store: String): Long = {
     val p = tfHwmPath(store)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Long.MinValue
-    else {
-      val in = fs.open(p)
+    def read(f: org.apache.hadoop.fs.Path): String = {
+      val in = fs.open(f)
       try new String(in.readAllBytes,
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong
+        java.nio.charset.StandardCharsets.UTF_8).trim
       finally in.close()
     }
+    val staged = tfHwmStaging(p)
+    (Option.when(fs.exists(p))(read(p).toLong) ++
+      Option.when(fs.exists(staged))(read(staged).toLongOption).flatten)
+      .maxOption.getOrElse(Long.MinValue)
   }
 
   /** Write-new-then-rename, never truncate-in-place (ADVICE r16):
@@ -764,8 +776,7 @@ object TextAnalysis {
       epoch: Long): Unit = {
     val p = tfHwmPath(store)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(
-      p.getParent, p.getName + "_staging")
+    val tmp = tfHwmStaging(p)
     val out = fs.create(tmp, true)
     try out.write(epoch.toString.getBytes(
       java.nio.charset.StandardCharsets.UTF_8))

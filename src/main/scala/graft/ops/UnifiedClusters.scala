@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.Multimodal
 import graft.functions.Multimodal.BandScheme
+import graft.util.Span
 
 /** O-127 (q61d): INCREMENTAL maintenance of the unified multi-signal
   * cluster table — the q89/s15 standing-store cadence applied to the
@@ -84,19 +85,6 @@ object UnifiedClusters {
   import Dedup.materializeBounded
 
   private[graft] val SimScheme = BandScheme(Dedup.SimChunks, 15, 8)
-
-  /** GRAFT_UNI_DEBUG: per-phase stderr timings (the GRAFT_CC_DEBUG
-    * convention) — dev-only, zero cost when unset. */
-  private def timed[A](what: String)(body: => A): A = {
-    if (!sys.env.contains("GRAFT_UNI_DEBUG")) body
-    else {
-      val t0 = System.nanoTime()
-      val r = body
-      System.err.println(s"[graft.uni] $what " +
-        s"${(System.nanoTime() - t0) / 1000000} ms")
-      r
-    }
-  }
 
   /** Submit INDEPENDENT Spark jobs concurrently (SparkSession job
     * submission is thread-safe; local[32] has the slack). The store's
@@ -402,17 +390,18 @@ object UnifiedClusters {
     * materialized edge set the edge table is written from. */
   def unifiedClusterStoreWrite(docs: DataFrame, emb: DataFrame,
       imgSigs: DataFrame, audSigs: DataFrame, store: String): Unit = {
-    val Seq(sh, sim, lsh, img, aud) = timed("build.rows")(inParallel(Seq(
-      () => timed("build.rows.shingle")(
+    val s = docs.sparkSession
+    val Seq(sh, sim, lsh, img, aud) = Span(s, "uni.build.rows")(inParallel(Seq(
+      () => Span(s, "uni.build.rows.shingle")(
         materializeBounded(shingleRowsOf(docs))),
-      () => timed("build.rows.simhash")(materializeBounded(
+      () => Span(s, "uni.build.rows.simhash")(materializeBounded(
         sigRowsOf(Dedup.simhashSigs(docs), "simhash", SimScheme))),
-      () => timed("build.rows.lsh")(materializeBounded(lshRowsOf(emb))),
-      () => timed("build.rows.img")(materializeBounded(
+      () => Span(s, "uni.build.rows.lsh")(materializeBounded(lshRowsOf(emb))),
+      () => Span(s, "uni.build.rows.img")(materializeBounded(
         sigRowsOf(imgSigs, "ahash", Multimodal.AhashScheme))),
-      () => timed("build.rows.aud")(materializeBounded(
+      () => Span(s, "uni.build.rows.aud")(materializeBounded(
         sigRowsOf(audSigs, "ehash", Multimodal.EhashScheme))))))
-    timed("build.writes")(inParallel(Seq(
+    Span(s, "uni.build.writes")(inParallel(Seq(
       () => writeBuckets(sh, s"$store/shingle", "overwrite", "h"),
       () => writeBuckets(sim, s"$store/simhash", "overwrite",
         "band", "ckey"),
@@ -424,7 +413,7 @@ object UnifiedClusters {
         "band", "ckey"),
       () => writeBuckets(aud, s"$store/ehash", "overwrite",
         "band", "ckey"))))
-    val fams = timed("build.fams")(materializeBounded(
+    val fams = Span(s, "uni.build.fams")(materializeBounded(
       famLit(shinglePairs(freshSelf = true)(sh, sh), "shingle")
         .unionByName(famLit(
           sigPairs("simhash", SimScheme, self = true)(sim, sim),
@@ -434,9 +423,9 @@ object UnifiedClusters {
           self = true)(img, img), "img_ahash"))
         .unionByName(famLit(sigPairs("ehash", Multimodal.EhashScheme,
           self = true)(aud, aud), "ehash"))))
-    timed("build.edges_write")(
+    Span(s, "uni.build.edges_write")(
       fams.write.mode("overwrite").parquet(s"$store/edges"))
-    timed("build.cc_clusters")(Dedup.connectedComponents(
+    Span(s, "uni.build.cc_clusters")(Dedup.connectedComponents(
         fams.select(col("doc_a"), col("doc_b")).distinct())
       .withColumn("kb", Dedup.clusterBucket(col("doc_id")))
       .repartition(64, col("kb"))
@@ -675,7 +664,7 @@ object UnifiedClusters {
     requireUnifiedStore(s, store)
     val (Seq(batchSh, batchSim, batchLsh, batchImg, batchAud, batchVec),
       keys, _) =
-      timed("merge.batch_rows")(
+      Span(s, "uni.merge.batch_rows")(
         batchRowsOf(batchDocs, batchEmb, batchImgSigs, batchAudSigs))
     // LEFT ANTI vs the standing edge table (round-13 ADVICE): a batch
     // re-ingesting a doc already edged in the store re-derives the
@@ -684,16 +673,17 @@ object UnifiedClusters {
     // compaction) and a replayed batch's relabel re-touches every
     // component it already welded. Edge-bounded: the standing table
     // is scanned by the relabel anyway.
-    val newEdges = timed("merge.new_edges")(
+    val newEdges = Span(s, "uni.merge.new_edges")(
       materializeBounded(unifiedNewEdgesConcurrent(s, store,
           batchSh, batchSim, batchLsh, batchImg, batchAud, batchVec, keys)
         .join(edgesTable(s, store),
           Seq("doc_a", "doc_b", "family"), "left_anti")))
-    val (untouched, relabeled) = timed("merge.relabel")(Dedup.relabelAgainst(
-      newEdges.select(col("doc_a"), col("doc_b")).distinct(),
-      edgesTable(s, store).select(col("doc_a"), col("doc_b")).distinct(),
-      Dedup.clusterLabelsTable(s, store),
-      Dedup.tornMarker(s, store)))
+    val (untouched, relabeled) = Span(s, "uni.merge.relabel")(
+      Dedup.relabelAgainst(
+        newEdges.select(col("doc_a"), col("doc_b")).distinct(),
+        edgesTable(s, store).select(col("doc_a"), col("doc_b")).distinct(),
+        Dedup.clusterLabelsTable(s, store),
+        Dedup.tornMarker(s, store)))
     (Seq(batchSh, batchSim, batchLsh, batchImg, batchAud, batchVec),
       newEdges, untouched, relabeled)
   }
@@ -794,7 +784,8 @@ object UnifiedClusters {
   }
 
   private def persistMerge(s: SparkSession, store: String,
-      parts: (Seq[DataFrame], DataFrame, DataFrame, DataFrame)): Unit = {
+      parts: (Seq[DataFrame], DataFrame, DataFrame, DataFrame))
+      : Unit = Span(s, "uni.update") {
     val (batchRows, newEdges, untouched, relabeled) = parts
     // dirty buckets collected via the materialization's own observe
     // (round 17, the materializeWithKeys shape) — <= 64 ints, the
@@ -823,7 +814,7 @@ object UnifiedClusters {
     // such candidates (band-discoverable, not yet verifiable), and
     // the replay restores the vec rows and re-derives the skipped
     // pairs (the anti-join keeps persisted edges from duplicating).
-    timed("update.stage_and_appends")(inParallel(Seq(
+    Span(s, "uni.update.stage_and_appends")(inParallel(Seq(
       () => if (buckets.nonEmpty)
         untouched.filter(col("kb").isin(buckets.toIndexedSeq: _*))
           .unionByName(dirty)
@@ -847,9 +838,9 @@ object UnifiedClusters {
       () => writeBuckets(batchAud.select(col("doc_id"), col("ehash"),
         col("band"), col("ckey"), col("kb")), s"$store/ehash",
         "append", "band", "ckey"))))
-    timed("update.edges_append")(
+    Span(s, "uni.update.edges_append")(
       newEdges.write.mode("append").parquet(s"$store/edges"))
-    if (buckets.nonEmpty) timed("update.label_swap") {
+    if (buckets.nonEmpty) Span(s, "uni.update.label_swap") {
       // rename swap (round 17, Dedup.swapStagedBuckets): metadata-only;
       // the torn marker covers the per-bucket window
       Dedup.swapStagedBuckets(s, tmp, s"$store/clusters", "kb")
@@ -931,11 +922,12 @@ object UnifiedClusters {
     * retraction heals every case. */
   def unifiedClusterStoreRetract(s: SparkSession, store: String,
       delDocs: DataFrame, delEmb: DataFrame,
-      delImgSigs: DataFrame, delAudSigs: DataFrame): Unit = {
+      delImgSigs: DataFrame, delAudSigs: DataFrame)
+      : Unit = Span(s, "uni.retract") {
     requireUnifiedStore(s, store)
     val (Seq(delSh, delSim, delLsh, delImg, delAud, delVec), keys,
       kvKeys) =
-      timed("retract.batch_rows")(
+      Span(s, "uni.retract.batch_rows")(
         batchRowsOf(delDocs, delEmb, delImgSigs, delAudSigs))
     // the deleted ids' label-bucket set rides the materialization job
     // as an observed collect_set (round 17, materializeWithKeys) —
@@ -977,7 +969,7 @@ object UnifiedClusters {
           Seq("doc_a"), "left_anti")
         .join(delIds.withColumnRenamed("doc_id", "doc_b"),
           Seq("doc_b"), "left_anti"))
-    val newLabels = timed("retract.relabel")(materializeBounded(
+    val newLabels = Span(s, "uni.retract.relabel")(materializeBounded(
       Dedup.connectedComponentsMaterialized(survEdges, nSurv)
         .withColumn("kb", Dedup.clusterBucket(col("doc_id")))))
 
@@ -1036,7 +1028,7 @@ object UnifiedClusters {
             new org.apache.hadoop.fs.Path(s"$path/$bucketCol=$k")))
         s.catalog.refreshByPath(path)
       }
-    timed("retract.stage_and_rewrites")(inParallel(Seq(
+    Span(s, "uni.retract.stage_and_rewrites")(inParallel(Seq(
       () => stageLabels(),
       () => rewriteFam(s"$store/shingle", shingleIndexTable(s, store),
         "kb", keys("shingle"), "doc_id", Seq("doc_id", "c", "h"),
@@ -1061,7 +1053,7 @@ object UnifiedClusters {
 
     // edge table: unpartitioned rename-swap rewrite (edge-bounded —
     // the same wholesale pass compaction performs)
-    timed("retract.edges_rewrite") {
+    Span(s, "uni.retract.edges_rewrite") {
       val edgesPath = s"$store/edges"
       val cleaned = edgesTable(s, store)
         .join(delIds.withColumnRenamed("doc_id", "doc_a"),
@@ -1090,7 +1082,7 @@ object UnifiedClusters {
     // partitionBy write of zero rows emits no schema-bearing files —
     // exactly the empty-table case the clusterLabelsTable reasoning
     // covers for the live table.
-    if (dirty.nonEmpty) timed("retract.label_swap") {
+    if (dirty.nonEmpty) Span(s, "uni.retract.label_swap") {
       // rename swap (round 17, Dedup.swapStagedBuckets): metadata-only,
       // zero reads — the marker covers the per-bucket window, and the
       // staged DIR SET is the survived set (a retraction that

@@ -1099,25 +1099,27 @@ object Streams {
       s"$countsDir/batch_id=$batchId")
     val fs = commit.getFileSystem(conf)
     if (fs.exists(commit)) return // fully-committed replayed delivery
-    val frames = framesOf
-    val staged = new org.apache.hadoop.fs.Path(
-      s"${countsDir}_wal/staged_$batchId")
-    if (!fs.exists(new org.apache.hadoop.fs.Path(staged, "_SUCCESS")))
-      graft.ops.Dedup.funnelCounts(frames)
-        .coalesce(1).write.mode("overwrite").parquet(staged.toString)
-    val admitted = appendsAndAdmitted(frames)
-    val tmp = new org.apache.hadoop.fs.Path(
-      s"${countsDir}_wal/commit_$batchId")
-    ss.read.schema("stage INT, stage_name STRING, n_docs BIGINT")
-      .parquet(staged.toString)
-      .unionByName(graft.ops.Dedup.funnelCounts(
-        Seq((7, "manifest_append", admitted))))
-      .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    require(fs.rename(tmp, commit),
-      s"counts commit: could not move $tmp into place for " +
-        s"batch $batchId")
-    try fs.delete(staged, true)
-    catch { case _: java.io.IOException => () } // WAL is garbage now
+    graft.util.Span(ss, "funnel.batch") {
+      val frames = framesOf
+      val staged = new org.apache.hadoop.fs.Path(
+        s"${countsDir}_wal/staged_$batchId")
+      if (!fs.exists(new org.apache.hadoop.fs.Path(staged, "_SUCCESS")))
+        graft.ops.Dedup.funnelCounts(frames)
+          .coalesce(1).write.mode("overwrite").parquet(staged.toString)
+      val admitted = appendsAndAdmitted(frames)
+      val tmp = new org.apache.hadoop.fs.Path(
+        s"${countsDir}_wal/commit_$batchId")
+      ss.read.schema("stage INT, stage_name STRING, n_docs BIGINT")
+        .parquet(staged.toString)
+        .unionByName(graft.ops.Dedup.funnelCounts(
+          Seq((7, "manifest_append", admitted))))
+        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      require(fs.rename(tmp, commit),
+        s"counts commit: could not move $tmp into place for " +
+          s"batch $batchId")
+      try fs.delete(staged, true)
+      catch { case _: java.io.IOException => () } // WAL is garbage now
+    }
   }
 
   /** The declared aggregation over the committed per-batch counts —

@@ -74,4 +74,28 @@ class CliServerSpec extends SparkSpec {
       assert(spark.read.parquet(s"$store/pr_events").count() === 4)
     } finally server.stop(0)
   }
+
+  test("GET /update answers 500 with the failure's class and message") {
+    val (commits, artifacts, prdim, store) = fixtures()
+    val missing = s"$artifacts-missing"
+    val conf = Cli.Conf("fetch", commits, missing, prdim, store,
+      history = None, noop = false)
+    val server = Server.start(spark, conf, 0)
+    try {
+      val port = server.getAddress.getPort
+      val resp = HttpClient.newHttpClient().send(
+        HttpRequest.newBuilder(
+          URI.create(s"http://127.0.0.1:$port/update")).GET().build(),
+        HttpResponse.BodyHandlers.ofString())
+      assert(resp.statusCode === 500)
+      val body = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(resp.body())
+      assert(body.get("status").asText === "error")
+      val err = body.get("error").asText
+      assert(err.startsWith(
+        classOf[org.apache.spark.sql.AnalysisException].getName + ": "),
+        err)
+      assert(err.contains("artifacts-missing"), err)
+    } finally server.stop(0)
+  }
 }

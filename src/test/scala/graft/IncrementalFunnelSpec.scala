@@ -273,8 +273,8 @@ class IncrementalFunnelSpec extends SparkSpec {
   }
 
   test("q87h hash ledger: retraction reads NO corpus text beyond the " +
-    "deleted + promoted docs, legacy path agrees, ledger tracks " +
-    "survivors") {
+    "deleted + promoted docs, refuses a store without the ledger, " +
+    "ledger tracks survivors") {
     import spark.implicits._
     def docsOf(rs: (Long, String)*) =
       rs.toSeq.toDF("doc_id", "text")
@@ -318,38 +318,29 @@ class IncrementalFunnelSpec extends SparkSpec {
     retractOn(blind, forged)
     // the ledger path never read doc 0's text: identical state
     assert(tables(blind) === tables(honest))
-    // negative control: the ledger is what makes that true — the
-    // legacy projection path DOES re-hash doc 0 and promotes it
-    val legacy = graft.util.Ephemeral.cloneDir(pristine, "ledger_legacy")
-    def rmLedger(dir: String): Unit = {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        assert(f.delete())
-      }
-      rm(new java.io.File(s"$dir/hashes"))
+    def manifestIds(dir: String): Set[Long] = spark.read
+      .schema("doc_id BIGINT, source STRING, h STRING, kb INT")
+      .parquet(s"$dir/manifest")
+      .select(col("doc_id")).collect().map(_.getLong(0)).toSet
+    assert(manifestIds(honest) === Set(0L, 2L))
+    // negative control: the forged text is load-bearing — a rebuild
+    // over the FORGED surviving corpus makes 0 the min-id carrier of
+    // the deleted hash and manifests it instead of 2, so a retraction
+    // that re-hashed doc 0 could not have matched the honest state
+    val rebuiltForged = java.nio.file.Files
+      .createTempDirectory("incfunnel_ledger_forged_").toString
+    build(rebuiltForged, forged.filter(col("doc_id") =!= 1L))
+    assert(tables(rebuiltForged) !== tables(honest))
+    assert(manifestIds(rebuiltForged) === Set(0L))
+    // a store without the ledger is refused, naming the missing path
+    val noLedger = graft.util.Ephemeral.cloneDir(pristine, "ledger_none")
+    def rm(f: java.io.File): Unit = {
+      if (f.isDirectory) f.listFiles().foreach(rm)
+      assert(f.delete())
     }
-    rmLedger(legacy)
-    retractOn(legacy, forged)
-    assert(tables(legacy) !== tables(honest),
-      "forged text should divert the legacy re-hash path — if it " +
-        "does not, this pin no longer discriminates")
-    // the legacy path promoted forged 0 (min-id carrier) INSTEAD of 2
-    assert(spark.read
-      .schema("doc_id BIGINT, source STRING, h STRING, kb INT")
-      .parquet(s"$legacy/manifest")
-      .select(col("doc_id")).collect().map(_.getLong(0)).toSet
-      === Set(0L))
-    assert(spark.read
-      .schema("doc_id BIGINT, source STRING, h STRING, kb INT")
-      .parquet(s"$honest/manifest")
-      .select(col("doc_id")).collect().map(_.getLong(0)).toSet
-      === Set(0L, 2L))
-    // legacy-path parity on HONEST text: same answer, just costlier
-    val legacyHonest =
-      graft.util.Ephemeral.cloneDir(pristine, "ledger_legacy_honest")
-    rmLedger(legacyHonest)
-    retractOn(legacyHonest, corpus)
-    assert(tables(legacyHonest) === tables(honest))
+    rm(new java.io.File(s"$noLedger/hashes"))
+    val e = intercept[IllegalArgumentException](retractOn(noLedger, corpus))
+    assert(e.getMessage.contains(s"$noLedger/hashes"), e.getMessage)
     // ledger maintenance: after retraction the ledger IS the
     // surviving corpus's projection (what a rebuild writes)
     val rebuilt = java.nio.file.Files
