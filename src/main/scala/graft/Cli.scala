@@ -78,30 +78,26 @@ object Cli {
         }
     }
 
-    val nb = builds.count()
-    val ne = events.count()
-    if (!conf.noop) {
-      if (conf.writeBuilds)
-        TimeSeriesStore.write(builds, s"${conf.store}/build_sizes")
-      if (conf.writeEvents)
-        TimeSeriesStore.write(events, s"${conf.store}/pr_events")
-    }
-    (nb, ne)
+    // a written row kind is counted by its write, in the same pass
+    def rows(df: DataFrame, write: Boolean, table: String): Long =
+      if (conf.noop || !write) df.count()
+      else TimeSeriesStore.write(df, s"${conf.store}/$table")
+    (rows(builds, conf.writeBuilds, "build_sizes"),
+      rows(events, conf.writeEvents, "pr_events"))
   }
 
-  /** Stored pr_events, or an empty typed frame when the store is new
-    * (the empty-store bootstrap, rg.py:140-141 / SURVEY §1.2).
-    * Existence goes through the Hadoop FileSystem of the store path's
-    * own scheme, so a store on HDFS/S3 bootstraps the same way. */
-  def storedEvents(spark: SparkSession, store: String): DataFrame = {
-    val path = new org.apache.hadoop.fs.Path(s"$store/pr_events")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(path)) spark.read.parquet(path.toString)
-    else spark.range(0)
-      .select(lit(null).cast("timestamp").as("ts"),
-        lit(null).cast("long").as("pr_num"),
-        lit(null).cast("string").as("hash"))
-  }
+  /** Stored pr_events of the newest day — which holds the high-water
+    * mark, as the anchored day is monotone in `ts` — or an empty typed
+    * frame when the store is new (the empty-store bootstrap,
+    * rg.py:140-141 / SURVEY §1.2). The store is listed through the
+    * Hadoop FileSystem of its path's own scheme, so a store on HDFS/S3
+    * bootstraps the same way. */
+  def storedEvents(spark: SparkSession, store: String): DataFrame =
+    TimeSeriesStore.readNewestDay(spark, s"$store/pr_events").getOrElse(
+      spark.range(0)
+        .select(lit(null).cast("timestamp").as("ts"),
+          lit(null).cast("long").as("pr_num"),
+          lit(null).cast("string").as("hash")))
 
   def main(args: Array[String]): Unit = {
     val conf = parse(args)

@@ -31,10 +31,13 @@ object Ingest {
     raw
       .select(col("artifact_ts"),
         from_json(col("payload"), sizesSchema).getField("sizes").as("sizes"))
+      // outer + null filter = explode's rows (map keys are never null), minus
+      // an inferred size(from_json(payload)) > 0 pushed below callers' joins
       .select(col("artifact_ts"),
-        explode(col("sizes")).as(Seq("test", "boards")))
+        explode_outer(col("sizes")).as(Seq("test", "boards")))
       .select(col("artifact_ts"), col("test"),
-        explode(col("boards")).as(Seq("board", "f")))
+        explode_outer(col("boards")).as(Seq("board", "f")))
+      .filter(col("board").isNotNull)
       .select(
         col("artifact_ts").as("ts"), col("test"), col("board"),
         col("f.bss").as("bss"), col("f.text").as("text"),

@@ -50,16 +50,18 @@ object Pipeline {
     * event's timestamp (`SELECT hash ... ORDER BY time DESC LIMIT 1`,
     * rg.py:130-131). Empty store -> full history (the reference returns
     * 0; we take the more useful bootstrap semantics, SURVEY §1.2).
+    * The mark is read once, here, and enters both plans as a literal:
+    * neither plan reads `storedEvents`, so writing one output before
+    * the other cannot move the other's cut-off.
     * Returns (new_build_sizes, new_pr_events).
     */
   def incremental(commitLines: DataFrame, artifacts: DataFrame,
       prDim: DataFrame, storedEvents: DataFrame)
       : (DataFrame, DataFrame) = {
-    val hw = storedEvents.agg(max(col("ts")).as("hw"))
-    val commits = Ingest.parseCommitLog(commitLines)
-      .crossJoin(broadcast(hw))
-      .filter(col("hw").isNull || col("commit_ts") > col("hw"))
-      .drop("hw")
+    val hw = storedEvents.agg(max(col("ts"))).head().get(0)
+    val parsed = Ingest.parseCommitLog(commitLines)
+    val commits =
+      if (hw == null) parsed else parsed.filter(col("commit_ts") > lit(hw))
     val events = Ingest.prEvents(commits, prDim)
     val builds = Ingest.flattenSizes(
       commits.join(Ingest.resolveLatestAlias(artifacts, commits),

@@ -1,7 +1,11 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DateType, StructField, StructType}
 
 /** The engine's time-series store — the InfluxDB replacement
   * (SURVEY.md §1.4): a day-partitioned parquet table keyed by the
@@ -22,27 +26,84 @@ object TimeSeriesStore {
   private def anchoredDay(c: org.apache.spark.sql.Column) =
     to_date(date_trunc("DAY", c - expr("INTERVAL 3 HOURS")))
 
-  /** Append points (any frame with a `ts` column) partitioned by day.
-    * `dynamic` overwrite mode replaces only the partitions present in
-    * the batch — the idempotent-replay semantics of the reference. */
+  /** Append points (any frame with a `ts` column) partitioned by day;
+    * returns the number of rows written. `dynamic` overwrite mode
+    * (a per-write option, so the session's own mode is untouched)
+    * replaces only the partitions present in the batch — the
+    * idempotent-replay semantics of the reference.
+    *
+    * The count is observed in the write's own result stage, after the
+    * repartition, so no second pass over `points` runs. It is exact:
+    * the scheduler merges a result task's metrics once per partition,
+    * whatever its retries or speculative copies. (The over-count
+    * caveat of `Dedup.materializeWithCount` comes from checkpoints
+    * executing their plan twice and does not apply here.) */
   def write(points: DataFrame, path: String,
-      overwritePartitions: Boolean = false): Unit = {
-    val mode = if (overwritePartitions) "overwrite" else "append"
-    points.sparkSession.conf
-      .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+      overwritePartitions: Boolean = false): Long = {
+    val rows = Observation()
     points
       .withColumn("day", anchoredDay(col("ts")))
       .repartition(col("day"))
+      .observe(rows, count(lit(1)).as("n"))
       .write
       .partitionBy("day")
-      .mode(mode)
+      .option("partitionOverwriteMode", "dynamic")
+      .mode(if (overwritePartitions) "overwrite" else "append")
       .parquet(path)
+    rows.get("n").asInstanceOf[Long]
   }
+
+  /** The newest `day=` directory of the store at `path`, if any: the
+    * anchored day is monotone in `ts`, so the newest points live there.
+    * One `listStatus`; a missing store has none. */
+  private def newestDay(s: SparkSession, path: String): Option[Path] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val dirs = try fs.listStatus(root) catch {
+      case _: java.io.FileNotFoundException => Array.empty[FileStatus]
+    }
+    dirs.filter(d => d.isDirectory && d.getPath.getName.startsWith("day="))
+      .map(_.getPath).maxByOption(_.getName)
+  }
+
+  /** The store's schema from the Spark row metadata in one parquet
+    * footer of `dayDir`, plus the `day` partition column; None when
+    * the directory holds no file Spark wrote. Read on the driver, so
+    * a store read starts no schema-inference job. */
+  private def schemaOf(s: SparkSession, dayDir: Path): Option[StructType] = {
+    val conf = s.sparkContext.hadoopConfiguration
+    val fs = dayDir.getFileSystem(conf)
+    fs.listStatus(dayDir).iterator
+      .map(_.getPath).find(_.getName.endsWith(".parquet"))
+      .flatMap { f =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+        try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata"))
+        finally reader.close()
+      }
+      .map(json => DataType.fromJson(json).asInstanceOf[StructType]
+        .add(StructField("day", DateType)))
+  }
+
+  /** A reader carrying the schema of [[schemaOf]] `dayDir`; without
+    * one, Spark's own schema inference (and its errors). */
+  private def reader(s: SparkSession, dayDir: Path) =
+    schemaOf(s, dayDir).fold(s.read)(s.read.schema(_))
+
+  /** Read the whole store, its schema taken from the newest partition. */
+  def read(s: SparkSession, path: String): DataFrame =
+    newestDay(s, path).fold(s.read)(reader(s, _)).parquet(path)
+
+  /** Read only the newest `day=` partition (with its `day` column), or
+    * None when the store has no partition yet. */
+  def readNewestDay(s: SparkSession, path: String): Option[DataFrame] =
+    newestDay(s, path).map(d =>
+      reader(s, d).option("basePath", path).parquet(d.toString))
 
   /** Read back a day range; the filter on the partition column prunes
     * directories before any file IO. */
   def readRange(s: SparkSession, path: String,
       fromDay: String, untilDay: String): DataFrame =
-    s.read.parquet(path)
+    read(s, path)
       .filter(col("day") >= lit(fromDay) && col("day") < lit(untilDay))
 }

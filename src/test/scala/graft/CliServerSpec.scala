@@ -33,6 +33,18 @@ class CliServerSpec extends SparkSpec {
     (commits, artifacts, prdim, s"$base/store")
   }
 
+  /** GET `path` from a local server, failing the test instead of hanging
+    * the suite if the reply takes more than two minutes. */
+  private def get(port: Int, path: String): String = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    Await.result(Future(HttpClient.newHttpClient().send(
+      HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port$path"))
+        .GET().build(),
+      HttpResponse.BodyHandlers.ofString()).body()), 120.seconds)
+  }
+
   test("cli fetch writes the store; --noop counts without writing") {
     val (commits, artifacts, prdim, store) = fixtures()
     val conf = Cli.Conf("fetch", commits, artifacts, prdim, store,
@@ -61,17 +73,51 @@ class CliServerSpec extends SparkSpec {
     val server = Server.start(spark, conf, 0)
     try {
       val port = server.getAddress.getPort
-      val client = HttpClient.newHttpClient()
-      def get(path: String): String = client.send(
-        HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port$path"))
-          .GET().build(),
-        HttpResponse.BodyHandlers.ofString()).body()
-
-      assert(get("/").contains("riotgraphsspark"))
+      assert(get(port, "/").contains("riotgraphsspark"))
       // only commit ddd is past the stored high-water mark; it has no
       // artifact, so 1 event + 0 builds
-      assert(get("/update") === """{"status":"ok","updates":1}""")
+      assert(get(port, "/update") === """{"status":"ok","updates":1}""")
       assert(spark.read.parquet(s"$store/pr_events").count() === 4)
+    } finally server.stop(0)
+  }
+
+  test("GET /update answers the rows the store gained; a second one with " +
+    "no new commits answers 0 and writes nothing") {
+    import spark.implicits._
+    val (commits, artifacts, prdim, store) = fixtures()
+    val conf = Cli.Conf("fetch", commits, artifacts, prdim, store,
+      history = None, noop = false)
+    Cli.run(spark, conf)
+    Files.writeString(java.nio.file.Paths.get(commits), "\n" +
+      s"ddd${us}2026-08-04 10:00:00 +0000${us}Merge #4 four",
+      java.nio.file.StandardOpenOption.APPEND)
+    Seq(("ddd", """{"sizes":{"t":{"b":{"bss":7,"text":8,"data":9},""" +
+        """"c":{"bss":1,"text":1,"data":1}}}}""",
+      Timestamp.valueOf("2026-08-04 10:05:00")))
+      .toDF("hash", "payload", "artifact_ts")
+      .write.mode("append").parquet(artifacts)
+
+    def stored(): Long = Seq("build_sizes", "pr_events")
+      .map(t => spark.read.parquet(s"$store/$t").count()).sum
+    def dataFiles(): Set[String] = {
+      import scala.jdk.CollectionConverters._
+      val w = Files.walk(java.nio.file.Paths.get(store))
+      try w.iterator.asScala.map(_.toString)
+        .filter(_.endsWith(".parquet")).toSet
+      finally w.close()
+    }
+    val server = Server.start(spark, conf, 0)
+    try {
+      val port = server.getAddress.getPort
+      val before = stored()
+      // 1 event (ddd) + 2 build cells of its artifact
+      assert(get(port, "/update") === """{"status":"ok","updates":3}""")
+      assert(stored() - before === 3L)
+
+      val files = dataFiles()
+      assert(get(port, "/update") === """{"status":"ok","updates":0}""")
+      assert(stored() === before + 3L)
+      assert(dataFiles() === files)
     } finally server.stop(0)
   }
 

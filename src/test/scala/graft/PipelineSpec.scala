@@ -80,4 +80,36 @@ class PipelineSpec extends SparkSpec {
       .orderBy(col("ts")).select("dec").as[Long].collect().toSeq
     assert(got === Seq(2L, 3L))
   }
+
+  test("incremental parses sizes.json only above the commits join") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+    val lines = Seq(
+      s"aaa${us}2026-08-01 10:00:00 +0000${us}Merge #1",
+      s"bbb${us}2026-08-02 10:00:00 +0000${us}Merge #2"
+    ).toDF("value")
+    // a file source, not a local relation: the optimizer would fold a
+    // filter over local rows away before the plan could show it
+    val dir = java.nio.file.Files.createTempDirectory("graft_arts_") + "/a"
+    Seq(
+      ("aaa", sizesJson(1), Timestamp.valueOf("2026-08-01 10:05:00")),
+      ("bbb", sizesJson(2), Timestamp.valueOf("2026-08-02 10:05:00"))
+    ).toDF("hash", "payload", "artifact_ts").write.parquet(dir)
+    val artifacts = spark.read.parquet(dir)
+    val prDim = Seq((2L, "second")).toDF("pr_num", "title")
+    val stored = Seq((Timestamp.valueOf("2026-08-01 10:00:00"), 1L, "aaa"))
+      .toDF("ts", "pr_num", "hash")
+
+    val (builds, _) = Pipeline.incremental(lines, artifacts, prDim, stored)
+    def parses(p: LogicalPlan) =
+      p.exists(_.expressions.exists(_.exists(_.isInstanceOf[JsonToStructs])))
+    val plan = builds.queryExecution.optimizedPlan
+    val joins = plan.collect { case j: Join => j }
+    assert(joins.nonEmpty, plan)
+    assert(!joins.exists(j => j.children.exists(parses)), plan)
+    assert(parses(plan), plan)
+    assert(builds.select("test", "board", "dec").as[(String, String, Long)]
+      .collect().toSeq === Seq(("tests/unittests", "native", 620L)))
+  }
 }

@@ -48,4 +48,45 @@ class TimeSeriesStoreSpec extends SparkSpec {
       .orderBy(col("ts")).select("dec").as[Long].collect().toSeq
     assert(got === Seq(1L, 20L))
   }
+
+  test("write returns its row count and leaves the session's " +
+    "partitionOverwriteMode as it found it") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val before = spark.conf.getOption(key)
+    val path = Files.createTempDirectory("graft_store_").toString
+    spark.conf.set(key, "static")
+    try {
+      assert(TimeSeriesStore.write(mk(("2026-08-01 10:00:00", 1L),
+        ("2026-08-02 10:00:00", 2L), ("2026-08-02 11:00:00", 3L)),
+        path) === 3L)
+      assert(spark.conf.get(key) === "static")
+      assert(TimeSeriesStore.write(mk(("2026-08-02 10:00:00", 20L)), path,
+        overwritePartitions = true) === 1L)
+      assert(spark.conf.get(key) === "static")
+      assert(TimeSeriesStore.write(mk(), path) === 0L)
+    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("read takes the schema from a footer on the driver: no job, the " +
+    "inferred schema; readNewestDay reads the newest partition only") {
+    val path = Files.createTempDirectory("graft_store_").toString
+    TimeSeriesStore.write(mk(("2026-08-01 10:00:00", 1L),
+      ("2026-08-02 10:00:00", 2L), ("2026-08-03 02:00:00", 3L)), path)
+    val ((all, newest), descs) = jobDescriptions(
+      util.Span(spark, "spec.read")((
+        TimeSeriesStore.read(spark, path),
+        TimeSeriesStore.readNewestDay(spark, path))))
+    assert(!descs.contains("spec.read"), descs)
+
+    assert(all.schema === spark.read.parquet(path).schema)
+    assert(all.count() === 3)
+    val nd = newest.get
+    assert(nd.schema === all.schema)
+    // 02:00 on Aug 3 anchors to Aug 2, with the 10:00 point
+    assert(nd.select("dec").orderBy("dec").collect().map(_.getLong(0))
+      .toSeq === Seq(2L, 3L))
+    assert(nd.select(col("day").cast("string")).distinct().collect()
+      .map(_.getString(0)).toSeq === Seq("2026-08-02"))
+    assert(TimeSeriesStore.readNewestDay(spark, s"$path-missing").isEmpty)
+  }
 }

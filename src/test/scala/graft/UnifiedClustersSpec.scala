@@ -487,22 +487,13 @@ class UnifiedClustersSpec extends SparkSpec {
   test("Span: the update's concurrent wave and edges append carry their " +
     "span names as job descriptions; the caller's description is " +
     "restored after the call and after a span that throws") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import scala.jdk.CollectionConverters._
     val (cd, bd, ce, be, ci, bi, ca, ba) = fixture()
     val store = java.nio.file.Files
       .createTempDirectory("uni_cluster_span_").toString
     ops.UnifiedClusters.unifiedClusterStoreWrite(cd, ce, ci, ca, store)
     val sc = spark.sparkContext
     val key = "spark.job.description"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties).flatMap(p =>
-          Option(p.getProperty(key))).getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    try {
+    val (_, descs) = jobDescriptions {
       assert(sc.getLocalProperty(key) === null)
       ops.UnifiedClusters.unifiedClusterStoreUpdate(spark, store,
         bd, be, bi, ba)
@@ -510,15 +501,7 @@ class UnifiedClustersSpec extends SparkSpec {
       intercept[IllegalStateException](util.Span(spark, "spec.throws")(
         throw new IllegalStateException("boom")))
       assert(sc.getLocalProperty(key) === null)
-      // the bus delivers in order: once this job's start is seen, every
-      // job the update submitted has been seen too
-      util.Span(spark, "spec.marker")(spark.range(1).count())
-      val deadline = System.currentTimeMillis() + 30000
-      while (!seen.contains("spec.marker") &&
-          System.currentTimeMillis() < deadline) Thread.sleep(20)
-    } finally sc.removeSparkListener(listener)
-    val descs = seen.asScala.toSeq
-    assert(descs.contains("spec.marker"), "listener bus did not drain")
+    }
     // six family index appends always, plus the label staging write
     // when any bucket is dirty — each at least one job, every one
     // submitted from a pool thread
