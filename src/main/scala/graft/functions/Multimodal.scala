@@ -576,17 +576,16 @@ object Multimodal {
 
   /** Write/append a perceptual admission index: band rows partitioned
     * by kb = xxhash64(band, ckey) mod 64 (the q85 layout — band folded
-    * into one 64-way bucket hash, co-located so each partition dir is
-    * one task's files). */
+    * into one 64-way bucket hash), written by
+    * [[graft.ops.Dedup.writeBucketed]]. */
   def sigIndexWrite(sigs: DataFrame, sigCol: String,
       scheme: BandScheme, store: String,
       mode: String = "overwrite"): Unit =
-    sigBandRows(sigs.filter(col("doc_id").isNotNull), sigCol, scheme)
-      .withColumn("kb",
-        pmod(xxhash64(col("band"), col("ckey")), lit(64)).cast("int"))
-      .repartition(64, col("kb"))
-      .sortWithinPartitions(col("kb"), col("band"), col("ckey"))
-      .write.mode(mode).partitionBy("kb").parquet(store)
+    graft.ops.Dedup.writeBucketed(
+      sigBandRows(sigs.filter(col("doc_id").isNotNull), sigCol, scheme)
+        .withColumn("kb",
+          pmod(xxhash64(col("band"), col("ckey")), lit(64)).cast("int")),
+      store, mode, "kb", Seq("band", "ckey"))
 
   def ahashIndexWrite(sigs: DataFrame, store: String,
       mode: String = "overwrite"): Unit =
@@ -607,7 +606,7 @@ object Multimodal {
       maxFilesPerBucket: Int = 4): Seq[Int] =
     graft.ops.Dedup.compactBuckets(s, store, "kb",
       Seq(col("doc_id"), col(sigCol), col("band"), col("ckey")),
-      Seq(col("kb"), col("band"), col("ckey")), maxFilesPerBucket)
+      Seq("band", "ckey"), maxFilesPerBucket)
 
   /** Admit the batch's perceptually-new images against the stored band
     * index: the index read is partition-pruned to the batch's <= 64 kb

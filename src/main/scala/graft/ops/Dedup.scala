@@ -149,16 +149,34 @@ object Dedup {
     * and co-location as dedupIndexWrite. */
   def dedupIndexWriteHashes(hashes: DataFrame, store: String,
       mode: String): Unit =
-    hashes.select(col("content_hash"))
+    writeBucketed(hashes.select(col("content_hash"))
       .distinct()
       .withColumn("bucket",
-        pmod(xxhash64(col("content_hash")), lit(64)).cast("int"))
-      // co-locate each bucket into one task before the partitioned
-      // write: without this every upstream task appends to every
-      // bucket directory — width x 64 small files per write (the
-      // classic small-files leak, compounding per merge append)
-      .repartition(64, col("bucket"))
-      .write.mode(mode).partitionBy("bucket").parquet(store)
+        pmod(xxhash64(col("content_hash")), lit(64)).cast("int")),
+      store, mode, "bucket", Seq.empty)
+
+  /** The one write of every bucketed store: `rows` land under `path`
+    * partitioned by `bucketCol`, each bucket file sorted by
+    * (`bucketCol` +: `ordCols`) so parquet row-group stats serve point
+    * probes. Invariant: each call adds at most ONE file per bucket
+    * dir. Hash-partitioning on the bucket column sends all of a
+    * bucket's rows to one task, which writes them as one file; without
+    * the shuffle every upstream task appends to every bucket dir
+    * (width x buckets small files per write, compounding per append).
+    * The shuffle takes no partition count, so AQE sizes the write to
+    * its data: coalescing only merges whole hash partitions, so a
+    * bucket never splits across tasks at any width (a fixed 64 paid 64
+    * tasks for a 40-row micro-batch append). `dynamicOverwrite`
+    * replaces only the buckets `rows` holds and leaves the rest. */
+  private[graft] def writeBucketed(rows: DataFrame, path: String,
+      mode: String, bucketCol: String, ordCols: Seq[String],
+      dynamicOverwrite: Boolean = false): Unit = {
+    val w = rows.repartition(col(bucketCol))
+      .sortWithinPartitions((bucketCol +: ordCols).map(col): _*)
+      .write.mode(mode)
+    (if (dynamicOverwrite) w.option("partitionOverwriteMode", "dynamic")
+     else w).partitionBy(bucketCol).parquet(path)
+  }
 
   /** Admit the batch's new documents: keep-first within the batch (the
     * q35 rule), then LEFT ANTI against the stored index on
@@ -220,7 +238,7 @@ object Dedup {
   def dedupIndexCompact(s: SparkSession, store: String,
       maxFilesPerBucket: Int = 4): Seq[Int] =
     compactBuckets(s, store, "bucket", Seq(col("content_hash")),
-      Seq(col("bucket")), maxFilesPerBucket)
+      Seq.empty, maxFilesPerBucket)
 
   /** The near-dup band store's compaction pass (the dedupIndexCompact
     * reasoning applied to the q85 layout): rewrite kb buckets whose
@@ -232,8 +250,7 @@ object Dedup {
       maxFilesPerBucket: Int = 4): Seq[Int] =
     compactBuckets(s, store, "kb",
       Seq(col("doc_id"), col("mins"), col("band"), col("k1"), col("k2")),
-      Seq(col("kb"), col("band"), col("k1"), col("k2")),
-      maxFilesPerBucket)
+      Seq("band", "k1", "k2"), maxFilesPerBucket)
 
   /** Shared compaction pass over a hash-bucket-partitioned parquet
     * store (both standing dedup indexes): enumerate bucket dirs
@@ -251,7 +268,7 @@ object Dedup {
     * oversized bucket) holds on any object store. */
   private[graft] def compactBuckets(s: SparkSession, store: String,
       partCol: String, projection: Seq[org.apache.spark.sql.Column],
-      sortCols: Seq[org.apache.spark.sql.Column],
+      ordCols: Seq[String],
       maxFilesPerBucket: Int,
       // the per-bucket rewrite: DISTINCT by default (idempotent-fact
       // stores: hashes, band rows); the tf store passes a SUM fold
@@ -272,15 +289,12 @@ object Dedup {
     val tmp = store + "_compacting"
     val pruned = s.read.parquet(store)
       .filter(col(partCol).isin(over: _*)) // partition prune
-    fold.fold(
+    val compacted = fold.fold(
       pruned.select(projection :+ col(partCol): _*).distinct())(
       f => f(pruned))
-      // one task per bucket => one file per bucket dir (the
-      // dedupIndexWrite co-location reasoning)
-      .repartition(over.length, col(partCol))
-      .sortWithinPartitions(sortCols: _*)
-      .write.mode("overwrite").partitionBy(partCol).parquet(tmp)
-    s.read.parquet(tmp)
+    writeBucketed(compacted, tmp, "overwrite", partCol, ordCols)
+    // read back with the written frame's schema: no inference job
+    s.read.schema(compacted.schema).parquet(tmp)
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partCol).parquet(store)
@@ -331,14 +345,10 @@ object Dedup {
     * than the text. */
   def neardupIndexWrite(docs: DataFrame, store: String,
       mode: String = "overwrite"): Unit =
-    bandRows(q36bSig(docs.filter(col("doc_id").isNotNull)))
+    writeBucketed(bandRows(q36bSig(docs.filter(col("doc_id").isNotNull)))
       .withColumn("kb",
-        pmod(xxhash64(col("band"), col("k1")), lit(64)).cast("int"))
-      // co-locate each partition-dir into one task (dedupIndexWrite's
-      // small-files reasoning: without this, width x |dirs| files)
-      .repartition(64, col("kb"))
-      .sortWithinPartitions(col("kb"), col("band"), col("k1"), col("k2"))
-      .write.mode(mode).partitionBy("kb").parquet(store)
+        pmod(xxhash64(col("band"), col("k1")), lit(64)).cast("int")),
+      store, mode, "kb", Seq("band", "k1", "k2"))
 
   /** Admit the batch's genuinely-new documents against the stored band
     * index. The index read is EXPLICITLY partition-pruned to the
@@ -511,13 +521,9 @@ object Dedup {
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
       .distinct()
       .write.mode("overwrite").parquet(s"$store/edges")
-    connectedComponents(clusterEdgesTable(s, store))
-      .withColumn("kb", clusterBucket(col("doc_id")))
-      // co-locate each bucket into one task before the partitioned
-      // write (the dedupIndexWrite reasoning): one file per bucket dir
-      .repartition(64, col("kb"))
-      .sortWithinPartitions(col("kb"), col("cluster_id"), col("doc_id"))
-      .write.mode("overwrite").partitionBy("kb").parquet(s"$store/clusters")
+    writeBucketed(connectedComponents(clusterEdgesTable(s, store))
+      .withColumn("kb", clusterBucket(col("doc_id"))),
+      s"$store/clusters", "overwrite", "kb", Seq("cluster_id", "doc_id"))
   }
 
   /** The cluster table's partition bucket: pmod(doc_id, 64) — the q83
@@ -830,25 +836,19 @@ object Dedup {
     // band-match — a silent permanent divergence.
     graft.ops.UnifiedClusters.inParallel(Seq(
       () => if (buckets.nonEmpty)
-        untouched.filter(col("kb").isin(buckets.toIndexedSeq: _*))
-          .unionByName(dirty)
-          .repartition(buckets.length, col("kb"))
-          .sortWithinPartitions(col("kb"), col("cluster_id"),
-            col("doc_id"))
-          .write.mode("overwrite").partitionBy("kb").parquet(tmp),
+        writeBucketed(untouched.filter(col("kb").isin(buckets.toIndexedSeq: _*))
+          .unionByName(dirty), tmp, "overwrite", "kb",
+          Seq("cluster_id", "doc_id")),
       // ALWAYS append the batch's band rows — an edgeless batch is
       // still admitted corpus that future merges must match against —
       // reusing the merge's OWN materialized band table
       // (neardupIndexWrite layout) instead of re-running the batch's
       // signature pipeline a second time: one signature pass per
       // persisted merge.
-      () => batchBands
+      () => writeBucketed(batchBands
         .select(col("doc_id"), col("mins"), col("band"), col("k1"),
-          col("k2"), col("kb")) // neardupIndexWrite's column order
-        .repartition(64, col("kb"))
-        .sortWithinPartitions(col("kb"), col("band"), col("k1"),
-          col("k2"))
-        .write.mode("append").partitionBy("kb").parquet(s"$store/bands")))
+          col("k2"), col("kb")), // neardupIndexWrite's column order
+        s"$store/bands", "append", "kb", Seq("band", "k1", "k2"))))
     newEdges.write.mode("append").parquet(s"$store/edges")
     if (buckets.nonEmpty) {
       // rename swap (round 17, swapStagedBuckets): metadata-only; the
@@ -1457,7 +1457,7 @@ object Dedup {
     * build step to piggyback on). */
   def manifestWrite(docs: DataFrame, store: String,
       mode: String = "overwrite"): Unit =
-    docs.filter(col("doc_id").isNotNull)
+    writeBucketed(docs.filter(col("doc_id").isNotNull)
       .select(col("doc_id"), col("source"),
         sha2(col("text").cast("binary"), 256).as("h"))
       // exact-duplicate rows dedup AT WRITE TIME (round-13 review
@@ -1470,10 +1470,8 @@ object Dedup {
       // appends compaction's DISTINCT reclaims. No-op for well-formed
       // generations; rows are 40 B.
       .distinct()
-      .withColumn("kb", pmod(xxhash64(col("doc_id")), lit(64)).cast("int"))
-      .repartition(64, col("kb"))
-      .sortWithinPartitions(col("kb"), col("doc_id"))
-      .write.mode(mode).partitionBy("kb").parquet(store)
+      .withColumn("kb", pmod(xxhash64(col("doc_id")), lit(64)).cast("int")),
+      store, mode, "kb", Seq("doc_id"))
 
   /** Diff two PERSISTED generation manifests — the no-rescan gate.
     * Each side is a 3-column 40-byte-row scan; the full-outer join
@@ -1498,7 +1496,7 @@ object Dedup {
       maxFilesPerBucket: Int = 4): Seq[Int] =
     compactBuckets(s, store, "kb",
       Seq(col("doc_id"), col("source"), col("h")),
-      Seq(col("kb"), col("doc_id")), maxFilesPerBucket)
+      Seq("doc_id"), maxFilesPerBucket)
 
   /** Declared O-119 binding: materialize both generations' manifests
     * (the q95 snapshot views, so both bindings describe the same
@@ -1621,11 +1619,8 @@ object Dedup {
       .parquet(s"$storeDir/bands")
 
   def minhashWrite(docs: DataFrame, storeDir: String): Unit =
-    bandRows(q36bSig(docs))
-      .repartition(col("band"))
-      .sortWithinPartitions(col("band"), col("k1"), col("k2"))
-      .write.mode("overwrite").partitionBy("band")
-      .parquet(s"$storeDir/bands")
+    writeBucketed(bandRows(q36bSig(docs)), s"$storeDir/bands", "overwrite",
+      "band", Seq("k1", "k2"))
 
   /** Join-free INCREMENTAL near-dup check against the stored signature
     * table: signature the one new document (driver-side collect of a
@@ -3223,14 +3218,12 @@ object Dedup {
     * bucket because the ledger's one consumer looks up by hash. */
   private[graft] def hashLedgerWrite(docs: DataFrame, store: String,
       mode: String = "overwrite"): Unit =
-    docs.filter(col("doc_id").isNotNull)
+    writeBucketed(docs.filter(col("doc_id").isNotNull)
       .select(col("doc_id"),
         sha2(col("text").cast("binary"), 256).as("h"))
       .distinct()
-      .withColumn("hb", pmod(xxhash64(col("h")), lit(64)).cast("int"))
-      .repartition(64, col("hb"))
-      .sortWithinPartitions(col("hb"), col("h"), col("doc_id"))
-      .write.mode(mode).partitionBy("hb").parquet(store)
+      .withColumn("hb", pmod(xxhash64(col("h")), lit(64)).cast("int")),
+      store, mode, "hb", Seq("h", "doc_id"))
 
   /** Bound the ledger's per-bucket file count under daily appends —
     * the family-standard pass (compactBuckets' DISTINCT also reclaims
@@ -3239,7 +3232,7 @@ object Dedup {
       maxFilesPerBucket: Int = 4): Seq[Int] =
     compactBuckets(s, s"$stores/hashes", "hb",
       Seq(col("doc_id"), col("h")),
-      Seq(col("hb"), col("h"), col("doc_id")), maxFilesPerBucket)
+      Seq("h", "doc_id"), maxFilesPerBucket)
 
   /** Swap a staging dir's bucket partitions into a live partitioned
     * table by RENAME (round 17): the previous read-staging-then-
@@ -3294,11 +3287,8 @@ object Dedup {
     val (rewritten, survivedKeys) = materializeWithKeys(pruned, bucketCol)
     val survived = survivedKeys.toSet
     if (survived.nonEmpty)
-      rewritten.repartition(survived.size, col(bucketCol))
-        .sortWithinPartitions((bucketCol +: ordCols).map(col): _*)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(bucketCol).parquet(path)
+      writeBucketed(rewritten, path, "overwrite", bucketCol, ordCols,
+        dynamicOverwrite = true)
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     keys.filterNot(survived).foreach(k => deleteEmptiedBucket(fs,

@@ -294,7 +294,7 @@ object Similarity {
       maxFilesPerCell: Int = 4): Seq[Int] =
     Dedup.compactBuckets(s, s"$storeDir/vectors", "cell_id",
       Seq(col("vec_id"), col("label"), col("qe")),
-      Seq(col("cell_id"), col("vec_id")), maxFilesPerCell)
+      Seq("vec_id"), maxFilesPerCell)
 
   // O-143: ANN STORE RETRACTION (VERDICT r16 #1) — round 16 built the
   // right-to-be-forgotten delete for the unified cluster store (q61f),
@@ -875,7 +875,7 @@ object Similarity {
       maxFilesPerCell: Int = 4): Seq[Int] =
     Dedup.compactBuckets(s, s"$storeDir/vectors", "cell_id",
       Seq(col("vec_id"), col("label"), col("codes")),
-      Seq(col("cell_id"), col("vec_id")), maxFilesPerCell)
+      Seq("vec_id"), maxFilesPerCell)
 
   /** ADC probe: rank centroids (tiny scan + driver point-read of nprobe
     * ids, same documented shape as ivfProbe), build the k*m-entry

@@ -711,8 +711,7 @@ object TextAnalysis {
   // appends nothing instead of double-counting.
   /** Write (or append, for a merge) the tf store: one partially
     * aggregated groupBy(token) pass over the given docs — the q72
-    * train pass — bucketed by token hash, one task and file per
-    * bucket (the dedupIndexWrite small-files reasoning). */
+    * train pass — bucketed by token hash ([[Dedup.writeBucketed]]). */
   def tfStoreWrite(docs: DataFrame, store: String,
       mode: String = "overwrite", epoch: Long = 0L,
       sign: Long = 1L): Unit = {
@@ -726,13 +725,11 @@ object TextAnalysis {
       Seq(p, tfHwmStaging(p)).filter(fs.exists)
         .foreach(fs.delete(_, false))
     }
-    tokenPositions(docs)
+    Dedup.writeBucketed(tokenPositions(docs)
       .groupBy(col("tok")).agg((count(lit(1)) * lit(sign)).as("c"))
       .withColumn("epoch", lit(epoch))
-      .withColumn("bucket", pmod(xxhash64(col("tok")), lit(64)).cast("int"))
-      .repartition(64, col("bucket"))
-      .sortWithinPartitions(col("bucket"), col("tok"))
-      .write.mode(mode).partitionBy("bucket").parquet(store)
+      .withColumn("bucket", pmod(xxhash64(col("tok")), lit(64)).cast("int")),
+      store, mode, "bucket", Seq("tok"))
   }
 
   /** The hwm sidecar (leading underscore: Spark's file index treats it
@@ -860,7 +857,7 @@ object TextAnalysis {
     if (maxEpoch > tfStoreHwm(s, store))
       tfStoreWriteHwm(s, store, maxEpoch)
     Dedup.compactBuckets(s, store, "bucket", Seq.empty,
-      Seq(col("bucket"), col("tok")), maxFilesPerBucket,
+      Seq("tok"), maxFilesPerBucket,
       fold = Some(df => df
         .select(col("epoch"), col("tok"), col("c"), col("bucket"))
         .distinct()

@@ -207,17 +207,6 @@ object UnifiedClusters {
       .withColumn("kb",
         pmod(xxhash64(col("band"), col("ckey")), lit(64)).cast("int"))
 
-  /** 64-bucket co-located partitioned write (the q85 layout). */
-  private def writeBuckets(rows: DataFrame, path: String, mode: String,
-      ordCols: String*): Unit =
-    writeBucketsBy(rows, path, mode, "kb", ordCols: _*)
-
-  private def writeBucketsBy(rows: DataFrame, path: String, mode: String,
-      bucketCol: String, ordCols: String*): Unit =
-    rows.repartition(64, col(bucketCol))
-      .sortWithinPartitions((bucketCol +: ordCols).map(col): _*)
-      .write.mode(mode).partitionBy(bucketCol).parquet(path)
-
   // ---- pair rules over index rows (self-join at build time,
   //      cross + intra at merge time — ONE rule per family) ----------
   /** The per-family id guard: SELF pair sets (build-time corpus,
@@ -402,17 +391,18 @@ object UnifiedClusters {
       () => Span(s, "uni.build.rows.aud")(materializeBounded(
         sigRowsOf(audSigs, "ehash", Multimodal.EhashScheme))))))
     Span(s, "uni.build.writes")(inParallel(Seq(
-      () => writeBuckets(sh, s"$store/shingle", "overwrite", "h"),
-      () => writeBuckets(sim, s"$store/simhash", "overwrite",
-        "band", "ckey"),
-      () => writeBuckets(lsh.drop("qe"), s"$store/emb_lsh", "overwrite",
-        "band", "bkey"),
-      () => writeBucketsBy(vecRowsOf(lsh), s"$store/emb_vec",
-        "overwrite", "kv", "vec_id"),
-      () => writeBuckets(img, s"$store/img_ahash", "overwrite",
-        "band", "ckey"),
-      () => writeBuckets(aud, s"$store/ehash", "overwrite",
-        "band", "ckey"))))
+      () => Dedup.writeBucketed(sh, s"$store/shingle", "overwrite", "kb",
+        Seq("h")),
+      () => Dedup.writeBucketed(sim, s"$store/simhash", "overwrite", "kb",
+        Seq("band", "ckey")),
+      () => Dedup.writeBucketed(lsh.drop("qe"), s"$store/emb_lsh",
+        "overwrite", "kb", Seq("band", "bkey")),
+      () => Dedup.writeBucketed(vecRowsOf(lsh), s"$store/emb_vec",
+        "overwrite", "kv", Seq("vec_id")),
+      () => Dedup.writeBucketed(img, s"$store/img_ahash", "overwrite", "kb",
+        Seq("band", "ckey")),
+      () => Dedup.writeBucketed(aud, s"$store/ehash", "overwrite", "kb",
+        Seq("band", "ckey")))))
     val fams = Span(s, "uni.build.fams")(materializeBounded(
       famLit(shinglePairs(freshSelf = true)(sh, sh), "shingle")
         .unionByName(famLit(
@@ -425,12 +415,11 @@ object UnifiedClusters {
           self = true)(aud, aud), "ehash"))))
     Span(s, "uni.build.edges_write")(
       fams.write.mode("overwrite").parquet(s"$store/edges"))
-    Span(s, "uni.build.cc_clusters")(Dedup.connectedComponents(
+    Span(s, "uni.build.cc_clusters")(Dedup.writeBucketed(
+      Dedup.connectedComponents(
         fams.select(col("doc_a"), col("doc_b")).distinct())
-      .withColumn("kb", Dedup.clusterBucket(col("doc_id")))
-      .repartition(64, col("kb"))
-      .sortWithinPartitions(col("kb"), col("cluster_id"), col("doc_id"))
-      .write.mode("overwrite").partitionBy("kb").parquet(s"$store/clusters"))
+        .withColumn("kb", Dedup.clusterBucket(col("doc_id"))),
+      s"$store/clusters", "overwrite", "kb", Seq("cluster_id", "doc_id")))
   }
 
   private def requireUnifiedStore(s: SparkSession, store: String): Unit = {
@@ -816,28 +805,26 @@ object UnifiedClusters {
     // pairs (the anti-join keeps persisted edges from duplicating).
     Span(s, "uni.update.stage_and_appends")(inParallel(Seq(
       () => if (buckets.nonEmpty)
-        untouched.filter(col("kb").isin(buckets.toIndexedSeq: _*))
-          .unionByName(dirty)
-          .repartition(buckets.length, col("kb"))
-          .sortWithinPartitions(col("kb"), col("cluster_id"),
-            col("doc_id"))
-          .write.mode("overwrite").partitionBy("kb").parquet(tmp),
-      () => writeBuckets(batchSh.select(col("doc_id"), col("c"),
-        col("h"), col("kb")), s"$store/shingle", "append", "h"),
-      () => writeBuckets(batchSim.select(col("doc_id"), col("simhash"),
-        col("band"), col("ckey"), col("kb")), s"$store/simhash",
-        "append", "band", "ckey"),
-      () => writeBuckets(batchLsh.select(col("vec_id"),
+        Dedup.writeBucketed(
+          untouched.filter(col("kb").isin(buckets.toIndexedSeq: _*))
+            .unionByName(dirty),
+          tmp, "overwrite", "kb", Seq("cluster_id", "doc_id")),
+      () => Dedup.writeBucketed(batchSh.select(col("doc_id"), col("c"),
+        col("h"), col("kb")), s"$store/shingle", "append", "kb", Seq("h")),
+      () => Dedup.writeBucketed(batchSim.select(col("doc_id"),
+        col("simhash"), col("band"), col("ckey"), col("kb")),
+        s"$store/simhash", "append", "kb", Seq("band", "ckey")),
+      () => Dedup.writeBucketed(batchLsh.select(col("vec_id"),
         col("band"), col("bkey"), col("kb")), s"$store/emb_lsh",
-        "append", "band", "bkey"),
-      () => writeBucketsBy(batchVec, s"$store/emb_vec",
-        "append", "kv", "vec_id"),
-      () => writeBuckets(batchImg.select(col("doc_id"), col("ahash"),
-        col("band"), col("ckey"), col("kb")), s"$store/img_ahash",
-        "append", "band", "ckey"),
-      () => writeBuckets(batchAud.select(col("doc_id"), col("ehash"),
-        col("band"), col("ckey"), col("kb")), s"$store/ehash",
-        "append", "band", "ckey"))))
+        "append", "kb", Seq("band", "bkey")),
+      () => Dedup.writeBucketed(batchVec, s"$store/emb_vec",
+        "append", "kv", Seq("vec_id")),
+      () => Dedup.writeBucketed(batchImg.select(col("doc_id"),
+        col("ahash"), col("band"), col("ckey"), col("kb")),
+        s"$store/img_ahash", "append", "kb", Seq("band", "ckey")),
+      () => Dedup.writeBucketed(batchAud.select(col("doc_id"),
+        col("ehash"), col("band"), col("ckey"), col("kb")),
+        s"$store/ehash", "append", "kb", Seq("band", "ckey")))))
     Span(s, "uni.update.edges_append")(
       newEdges.write.mode("append").parquet(s"$store/edges"))
     if (buckets.nonEmpty) Span(s, "uni.update.label_swap") {
@@ -877,7 +864,7 @@ object UnifiedClusters {
         Seq("band", "ckey")))
     fams.foreach { case (fam, bucketCol, projCols, ordCols) =>
       Dedup.compactBuckets(s, s"$store/$fam", bucketCol, projCols.map(col),
-        ((bucketCol +: ordCols)).map(col), maxFilesPerBucket)
+        ordCols, maxFilesPerBucket)
     }
     Dedup.compactUnpartitioned(s, s"$store/edges", maxFilesPerBucket)
   }
@@ -985,49 +972,25 @@ object UnifiedClusters {
     val tmp = s"$store/clusters_staging"
     def stageLabels(): Unit =
       if (dirty.nonEmpty)
-        labels.filter(col("kb").isin(dirty: _*))
+        Dedup.writeBucketed(labels.filter(col("kb").isin(dirty: _*))
           .join(touchedMembers.select(col("doc_id")), Seq("doc_id"),
             "left_anti")
           .unionByName(newLabels.select(col("doc_id"), col("cluster_id"),
-            col("cluster_size"), col("is_canonical"), col("kb")))
-          .repartition(dirty.length, col("kb"))
-          .sortWithinPartitions(col("kb"), col("cluster_id"),
-            col("doc_id"))
-          .write.mode("overwrite").partitionBy("kb").parquet(tmp)
+            col("cluster_size"), col("is_canonical"), col("kb"))),
+          tmp, "overwrite", "kb", Seq("cluster_id", "doc_id"))
 
     // per-family touched-bucket rewrites (concurrent — mutually
     // independent, the update's index_appends posture)
     def rewriteFam(path: String, table: DataFrame, bucketCol: String,
         famKeys: Seq[Int], idCol: String, projCols: Seq[String],
         ordCols: Seq[String]): Unit =
-      if (famKeys.nonEmpty) {
-        // surviving buckets via the materialization's own observe
-        // (round 17, materializeWithKeys) — one job instead of two
-        // per family rewrite
-        val (rewritten, survivedKeys) = Dedup.materializeWithKeys(
+      if (famKeys.nonEmpty)
+        Dedup.retractBucketRewrite(s, path,
           table.filter(col(bucketCol).isin(famKeys: _*))
             .join(delIds.withColumnRenamed("doc_id", idCol),
               Seq(idCol), "left_anti")
-            .select((projCols :+ bucketCol).map(col): _*), bucketCol)
-        val survived = survivedKeys.toSet
-        if (survived.nonEmpty) {
-          rewritten
-            .repartition(survived.size, col(bucketCol))
-            .sortWithinPartitions((bucketCol +: ordCols).map(col): _*)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(bucketCol).parquet(path)
-        }
-        // an EMPTIED bucket gets no partition in the rewrite — remove
-        // its directory explicitly (loudly: a failed delete is a ghost
-        // bucket serving retracted rows) or its ghost rows survive
-        val fs = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        famKeys.filterNot(survived).foreach(k =>
-          Dedup.deleteEmptiedBucket(fs,
-            new org.apache.hadoop.fs.Path(s"$path/$bucketCol=$k")))
-        s.catalog.refreshByPath(path)
-      }
+            .select((projCols :+ bucketCol).map(col): _*),
+          bucketCol, famKeys, ordCols)
     Span(s, "uni.retract.stage_and_rewrites")(inParallel(Seq(
       () => stageLabels(),
       () => rewriteFam(s"$store/shingle", shingleIndexTable(s, store),

@@ -508,4 +508,71 @@ class UnifiedClustersSpec extends SparkSpec {
     assert(descs.count(_ == "uni.update.stage_and_appends") >= 6, descs)
     assert(descs.contains("uni.update.edges_append"), descs)
   }
+
+  test("bucketed writes: build, update and retract each add at most one " +
+    "file per bucket dir, in family sort order, and no update-wave write " +
+    "runs wider than the session's shuffle partitions") {
+    val (cd, bd, ce, be, ci, bi, ca, ba) = fixture()
+    val store = java.nio.file.Files
+      .createTempDirectory("uni_cluster_bucketed_").toString
+    // (table, bucket column, sort order inside each bucket file)
+    val layouts = Seq(
+      ("shingle", "kb", Seq("h")),
+      ("simhash", "kb", Seq("band", "ckey")),
+      ("emb_lsh", "kb", Seq("band", "bkey")),
+      ("emb_vec", "kv", Seq("vec_id")),
+      ("img_ahash", "kb", Seq("band", "ckey")),
+      ("ehash", "kb", Seq("band", "ckey")),
+      ("clusters", "kb", Seq("cluster_id", "doc_id")))
+    def fileCounts(): Map[String, Int] = layouts.flatMap {
+      case (table, bucketCol, _) =>
+        Option(new java.io.File(s"$store/$table").listFiles).toSeq
+          .flatten.filter(_.getName.startsWith(bucketCol + "="))
+          .map(d => s"$table/${d.getName}" ->
+            d.list().count(_.endsWith(".parquet")))
+    }.toMap
+    def gainsAtMostOne(before: Map[String, Int], step: String)
+        : Map[String, Int] = {
+      val after = fileCounts()
+      assert(after.nonEmpty, step)
+      after.foreach { case (dir, n) =>
+        assert(n <= before.getOrElse(dir, 0) + 1,
+          s"$step: $dir holds $n files, had ${before.getOrElse(dir, 0)}")
+      }
+      after
+    }
+    def inSortOrder(step: String): Unit = layouts.foreach {
+      case (table, _, ordCols) =>
+        val rs = spark.read.parquet(s"$store/$table")
+          .select((Seq(input_file_name(), monotonically_increasing_id()) ++
+            ordCols.map(col)): _*)
+          .collect()
+        rs.groupBy(_.getString(0)).foreach { case (file, fileRows) =>
+          val keys = fileRows.sortBy(_.getLong(1)).map(r =>
+            (2 until r.length).map(i => r.getAs[Comparable[Any]](i)))
+          keys.zip(keys.drop(1)).foreach { case (a, b) =>
+            val c = a.zip(b).map { case (x, y) => x.compareTo(y) }
+              .find(_ != 0).getOrElse(0)
+            assert(c <= 0, s"$step: $file not sorted by " +
+              s"(${ordCols.mkString(", ")}): $a before $b")
+          }
+        }
+    }
+    ops.UnifiedClusters.unifiedClusterStoreWrite(cd, ce, ci, ca, store)
+    val built = gainsAtMostOne(Map.empty, "build")
+    inSortOrder("build")
+    val (_, stages) = shuffleReadStageTasks(ops.UnifiedClusters
+      .unifiedClusterStoreUpdate(spark, store, bd, be, bi, ba))
+    val updated = gainsAtMostOne(built, "update")
+    inSortOrder("update")
+    val wave = stages.filter(_._1 == "uni.update.stage_and_appends")
+    val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assert(wave.nonEmpty, stages)
+    assert(wave.forall(_._2 <= width), wave)
+    ops.UnifiedClusters.unifiedClusterStoreRetract(spark, store,
+      cd.filter(col("doc_id") < 40), ce.filter(col("vec_id") < 40),
+      ci.filter(col("doc_id") < 40), ca.filter(col("doc_id") < 40))
+    gainsAtMostOne(updated, "retract")
+    inSortOrder("retract")
+  }
 }
