@@ -577,11 +577,11 @@ object Multimodal {
   /** Write/append a perceptual admission index: band rows partitioned
     * by kb = xxhash64(band, ckey) mod 64 (the q85 layout — band folded
     * into one 64-way bucket hash), written by
-    * [[graft.ops.Dedup.writeBucketed]]. */
+    * [[graft.ops.BucketedStore.writeBucketed]]. */
   def sigIndexWrite(sigs: DataFrame, sigCol: String,
       scheme: BandScheme, store: String,
       mode: String = "overwrite"): Unit =
-    graft.ops.Dedup.writeBucketed(
+    graft.ops.BucketedStore.writeBucketed(
       sigBandRows(sigs.filter(col("doc_id").isNotNull), sigCol, scheme)
         .withColumn("kb",
           pmod(xxhash64(col("band"), col("ckey")), lit(64)).cast("int")),
@@ -604,7 +604,7 @@ object Multimodal {
     * families. Returns the compacted bucket ids. */
   def sigIndexCompact(s: SparkSession, store: String, sigCol: String,
       maxFilesPerBucket: Int = 4): Seq[Int] =
-    graft.ops.Dedup.compactBuckets(s, store, "kb",
+    graft.ops.BucketedStore.compactBuckets(s, store, "kb",
       Seq(col("doc_id"), col(sigCol), col("band"), col("ckey")),
       Seq("band", "ckey"), maxFilesPerBucket)
 
@@ -680,7 +680,7 @@ object Multimodal {
     * same determinism argument the text band family's retraction
     * makes). Touched buckets are rewritten with survivors anti-joined
     * on doc_id; an emptied bucket's directory is deleted explicitly
-    * and loudly ([[graft.ops.Dedup.deleteEmptiedBucket]]). One
+    * and loudly ([[graft.ops.BucketedStore.retractBucketRewrite]]). One
     * sig-generic definition — the [[sigMerge]] trio's posture —
     * serves the image (ahash) and audio (ehash) families alike.
     * Replay-idempotent: the removal is an anti-join and an
@@ -697,15 +697,10 @@ object Multimodal {
         .withColumn("kb",
           pmod(xxhash64(col("band"), col("ckey")), lit(64)).cast("int")),
       "kb")
-    if (keys.isEmpty) return
-    graft.ops.Dedup.retractBucketRewrite(s, store,
-      s.read.schema(sigStoreSchema(sigCol)).parquet(store)
-        .filter(col("kb").isin(keys: _*))
-        .join(delBands.select(col("doc_id")).distinct(), Seq("doc_id"),
-          "left_anti")
-        .select(col("doc_id"), col(sigCol), col("band"), col("ckey"),
-          col("kb")),
-      "kb", keys, Seq("band", "ckey"))
+    graft.ops.BucketedStore.retractBucketRewrite(s, store,
+      s.read.schema(sigStoreSchema(sigCol)).parquet(store), "kb", keys,
+      delBands.select(col("doc_id")).distinct(), "doc_id",
+      Seq("doc_id", sigCol, "band", "ckey"), Seq("band", "ckey"))
   }
 
   def ahashRetract(s: SparkSession, store: String,

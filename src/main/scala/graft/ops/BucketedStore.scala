@@ -1,0 +1,324 @@
+package graft.ops
+
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Column, DataFrame, DataFrameReader, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, StructField,
+  StructType}
+
+import graft.util.Span
+
+/** The lifecycle of the engine's parquet stores, one definition each:
+  * the bucketed write, the schema'd read, compaction, the
+  * touched-bucket retraction rewrite, the unpartitioned rename swap,
+  * and the cluster stores' label commit with its torn marker.
+  *
+  * All store I/O goes through the Hadoop FileSystem API resolved from
+  * the store path's own scheme: the stores live on HDFS/S3 at the
+  * claimed scale, where a local-filesystem listing would silently see
+  * nothing. Listings are bounded: one `listStatus` of at most 64
+  * bucket dirs, plus one per bucket a pass touches. */
+object BucketedStore {
+
+  private def fsOf(s: SparkSession, p: Path): FileSystem =
+    p.getFileSystem(s.sparkContext.hadoopConfiguration)
+
+  /** The ids of the `bucketCol=N` dirs directly under `dir` (none when
+    * `dir` is absent), with each dir's path. */
+  private def bucketDirs(fs: FileSystem, dir: Path, bucketCol: String)
+      : Seq[(Int, Path)] =
+    (if (fs.exists(dir)) fs.listStatus(dir).toSeq else Seq.empty)
+      .filter(st => st.isDirectory &&
+        st.getPath.getName.startsWith(bucketCol + "="))
+      .map(st => (st.getPath.getName.stripPrefix(bucketCol + "=").toInt,
+        st.getPath))
+
+  private def parquetFiles(fs: FileSystem, dir: Path): Seq[Path] =
+    fs.listStatus(dir).toSeq
+      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+      .map(_.getPath)
+
+  /** The schema Spark recorded in one parquet footer of `dir` (its row
+    * metadata), plus `partition` when the table is partitioned; None
+    * when `dir` holds no file Spark wrote. Read on the driver, so a
+    * store read starts no schema-inference job. */
+  private def schemaOf(s: SparkSession, dir: Path,
+      partition: Option[StructField]): Option[StructType] = {
+    val conf = s.sparkContext.hadoopConfiguration
+    parquetFiles(fsOf(s, dir), dir).headOption
+      .flatMap { f =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+        try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata"))
+        finally reader.close()
+      }
+      .map { json =>
+        val data = DataType.fromJson(json).asInstanceOf[StructType]
+        partition.fold(data)(data.add)
+      }
+  }
+
+  /** A reader carrying the schema of [[schemaOf]] `dir`; without one,
+    * Spark's own schema inference (and its errors). */
+  private[graft] def reader(s: SparkSession, dir: Path,
+      partition: Option[StructField]): DataFrameReader =
+    schemaOf(s, dir, partition).fold(s.read)(s.read.schema(_))
+
+  /** The one write of every bucketed store: `rows` land under `path`
+    * partitioned by `bucketCol`, each bucket file sorted by
+    * (`bucketCol` +: `ordCols`) so parquet row-group stats serve point
+    * probes. Invariant: each call adds at most ONE file per bucket
+    * dir. Hash-partitioning on the bucket column sends all of a
+    * bucket's rows to one task, which writes them as one file; without
+    * the shuffle every upstream task appends to every bucket dir
+    * (width x buckets small files per write, compounding per append).
+    * The shuffle takes no partition count, so AQE sizes the write to
+    * its data: coalescing only merges whole hash partitions, so a
+    * bucket never splits across tasks at any width (a fixed 64 paid 64
+    * tasks for a 40-row micro-batch append). `dynamicOverwrite`
+    * replaces only the buckets `rows` holds and leaves the rest. */
+  private[graft] def writeBucketed(rows: DataFrame, path: String,
+      mode: String, bucketCol: String, ordCols: Seq[String],
+      dynamicOverwrite: Boolean = false): Unit = {
+    val w = rows.repartition(col(bucketCol))
+      .sortWithinPartitions((bucketCol +: ordCols).map(col): _*)
+      .write.mode(mode)
+    (if (dynamicOverwrite) w.option("partitionOverwriteMode", "dynamic")
+     else w).partitionBy(bucketCol).parquet(path)
+  }
+
+  /** Compaction of a hash-bucket-partitioned store: enumerate bucket
+    * dirs DRIVER-SIDE (bounded listing, no scan), read ONLY the
+    * buckets holding more than `maxFilesPerBucket` parquet files
+    * (partition-pruned, schema from one of their footers), rewrite
+    * each as one sorted file via a sibling temp dir (Spark refuses a
+    * read-and-overwrite of the same path), and swap with dynamic
+    * partition overwrite so healthy buckets' files stay untouched.
+    * The bucket column must be INT. Returns the compacted bucket ids.
+    *
+    * `fold` is the per-bucket rewrite: DISTINCT over `projection` by
+    * default (idempotent-fact stores: hashes, band rows — it also
+    * reclaims an at-least-once replayed append's duplicate rows); the
+    * tf store passes a SUM fold because its delta rows compact by
+    * addition, not dedup. */
+  private[graft] def compactBuckets(s: SparkSession, store: String,
+      partCol: String, projection: Seq[Column], ordCols: Seq[String],
+      maxFilesPerBucket: Int,
+      fold: Option[DataFrame => DataFrame] = None): Seq[Int] = {
+    val root = new Path(store)
+    val fs = fsOf(s, root)
+    val over = bucketDirs(fs, root, partCol)
+      .filter { case (_, dir) =>
+        parquetFiles(fs, dir).size > maxFilesPerBucket }
+      .sortBy(_._1)
+    if (over.isEmpty) return Seq.empty
+    val tmp = store + "_compacting"
+    val pruned = reader(s, over.head._2,
+        Some(StructField(partCol, IntegerType)))
+      .parquet(store)
+      .filter(col(partCol).isin(over.map(_._1): _*)) // partition prune
+    val compacted = fold.fold(
+      pruned.select(projection :+ col(partCol): _*).distinct())(
+      f => f(pruned))
+    writeBucketed(compacted, tmp, "overwrite", partCol, ordCols)
+    // read back with the written frame's schema: no inference job
+    s.read.schema(compacted.schema).parquet(tmp)
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partCol).parquet(store)
+    // temp dir is scratch; best-effort recursive cleanup
+    try fs.delete(new Path(tmp), true)
+    catch { case _: java.io.IOException => () }
+    over.map(_._1)
+  }
+
+  /** Compaction of an UNPARTITIONED parquet table that gains one
+    * file-set per append (the cluster stores' edge tables): when it
+    * holds more than `maxFiles` parquet files, rewrite it DISTINCT
+    * (idempotent; reclaims replayed appends) through
+    * [[replaceUnpartitioned]]. */
+  private[graft] def compactUnpartitioned(s: SparkSession, dir: String,
+      maxFiles: Int): Unit = {
+    val live = new Path(dir)
+    val fs = fsOf(s, live)
+    if (fs.exists(live) && parquetFiles(fs, live).size > maxFiles)
+      replaceUnpartitioned(s, dir,
+        reader(s, live, None).parquet(dir).distinct(), maxFiles)
+  }
+
+  /** Replace an unpartitioned table with `rows` (which may read the
+    * table itself) as at most `nFiles` files (coalesce, no shuffle):
+    * write them to a sibling temp dir, then swap by RENAME. Both copies
+    * exist on disk at every instant; the worst crash leaves the live
+    * path briefly absent — which the cluster stores' existence checks
+    * fail fast on — with the previous table intact at `<dir>_old` for
+    * manual recovery. */
+  private[graft] def replaceUnpartitioned(s: SparkSession, dir: String,
+      rows: DataFrame, nFiles: Int): Unit = {
+    val live = new Path(dir)
+    val fs = fsOf(s, live)
+    val tmp = new Path(s"${dir}_replacing")
+    rows.coalesce(nFiles).write.mode("overwrite").parquet(tmp.toString)
+    val old = new Path(s"${dir}_old")
+    if (fs.exists(old)) fs.delete(old, true)
+    require(fs.rename(live, old), s"could not move $live aside")
+    require(fs.rename(tmp, live),
+      s"could not move $tmp into place — previous table preserved at $old")
+    try fs.delete(old, true)
+    catch { case _: java.io.IOException => () }
+  }
+
+  /** Touched-bucket rewrite for a retraction: the `keys` buckets of
+    * `table` keep the rows whose `idCol` is not in `delete` (a
+    * one-column frame of ids), projected to `projCols` plus
+    * `bucketCol` and written back sorted by `ordCols` with dynamic
+    * partition overwrite; every touched bucket the rewrite emptied is
+    * deleted explicitly — dynamic overwrite cannot remove a partition
+    * it writes no rows for, and a ghost bucket would keep serving
+    * deleted rows. No keys, no work: `table` is not even opened (its
+    * file listing is the cost). */
+  private[graft] def retractBucketRewrite(s: SparkSession, path: String,
+      table: => DataFrame, bucketCol: String, keys: Seq[Int],
+      delete: DataFrame, idCol: String, projCols: Seq[String],
+      ordCols: Seq[String]): Unit = {
+    if (keys.isEmpty) return
+    // surviving buckets via the materialization's own observe (round
+    // 17, materializeWithKeys) — one job instead of two per rewrite
+    val (rewritten, survivedKeys) = Dedup.materializeWithKeys(
+      table.filter(col(bucketCol).isin(keys: _*))
+        .join(delete.toDF(idCol), Seq(idCol), "left_anti")
+        .select((projCols :+ bucketCol).map(col): _*),
+      bucketCol)
+    val survived = survivedKeys.toSet
+    if (survived.nonEmpty)
+      writeBucketed(rewritten, path, "overwrite", bucketCol, ordCols,
+        dynamicOverwrite = true)
+    val fs = fsOf(s, new Path(path))
+    keys.filterNot(survived).foreach(k =>
+      deleteEmptiedBucket(fs, new Path(s"$path/$bucketCol=$k")))
+    s.catalog.refreshByPath(path)
+  }
+
+  /** Delete an EMPTIED live bucket's directory, failing LOUDLY when
+    * the delete itself fails (ADVICE r16: `fs.delete` returning false
+    * — or throwing — used to be swallowed here, and a silently-failed
+    * delete leaves a ghost bucket serving retracted rows; on a
+    * right-to-be-forgotten path that failure must surface, not
+    * vanish). An already-absent directory IS success: a replayed
+    * retraction re-names buckets its first delivery removed, and
+    * replay-idempotence requires treating them as done. Best-effort
+    * try/ignore remains appropriate only for `_old`/staging cleanup,
+    * where a leftover dir is garbage, not a correctness hazard. */
+  private def deleteEmptiedBucket(fs: FileSystem, path: Path): Unit =
+    if (fs.exists(path))
+      require(fs.delete(path, true),
+        s"retraction: could not delete emptied bucket $path — a ghost " +
+          "bucket would keep serving retracted rows")
+
+  private val StagingDir = "clusters_staging"
+
+  /** The cluster stores' crashed-commit marker: [[commitLabels]]
+    * writes the `clusters_staging` dir before the edges change and
+    * deletes it after the label swap, so a clean store never carries
+    * it and every torn window does. Clean commits therefore pay one FS
+    * existence probe instead of any O(edges) invariant work. */
+  private[graft] def tornMarker(s: SparkSession, store: String): Boolean = {
+    val p = new Path(s"$store/$StagingDir")
+    fsOf(s, p).exists(p)
+  }
+
+  /** Swap the staging dir's `kb=N` dirs into the live label table by
+    * RENAME (round 17): delete the live dir, move the staged dir in —
+    * metadata only, no data bytes move on a rename-capable filesystem.
+    * Returns the staged bucket ids (partitionBy writes no dir for an
+    * empty bucket). */
+  private def swapStagedBuckets(fs: FileSystem, staged: Path,
+      live: Path): Seq[Int] =
+    bucketDirs(fs, staged, "kb").map { case (k, dir) =>
+      val target = new Path(live, dir.getName)
+      if (fs.exists(target))
+        require(fs.delete(target, true),
+          s"bucket swap: could not remove $target for replacement")
+      require(fs.rename(dir, target),
+        s"bucket swap: could not move $dir into place")
+      k
+    }
+
+  /** The label commit of the cluster stores (the MinHash store's
+    * update, the unified store's update and retraction). `staged` are
+    * the new label rows of the `keys` buckets of `store/clusters`
+    * (kb = pmod(doc_id, 64)); `torn` is [[tornMarker]] as read ONCE,
+    * before this commit's staging write — the staging dir IS the
+    * marker, so a later read would call every commit torn. Steps, in
+    * order:
+    *  1. the label staging write and the caller's `writes` (index
+    *     appends or rewrites) as ONE concurrent wave
+    *     (`<span>.stage_and_writes`). The writes are mutually
+    *     independent (disjoint paths, pre-materialized inputs);
+    *  2. the caller's `edges` write (`<span>.edges`);
+    *  3. the label swap (`<span>.label_swap`): each staged bucket dir
+    *     replaces its live dir by rename, and every key the swap did
+    *     not bring back is deleted — a bucket whose docs all left the
+    *     label table. Then one `refreshByPath`; DataFrames created
+    *     before the swap still hold the pre-swap file listing (Spark's
+    *     snapshot semantics), so collect them first or re-create them;
+    *  4. the marker is deleted — unconditionally: a commit that staged
+    *     nothing still certifies the store, because its relabel ran
+    *     against the marker it read.
+    *
+    * When `torn`, `staged` must be the WHOLE label set, CC(edges)
+    * (the heals of [[Dedup.relabelAgainst]] and of the retraction),
+    * and the keys are every live bucket plus the staged ones: a bucket
+    * the crashed commit should have emptied (a retracted doc's label)
+    * is deleted rather than left as a ghost.
+    *
+    * Crash posture. The steps are not atomic; the marker makes every
+    * crash window visible. It exists from step 1 to step 4 whenever
+    * step 2, the only step that can break labels = CC(edges), changes
+    * the edge set: a changed edge touches a component, and a touched
+    * component stages its label buckets. A crash inside
+    * step 1 can leave index rows changed with no marker; index rows are
+    * idempotent facts that cannot break that invariant: the batch's
+    * docs are band-discoverable but unclustered (update) or edge-visible
+    * but not band-discoverable (retraction) until the same batch is
+    * replayed. Indices change before edges, so a crash can never
+    * persist an edge whose doc no future batch can band-match. A crash
+    * in steps 2-4 leaves the marker beside stale, mixed-generation or
+    * missing label buckets (step 3 deletes a live bucket dir before it
+    * renames the staged one in); read-backs refuse such a store, and
+    * the next completed update (any batch, empty included) or
+    * retraction rebuilds the whole label set as CC(edges). What a crash
+    * can lose is the un-written tail of its own batch (its edges, or
+    * its index rows and edges): replaying the same batch restores them
+    * byte-identically (the at-least-once posture of the `foreachBatch`
+    * callers; replayed appends anti-join away, and compaction's
+    * DISTINCT reclaims duplicate index rows). */
+  private[graft] def commitLabels(s: SparkSession, store: String,
+      torn: Boolean, staged: DataFrame, keys: Seq[Int], span: String)(
+      writes: Seq[() => Unit])(edges: => Unit): Unit = {
+    val tmp = new Path(s"$store/$StagingDir")
+    val live = new Path(s"$store/clusters")
+    val fs = fsOf(s, tmp)
+    Span(s, s"$span.stage_and_writes")(UnifiedClusters.inParallel(
+      (() => if (keys.nonEmpty) writeBucketed(staged, tmp.toString,
+        "overwrite", "kb", Seq("cluster_id", "doc_id"))) +: writes))
+    Span(s, s"$span.edges")(edges)
+    val all =
+      if (torn) (keys ++ bucketDirs(fs, live, "kb").map(_._1)).distinct
+      else keys
+    if (all.nonEmpty) Span(s, s"$span.label_swap") {
+      // with no keys nothing was staged: a crashed commit's leftovers
+      // in the marker dir must not be swapped in
+      val survived =
+        if (keys.isEmpty) Set.empty[Int]
+        else swapStagedBuckets(fs, tmp, live).toSet
+      all.filterNot(survived).foreach(k =>
+        deleteEmptiedBucket(fs, new Path(live, s"kb=$k")))
+      s.catalog.refreshByPath(store)
+    }
+    try fs.delete(tmp, true)
+    catch { case _: java.io.IOException => () }
+  }
+}

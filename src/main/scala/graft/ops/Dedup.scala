@@ -22,6 +22,8 @@ import graft.util.Span
   */
 object Dedup {
   import Tables._
+  import BucketedStore.{compactBuckets, compactUnpartitioned,
+    retractBucketRewrite, tornMarker, writeBucketed}
 
   /** Re-key offset for the q83/q85 planted-duplicate fixtures: copies
     * of low-id corpus docs join the arriving batch under
@@ -155,29 +157,6 @@ object Dedup {
         pmod(xxhash64(col("content_hash")), lit(64)).cast("int")),
       store, mode, "bucket", Seq.empty)
 
-  /** The one write of every bucketed store: `rows` land under `path`
-    * partitioned by `bucketCol`, each bucket file sorted by
-    * (`bucketCol` +: `ordCols`) so parquet row-group stats serve point
-    * probes. Invariant: each call adds at most ONE file per bucket
-    * dir. Hash-partitioning on the bucket column sends all of a
-    * bucket's rows to one task, which writes them as one file; without
-    * the shuffle every upstream task appends to every bucket dir
-    * (width x buckets small files per write, compounding per append).
-    * The shuffle takes no partition count, so AQE sizes the write to
-    * its data: coalescing only merges whole hash partitions, so a
-    * bucket never splits across tasks at any width (a fixed 64 paid 64
-    * tasks for a 40-row micro-batch append). `dynamicOverwrite`
-    * replaces only the buckets `rows` holds and leaves the rest. */
-  private[graft] def writeBucketed(rows: DataFrame, path: String,
-      mode: String, bucketCol: String, ordCols: Seq[String],
-      dynamicOverwrite: Boolean = false): Unit = {
-    val w = rows.repartition(col(bucketCol))
-      .sortWithinPartitions((bucketCol +: ordCols).map(col): _*)
-      .write.mode(mode)
-    (if (dynamicOverwrite) w.option("partitionOverwriteMode", "dynamic")
-     else w).partitionBy(bucketCol).parquet(path)
-  }
-
   /** Admit the batch's new documents: keep-first within the batch (the
     * q35 rule), then LEFT ANTI against the stored index on
     * (bucket, content_hash). The index read is EXPLICITLY partition-
@@ -251,58 +230,6 @@ object Dedup {
     compactBuckets(s, store, "kb",
       Seq(col("doc_id"), col("mins"), col("band"), col("k1"), col("k2")),
       Seq("band", "k1", "k2"), maxFilesPerBucket)
-
-  /** Shared compaction pass over a hash-bucket-partitioned parquet
-    * store (both standing dedup indexes): enumerate bucket dirs
-    * DRIVER-SIDE (bounded listing, no scan), read ONLY the oversized
-    * buckets (partition-pruned), rewrite each as one sorted file via a
-    * sibling temp dir, and swap with dynamic partition overwrite so
-    * healthy buckets' files stay untouched. Returns the compacted
-    * bucket ids.
-    *
-    * All store I/O goes through the Hadoop FileSystem API resolved
-    * from the store path's own scheme (VERDICT r9 #3): the standing
-    * indexes live on HDFS/S3 at the claimed scale, where a
-    * local-filesystem listing would silently see nothing — the same
-    * bounded contract (one listStatus of <= 64 bucket dirs, one per
-    * oversized bucket) holds on any object store. */
-  private[graft] def compactBuckets(s: SparkSession, store: String,
-      partCol: String, projection: Seq[org.apache.spark.sql.Column],
-      ordCols: Seq[String],
-      maxFilesPerBucket: Int,
-      // the per-bucket rewrite: DISTINCT by default (idempotent-fact
-      // stores: hashes, band rows); the tf store passes a SUM fold
-      // because its delta rows compact by addition, not dedup
-      fold: Option[DataFrame => DataFrame] = None): Seq[Int] = {
-    val root = new org.apache.hadoop.fs.Path(store)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val over =
-      (if (fs.exists(root)) fs.listStatus(root).toSeq else Seq.empty)
-        .filter(st => st.isDirectory &&
-          st.getPath.getName.startsWith(partCol + "="))
-        .filter(st => fs.listStatus(st.getPath).count(f =>
-          f.isFile && f.getPath.getName.endsWith(".parquet"))
-          > maxFilesPerBucket)
-        .map(_.getPath.getName.stripPrefix(partCol + "=").toInt)
-        .sorted
-    if (over.isEmpty) return over
-    val tmp = store + "_compacting"
-    val pruned = s.read.parquet(store)
-      .filter(col(partCol).isin(over: _*)) // partition prune
-    val compacted = fold.fold(
-      pruned.select(projection :+ col(partCol): _*).distinct())(
-      f => f(pruned))
-    writeBucketed(compacted, tmp, "overwrite", partCol, ordCols)
-    // read back with the written frame's schema: no inference job
-    s.read.schema(compacted.schema).parquet(tmp)
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partCol).parquet(store)
-    // temp dir is scratch; best-effort recursive cleanup
-    try fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    catch { case _: java.io.IOException => () }
-    over
-  }
 
   /** Declared write-then-merge binding (the q67/q74 pattern): docs
     * 0-249 are the standing corpus (index written to run-scoped
@@ -558,15 +485,14 @@ object Dedup {
       .parquet(s"$store/edges")
 
   /** CAVEAT (round-18 ADVICE): a DIRECT read of this table does not
-    * check [[tornMarker]] — a crash inside swapStagedBuckets'
-    * per-bucket delete/rename window can leave a live bucket dir
-    * absent until the next update's heal, so a consumer outside the
-    * merge/update/retract protocols (which heal via relabelAgainst)
-    * or unifiedClustersFromStore (which refuses on the marker) can
-    * serve a label table silently missing whole buckets. Exposure is
-    * the same window the dynamic-overwrite committer always had; new
-    * read-back paths should mirror unifiedClustersFromStore's
-    * tornMarker require. */
+    * check [[BucketedStore.tornMarker]]. After a crashed label commit
+    * ([[BucketedStore.commitLabels]]) the table can be stale, miss
+    * whole buckets (the swap deletes a live bucket dir before it
+    * renames the staged one in) or keep a bucket a crashed retraction
+    * emptied, until the next completed update or retraction rebuilds
+    * the whole label set. The merges heal in [[relabelAgainst]] and
+    * unifiedClustersFromStore refuses on the marker; any other
+    * read-back path must mirror that refusal. */
   private[graft] def clusterLabelsTable(s: SparkSession,
       store: String): DataFrame =
     s.read.schema("doc_id BIGINT, cluster_id BIGINT, " +
@@ -643,21 +569,6 @@ object Dedup {
     }
   }
 
-  /** The crashed-update marker: the persisted update writes the
-    * `clusters_staging` dir BEFORE any append (new edges force
-    * relabeled docs, and relabeled docs force a staging write) and
-    * deletes it AFTER the cluster swap — so a clean store never
-    * carries it and every torn window does. Clean merges therefore
-    * pay one FS existence probe instead of any O(edges) invariant
-    * work (it was the largest fixed per-batch cost in s15's
-    * foreachBatch loop); a crash after the swap but before the delete
-    * leaves the marker on a CONSISTENT store, where the heal finds
-    * no orphans and the next completed update clears it. */
-  private[graft] def tornMarker(s: SparkSession, store: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$store/clusters_staging")
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   /** The merge computation, exposed as parts so the persist path can
     * reuse them: (batch band table, new verified edges, untouched
     * label rows WITH their kb bucket, relabeled touched-subgraph
@@ -671,15 +582,16 @@ object Dedup {
     * probe and the untouched pass-through) — pair-graph-bounded scans,
     * never the corpus. */
   private def clusterMergeParts(s: SparkSession, store: String,
-      newDocs: DataFrame): (DataFrame, DataFrame, DataFrame, DataFrame) = {
+      newDocs: DataFrame)
+      : (DataFrame, DataFrame, DataFrame, DataFrame, Boolean) = {
     requireClusterStore(s, store)
     val (batchBands, bandKeys) = batchBandsOf(newDocs)
     val newEdges = materializeBounded(
       newEdgesFromBands(s, store, batchBands, bandKeys))
+    val torn = tornMarker(s, store)
     val (untouched, relabeled) = relabelAgainst(newEdges,
-      clusterEdgesTable(s, store), clusterLabelsTable(s, store),
-      tornMarker(s, store))
-    (batchBands, newEdges, untouched, relabeled)
+      clusterEdgesTable(s, store), clusterLabelsTable(s, store), torn)
+    (batchBands, newEdges, untouched, relabeled, torn)
   }
 
   /** The touched-component relabel, FAMILY-AGNOSTIC (round 13 — the
@@ -774,7 +686,8 @@ object Dedup {
     * [[neardupClusterStoreUpdate]] for the persisting twin. */
   def neardupClusterMerge(s: SparkSession, store: String,
       newDocs: DataFrame): DataFrame = {
-    val (_, _, untouched, relabeled) = clusterMergeParts(s, store, newDocs)
+    val (_, _, untouched, relabeled, _) =
+      clusterMergeParts(s, store, newDocs)
     untouched.drop("kb").unionByName(relabeled)
       .orderBy(col("cluster_id"), col("doc_id"))
   }
@@ -790,142 +703,60 @@ object Dedup {
     * new content is its untouched pass-through rows (a PARTITION-
     * PRUNED read of the standing label table) plus its relabeled
     * rows, staged to a sibling dir (Spark refuses a read-and-
-    * overwrite of the same path) and swapped in with dynamic
-    * partition overwrite — the dedupIndexCompact idiom, so untouched
-    * buckets' files are never rewritten (byte-identical across a
-    * merge, pinned in GenericApiSpec).
-    *
-    * Crash posture: the four steps (staging write, bands append,
-    * edges append, cluster-bucket swap) are not atomic. The staging
-    * dir doubles as the in-progress marker — written first, deleted
-    * only after a completed update — and whenever it is present the
-    * next merge's heal rebuilds the ENTIRE label set as CC(edges)
-    * (clusterMergeParts), so every crash window leaves a store that
-    * is CONSISTENT to its readers and repaired by ANY completed
-    * update, with clean merges paying one FS existence probe for the
-    * guarantee. What a crash can lose is the un-appended tail of that
-    * batch's own rows (its edges, or its bands and edges) — replaying
-    * the SAME batch restores them byte-identically (the s15
-    * foreachBatch at-least-once posture; compaction's DISTINCT
-    * reclaims the duplicate appends), and until the replay the
-    * batch's docs are merely unclustered yet still band-discoverable
-    * (bands append first — see the in-body ordering comment). */
+    * overwrite of the same path) and swapped in by rename, so
+    * untouched buckets' files are never rewritten (byte-identical
+    * across a merge, pinned in GenericApiSpec). The bands append rides the
+    * label commit's first wave and the edges append is its edges
+    * step; crash posture: [[BucketedStore.commitLabels]]. */
   def neardupClusterStoreUpdate(s: SparkSession, store: String,
       newDocs: DataFrame): Unit = {
-    val (batchBands, newEdges, untouched, relabeled) =
+    val (batchBands, newEdges, untouched, relabeled, torn) =
       clusterMergeParts(s, store, newDocs)
-    // dirty buckets via the materialization's own observe (round 17,
-    // materializeWithKeys) — <= 64 ints, the corpusMerge convention,
-    // one job instead of two
+    Span(s, "nd.update") {
+      val (staged, buckets) = labelStaging(untouched, relabeled)
+      BucketedStore.commitLabels(s, store, torn, staged, buckets,
+        "nd.update")(Seq(
+        // ALWAYS append the batch's band rows — an edgeless batch is
+        // still admitted corpus that future merges must match against
+        // — reusing the merge's OWN materialized band table
+        // (neardupIndexWrite layout) instead of re-running the batch's
+        // signature pipeline a second time: one signature pass per
+        // persisted merge.
+        () => writeBucketed(batchBands
+          .select(col("doc_id"), col("mins"), col("band"), col("k1"),
+            col("k2"), col("kb")), // neardupIndexWrite's column order
+          s"$store/bands", "append", "kb", Seq("band", "k1", "k2"))))(
+        newEdges.write.mode("append").parquet(s"$store/edges"))
+    }
+  }
+
+  /** An update's label staging: the relabeled rows with their kb
+    * bucket (materialized; the dirty bucket set rides the job as an
+    * observe — <= 64 ints, one job instead of two) plus the untouched
+    * rows of those buckets, passed through. Returns (staged rows,
+    * dirty buckets). */
+  private[graft] def labelStaging(untouched: DataFrame,
+      relabeled: DataFrame): (DataFrame, Seq[Int]) = {
     val (dirty, buckets) = materializeWithKeys(
       relabeled.withColumn("kb", clusterBucket(col("doc_id"))), "kb")
-    val tmp = s"$store/clusters_staging"
-    // label staging and the band append run as ONE concurrent wave
-    // (round 18, the unified store's update.stage_and_appends
-    // reasoning): both writes are mutually independent (disjoint
-    // paths, pre-materialized inputs), and the protocol constraint is
-    // only that the MARKER (the staging dir) exists before the EDGES
-    // append — band rows are idempotent facts that cannot violate
-    // labels = CC(edges). A crash inside the wave can leave bands
-    // appended with no marker: exactly the documented "bands append
-    // first" state (docs band-discoverable, unclustered, replay
-    // restores); the heal-requiring state — edges appended, labels
-    // stale — stays impossible before the wave's barrier. Bands still
-    // land BEFORE edges (the wave is a barrier): the reverse order
-    // would leave persisted edges whose docs no future batch can ever
-    // band-match — a silent permanent divergence.
-    graft.ops.UnifiedClusters.inParallel(Seq(
-      () => if (buckets.nonEmpty)
-        writeBucketed(untouched.filter(col("kb").isin(buckets.toIndexedSeq: _*))
-          .unionByName(dirty), tmp, "overwrite", "kb",
-          Seq("cluster_id", "doc_id")),
-      // ALWAYS append the batch's band rows — an edgeless batch is
-      // still admitted corpus that future merges must match against —
-      // reusing the merge's OWN materialized band table
-      // (neardupIndexWrite layout) instead of re-running the batch's
-      // signature pipeline a second time: one signature pass per
-      // persisted merge.
-      () => writeBucketed(batchBands
-        .select(col("doc_id"), col("mins"), col("band"), col("k1"),
-          col("k2"), col("kb")), // neardupIndexWrite's column order
-        s"$store/bands", "append", "kb", Seq("band", "k1", "k2"))))
-    newEdges.write.mode("append").parquet(s"$store/edges")
-    if (buckets.nonEmpty) {
-      // rename swap (round 17, swapStagedBuckets): metadata-only; the
-      // torn marker covers the per-bucket window. Note that
-      // DataFrames CREATED before this swap hold the pre-swap file
-      // listing (Spark's snapshot semantics) — collect them before
-      // updating, or re-create them after
-      swapStagedBuckets(s, tmp, s"$store/clusters", "kb")
-      s.catalog.refreshByPath(store)
-    }
-    // clear the in-progress marker UNCONDITIONALLY: a post-swap-crash
-    // marker must not outlive the next completed update (an edgeless
-    // batch writes no staging of its own but still certifies the
-    // store consistent — its heal ran against the marker)
-    val fs = new org.apache.hadoop.fs.Path(tmp)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    try fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    catch { case _: java.io.IOException => () }
+    (untouched.filter(col("kb").isin(buckets: _*)).unionByName(dirty),
+      buckets)
   }
 
   /** Bound the cluster store's file counts under daily merges: bands
     * compact via the shared bucket pass (neardupIndexCompact), and the
     * unpartitioned edge table — which gains one file-set per merge —
-    * is rewritten to at most `maxFilesPerBucket` files (coalesce, no
-    * shuffle; DISTINCT keeps the pass idempotent), then swapped in by
-    * RENAME (ADVICE r10: the previous read-tmp-then-overwrite had a
-    * window where a mid-overwrite failure lost the live table; with
-    * the rename swap both copies exist on disk at every instant, and
-    * the worst crash leaves the live path briefly absent — which the
-    * next merge's requireClusterStore fails fast on, with the
-    * previous table intact at `edges_old` for manual recovery). The
-    * cluster table needs no compaction: every bucket it has was last
-    * written as one file (store write and pruned update both
-    * co-locate each bucket into one task), and dynamic partition
-    * overwrite REPLACES a bucket's files rather than appending.
-    * Returns the compacted band-bucket ids. */
+    * via [[BucketedStore.compactUnpartitioned]]. The cluster table
+    * needs no compaction: every bucket it has was last written as one
+    * file (store write and label staging both co-locate each bucket
+    * into one task), and the label swap REPLACES a bucket's dir rather
+    * than appending to it. Returns the compacted band-bucket ids. */
   def neardupClusterStoreCompact(s: SparkSession, store: String,
       maxFilesPerBucket: Int = 4): Seq[Int] = {
     val bandBuckets = neardupIndexCompact(s, s"$store/bands",
       maxFilesPerBucket)
     compactUnpartitioned(s, s"$store/edges", maxFilesPerBucket)
     bandBuckets
-  }
-
-  /** Rename-swap compaction of an UNPARTITIONED parquet table that
-    * gains one file-set per append (the cluster stores' edge tables):
-    * rewrite to at most `maxFiles` files (coalesce, no shuffle;
-    * DISTINCT keeps the pass idempotent and reclaims replayed
-    * appends), then swap in by RENAME — both copies exist on disk at
-    * every instant, and the worst crash leaves the live path briefly
-    * absent with the previous table intact at `<dir>_old` for manual
-    * recovery (the ADVICE r10 posture). Shared by the MinHash cluster
-    * store and the unified multi-signal store (round 13). */
-  private[graft] def compactUnpartitioned(s: SparkSession, dir: String,
-      maxFiles: Int): Unit = {
-    val livePath = new org.apache.hadoop.fs.Path(dir)
-    val fs = livePath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val nFiles =
-      if (fs.exists(livePath))
-        fs.listStatus(livePath).count(f =>
-          f.isFile && f.getPath.getName.endsWith(".parquet"))
-      else 0
-    if (nFiles > maxFiles) {
-      val tmp = new org.apache.hadoop.fs.Path(s"${dir}_compacting")
-      s.read.parquet(dir).distinct()
-        .coalesce(maxFiles)
-        .write.mode("overwrite").parquet(tmp.toString)
-      val old = new org.apache.hadoop.fs.Path(s"${dir}_old")
-      if (fs.exists(old)) fs.delete(old, true)
-      require(fs.rename(livePath, old),
-        s"compaction: could not move $livePath aside")
-      require(fs.rename(tmp, livePath),
-        s"compaction: could not move $tmp into place — previous " +
-          s"table preserved at $old")
-      try fs.delete(old, true)
-      catch { case _: java.io.IOException => () }
-    }
   }
 
   /** Declared write-then-merge binding (the q85 pattern lifted to the
@@ -3135,15 +2966,11 @@ object Dedup {
     // any completed subset, exactly as under the sequential order
     // (no ordering constraint existed ACROSS these tables).
     graft.ops.UnifiedClusters.inParallel(Seq(
-      () => if (hashKeys.nonEmpty)
-        retractBucketRewrite(s, s"$stores/exact",
-          s.read.schema("content_hash STRING, bucket INT")
-            .parquet(s"$stores/exact")
-            .filter(col("bucket").isin(hashKeys: _*))
-            .join(dropHashes.select(col("content_hash")),
-              Seq("content_hash"), "left_anti")
-            .select(col("content_hash"), col("bucket")),
-          "bucket", hashKeys, Seq("content_hash")),
+      () => retractBucketRewrite(s, s"$stores/exact",
+        s.read.schema("content_hash STRING, bucket INT")
+          .parquet(s"$stores/exact"), "bucket", hashKeys,
+        dropHashes.select(col("content_hash")), "content_hash",
+        Seq("content_hash"), Seq("content_hash")),
       () => {
         // band index: the deleted docs' recomputed band rows name the
         // touched buckets (keys only — one collect job, no
@@ -3156,26 +2983,18 @@ object Dedup {
           .select(pmod(xxhash64(col("band"), col("k1")), lit(64))
             .cast("int").as("kb"))
           .distinct().collect().map(_.getInt(0)).toIndexedSeq.sorted
-        if (bandKeys.nonEmpty)
-          retractBucketRewrite(s, s"$stores/neardup",
-            bandIndexTable(s, s"$stores/neardup")
-              .filter(col("kb").isin(bandKeys: _*))
-              .join(delIds, Seq("doc_id"), "left_anti")
-              .select(col("doc_id"), col("mins"), col("band"),
-                col("k1"), col("k2"), col("kb")),
-            "kb", bandKeys, Seq("band", "k1", "k2"))
+        retractBucketRewrite(s, s"$stores/neardup",
+          bandIndexTable(s, s"$stores/neardup"), "kb", bandKeys, delIds,
+          "doc_id", Seq("doc_id", "mins", "band", "k1", "k2"),
+          Seq("band", "k1", "k2"))
         promotedDocs.foreach(
           neardupIndexWrite(_, s"$stores/neardup", mode = "append"))
       },
       () => {
         // manifest: drop the deleted rows, admit the promoted ones
-        if (delKb.nonEmpty)
-          retractBucketRewrite(s, s"$stores/manifest",
-            manifest.filter(col("kb").isin(delKb: _*))
-              .join(delIds, Seq("doc_id"), "left_anti")
-              .select(col("doc_id"), col("source"), col("h"),
-                col("kb")),
-            "kb", delKb, Seq("doc_id"))
+        retractBucketRewrite(s, s"$stores/manifest", manifest, "kb",
+          delKb, delIds, "doc_id", Seq("doc_id", "source", "h"),
+          Seq("doc_id"))
         promotedDocs.foreach(
           manifestWrite(_, s"$stores/manifest", mode = "append"))
       },
@@ -3183,13 +3002,9 @@ object Dedup {
       // (same touched-bucket pass — the ledger stays exactly the
       // surviving corpus's projection, so the NEXT retraction prunes
       // correctly too)
-      () => if (ledgerHbs.nonEmpty)
-        retractBucketRewrite(s, s"$stores/hashes",
-          hashLedgerTable(s, stores)
-            .filter(col("hb").isin(ledgerHbs: _*))
-            .join(delIds, Seq("doc_id"), "left_anti")
-            .select(col("doc_id"), col("h"), col("hb")),
-          "hb", ledgerHbs, Seq("h", "doc_id")),
+      () => retractBucketRewrite(s, s"$stores/hashes",
+        hashLedgerTable(s, stores), "hb", ledgerHbs, delIds, "doc_id",
+        Seq("doc_id", "h"), Seq("h", "doc_id")),
       // eval suite: recompute wholesale from the surviving src0 slice
       () => sourcedShingleRows(corpusScrubbed
           .join(delIds, Seq("doc_id"), "left_anti"))
@@ -3233,86 +3048,6 @@ object Dedup {
     compactBuckets(s, s"$stores/hashes", "hb",
       Seq(col("doc_id"), col("h")),
       Seq("h", "doc_id"), maxFilesPerBucket)
-
-  /** Swap a staging dir's bucket partitions into a live partitioned
-    * table by RENAME (round 17): the previous read-staging-then-
-    * dynamic-overwrite step re-read and re-wrote every staged
-    * bucket's parquet bytes through a full Spark job, but the
-    * committed staging layout is already exactly one `bucketCol=N`
-    * dir per staged bucket, so the swap is |staged buckets| metadata
-    * renames (delete live dir, move staged dir in) — zero data bytes
-    * moved on a rename-capable filesystem, and strictly less I/O than
-    * the read+rewrite everywhere else. ONLY for label tables guarded
-    * by the `clusters_staging` torn marker: the per-bucket
-    * delete-then-rename window can lose a bucket on a crash —
-    * exactly the mixed-generation state the marker already names, and
-    * the heal rebuilds the ENTIRE label set as CC(edges), so every
-    * crash point replays to a consistent store (the same guarantee
-    * the Spark committer's own per-partition delete+rename window
-    * leaned on). Markerless stores (indices, manifests, compaction)
-    * keep the committed write path. Returns the staged bucket ids
-    * (== the buckets that survived with rows: partitionBy writes no
-    * dir for an empty bucket). */
-  private[graft] def swapStagedBuckets(s: SparkSession, staged: String,
-      live: String, bucketCol: String): Seq[Int] = {
-    val stagedPath = new org.apache.hadoop.fs.Path(staged)
-    val fs = stagedPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val dirs = fs.listStatus(stagedPath)
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith(bucketCol + "="))
-    dirs.foreach { st =>
-      val target = new org.apache.hadoop.fs.Path(live, st.getPath.getName)
-      if (fs.exists(target))
-        require(fs.delete(target, true),
-          s"bucket swap: could not remove $target for replacement")
-      require(fs.rename(st.getPath, target),
-        s"bucket swap: could not move ${st.getPath} into place")
-    }
-    s.catalog.refreshByPath(live)
-    dirs.map(_.getPath.getName.stripPrefix(bucketCol + "=").toInt).toSeq
-  }
-
-  /** Touched-bucket rewrite for a retraction: dynamic partition
-    * overwrite of the surviving rows, PLUS explicit deletion of any
-    * touched bucket the rewrite emptied — dynamic overwrite cannot
-    * remove a partition it writes no rows for, and a ghost bucket
-    * would keep serving deleted rows (the O-140 lesson, shared
-    * here). `pruned` must already be bucket-filtered and
-    * anti-joined, with the bucket column LAST. */
-  private[graft] def retractBucketRewrite(s: SparkSession, path: String,
-      pruned: DataFrame, bucketCol: String, keys: Seq[Int],
-      ordCols: Seq[String]): Unit = {
-    // surviving buckets via the materialization's own observe (round
-    // 17, materializeWithKeys) — one job instead of two per rewrite
-    val (rewritten, survivedKeys) = materializeWithKeys(pruned, bucketCol)
-    val survived = survivedKeys.toSet
-    if (survived.nonEmpty)
-      writeBucketed(rewritten, path, "overwrite", bucketCol, ordCols,
-        dynamicOverwrite = true)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    keys.filterNot(survived).foreach(k => deleteEmptiedBucket(fs,
-      new org.apache.hadoop.fs.Path(s"$path/$bucketCol=$k")))
-    s.catalog.refreshByPath(path)
-  }
-
-  /** Delete an EMPTIED live bucket's directory, failing LOUDLY when
-    * the delete itself fails (ADVICE r16: `fs.delete` returning false
-    * — or throwing — used to be swallowed here, and a silently-failed
-    * delete leaves a ghost bucket serving retracted rows; on a
-    * right-to-be-forgotten path that failure must surface, not
-    * vanish). An already-absent directory IS success: a replayed
-    * retraction re-names buckets its first delivery removed, and
-    * replay-idempotence requires treating them as done. Best-effort
-    * try/ignore remains appropriate only for `_old`/staging cleanup,
-    * where a leftover dir is garbage, not a correctness hazard. */
-  private[graft] def deleteEmptiedBucket(
-      fs: org.apache.hadoop.fs.FileSystem,
-      path: org.apache.hadoop.fs.Path): Unit =
-    if (fs.exists(path))
-      require(fs.delete(path, true),
-        s"retraction: could not delete emptied bucket $path — a ghost " +
-          "bucket would keep serving retracted rows")
 
   /** Declared O-142 binding: clone the q87e-geometry pristine stores,
     * retract corpus ids 100-149 across them, then run the standard

@@ -289,10 +289,10 @@ object Similarity {
 
   /** Bound the vector store's file count under daily appends — the
     * same driver-side listing / pruned-rewrite pass as the dedup
-    * indexes' compaction (graft.ops.Dedup.compactBuckets). */
+    * indexes' compaction ([[BucketedStore.compactBuckets]]). */
   def ivfCompact(s: SparkSession, storeDir: String,
       maxFilesPerCell: Int = 4): Seq[Int] =
-    Dedup.compactBuckets(s, s"$storeDir/vectors", "cell_id",
+    BucketedStore.compactBuckets(s, s"$storeDir/vectors", "cell_id",
       Seq(col("vec_id"), col("label"), col("qe")),
       Seq("vec_id"), maxFilesPerCell)
 
@@ -312,7 +312,7 @@ object Similarity {
     * deleted vectors' own cells with NO corpus scan. Each touched
     * cell is rewritten with survivors anti-joined; an EMPTIED cell's
     * directory is deleted explicitly and loudly
-    * ([[graft.ops.Dedup.deleteEmptiedBucket]] — dynamic partition
+    * ([[BucketedStore.retractBucketRewrite]] — dynamic partition
     * overwrite cannot remove a partition it writes no rows for). The
     * centroid/codebook model tables are untouched — retraction serves
     * probes through the FROZEN model, the q88 append posture; model
@@ -362,14 +362,9 @@ object Similarity {
         centroids)
         .select(col("vec_id"), col("cell_id").cast("int").as("cell_id")),
       "cell_id")
-    if (cells.isEmpty) return
-    Dedup.retractBucketRewrite(s, s"$storeDir/vectors",
-      s.read.schema(schema).parquet(s"$storeDir/vectors")
-        .filter(col("cell_id").isin(cells: _*))
-        .join(delAssigned.select(col("vec_id")), Seq("vec_id"),
-          "left_anti")
-        .select((projCols :+ "cell_id").map(col): _*),
-      "cell_id", cells, Seq("vec_id"))
+    BucketedStore.retractBucketRewrite(s, s"$storeDir/vectors",
+      s.read.schema(schema).parquet(s"$storeDir/vectors"), "cell_id", cells,
+      delAssigned.select(col("vec_id")), "vec_id", projCols, Seq("vec_id"))
   }
 
   /** Declared O-143 binding (IVF): pristine full-corpus store built
@@ -873,7 +868,7 @@ object Similarity {
     * every standing index bounds; 8-byte code rows, never vectors). */
   def ivfPqCompact(s: SparkSession, storeDir: String,
       maxFilesPerCell: Int = 4): Seq[Int] =
-    Dedup.compactBuckets(s, s"$storeDir/vectors", "cell_id",
+    BucketedStore.compactBuckets(s, s"$storeDir/vectors", "cell_id",
       Seq(col("vec_id"), col("label"), col("codes")),
       Seq("vec_id"), maxFilesPerCell)
 

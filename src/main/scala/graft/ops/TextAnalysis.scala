@@ -711,7 +711,8 @@ object TextAnalysis {
   // appends nothing instead of double-counting.
   /** Write (or append, for a merge) the tf store: one partially
     * aggregated groupBy(token) pass over the given docs — the q72
-    * train pass — bucketed by token hash ([[Dedup.writeBucketed]]). */
+    * train pass — bucketed by token hash
+    * ([[BucketedStore.writeBucketed]]). */
   def tfStoreWrite(docs: DataFrame, store: String,
       mode: String = "overwrite", epoch: Long = 0L,
       sign: Long = 1L): Unit = {
@@ -725,7 +726,7 @@ object TextAnalysis {
       Seq(p, tfHwmStaging(p)).filter(fs.exists)
         .foreach(fs.delete(_, false))
     }
-    Dedup.writeBucketed(tokenPositions(docs)
+    BucketedStore.writeBucketed(tokenPositions(docs)
       .groupBy(col("tok")).agg((count(lit(1)) * lit(sign)).as("c"))
       .withColumn("epoch", lit(epoch))
       .withColumn("bucket", pmod(xxhash64(col("tok")), lit(64)).cast("int")),
@@ -833,7 +834,7 @@ object TextAnalysis {
       .filter(col("c") =!= 0L)
 
   /** Compact oversized buckets: the shared partition-pruned
-    * enumerate-stage-swap pass (Dedup.compactBuckets), with a SUM
+    * enumerate-stage-swap pass (BucketedStore.compactBuckets), with a SUM
     * fold instead of DISTINCT — delta rows compact by addition. Each
     * folded bucket is rewritten WHOLE as epoch -1 totals (one row per
     * token), so repeated folds cannot double-count: a bucket never
@@ -856,7 +857,7 @@ object TextAnalysis {
       if (maxRow.isNullAt(0)) Long.MinValue else maxRow.getLong(0)
     if (maxEpoch > tfStoreHwm(s, store))
       tfStoreWriteHwm(s, store, maxEpoch)
-    Dedup.compactBuckets(s, store, "bucket", Seq.empty,
+    BucketedStore.compactBuckets(s, store, "bucket", Seq.empty,
       Seq("tok"), maxFilesPerBucket,
       fold = Some(df => df
         .select(col("epoch"), col("tok"), col("c"), col("bucket"))

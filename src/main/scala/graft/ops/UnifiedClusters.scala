@@ -69,19 +69,14 @@ import graft.util.Span
   * its band/hash join; the relabel's CC sees only new + touched
   * edges. Nothing rescans corpus text, pixels, or float vectors.
   *
-  * Crash posture: identical to the MinHash store — the
-  * `clusters_staging` dir is the in-progress marker (written before
-  * any append, deleted after the swap), a torn store heals by exact
-  * full-CC rebuild inside [[Dedup.relabelAgainst]], index/edge
-  * appends replay idempotently (compaction's DISTINCT reclaims the
-  * duplicates), and indices append BEFORE edges so a crash can never
-  * persist an edge whose doc no future batch can band-match
-  * (the neardupClusterStoreUpdate ordering argument).
+  * Crash posture: update and retraction persist through the MinHash
+  * store's label commit, [[BucketedStore.commitLabels]].
   *
   * Ref intended semantics: continuous point upserts into standing
   * series, rg.py:43-50 — re-expressed as standing-index maintenance.
   */
 object UnifiedClusters {
+  import BucketedStore.writeBucketed
   import Dedup.materializeBounded
 
   private[graft] val SimScheme = BandScheme(Dedup.SimChunks, 15, 8)
@@ -391,17 +386,17 @@ object UnifiedClusters {
       () => Span(s, "uni.build.rows.aud")(materializeBounded(
         sigRowsOf(audSigs, "ehash", Multimodal.EhashScheme))))))
     Span(s, "uni.build.writes")(inParallel(Seq(
-      () => Dedup.writeBucketed(sh, s"$store/shingle", "overwrite", "kb",
+      () => writeBucketed(sh, s"$store/shingle", "overwrite", "kb",
         Seq("h")),
-      () => Dedup.writeBucketed(sim, s"$store/simhash", "overwrite", "kb",
+      () => writeBucketed(sim, s"$store/simhash", "overwrite", "kb",
         Seq("band", "ckey")),
-      () => Dedup.writeBucketed(lsh.drop("qe"), s"$store/emb_lsh",
+      () => writeBucketed(lsh.drop("qe"), s"$store/emb_lsh",
         "overwrite", "kb", Seq("band", "bkey")),
-      () => Dedup.writeBucketed(vecRowsOf(lsh), s"$store/emb_vec",
+      () => writeBucketed(vecRowsOf(lsh), s"$store/emb_vec",
         "overwrite", "kv", Seq("vec_id")),
-      () => Dedup.writeBucketed(img, s"$store/img_ahash", "overwrite", "kb",
+      () => writeBucketed(img, s"$store/img_ahash", "overwrite", "kb",
         Seq("band", "ckey")),
-      () => Dedup.writeBucketed(aud, s"$store/ehash", "overwrite", "kb",
+      () => writeBucketed(aud, s"$store/ehash", "overwrite", "kb",
         Seq("band", "ckey")))))
     val fams = Span(s, "uni.build.fams")(materializeBounded(
       famLit(shinglePairs(freshSelf = true)(sh, sh), "shingle")
@@ -415,7 +410,7 @@ object UnifiedClusters {
           self = true)(aud, aud), "ehash"))))
     Span(s, "uni.build.edges_write")(
       fams.write.mode("overwrite").parquet(s"$store/edges"))
-    Span(s, "uni.build.cc_clusters")(Dedup.writeBucketed(
+    Span(s, "uni.build.cc_clusters")(writeBucketed(
       Dedup.connectedComponents(
         fams.select(col("doc_a"), col("doc_b")).distinct())
         .withColumn("kb", Dedup.clusterBucket(col("doc_id"))),
@@ -649,7 +644,7 @@ object UnifiedClusters {
   private def unifiedMergeParts(s: SparkSession, store: String,
       batchDocs: DataFrame, batchEmb: DataFrame, batchImgSigs: DataFrame,
       batchAudSigs: DataFrame)
-      : (Seq[DataFrame], DataFrame, DataFrame, DataFrame) = {
+      : (Seq[DataFrame], DataFrame, DataFrame, DataFrame, Boolean) = {
     requireUnifiedStore(s, store)
     val (Seq(batchSh, batchSim, batchLsh, batchImg, batchAud, batchVec),
       keys, _) =
@@ -667,14 +662,14 @@ object UnifiedClusters {
           batchSh, batchSim, batchLsh, batchImg, batchAud, batchVec, keys)
         .join(edgesTable(s, store),
           Seq("doc_a", "doc_b", "family"), "left_anti")))
+    val torn = BucketedStore.tornMarker(s, store)
     val (untouched, relabeled) = Span(s, "uni.merge.relabel")(
       Dedup.relabelAgainst(
         newEdges.select(col("doc_a"), col("doc_b")).distinct(),
         edgesTable(s, store).select(col("doc_a"), col("doc_b")).distinct(),
-        Dedup.clusterLabelsTable(s, store),
-        Dedup.tornMarker(s, store)))
+        Dedup.clusterLabelsTable(s, store), torn))
     (Seq(batchSh, batchSim, batchLsh, batchImg, batchAud, batchVec),
-      newEdges, untouched, relabeled)
+      newEdges, untouched, relabeled, torn)
   }
 
   /** The q61c output shape (cluster_id, cluster_size, n_shingle,
@@ -696,7 +691,7 @@ object UnifiedClusters {
   def unifiedClusterMerge(s: SparkSession, store: String,
       batchDocs: DataFrame, batchEmb: DataFrame,
       batchImgSigs: DataFrame, batchAudSigs: DataFrame): DataFrame = {
-    val (_, newEdges, untouched, relabeled) =
+    val (_, newEdges, untouched, relabeled, _) =
       unifiedMergeParts(s, store, batchDocs, batchEmb, batchImgSigs,
         batchAudSigs)
     val labels = materializeBounded(
@@ -716,15 +711,16 @@ object UnifiedClusters {
     * so n_* counts are replay-exact BEFORE compaction; compaction
     * still reclaims the duplicate bytes. */
   def unifiedClustersFromStore(s: SparkSession, store: String): DataFrame = {
-    // a torn store (crashed mid-update) would silently serve stale or
-    // mixed-generation labels inconsistent with the edge table here —
-    // merge/update heal via relabelAgainst, but this read path runs no
+    // a torn store (crashed label commit) would silently serve stale,
+    // mixed-generation or ghost labels inconsistent with the edge table
+    // here — update and retraction heal, but this read path runs no
     // relabel, so it must refuse instead (round-13 ADVICE)
-    require(!Dedup.tornMarker(s, store),
-      s"unified cluster store at '$store' is torn (clusters_staging " +
-        "marker present — a previous update crashed mid-swap); run " +
-        "unifiedClusterStoreUpdate with any batch (empty is fine) to " +
-        "heal before reading back")
+    require(!BucketedStore.tornMarker(s, store),
+      s"unified cluster store at '$store' is torn (staging marker " +
+        "present — a previous update or retraction crashed before its " +
+        "label commit completed); run unifiedClusterStoreUpdate with " +
+        "any batch (empty is fine), or replay the retraction, to heal " +
+        "before reading back")
     provenanceRollup(
       Dedup.clusterLabelsTable(s, store)
         .select(col("doc_id"), col("cluster_id"), col("cluster_size"),
@@ -734,10 +730,9 @@ object UnifiedClusters {
 
   /** Persist the merge: append each family's batch index rows (future
     * merges match against them), append the provenance-tagged new
-    * edges, and rewrite ONLY the dirty cluster buckets — the
-    * neardupClusterStoreUpdate protocol verbatim (staging marker
-    * first, indices before edges, dynamic partition overwrite swap,
-    * unconditional marker delete). */
+    * edges, and rewrite ONLY the dirty cluster buckets — through the
+    * label commit neardupClusterStoreUpdate uses
+    * ([[BucketedStore.commitLabels]]). */
   def unifiedClusterStoreUpdate(s: SparkSession, store: String,
       batchDocs: DataFrame, batchEmb: DataFrame,
       batchImgSigs: DataFrame, batchAudSigs: DataFrame): Unit = {
@@ -773,75 +768,44 @@ object UnifiedClusters {
   }
 
   private def persistMerge(s: SparkSession, store: String,
-      parts: (Seq[DataFrame], DataFrame, DataFrame, DataFrame))
+      parts: (Seq[DataFrame], DataFrame, DataFrame, DataFrame, Boolean))
       : Unit = Span(s, "uni.update") {
-    val (batchRows, newEdges, untouched, relabeled) = parts
-    // dirty buckets collected via the materialization's own observe
-    // (round 17, the materializeWithKeys shape) — <= 64 ints, the
-    // corpusMerge convention, one job instead of two
-    val (dirty, buckets) = Dedup.materializeWithKeys(
-      relabeled.withColumn("kb", Dedup.clusterBucket(col("doc_id"))), "kb")
-    val tmp = s"$store/clusters_staging"
+    val (batchRows, newEdges, untouched, relabeled, torn) = parts
+    val (staged, buckets) = Dedup.labelStaging(untouched, relabeled)
     val Seq(batchSh, batchSim, batchLsh, batchImg, batchAud, batchVec) =
       batchRows
-    // ONE concurrent wave for the label staging AND the five family
-    // index appends (round 18): all seven writes are mutually
-    // independent (disjoint paths, pre-materialized inputs), and the
-    // protocol constraint is only that the MARKER (the staging dir)
-    // exists before the EDGES append — the marker guards the
-    // labels = CC(edges) invariant, which index-row facts cannot
-    // violate. A crash inside this wave can now leave family indices
-    // appended with NO marker present — but that is exactly the
-    // already-documented "bands append first" state (labels and edges
-    // still mutually consistent, the batch's docs band-discoverable
-    // but unclustered, the SAME batch's replay restores everything);
-    // the state needing the heal — edges appended, labels stale —
-    // remains impossible before the wave's barrier. Layout-v2 note:
-    // emb_lsh and emb_vec append inside the same wave with no order
-    // between them, so a crash can leave a band row whose vec_id has
-    // no emb_vec row yet — the candidate verify's inner join skips
-    // such candidates (band-discoverable, not yet verifiable), and
-    // the replay restores the vec rows and re-derives the skipped
-    // pairs (the anti-join keeps persisted edges from duplicating).
-    Span(s, "uni.update.stage_and_appends")(inParallel(Seq(
-      () => if (buckets.nonEmpty)
-        Dedup.writeBucketed(
-          untouched.filter(col("kb").isin(buckets.toIndexedSeq: _*))
-            .unionByName(dirty),
-          tmp, "overwrite", "kb", Seq("cluster_id", "doc_id")),
-      () => Dedup.writeBucketed(batchSh.select(col("doc_id"), col("c"),
+    // the five family index appends ride the commit's staging wave
+    // (round 18: seven independent writes, one wave). Layout-v2 note:
+    // emb_lsh and emb_vec append with no order between them, so a
+    // crash can leave a band row whose vec_id has no emb_vec row yet —
+    // the candidate verify's inner join skips such candidates
+    // (band-discoverable, not yet verifiable), and the replay restores
+    // the vec rows and re-derives the skipped pairs (the anti-join
+    // keeps persisted edges from duplicating).
+    BucketedStore.commitLabels(s, store, torn, staged, buckets,
+      "uni.update")(Seq(
+      () => writeBucketed(batchSh.select(col("doc_id"), col("c"),
         col("h"), col("kb")), s"$store/shingle", "append", "kb", Seq("h")),
-      () => Dedup.writeBucketed(batchSim.select(col("doc_id"),
+      () => writeBucketed(batchSim.select(col("doc_id"),
         col("simhash"), col("band"), col("ckey"), col("kb")),
         s"$store/simhash", "append", "kb", Seq("band", "ckey")),
-      () => Dedup.writeBucketed(batchLsh.select(col("vec_id"),
+      () => writeBucketed(batchLsh.select(col("vec_id"),
         col("band"), col("bkey"), col("kb")), s"$store/emb_lsh",
         "append", "kb", Seq("band", "bkey")),
-      () => Dedup.writeBucketed(batchVec, s"$store/emb_vec",
+      () => writeBucketed(batchVec, s"$store/emb_vec",
         "append", "kv", Seq("vec_id")),
-      () => Dedup.writeBucketed(batchImg.select(col("doc_id"),
+      () => writeBucketed(batchImg.select(col("doc_id"),
         col("ahash"), col("band"), col("ckey"), col("kb")),
         s"$store/img_ahash", "append", "kb", Seq("band", "ckey")),
-      () => Dedup.writeBucketed(batchAud.select(col("doc_id"),
+      () => writeBucketed(batchAud.select(col("doc_id"),
         col("ehash"), col("band"), col("ckey"), col("kb")),
-        s"$store/ehash", "append", "kb", Seq("band", "ckey")))))
-    Span(s, "uni.update.edges_append")(
+        s"$store/ehash", "append", "kb", Seq("band", "ckey"))))(
       newEdges.write.mode("append").parquet(s"$store/edges"))
-    if (buckets.nonEmpty) Span(s, "uni.update.label_swap") {
-      // rename swap (round 17, Dedup.swapStagedBuckets): metadata-only;
-      // the torn marker covers the per-bucket window
-      Dedup.swapStagedBuckets(s, tmp, s"$store/clusters", "kb")
-      s.catalog.refreshByPath(store)
-    }
-    val fs = new org.apache.hadoop.fs.Path(tmp)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    try fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    catch { case _: java.io.IOException => () }
   }
 
   /** Bound file counts under daily merges: the five index tables
     * compact via the shared bucket pass, the unpartitioned edge table
-    * via the rename-swap rewrite (both [[Dedup]] primitives — the
+    * via the rename-swap rewrite (both [[BucketedStore]] passes — the
     * DISTINCT also reclaims replayed appends; family rides in the
     * edge rows so provenance survives). The cluster table needs no
     * pass (every bucket was last written as one file). */
@@ -863,10 +827,10 @@ object UnifiedClusters {
       ("simhash", "kb", Seq("doc_id", "simhash", "band", "ckey"),
         Seq("band", "ckey")))
     fams.foreach { case (fam, bucketCol, projCols, ordCols) =>
-      Dedup.compactBuckets(s, s"$store/$fam", bucketCol, projCols.map(col),
-        ordCols, maxFilesPerBucket)
+      BucketedStore.compactBuckets(s, s"$store/$fam", bucketCol,
+        projCols.map(col), ordCols, maxFilesPerBucket)
     }
-    Dedup.compactUnpartitioned(s, s"$store/edges", maxFilesPerBucket)
+    BucketedStore.compactUnpartitioned(s, s"$store/edges", maxFilesPerBucket)
   }
 
   // O-140 (q61f): RETRACTION — the store-lifecycle gap every
@@ -901,17 +865,18 @@ object UnifiedClusters {
     * it). Replay-idempotent: every removal is an anti-join, so
     * re-retracting is a no-op.
     *
-    * Crash posture: the label staging dir is the in-progress marker
-    * (written FIRST when any label bucket is dirty — read-back
-    * refuses while it exists); index rewrites land before the edge
-    * rewrite and the label swap, so a torn retraction can leave a
-    * doc edge-visible but not band-discoverable — replaying the same
-    * retraction heals every case. */
+    * Crash posture: [[BucketedStore.commitLabels]]; the index
+    * rewrites ride its staging wave and the edge-table rewrite is its
+    * edges step. Over a torn store (a crashed update or retraction)
+    * the relabel is not scoped to the touched components: the label
+    * set is rebuilt whole as CC(surviving edges), so replaying a
+    * crashed retraction heals every crash point. */
   def unifiedClusterStoreRetract(s: SparkSession, store: String,
       delDocs: DataFrame, delEmb: DataFrame,
       delImgSigs: DataFrame, delAudSigs: DataFrame)
       : Unit = Span(s, "uni.retract") {
     requireUnifiedStore(s, store)
+    val torn = BucketedStore.tornMarker(s, store)
     val (Seq(delSh, delSim, delLsh, delImg, delAud, delVec), keys,
       kvKeys) =
       Span(s, "uni.retract.batch_rows")(
@@ -947,124 +912,64 @@ object UnifiedClusters {
     // connectedComponentsMaterialized's contract, and its count rides
     // the materialization (round 17: one job instead of CC's own
     // re-materialize + count of the same leaf)
+    val edgePairs = edgesTable(s, store)
+      .select(col("doc_a"), col("doc_b")).distinct()
     val (survEdges, nSurv) = Dedup.materializeWithCount(
-      edgesTable(s, store)
-        .select(col("doc_a"), col("doc_b")).distinct()
-        .join(touchedMembers.select(col("doc_id").as("doc_a")),
-          Seq("doc_a"), "left_semi")
+      (if (torn) edgePairs
+       else edgePairs.join(touchedMembers.select(col("doc_id").as("doc_a")),
+         Seq("doc_a"), "left_semi"))
         .join(delIds.withColumnRenamed("doc_id", "doc_a"),
           Seq("doc_a"), "left_anti")
         .join(delIds.withColumnRenamed("doc_id", "doc_b"),
           Seq("doc_b"), "left_anti"))
-    val newLabels = Span(s, "uni.retract.relabel")(materializeBounded(
-      Dedup.connectedComponentsMaterialized(survEdges, nSurv)
-        .withColumn("kb", Dedup.clusterBucket(col("doc_id")))))
+    val (newLabels, newKeys) = Span(s, "uni.retract.relabel")(
+      Dedup.materializeWithKeys(
+        Dedup.connectedComponentsMaterialized(survEdges, nSurv)
+          .select(col("doc_id"), col("cluster_id"), col("cluster_size"),
+            col("is_canonical"))
+          .withColumn("kb", Dedup.clusterBucket(col("doc_id"))), "kb"))
+    // a dirty bucket keeps its rows outside the touched components
+    val (staged, stagedKeys) =
+      if (torn) (newLabels, newKeys)
+      else (labels.filter(col("kb").isin(dirty: _*))
+        .join(touchedMembers.select(col("doc_id")), Seq("doc_id"),
+          "left_anti")
+        .unionByName(newLabels), dirty)
 
-    // Label staging AND the six family rewrites run as ONE concurrent
-    // wave (round 18, the update path's stage_and_appends reasoning):
-    // the seven writes are mutually independent (disjoint paths,
-    // pre-materialized inputs), and the marker-before-EDGES constraint
-    // is preserved by the wave's barrier — index-row deletions cannot
-    // violate labels = CC(edges), and a crash leaving some indices
-    // rewritten with no marker is the already-documented "edge-visible
-    // but not band-discoverable" torn-retraction state that replaying
-    // the same retraction heals (every removal is an anti-join).
-    val tmp = s"$store/clusters_staging"
-    def stageLabels(): Unit =
-      if (dirty.nonEmpty)
-        Dedup.writeBucketed(labels.filter(col("kb").isin(dirty: _*))
-          .join(touchedMembers.select(col("doc_id")), Seq("doc_id"),
-            "left_anti")
-          .unionByName(newLabels.select(col("doc_id"), col("cluster_id"),
-            col("cluster_size"), col("is_canonical"), col("kb"))),
-          tmp, "overwrite", "kb", Seq("cluster_id", "doc_id"))
-
-    // per-family touched-bucket rewrites (concurrent — mutually
-    // independent, the update's index_appends posture)
-    def rewriteFam(path: String, table: DataFrame, bucketCol: String,
-        famKeys: Seq[Int], idCol: String, projCols: Seq[String],
-        ordCols: Seq[String]): Unit =
-      if (famKeys.nonEmpty)
-        Dedup.retractBucketRewrite(s, path,
-          table.filter(col(bucketCol).isin(famKeys: _*))
-            .join(delIds.withColumnRenamed("doc_id", idCol),
-              Seq(idCol), "left_anti")
-            .select((projCols :+ bucketCol).map(col): _*),
-          bucketCol, famKeys, ordCols)
-    Span(s, "uni.retract.stage_and_rewrites")(inParallel(Seq(
-      () => stageLabels(),
-      () => rewriteFam(s"$store/shingle", shingleIndexTable(s, store),
-        "kb", keys("shingle"), "doc_id", Seq("doc_id", "c", "h"),
-        Seq("h")),
-      () => rewriteFam(s"$store/simhash",
+    // per-family touched-bucket rewrites, concurrent with the label
+    // staging; each opens its table inside its task, so the six file
+    // listings run concurrently too
+    BucketedStore.commitLabels(s, store, torn, staged, stagedKeys,
+      "uni.retract")(Seq(
+      () => BucketedStore.retractBucketRewrite(s, s"$store/shingle",
+        shingleIndexTable(s, store), "kb", keys("shingle"), delIds,
+        "doc_id", Seq("doc_id", "c", "h"), Seq("h")),
+      () => BucketedStore.retractBucketRewrite(s, s"$store/simhash",
         sigIndexTable(s, store, "simhash", "simhash"), "kb",
-        keys("simhash"), "doc_id",
+        keys("simhash"), delIds, "doc_id",
         Seq("doc_id", "simhash", "band", "ckey"), Seq("band", "ckey")),
-      () => rewriteFam(s"$store/emb_lsh", lshIndexTable(s, store), "kb",
-        keys("emb_lsh"), "vec_id", Seq("vec_id", "band", "bkey"),
-        Seq("band", "bkey")),
-      () => rewriteFam(s"$store/emb_vec", vecTable(s, store), "kv",
-        kvKeys, "vec_id", Seq("vec_id", "qe"), Seq("vec_id")),
-      () => rewriteFam(s"$store/img_ahash",
+      () => BucketedStore.retractBucketRewrite(s, s"$store/emb_lsh",
+        lshIndexTable(s, store), "kb", keys("emb_lsh"), delIds, "vec_id",
+        Seq("vec_id", "band", "bkey"), Seq("band", "bkey")),
+      () => BucketedStore.retractBucketRewrite(s, s"$store/emb_vec",
+        vecTable(s, store), "kv", kvKeys, delIds, "vec_id",
+        Seq("vec_id", "qe"), Seq("vec_id")),
+      () => BucketedStore.retractBucketRewrite(s, s"$store/img_ahash",
         sigIndexTable(s, store, "img_ahash", "ahash"), "kb",
-        keys("img_ahash"), "doc_id",
+        keys("img_ahash"), delIds, "doc_id",
         Seq("doc_id", "ahash", "band", "ckey"), Seq("band", "ckey")),
-      () => rewriteFam(s"$store/ehash",
+      () => BucketedStore.retractBucketRewrite(s, s"$store/ehash",
         sigIndexTable(s, store, "ehash", "ehash"), "kb",
-        keys("ehash"), "doc_id",
-        Seq("doc_id", "ehash", "band", "ckey"), Seq("band", "ckey")))))
-
-    // edge table: unpartitioned rename-swap rewrite (edge-bounded —
-    // the same wholesale pass compaction performs)
-    Span(s, "uni.retract.edges_rewrite") {
-      val edgesPath = s"$store/edges"
-      val cleaned = edgesTable(s, store)
-        .join(delIds.withColumnRenamed("doc_id", "doc_a"),
-          Seq("doc_a"), "left_anti")
-        .join(delIds.withColumnRenamed("doc_id", "doc_b"),
-          Seq("doc_b"), "left_anti")
-      val fs = new org.apache.hadoop.fs.Path(edgesPath)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      val tmpE = new org.apache.hadoop.fs.Path(s"${edgesPath}_retracting")
-      cleaned.coalesce(4).write.mode("overwrite").parquet(tmpE.toString)
-      val live = new org.apache.hadoop.fs.Path(edgesPath)
-      val old = new org.apache.hadoop.fs.Path(s"${edgesPath}_old")
-      if (fs.exists(old)) fs.delete(old, true)
-      require(fs.rename(live, old),
-        s"retraction: could not move $live aside")
-      require(fs.rename(tmpE, live),
-        s"retraction: could not move $tmpE into place — previous " +
-          s"edge table preserved at $old")
-      try fs.delete(old, true)
-      catch { case _: java.io.IOException => () }
-    }
-
-    // label swap + marker delete (the update protocol's tail).
-    // SCHEMA'D staging read (round-16 spec catch): a retraction that
-    // dissolves every touched component stages ZERO rows, and a
-    // partitionBy write of zero rows emits no schema-bearing files —
-    // exactly the empty-table case the clusterLabelsTable reasoning
-    // covers for the live table.
-    if (dirty.nonEmpty) Span(s, "uni.retract.label_swap") {
-      // rename swap (round 17, Dedup.swapStagedBuckets): metadata-only,
-      // zero reads — the marker covers the per-bucket window, and the
-      // staged DIR SET is the survived set (a retraction that
-      // dissolves every touched component stages zero dirs, the
-      // round-16 spec catch — partitionBy writes no dir for no rows),
-      // so the separate schema'd read + survived collect job is gone
-      val survived =
-        Dedup.swapStagedBuckets(s, tmp, s"$store/clusters", "kb").toSet
-      val fs = new org.apache.hadoop.fs.Path(store)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      dirty.filterNot(survived).foreach(k =>
-        Dedup.deleteEmptiedBucket(fs,
-          new org.apache.hadoop.fs.Path(s"$store/clusters/kb=$k")))
-      s.catalog.refreshByPath(store)
-    }
-    val fsM = new org.apache.hadoop.fs.Path(tmp)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    try fsM.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    catch { case _: java.io.IOException => () }
+        keys("ehash"), delIds, "doc_id",
+        Seq("doc_id", "ehash", "band", "ckey"), Seq("band", "ckey"))))(
+      // the edge table: unpartitioned rename-swap rewrite (edge-bounded
+      // — the same wholesale pass compaction performs)
+      BucketedStore.replaceUnpartitioned(s, s"$store/edges",
+        edgesTable(s, store)
+          .join(delIds.withColumnRenamed("doc_id", "doc_a"),
+            Seq("doc_a"), "left_anti")
+          .join(delIds.withColumnRenamed("doc_id", "doc_b"),
+            Seq("doc_b"), "left_anti"), 4))
   }
 
   /** Declared O-140 binding: the full q61c store (every document,

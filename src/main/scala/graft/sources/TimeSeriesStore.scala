@@ -1,11 +1,11 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, DateType, StructField, StructType}
+import org.apache.spark.sql.types.{DateType, StructField}
+
+import graft.ops.BucketedStore
 
 /** The engine's time-series store — the InfluxDB replacement
   * (SURVEY.md §1.4): a day-partitioned parquet table keyed by the
@@ -66,29 +66,10 @@ object TimeSeriesStore {
       .map(_.getPath).maxByOption(_.getName)
   }
 
-  /** The store's schema from the Spark row metadata in one parquet
-    * footer of `dayDir`, plus the `day` partition column; None when
-    * the directory holds no file Spark wrote. Read on the driver, so
-    * a store read starts no schema-inference job. */
-  private def schemaOf(s: SparkSession, dayDir: Path): Option[StructType] = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val fs = dayDir.getFileSystem(conf)
-    fs.listStatus(dayDir).iterator
-      .map(_.getPath).find(_.getName.endsWith(".parquet"))
-      .flatMap { f =>
-        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
-        try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
-          .get("org.apache.spark.sql.parquet.row.metadata"))
-        finally reader.close()
-      }
-      .map(json => DataType.fromJson(json).asInstanceOf[StructType]
-        .add(StructField("day", DateType)))
-  }
-
-  /** A reader carrying the schema of [[schemaOf]] `dayDir`; without
-    * one, Spark's own schema inference (and its errors). */
+  /** A reader with the store's schema from one footer of `dayDir`
+    * ([[BucketedStore.reader]]): no schema-inference job. */
   private def reader(s: SparkSession, dayDir: Path) =
-    schemaOf(s, dayDir).fold(s.read)(s.read.schema(_))
+    BucketedStore.reader(s, dayDir, Some(StructField("day", DateType)))
 
   /** Read the whole store, its schema taken from the newest partition. */
   def read(s: SparkSession, path: String): DataFrame =

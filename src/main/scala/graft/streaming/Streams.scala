@@ -1071,11 +1071,10 @@ object Streams {
     * rows), so they must never reach the sink. Protocol:
     *  1. the batch's commit partition (`batch_id=N`) exists => the
     *     batch fully committed — do nothing at all;
-    *  2. WAL the read-only frame counts to a SIBLING `<countsDir>_wal`
-    *     dir BEFORE any store append (outside countsDir => invisible
-    *     to the read-back scan, and explicit reads stay
-    *     warning-free — an underscore-prefixed child would be
-    *     listing-filtered; a complete earlier WAL — `_SUCCESS`
+    *  2. WAL the read-only frame counts to `<countsDir>/_wal` BEFORE
+    *     any store append (Spark's file index skips `_`-prefixed
+    *     names, so the read-back scan never sees it, and it goes
+    *     wherever countsDir goes; a complete earlier WAL — `_SUCCESS`
     *     present — is REUSED on replay, because its values are the
     *     pre-mutation truth a replay cannot recompute);
     *  3. the caller runs its idempotent appends and returns the
@@ -1102,13 +1101,13 @@ object Streams {
     graft.util.Span(ss, "funnel.batch") {
       val frames = framesOf
       val staged = new org.apache.hadoop.fs.Path(
-        s"${countsDir}_wal/staged_$batchId")
+        s"$countsDir/_wal/staged_$batchId")
       if (!fs.exists(new org.apache.hadoop.fs.Path(staged, "_SUCCESS")))
         graft.ops.Dedup.funnelCounts(frames)
           .coalesce(1).write.mode("overwrite").parquet(staged.toString)
       val admitted = appendsAndAdmitted(frames)
       val tmp = new org.apache.hadoop.fs.Path(
-        s"${countsDir}_wal/commit_$batchId")
+        s"$countsDir/_wal/commit_$batchId")
       ss.read.schema("stage INT, stage_name STRING, n_docs BIGINT")
         .parquet(staged.toString)
         .unionByName(graft.ops.Dedup.funnelCounts(
@@ -1124,8 +1123,7 @@ object Streams {
 
   /** The declared aggregation over the committed per-batch counts —
     * no DISTINCT needed: write-once means exactly one file-set per
-    * batch, and the WAL lives in the sibling `<countsDir>_wal` dir
-    * the scan never touches. */
+    * batch, and the scan skips the `_wal` dir. */
   private[graft] def committedCountsReadBack(s: SparkSession,
       countsDir: String): DataFrame =
     s.read.parquet(countsDir)

@@ -31,6 +31,17 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
         (e.properties, e.stageInfo.numTasks)
     }
 
+  /** Run `body` and return its value with the job description and
+    * first stage name (its call site) of every job submitted while it
+    * ran outside any SQL execution: schema inference and file listing
+    * run there, query execution does not. */
+  def nonQueryJobs[T](body: => T): (T, Seq[(String, String)]) =
+    listen(body) {
+      case e: SparkListenerJobStart if Option(e.properties)
+          .forall(_.getProperty("spark.sql.execution.id") == null) =>
+        (e.properties, e.stageInfos.map(_.name).headOption.getOrElse(""))
+    }
+
   /** Record `pick`'s value, keyed by the job description of the event's
     * properties, for every job-start and stage-submitted event while
     * `body` runs. The listener bus delivers in order: once a marker job

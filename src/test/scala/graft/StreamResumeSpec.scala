@@ -45,6 +45,19 @@ class StreamResumeSpec extends SparkSpec {
     assert(sink.select(col("id")).distinct().count() === 150)
   }
 
+  test("s23/s24 counts WAL lives inside the counts dir: a committed " +
+    "batch leaves no `_wal` sibling, and the read-back skips it") {
+    import spark.implicits._
+    val countsDir = Files.createTempDirectory("wal_counts_").toString
+    val docs = Seq(1L, 2L).toDF("doc_id")
+    streaming.Streams.committedFunnelCounts(spark, countsDir, 0L)(
+      Seq((0, "input", docs)))(_ => docs.limit(1))
+    assert(!new java.io.File(s"${countsDir}_wal").exists)
+    assert(streaming.Streams.committedCountsReadBack(spark, countsDir)
+      .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2)))
+      .toSeq === Seq((0, "input", 2L), (7, "manifest_append", 1L)))
+  }
+
   test("s23/s24 counts sink is replay-exact: a killed-and-restarted " +
     "stream re-delivers its last micro-batch and the committed " +
     "counts do not change (VERDICT r16 #4)") {

@@ -355,6 +355,103 @@ class UnifiedClustersSpec extends SparkSpec {
     assert(got === oneShot())
   }
 
+  /** docs 1 and 3 share their text; doc 2 joins doc 1 through an image
+    * hash: one component (1, size 3), labels in kb 1, 2 and 3. Returns
+    * the store, the docs, the image signatures and the read-back. */
+  private def bridgedStore(prefix: String)
+      : (String, DataFrame, DataFrame, () => Seq[(Long, Long)]) = {
+    import spark.implicits._
+    val shared = (1 to 40).map(i => s"a$i").mkString(" ")
+    val docs = Seq(1L -> shared,
+        2L -> (1 to 40).map(i => s"b$i").mkString(" "), 3L -> shared)
+      .toDF("doc_id", "text")
+      .withColumn("lang", lit("en")).withColumn("source", lit("t"))
+      .withColumn("n_chars", length(col("text")).cast("long"))
+    val img = Seq((1L, 0L), (2L, 0L)).toDF("doc_id", "ahash")
+    val store = java.nio.file.Files.createTempDirectory(prefix).toString
+    ops.UnifiedClusters.unifiedClusterStoreWrite(docs, emb0, img, aud0,
+      store)
+    def readBack() = ops.UnifiedClusters.unifiedClustersFromStore(spark,
+      store).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    assert(readBack() === Seq((1L, 3L)))
+    (store, docs, img, () => readBack())
+  }
+  private def emb0 = {
+    import spark.implicits._
+    Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
+  }
+  private def aud0 = {
+    import spark.implicits._
+    Seq.empty[(Long, Long)].toDF("doc_id", "ehash")
+  }
+
+  test("torn heal after a crashed retraction: an empty update deletes " +
+    "the label bucket the retraction emptied and reads back the clean " +
+    "retraction's clusters") {
+    import org.apache.commons.io.FileUtils
+    val (store, docs, img, readBack) = bridgedStore("uni_retract_torn_")
+    val labels = new java.io.File(s"$store/clusters")
+    val oldLabels = java.nio.file.Files
+      .createTempDirectory("uni_labels_before_").toFile
+    FileUtils.copyDirectory(labels, oldLabels)
+    ops.UnifiedClusters.unifiedClusterStoreRetract(spark, store,
+      docs.filter(col("doc_id") === 2L), emb0,
+      img.filter(col("doc_id") === 2L), aud0)
+    assert(readBack() === Seq((1L, 2L)))
+    // a crash after the edges rewrite, before the label swap: the old
+    // label table beside the staging marker
+    FileUtils.deleteDirectory(labels)
+    FileUtils.copyDirectory(oldLabels, labels)
+    assert(new java.io.File(s"$store/clusters_staging").mkdirs())
+    ops.UnifiedClusters.unifiedClusterStoreUpdate(spark, store,
+      docs.limit(0), emb0, img.limit(0), aud0)
+    assert(!new java.io.File(labels, "kb=2").exists(),
+      "the retracted doc's label bucket survived the heal")
+    assert(readBack() === Seq((1L, 2L)))
+  }
+
+  test("a retraction over a torn store rebuilds the whole label set: " +
+    "edges a crashed update appended are labeled, not left unlabeled " +
+    "behind a cleared marker") {
+    import spark.implicits._
+    val (store, docs, img, readBack) = bridgedStore("uni_retract_heal_")
+    // a crash after an update's edges append, before its label swap
+    Seq((900L, 901L, "shingle")).toDF("doc_a", "doc_b", "family")
+      .write.mode("append").parquet(s"$store/edges")
+    assert(new java.io.File(s"$store/clusters_staging").mkdirs())
+    ops.UnifiedClusters.unifiedClusterStoreRetract(spark, store,
+      docs.filter(col("doc_id") === 2L), emb0,
+      img.filter(col("doc_id") === 2L), aud0)
+    assert(readBack() === Seq((1L, 2L), (900L, 2L)))
+  }
+
+  test("compacting an oversized store reads every table's schema from a " +
+    "footer: no schema-inference job starts") {
+    val (cd, bd, ce, be, ci, bi, ca, ba) = fixture()
+    val store = java.nio.file.Files
+      .createTempDirectory("uni_cluster_compact_").toString
+    ops.UnifiedClusters.unifiedClusterStoreWrite(cd, ce, ci, ca, store)
+    // the update adds a second file to every bucket it appends to, and
+    // a second file set to the edge table
+    ops.UnifiedClusters.unifiedClusterStoreUpdate(spark, store,
+      bd, be, bi, ba)
+    def parquetIn(dir: java.io.File): Int =
+      dir.list().count(_.endsWith(".parquet"))
+    def bucketFiles(table: String): Seq[Int] =
+      new java.io.File(s"$store/$table").listFiles.toSeq
+        .filter(_.isDirectory).map(parquetIn)
+    assert(bucketFiles("shingle").max > 1 &&
+      parquetIn(new java.io.File(s"$store/edges")) > 1)
+    val (_, jobs) = nonQueryJobs(
+      ops.UnifiedClusters.unifiedClusterStoreCompact(spark, store, 1))
+    // the read path's parallel file listing is not inference
+    val inference = jobs.filterNot(_._1.startsWith("Listing leaf files"))
+    assert(inference.isEmpty, inference)
+    assert(bucketFiles("shingle").max === 1)
+    assert(rows(ops.UnifiedClusters.unifiedClustersFromStore(spark, store))
+      === oneShot())
+  }
+
   // ---- O-140 (q61f): retraction --------------------------------------
 
   test("q61f: retracting a bridge doc SPLITS its component — the " +
@@ -505,8 +602,8 @@ class UnifiedClustersSpec extends SparkSpec {
     // six family index appends always, plus the label staging write
     // when any bucket is dirty — each at least one job, every one
     // submitted from a pool thread
-    assert(descs.count(_ == "uni.update.stage_and_appends") >= 6, descs)
-    assert(descs.contains("uni.update.edges_append"), descs)
+    assert(descs.count(_ == "uni.update.stage_and_writes") >= 6, descs)
+    assert(descs.contains("uni.update.edges"), descs)
   }
 
   test("bucketed writes: build, update and retract each add at most one " +
@@ -565,7 +662,7 @@ class UnifiedClustersSpec extends SparkSpec {
       .unifiedClusterStoreUpdate(spark, store, bd, be, bi, ba))
     val updated = gainsAtMostOne(built, "update")
     inSortOrder("update")
-    val wave = stages.filter(_._1 == "uni.update.stage_and_appends")
+    val wave = stages.filter(_._1 == "uni.update.stage_and_writes")
     val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
     assert(wave.nonEmpty, stages)
     assert(wave.forall(_._2 <= width), wave)
