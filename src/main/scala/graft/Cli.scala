@@ -58,8 +58,11 @@ object Cli {
     * (or counted under --noop). */
   def run(spark: SparkSession, conf: Conf): (Long, Long) = {
     val commitsRaw = spark.read.text(conf.commits)
-    val artifacts = spark.read.parquet(conf.artifacts)
-    val prDim = spark.read.parquet(conf.prDim)
+    // schema from a footer on the driver: no inference job per run
+    def input(path: String): DataFrame = ops.BucketedStore
+      .reader(spark, new org.apache.hadoop.fs.Path(path), None).parquet(path)
+    val artifacts = input(conf.artifacts)
+    val prDim = input(conf.prDim)
 
     val (builds, events) = conf.mode match {
       case "update" =>

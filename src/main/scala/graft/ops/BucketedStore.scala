@@ -42,12 +42,13 @@ object BucketedStore {
 
   /** The schema Spark recorded in one parquet footer of `dir` (its row
     * metadata), plus `partition` when the table is partitioned; None
-    * when `dir` holds no file Spark wrote. Read on the driver, so a
-    * store read starts no schema-inference job. */
+    * when `dir` is absent or holds no file Spark wrote. Read on the
+    * driver, so a store read starts no schema-inference job. */
   private def schemaOf(s: SparkSession, dir: Path,
       partition: Option[StructField]): Option[StructType] = {
     val conf = s.sparkContext.hadoopConfiguration
-    parquetFiles(fsOf(s, dir), dir).headOption
+    val fs = fsOf(s, dir)
+    (if (fs.exists(dir)) parquetFiles(fs, dir) else Nil).headOption
       .flatMap { f =>
         val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
         try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
@@ -61,7 +62,8 @@ object BucketedStore {
   }
 
   /** A reader carrying the schema of [[schemaOf]] `dir`; without one,
-    * Spark's own schema inference (and its errors). */
+    * Spark's own schema inference (and its errors, a missing path's
+    * included). */
   private[graft] def reader(s: SparkSession, dir: Path,
       partition: Option[StructField]): DataFrameReader =
     schemaOf(s, dir, partition).fold(s.read)(s.read.schema(_))

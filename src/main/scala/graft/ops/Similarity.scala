@@ -153,6 +153,80 @@ object Similarity {
       .map(r => (r.getLong(0), r.getSeq[Long](1)))
       .sortBy(_._1)
 
+  private def idot(a: Seq[Long], b: Array[Long]): Long = {
+    var acc = 0L
+    var i = 0
+    while (i < b.length) { acc += a(i) * b(i); i += 1 }
+    acc
+  }
+
+  /** The k-bounded model of a stored IVF / IVF-PQ layout, held on the
+    * driver: the coarse centroids (cell_id, ce) in ascending cell_id
+    * order and, for IVF-PQ, the PQ codebook (m, seed, cv) in ascending
+    * (m, seed) order. Every probe-side use of the model is a driver
+    * computation over these arrays with the engine's exact integer
+    * rules, so no model table is re-scanned per query. */
+  private final case class AnnModel(
+      centroids: Array[(Long, Seq[Long])],
+      codebook: Array[(Int, Long, Seq[Long])]) {
+
+    /** The `nprobe` cells of highest `dot(ce, q)`, ties to the lower
+      * cell_id; a centroid whose length differs from `q`'s has no dot
+      * and ranks after every one that has (the `qdot DESC NULLS LAST,
+      * cell_id` rule of the SQL form). */
+    def probeCells(q: Array[Long], nprobe: Int): Seq[Long] =
+      centroids.toSeq
+        .map { case (c, ce) =>
+          (c, if (ce.length == q.length) Some(idot(ce, q)) else None) }
+        .sortBy { case (c, d) => (d.isEmpty, d.fold(0L)(-_), c) }
+        .take(nprobe).map(_._1)
+
+    /** (m, code, ld): the ADC lookup table of query `q` over `m`
+      * sub-spaces — one exact dot of each codebook entry with its
+      * query sub-vector. */
+    def lutRows(q: Array[Long], m: Int): Seq[(Int, Long, Long)] = {
+      require(m >= 1 && q.length % m == 0,
+        s"query dim ${q.length} not divisible into $m sub-spaces")
+      val subDim = q.length / m
+      require(codebook.forall { case (mi, seed, cv) =>
+          mi >= 0 && mi < m && seed >= 0 && seed < 64 && cv.length == subDim
+        } && codebook.map(e => (e._1, e._2)).distinct.length == codebook.length,
+        s"store codebook is not unique (sub-space, seed < 64) entries of " +
+          s"$subDim dims over $m sub-spaces")
+      codebook.toSeq.map { case (mi, seed, cv) =>
+        (mi, seed, idot(cv, q.slice(mi * subDim, (mi + 1) * subDim)))
+      }
+    }
+  }
+
+  /** The one read of a stored layout's model: `centroids` (and, with
+    * `codebook`, the PQ codebook) in ONE job under one declared schema
+    * — each table's files read the other's columns as null — so no
+    * schema-inference job runs. Rows with a NULL `m` are centroids. A
+    * model row with a NULL key, vector or component fails the read:
+    * the writers never produce one. */
+  private def annModel(s: SparkSession, storeDir: String,
+      codebook: Boolean): AnnModel = {
+    val rows = s.read
+      .schema("cell_id BIGINT, ce ARRAY<BIGINT>, m INT, seed BIGINT, " +
+        "cv ARRAY<BIGINT>")
+      .parquet(s"$storeDir/centroids" +:
+        (if (codebook) Seq(s"$storeDir/codebook") else Nil): _*)
+      .collect()
+    def vec(r: org.apache.spark.sql.Row, i: Int): Seq[Long] = {
+      require(!r.isNullAt(i) && !r.getSeq[Any](i).contains(null),
+        s"$storeDir model row $r holds a null vector or component")
+      r.getSeq[Long](i)
+    }
+    val (book, cents) = rows.partition(r => !r.isNullAt(2))
+    require(cents.forall(!_.isNullAt(0)) && book.forall(!_.isNullAt(3)),
+      s"$storeDir model holds a row without its key")
+    AnnModel(
+      cents.map(r => (r.getLong(0), vec(r, 1))).sortBy(_._1),
+      book.map(r => (r.getInt(2), r.getLong(3), vec(r, 4)))
+        .sortBy(e => (e._1, e._2)))
+  }
+
   /** The round-8 formulation of the same rule — k centroid vectors as k
     * LITERAL arrays, one dot each, argmax = array_position-of-max on
     * the cell_id-sorted dot array. Kept (test-only) as the independent
@@ -278,10 +352,10 @@ object Similarity {
     * completing the incremental-ingest triple (exact hash, near-dup
     * band, ANN cell). */
   def ivfAppend(s: SparkSession, storeDir: String, emb: DataFrame): Unit = {
-    val centroids = s.read.parquet(s"$storeDir/centroids")
     val quantized = emb.select(col("vec_id"), col("label"),
       quantize(col("embedding")).as("qe"))
-    coarseAssign(quantized, centroids)
+    coarseAssignCollected(quantized,
+      annModel(s, storeDir, codebook = false).centroids)
       .select(col("vec_id"), col("label"), col("qe"), col("cell_id"))
       .write.mode("append").partitionBy("cell_id")
       .parquet(s"$storeDir/vectors")
@@ -303,6 +377,17 @@ object Similarity {
   // could not reach short of the q91 full retrain-rebuild. The store
   // is cell-partitioned, so q61f's touched-bucket pattern maps
   // directly: only the deleted vectors' cells are rewritten.
+  /** The vectors tables of the two stored layouts, declared: a
+    * retraction can empty every cell, and a partitioned table with zero
+    * rows keeps no schema-bearing file (the cfa41fc lesson) — a read
+    * must see empty, not throw. The degenerate empty-corpus IVF-PQ
+    * store writes this exact schema unpartitioned, so both of its
+    * layouts read uniformly. */
+  private val IvfVectorsSchema =
+    "vec_id BIGINT, label INT, qe ARRAY<BIGINT>, cell_id INT"
+  private val PqVectorsSchema =
+    "vec_id BIGINT, label INT, codes ARRAY<BIGINT>, cell_id INT"
+
   /** Retract vectors from a stored IVF layout. `delEmb` carries the
     * deleted vectors' (vec_id, embedding) rows — their cells are
     * recomputed ROW-LOCALLY against the store's own centroids (sound
@@ -330,8 +415,7 @@ object Similarity {
     * (q74c's oracle replays exactly that). */
   def ivfRetract(s: SparkSession, storeDir: String,
       delEmb: DataFrame): Unit =
-    annCellRetract(s, storeDir, delEmb,
-      "vec_id BIGINT, label INT, qe ARRAY<BIGINT>, cell_id INT",
+    annCellRetract(s, storeDir, delEmb, IvfVectorsSchema,
       Seq("vec_id", "label", "qe"))
 
   /** [[ivfRetract]] for the IVF-PQ code store — same touched-cell
@@ -339,8 +423,7 @@ object Similarity {
     * whole delete: raw vectors never lived in this store). */
   def ivfPqRetract(s: SparkSession, storeDir: String,
       delEmb: DataFrame): Unit =
-    annCellRetract(s, storeDir, delEmb,
-      "vec_id BIGINT, label INT, codes ARRAY<BIGINT>, cell_id INT",
+    annCellRetract(s, storeDir, delEmb, PqVectorsSchema,
       Seq("vec_id", "label", "codes"))
 
   /** Shared cell-store retraction: recompute the deleted vectors'
@@ -352,14 +435,13 @@ object Similarity {
     * schema-bearing files. */
   private def annCellRetract(s: SparkSession, storeDir: String,
       delEmb: DataFrame, schema: String, projCols: Seq[String]): Unit = {
-    val centroids = s.read.parquet(s"$storeDir/centroids")
     // touched cells observed during the materialization job (round 17,
     // materializeWithKeys) — one job instead of two
     val (delAssigned, cells) = Dedup.materializeWithKeys(
-      coarseAssign(
+      coarseAssignCollected(
         delEmb.filter(col("vec_id").isNotNull)
           .select(col("vec_id"), quantize(col("embedding")).as("qe")),
-        centroids)
+        annModel(s, storeDir, codebook = false).centroids)
         .select(col("vec_id"), col("cell_id").cast("int").as("cell_id")),
       "cell_id")
     BucketedStore.retractBucketRewrite(s, s"$storeDir/vectors",
@@ -410,25 +492,18 @@ object Similarity {
       excludeVecId = Some(0L))
   }
 
-  /** Probe the stored IVF layout: rank centroids against the query
-    * vector (16-row scan), then read only the nprobe best cells' parquet
-    * partitions and re-rank exactly inside them. */
+  /** Probe the stored IVF layout: rank the centroids against the query
+    * vector on the driver ([[annModel]], one model-read job), then read
+    * only the nprobe best cells' parquet partitions and re-rank exactly
+    * inside them. */
   def ivfProbe(s: SparkSession, storeDir: String,
       queryVec: Array[Long], nprobe: Int = 4, k: Int = 10,
       excludeVecId: Option[Long] = None): DataFrame = {
     val qv = array(queryVec.map(lit(_)).toIndexedSeq: _*)
-    val cells = s.read.parquet(s"$storeDir/centroids")
-      .select(col("cell_id"), LongArrayDot(col("ce"), qv).as("qdot"))
-      .orderBy(col("qdot").desc, col("cell_id"))
-      .limit(nprobe)
-      .collect().map(_.getLong(0)) // nprobe cell ids: tiny, driver-side
-    // SCHEMA'D read: a retraction (ivfRetract) can empty every cell,
-    // and a partitioned table with zero rows has no schema-bearing
-    // files — the probe must see empty, not throw
-    val hits = s.read
-      .schema("vec_id BIGINT, label INT, qe ARRAY<BIGINT>, cell_id INT")
-      .parquet(s"$storeDir/vectors")
-      .filter(col("cell_id").isin(cells.toIndexedSeq: _*)) // partition prune
+    val cells = annModel(s, storeDir, codebook = false)
+      .probeCells(queryVec, nprobe)
+    val hits = s.read.schema(IvfVectorsSchema).parquet(s"$storeDir/vectors")
+      .filter(col("cell_id").isin(cells: _*)) // partition prune
     excludeVecId.foldLeft(hits)((df, id) => df.filter(col("vec_id") =!= id))
       .select(col("vec_id"), col("label"), col("cell_id"),
         LongArrayDot(col("qe"), qv).as("dot_e12"))
@@ -739,6 +814,11 @@ object Similarity {
   // inside each cell, and a probe scans CODES, never raw vectors,
   // against a per-query lookup table (asymmetric distance computation:
   // the query stays full-precision, the corpus is 8 bytes/vector).
+  // Both model tables are k-bounded, so every consumer reads them in
+  // ONE job ([[annModel]]) and derives the rest on the driver: the
+  // probe's cell rank and lookup table, the append's frozen encode.
+  // A probe is then one pruned code scan scored row-locally
+  // ([[graft.functions.AdcEstimate]]) into a top-k.
   /** Write-time layout: vectors partitioned by coarse cell, each row
     * carrying ONLY (vec_id, label, codes) — the raw embedding is not
     * stored in the cells; plus the two tiny model tables (codebook,
@@ -838,24 +918,21 @@ object Similarity {
   def ivfPqAppend(s: SparkSession, storeDir: String, emb: DataFrame,
       m: Int = 8, dim: Int = 64): Unit = {
     val subDim = dim / m
-    val centroids = s.read.parquet(s"$storeDir/centroids")
+    val model = annModel(s, storeDir, codebook = true)
     val quantized = emb.filter(col("vec_id").isNotNull)
       .select(col("vec_id"), col("label"),
         quantize(col("embedding")).as("qe"))
-    // the store's FROZEN codebook is k x m rows — collect it once and
-    // encode the batch row-locally (the writer's plan shape: one batch
-    // scan, two codegen expressions, the partitioned append)
-    val cbRows = s.read.parquet(s"$storeDir/codebook")
-      .select(col("m"), col("seed"), col("cv")).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Long](2)))
-      .sortBy(t => (t._1, t._2))
+    // the store's FROZEN codebook is k x m rows, read with the centroids
+    // in one job: encode the batch row-locally (the writer's plan shape:
+    // one batch scan, two codegen expressions, the partitioned append)
+    val cbRows = model.codebook
     if (cbRows.isEmpty) return // empty model: nothing can encode
     val seedIds = cbRows.filter(_._1 == 0).map(_._2).toIndexedSeq
     require(cbRows.length == m * seedIds.length &&
       cbRows.forall(_._3.length == subDim),
       s"store codebook is not $m sub-spaces x ${seedIds.length} " +
         s"seeds of $subDim dims")
-    coarseAssign(quantized, centroids)
+    coarseAssignCollected(quantized, model.centroids)
       .withColumn("codes", graft.functions.PqEncodeCodes(col("qe"),
         seedIds, cbRows.flatMap(_._3).toIndexedSeq, m, subDim))
       .select(col("vec_id"), col("label"), col("codes"), col("cell_id"))
@@ -872,45 +949,41 @@ object Similarity {
       Seq(col("vec_id"), col("label"), col("codes")),
       Seq("vec_id"), maxFilesPerCell)
 
-  /** ADC probe: rank centroids (tiny scan + driver point-read of nprobe
-    * ids, same documented shape as ivfProbe), build the k*m-entry
+  /** ADC probe in two engine jobs: ONE model read ([[annModel]]), a
+    * driver-side rank of the nprobe cells and build of the m x k
     * lookup table of dot(query-sub, codebook-entry) — once per QUERY,
-    * independent of corpus size — then scan only the probed cells'
-    * parquet partitions: posexplode codes, broadcast-join the table,
-    * partial-agg'd per-vector sum. The corpus-sized side touches
-    * nprobe/k of the table and never a raw vector. */
+    * independent of corpus size — then one scan of only the probed
+    * cells' parquet partitions, where each code row's estimate is the
+    * row-local [[graft.functions.AdcEstimate]] kernel and the top k is
+    * a TakeOrderedAndProject: no explode, no join, no exchange. The
+    * corpus-sized side touches nprobe/k of the table and never a raw
+    * vector. The estimate is exactly the sum of the row's matching
+    * lookup-table terms (the inner-join semantics of the compositional
+    * form that IvfStoreSpec keeps as its reference): a row with no
+    * matching term is not a candidate. A vec_id stored twice (a
+    * replayed append before compaction) is two candidate rows, each
+    * with its own estimate. */
   def ivfPqProbe(s: SparkSession, storeDir: String, queryVec: Array[Long],
       nprobe: Int = 4, k: Int = 10, m: Int = 8,
-      excludeVecId: Option[Long] = None): DataFrame = {
-    require(m >= 1 && queryVec.length % m == 0,
-      s"query dim ${queryVec.length} not divisible into $m sub-spaces")
-    val subDim = queryVec.length / m
-    val qv = array(queryVec.map(lit(_)).toIndexedSeq: _*)
-    val cells = s.read.parquet(s"$storeDir/centroids")
-      .select(col("cell_id"), LongArrayDot(col("ce"), qv).as("qdot"))
-      .orderBy(col("qdot").desc, col("cell_id"))
-      .limit(nprobe)
-      .collect().map(_.getLong(0)) // nprobe ids: tiny, driver-side
-    val qsubs = array((0 until m).map(i => array(queryVec
-      .slice(i * subDim, (i + 1) * subDim).map(lit(_)).toIndexedSeq: _*)): _*)
-    val lut = s.read.parquet(s"$storeDir/codebook")
-      .select(col("m"), col("seed").as("code"),
-        LongArrayDot(col("cv"), element_at(qsubs, col("m") + 1)).as("ld"))
-    // SCHEMA'D read: an ivfPqRetract can empty every cell (see
-    // ivfProbe) — note the degenerate empty-corpus store writes this
-    // exact schema unpartitioned, so both layouts read uniformly
-    val hits = s.read
-      .schema("vec_id BIGINT, label INT, codes ARRAY<BIGINT>, cell_id INT")
-      .parquet(s"$storeDir/vectors")
-      .filter(col("cell_id").isin(cells.toIndexedSeq: _*)) // partition prune
-    excludeVecId.foldLeft(hits)((df, id) => df.filter(col("vec_id") =!= id))
-      .select(col("vec_id"), col("label"), col("cell_id"),
-        posexplode(col("codes")).as(Seq("m", "code")))
-      .join(broadcast(lut), Seq("m", "code"))
-      .groupBy(col("vec_id"), col("label"), col("cell_id"))
-      .agg(sum(col("ld")).as("est_dot_e12"))
+      excludeVecId: Option[Long] = None): DataFrame =
+    adcScored(s, storeDir, queryVec, nprobe, m, excludeVecId)
       .orderBy(col("est_dot_e12").desc, col("vec_id"))
       .limit(k)
+
+  /** Every candidate row of the probed cells with its ADC estimate
+    * (vec_id, label, cell_id, est_dot_e12): [[ivfPqProbe]] before its
+    * top-k. */
+  private def adcScored(s: SparkSession, storeDir: String,
+      queryVec: Array[Long], nprobe: Int, m: Int,
+      excludeVecId: Option[Long]): DataFrame = {
+    val model = annModel(s, storeDir, codebook = true)
+    val hits = s.read.schema(PqVectorsSchema).parquet(s"$storeDir/vectors")
+      .filter(col("cell_id").isin(model.probeCells(queryVec, nprobe): _*))
+    excludeVecId.foldLeft(hits)((df, id) => df.filter(col("vec_id") =!= id))
+      .select(col("vec_id"), col("label"), col("cell_id"),
+        graft.functions.AdcEstimate(col("codes"),
+          model.lutRows(queryVec, m), m).as("est_dot_e12"))
+      .filter(col("est_dot_e12").isNotNull)
   }
 
   /** Declared write-then-probe binding (the q67/q68 pattern): lay the
@@ -965,26 +1038,32 @@ object Similarity {
     *
     * Scale shape: the candidate set is c rows by construction (the ADC
     * probe's LIMIT), so it BROADCASTS against the raw-vector table —
-    * the corpus side is one scan + broadcast hash join + the codegen
-    * dot, no shuffle (at a production layout the raw vectors live
-    * cell-partitioned beside the code store, so the fetch is further
-    * partition-pruned to the probed cells; the fixture reads the
-    * embeddings table). The re-rank sort is c rows — driver-scale.
+    * the corpus side is one scan + broadcast hash join, no shuffle, and
+    * only the c joined rows are quantized and dotted (at a production
+    * layout the raw vectors live cell-partitioned beside the code
+    * store, so the fetch is further partition-pruned to the probed
+    * cells; the fixture reads the embeddings table). The re-rank sort
+    * is c rows — driver-scale.
     * Every arithmetic step is exact integer, so the oracle replays
     * both the ADC candidate cut and the exact re-rank bit-for-bit. */
   def ivfPqProbeRerank(s: SparkSession, storeDir: String, emb: DataFrame,
       queryVec: Array[Long], nprobe: Int = 4, nCandidates: Int = 40,
       k: Int = 10, m: Int = 8,
       excludeVecId: Option[Long] = None): DataFrame = {
-    val cand = ivfPqProbe(s, storeDir, queryVec, nprobe, nCandidates, m,
-      excludeVecId).select(col("vec_id"), col("est_dot_e12"))
+    // the cut is taken in ONE task: it feeds a broadcast, and a top-k
+    // over a multi-task scan there adds a shuffle stage to merge the
+    // tasks' cuts (a collect merges them on the driver instead)
+    val cand = adcScored(s, storeDir, queryVec, nprobe, m, excludeVecId)
+      .coalesce(1)
+      .orderBy(col("est_dot_e12").desc, col("vec_id"))
+      .limit(nCandidates)
+      .select(col("vec_id"), col("est_dot_e12"))
     val qv = array(queryVec.map(lit(_)).toIndexedSeq: _*)
-    emb.filter(col("vec_id").isNotNull)
-      .select(col("vec_id"), col("label"),
-        quantize(col("embedding")).as("qe"))
+    // join first, then quantize: only the c candidates' vectors pay it
+    emb.select(col("vec_id"), col("label"), col("embedding"))
       .join(broadcast(cand), Seq("vec_id"))
       .select(col("vec_id"), col("label"), col("est_dot_e12"),
-        LongArrayDot(col("qe"), qv).as("dot_e12"))
+        LongArrayDot(quantize(col("embedding")), qv).as("dot_e12"))
       .orderBy(col("dot_e12").desc, col("vec_id"))
       .limit(k)
   }
@@ -1305,11 +1384,12 @@ object Similarity {
   }
 
   /** ADC top-k for every panel probe against ONE stored layout: the
-    * per-probe nprobe cell ranking is a driver computation over the
-    * collected centroid table (k x P integer dots — the documented
-    * bounded point-read, same math as ivfPqProbe's rank), then the
-    * whole panel shares ONE partition-pruned read of the UNION of
-    * probed cells, one broadcast panel LUT keyed (probe_id, m, code),
+    * per-probe nprobe cell ranking and the panel LUT are driver
+    * computations over the one model read ([[annModel]]: k x P
+    * integer dots — the documented bounded point-read, same math as
+    * ivfPqProbe's), then the whole panel shares ONE partition-pruned
+    * read of the UNION of probed cells, one broadcast panel LUT keyed
+    * (probe_id, m, code),
     * and a window top-k per probe confined to that probe's own cells
     * via the broadcast (probe_id, cell_id) table. Cost: one pruned
     * code scan for the panel, vs P full probes. */
@@ -1337,33 +1417,18 @@ object Similarity {
       .select(col("vec_id"), quantize(col("embedding")).as("qe"))
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
       .sortBy(_._1).toSeq
-    val cents = s.read.parquet(s"$store/centroids")
-      .select(col("cell_id"), col("ce")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray)).toSeq
-    def idot(a: Array[Long], b: Array[Long]): Long = {
-      var acc = 0L; var i = 0
-      while (i < a.length) { acc += a(i) * b(i); i += 1 }
-      acc
-    }
+    val model = annModel(s, store, codebook = true)
     // ivfPqProbe's rank rule per probe: (qdot DESC, cell_id)
     val probeCells = pvs.flatMap { case (pid, qv) =>
-      cents.map { case (cid, ce) => (cid, idot(ce, qv)) }
-        .sortBy { case (cid, qd) => (-qd, cid) }
-        .take(maxNprobe).zipWithIndex
-        .map { case ((cid, _), r) => (pid, cid, r + 1) }
+      model.probeCells(qv, maxNprobe).zipWithIndex
+        .map { case (cid, r) => (pid, cid, r + 1) }
     }
     val cellSet = probeCells.map(_._2).distinct
-    val subDim = pvs.head._2.length / m
-    val qsubs = pvs.flatMap { case (pid, qv) =>
-      (0 until m).map(j =>
-        (pid, j, qv.slice(j * subDim, (j + 1) * subDim).toSeq))
-    }.toDF("probe_id", "m", "qs")
-    val lut = s.read.parquet(s"$store/codebook")
-      .join(qsubs, Seq("m"))
-      .select(col("probe_id"), col("m"), col("seed").as("code"),
-        LongArrayDot(col("cv"), col("qs")).as("ld"))
+    val lut = pvs.flatMap { case (pid, qv) =>
+      model.lutRows(qv, m).map { case (mi, code, ld) => (pid, mi, code, ld) }
+    }.toDF("probe_id", "m", "code", "ld")
     val pcDf = probeCells.toDF("probe_id", "cell_id", "cell_rank")
-    s.read.parquet(s"$store/vectors")
+    s.read.schema(PqVectorsSchema).parquet(s"$store/vectors")
       .filter(col("cell_id").isin(cellSet: _*)) // partition prune
       .join(broadcast(pcDf), Seq("cell_id"))
       .filter(col("vec_id") =!= col("probe_id"))
@@ -1380,8 +1445,9 @@ object Similarity {
     * CANDIDATE table ((probe_id, vec_id) rows — P x c by construction)
     * re-ranked by exact dot over the candidates' full vectors. The
     * candidates broadcast against the raw-vector scan (the q99 shape,
-    * shared across the panel); the re-rank window runs over P x c
-    * rows — driver-scale. */
+    * shared across the panel), and only the joined P x c rows are
+    * quantized; the re-rank window runs over P x c rows —
+    * driver-scale. */
   private def panelAdcRerank(emb: DataFrame, panel: Seq[Long],
       cand: DataFrame, k: Int): DataFrame = {
     val probes = broadcast(emb.filter(col("vec_id").isin(panel: _*))
@@ -1389,12 +1455,12 @@ object Similarity {
         quantize(col("embedding")).as("qv")))
     val w = Window.partitionBy(col("probe_id"))
       .orderBy(col("dot_e12").desc, col("vec_id"))
-    emb.select(col("vec_id"), quantize(col("embedding")).as("qe"))
+    emb.select(col("vec_id"), col("embedding"))
       .join(broadcast(cand.select(col("probe_id"), col("vec_id"))),
         Seq("vec_id"))
       .join(probes, Seq("probe_id"))
       .select(col("probe_id"), col("vec_id"),
-        LongArrayDot(col("qe"), col("qv")).as("dot_e12"))
+        LongArrayDot(quantize(col("embedding")), col("qv")).as("dot_e12"))
       .withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
       .select(col("probe_id"), col("vec_id"))
   }

@@ -59,6 +59,19 @@ class CliServerSpec extends SparkSpec {
     assert(spark.read.parquet(s"$store/pr_events").count() === 3)
   }
 
+  test("cli fetch and update read their parquet inputs' schemas from " +
+    "footers: no inference job") {
+    val (commits, artifacts, prdim, store) = fixtures()
+    val conf = Cli.Conf("fetch", commits, artifacts, prdim, store,
+      history = None, noop = false)
+    val (_, jobs) = nonQueryJobs {
+      Cli.run(spark, conf)
+      Cli.run(spark, conf.copy(mode = "update"))
+    }
+    val inference = jobs.filter(_._2.startsWith("parquet at Cli.scala"))
+    assert(inference.isEmpty, jobs)
+  }
+
   test("GET /update runs an incremental refresh over HTTP") {
     val (commits, artifacts, prdim, store) = fixtures()
     val conf = Cli.Conf("fetch", commits, artifacts, prdim, store,

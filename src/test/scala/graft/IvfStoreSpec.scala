@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.{Similarity, Tables}
+import graft.functions.LongArrayDot
 import graft.functions.VectorFunctions.quantize
 import org.apache.spark.sql.functions._
 
@@ -77,9 +78,10 @@ class IvfStoreSpec extends SparkSpec {
     assert(plan.contains("PartitionFilters") &&
       "PartitionFilters: \\[[^\\]]*cell_id".r.findFirstIn(plan).isDefined,
       s"cell_id not pushed as a partition filter:\n$plan")
-    // the ADC lookup table joins as a broadcast (the corpus side never
-    // shuffles before its per-vector partial-agg sum)
-    assert(plan.contains("BroadcastHashJoin"), plan)
+    // the ADC estimate is row-local: the code scan feeds the top-k with
+    // no exploded rows, no lookup-table join and no shuffle
+    Seq("Exchange", "Generate", "Join").foreach(op =>
+      assert(!plan.contains(op), s"$op in the ADC plan:\n$plan"))
   }
 
   test("ivfAppend equals full rebuild; ivfCompact bounds cell files") {
@@ -249,5 +251,143 @@ class IvfStoreSpec extends SparkSpec {
     assert(after === before.filterNot(p => delIds(p._1)).map(_._2).toSeq)
     assert(rows("centroids", Seq("cell_id")) === centBefore)
     assert(rows("codebook", Seq("m", "seed")) === cbBefore)
+  }
+
+  private val PqVectors =
+    "vec_id BIGINT, label INT, codes ARRAY<BIGINT>, cell_id INT"
+
+  /** The compositional ADC probe — the SQL centroid rank, `posexplode`
+    * of every code row, an inner join against a broadcast (m, code, ld)
+    * lookup table and a per-vector `sum` — kept as the independent
+    * reference for the row-local kernel. It scores every stored row for
+    * every query in one pass; `answer` then cuts one probe from it:
+    * the nprobe best cells, the excluded id, (estimate DESC, vec_id),
+    * the top k. */
+  private final class CompositionalAdc(store: String,
+      queries: Seq[(Long, Array[Long])], m: Int = 8) {
+    import spark.implicits._
+    private val qdf = broadcast(queries.map { case (id, q) => (id, q.toSeq) }
+      .toDF("qid", "qv"))
+    private val subDim = queries.head._2.length / m
+    // per query, every cell in the order a probe ranks them
+    private val cellOrder: Map[Long, Seq[Long]] = spark.read
+      .schema("cell_id BIGINT, ce ARRAY<BIGINT>").parquet(s"$store/centroids")
+      .crossJoin(qdf)
+      .select(col("qid"), col("cell_id"),
+        LongArrayDot(col("ce"), col("qv")).as("qdot"))
+      .orderBy(col("qid"), col("qdot").desc, col("cell_id"))
+      .collect().toSeq.groupBy(_.getLong(0))
+      .map { case (q, rs) => q -> rs.map(_.getLong(1)) }
+    private val lut = spark.read
+      .schema("m INT, seed BIGINT, cv ARRAY<BIGINT>").parquet(s"$store/codebook")
+      .crossJoin(qdf)
+      .select(col("qid"), col("m"), col("seed").as("code"),
+        LongArrayDot(col("cv"),
+          slice(col("qv"), col("m") * subDim + 1, lit(subDim))).as("ld"))
+    private val scored: Map[Long, Seq[(Long, Int, Int, Long)]] = spark.read
+      .schema(PqVectors).parquet(s"$store/vectors")
+      .select(col("vec_id"), col("label"), col("cell_id"),
+        posexplode(col("codes")).as(Seq("m", "code")))
+      .join(broadcast(lut), Seq("m", "code"))
+      .groupBy(col("qid"), col("vec_id"), col("label"), col("cell_id"))
+      .agg(sum(col("ld")).as("est"))
+      .collect().toSeq
+      .groupBy(_.getLong(0))
+      .map { case (q, rs) => q -> rs.map(r =>
+        (r.getLong(1), r.getInt(2), r.getInt(3), r.getLong(4))) }
+
+    def answer(qid: Long, nprobe: Int, k: Int,
+        exclude: Option[Long]): Seq[(Long, Int, Int, Long)] = {
+      val cells = cellOrder.getOrElse(qid, Nil).take(nprobe).toSet
+      scored.getOrElse(qid, Nil)
+        .filter(r => cells(r._3.toLong) && !exclude.contains(r._1))
+        .sortBy(r => (-r._4, r._1)).take(k)
+    }
+  }
+
+  /** `ivfPqProbe` against [[CompositionalAdc]] for every query x nprobe
+    * {1, 4, 16} x k {10, 40, more than the store holds} x
+    * excludeVecId {its own id, none}; returns the number of probes
+    * that found candidates. The probes run four at a time. */
+  private def assertAdcParity(store: String,
+      queries: Seq[(Long, Array[Long])], stored: Long): Int = {
+    val ref = new CompositionalAdc(store, queries)
+    val grid = for {
+      (qid, q) <- queries; nprobe <- Seq(1, 4, 16)
+      k <- Seq(10, 40, stored.toInt + 1); ex <- Seq(Some(qid), None)
+    } yield (qid, q, nprobe, k, ex)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    val got = try grid.map { case (_, q, nprobe, k, ex) =>
+        pool.submit(new java.util.concurrent.Callable[Seq[(Long, Int, Int, Long)]] {
+          def call() = Similarity.ivfPqProbe(spark, store, q, nprobe, k,
+            excludeVecId = ex).collect().toSeq
+            .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getLong(3)))
+        })
+      }.map(_.get())
+      finally pool.shutdown()
+    grid.zip(got).foreach { case ((qid, _, nprobe, k, ex), rows) =>
+      assert(rows === ref.answer(qid, nprobe, k, ex),
+        s"query $qid nprobe $nprobe k $k exclude $ex")
+    }
+    got.count(_.nonEmpty)
+  }
+
+  test("ivfPqProbe equals the compositional ADC after an append, after " +
+    "a retraction that empties a cell, and on an empty store") {
+    val emb = Tables.embeddings(spark, sf)
+    val batch = col("vec_id") >= 16 && col("vec_id") % 5 === 0
+    val store = java.nio.file.Files
+      .createTempDirectory("ivfpq_parity_").toString
+    Similarity.ivfPqWriteDf(emb.filter(!batch), store)
+    Similarity.ivfPqAppend(spark, store, emb.filter(batch))
+    val vecs = emb.select(col("vec_id"), quantize(col("embedding")))
+      .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
+      .sortBy(_._1)
+    val queries = (0 until 20).map(i => vecs(i * vecs.length / 20))
+    val n = vecs.length.toLong
+    assert(assertAdcParity(store, queries, n) > 0)
+
+    // empty the cell of the first query's best cell: its nprobe-1 probe
+    // now finds nothing, and no probe returns a retracted row
+    val cellOf = spark.read.schema(PqVectors).parquet(s"$store/vectors")
+      .select(col("vec_id"), col("cell_id")).collect()
+      .map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val victim = cellOf(queries.head._1)
+    val victimIds = cellOf.collect { case (id, c) if c == victim => id }
+    Similarity.ivfPqRetract(spark, store,
+      emb.filter(col("vec_id").isin(victimIds.toSeq: _*)))
+    assert(!new java.io.File(s"$store/vectors/cell_id=$victim").exists)
+    assert(Similarity.ivfPqProbe(spark, store, queries.head._2, nprobe = 1)
+      .collect().isEmpty)
+    assert(assertAdcParity(store, queries, n) > 0)
+
+    val empty = java.nio.file.Files
+      .createTempDirectory("ivfpq_parity_empty_").toString
+    Similarity.ivfPqWriteDf(emb.filter(lit(false)), empty)
+    assert(assertAdcParity(empty, queries, n) === 0)
+  }
+
+  test("IVF-PQ probe runs no inference job, two jobs in all, and plans " +
+    "its ADC as pruned scan, filter and top-k") {
+    val store = java.nio.file.Files.createTempDirectory("ivfpq_jobs_").toString
+    Similarity.ivfPqWrite(spark, sf, store)
+    val qv = Tables.embeddings(spark, sf).filter(col("vec_id") === 0)
+      .select(quantize(col("embedding")).as("qe"))
+      .collect().head.getSeq[Long](0).toArray
+    def probe = Similarity.ivfPqProbe(spark, store, qv,
+      excludeVecId = Some(0L))
+    // the model tables read under a declared schema: no inference job
+    val (rows, outside) = nonQueryJobs(probe.collect())
+    assert(rows.length === 10)
+    assert(outside.isEmpty, outside)
+    // one job reads both model tables, one scans the probed cells
+    val (_, jobs) = jobDescriptions(probe.collect())
+    assert(jobs.length === 2, jobs)
+    val plan = probe.queryExecution.explainString(
+      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    assert(plan.contains("PartitionFilters: [cell_id"), plan)
+    assert(plan.contains("TakeOrderedAndProject"), plan)
+    Seq("Exchange", "Generate", "Join").foreach(op =>
+      assert(!plan.contains(op), s"$op in the ADC plan:\n$plan"))
   }
 }
