@@ -639,8 +639,8 @@ object Multimodal {
       // bucket, and a partitioned table with zero rows keeps no
       // schema-bearing files — post-retraction admission must treat
       // the index as empty, not throw (the cfa41fc lesson)
-      else s.read.schema(sigStoreSchema(sigCol)).parquet(store)
-        .filter(col("kb").isin(keys.toIndexedSeq: _*)).as("x")
+      else graft.ops.BucketedStore.table(s, store, sigStoreSchema(sigCol),
+          "kb", Some(keys)).as("x")
         .join(batchBands.as("y").hint("shuffle_hash"),
           col("x.band") === col("y.band") &&
             col("x.ckey") === col("y.ckey"))
@@ -664,7 +664,7 @@ object Multimodal {
       .orderBy(col("doc_id"))
   }
 
-  private def sigStoreSchema(sigCol: String): String =
+  private[graft] def sigStoreSchema(sigCol: String): String =
     s"doc_id BIGINT, $sigCol BIGINT, band INT, ckey BIGINT, kb INT"
 
   // O-144 (VERDICT r16 #2): RETRACTION for the standalone perceptual
@@ -698,7 +698,7 @@ object Multimodal {
           pmod(xxhash64(col("band"), col("ckey")), lit(64)).cast("int")),
       "kb")
     graft.ops.BucketedStore.retractBucketRewrite(s, store,
-      s.read.schema(sigStoreSchema(sigCol)).parquet(store), "kb", keys,
+      sigStoreSchema(sigCol), "kb", keys,
       delBands.select(col("doc_id")).distinct(), "doc_id",
       Seq("doc_id", sigCol, "band", "ckey"), Seq("band", "ckey"))
   }

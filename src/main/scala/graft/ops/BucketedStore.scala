@@ -1,9 +1,15 @@
 package graft.ops
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import scala.collection.mutable
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, DataFrameReader, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+  PartitionPath, PartitionSpec, PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, IntegerType, StructField,
   StructType}
@@ -18,8 +24,11 @@ import graft.util.Span
   * All store I/O goes through the Hadoop FileSystem API resolved from
   * the store path's own scheme: the stores live on HDFS/S3 at the
   * claimed scale, where a local-filesystem listing would silently see
-  * nothing. Listings are bounded: one `listStatus` of at most 64
-  * bucket dirs, plus one per bucket a pass touches. */
+  * nothing. Listings are bounded and run on the driver, for writes
+  * and reads alike: one `listStatus` of the table dir (at most 64
+  * bucket dirs), plus one per bucket a pass touches. A read
+  * ([[table]]) lists every bucket dir it reads — a pruned read only
+  * its keys' dirs — and starts no Spark listing job. */
 object BucketedStore {
 
   private def fsOf(s: SparkSession, p: Path): FileSystem =
@@ -67,6 +76,85 @@ object BucketedStore {
   private[graft] def reader(s: SparkSession, dir: Path,
       partition: Option[StructField]): DataFrameReader =
     schemaOf(s, dir, partition).fold(s.read)(s.read.schema(_))
+
+  /** The one reader of a hash-bucketed table: `schema` (DDL, its last
+    * column the INT `bucketCol`) over the `bucketCol=N` dirs under
+    * `path`, LISTED ON THE DRIVER — one `listStatus` of `path` plus one
+    * per bucket dir. With `keys`, only those keys' dirs are listed
+    * (no listing of `path`) and the frame is filtered to them, so the
+    * scan keeps its partition filter; empty `keys` read nothing.
+    *
+    * Why not `s.read.schema(..).parquet(..)`: Spark lists a table of
+    * more than `spark.sql.sources.parallelPartitionDiscovery.threshold`
+    * (32) dirs with a parallel listing job, one task per bucket dir —
+    * a scheduler round per read for a few KB of files, and that
+    * threshold is a session-wide setting. Rows are the same: only
+    * files whose names start with neither `_` nor `.` are read (so
+    * `_SUCCESS`, `.crc` files and `_temporary` are skipped), an
+    * all-emptied table reads as empty, and an absent `path` fails as
+    * Spark's reader does. Snapshot semantics are Spark's too: the frame
+    * keeps the listing it was created with; a frame created after a
+    * write sees the write. A `refresh()` of the index (a
+    * `refreshByPath` over a cached plan) lists again, on the driver. */
+  private[graft] def table(s: SparkSession, path: String, schema: String,
+      bucketCol: String, keys: Option[Seq[Int]] = None): DataFrame = {
+    val root = new Path(path)
+    val fs = fsOf(s, root)
+    if (!fs.exists(root)) return s.read.schema(schema).parquet(path)
+    val full = StructType.fromDDL(schema)
+    require(full.last.name == bucketCol &&
+      full.last.dataType == IntegerType,
+      s"bucketed table $path: the last column of '$schema' must be the " +
+        s"INT bucket column $bucketCol")
+    val index = new BucketIndex(s, fs.makeQualified(root), bucketCol, keys)
+    val df = s.baseRelationToDataFrame(HadoopFsRelation(index,
+      StructType(Seq(full.last)), StructType(full.init), None,
+      new ParquetFileFormat, Map.empty)(s))
+    keys.fold(df)(ks =>
+      if (ks.isEmpty) df.limit(0) else df.filter(col(bucketCol).isin(ks: _*)))
+  }
+
+  /** [[table]]'s file index: the bucket dirs of `root` (or only the
+    * `keys` dirs) and their data files, listed on the driver when built
+    * and on every `refresh()`. */
+  private final class BucketIndex(s: SparkSession, root: Path,
+      bucketCol: String, keys: Option[Seq[Int]])
+      extends PartitioningAwareFileIndex(s, Map.empty, None) {
+    @volatile private var listed = list()
+
+    private def list(): (PartitionSpec, Map[Path, Array[FileStatus]],
+        mutable.LinkedHashMap[Path, FileStatus]) = {
+      val fs = root.getFileSystem(hadoopConf)
+      val dirs = keys.fold(bucketDirs(fs, root, bucketCol))(
+        _.distinct.map(k => (k, new Path(root, s"$bucketCol=$k"))))
+      val files = dirs.flatMap { case (k, dir) =>
+        val data =
+          try fs.listStatus(dir)
+            .filter(f => f.isFile && isData(f.getPath.getName))
+          catch {
+            case _: java.io.FileNotFoundException => Array.empty[FileStatus]
+          }
+        Option.when(data.nonEmpty)((k, dir, data))
+      }
+      (PartitionSpec(StructType(Seq(StructField(bucketCol, IntegerType))),
+        files.map { case (k, dir, _) => PartitionPath(InternalRow(k), dir) }),
+        files.map { case (_, dir, data) => dir -> data }.toMap,
+        mutable.LinkedHashMap.from(
+          files.flatMap(_._3).map(f => f.getPath -> f)))
+    }
+
+    private def isData(name: String): Boolean =
+      !name.startsWith("_") && !name.startsWith(".") &&
+        !name.endsWith("._COPYING_")
+
+    override def rootPaths: Seq[Path] = Seq(root)
+    override def partitionSpec(): PartitionSpec = listed._1
+    override protected def leafDirToChildrenFiles
+        : Map[Path, Array[FileStatus]] = listed._2
+    override protected def leafFiles
+        : mutable.LinkedHashMap[Path, FileStatus] = listed._3
+    override def refresh(): Unit = listed = list()
+  }
 
   /** The one write of every bucketed store: `rows` land under `path`
     * partitioned by `bucketCol`, each bucket file sorted by
@@ -117,16 +205,16 @@ object BucketedStore {
       .sortBy(_._1)
     if (over.isEmpty) return Seq.empty
     val tmp = store + "_compacting"
-    val pruned = reader(s, over.head._2,
+    val schema = schemaOf(s, over.head._2,
         Some(StructField(partCol, IntegerType)))
-      .parquet(store)
-      .filter(col(partCol).isin(over.map(_._1): _*)) // partition prune
+      .getOrElse(sys.error(s"compaction: no Spark footer in ${over.head._2}"))
+    val pruned = table(s, store, schema.toDDL, partCol, Some(over.map(_._1)))
     val compacted = fold.fold(
       pruned.select(projection :+ col(partCol): _*).distinct())(
       f => f(pruned))
     writeBucketed(compacted, tmp, "overwrite", partCol, ordCols)
     // read back with the written frame's schema: no inference job
-    s.read.schema(compacted.schema).parquet(tmp)
+    table(s, tmp, compacted.schema.toDDL, partCol)
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partCol).parquet(store)
@@ -151,18 +239,20 @@ object BucketedStore {
   }
 
   /** Replace an unpartitioned table with `rows` (which may read the
-    * table itself) as at most `nFiles` files (coalesce, no shuffle):
-    * write them to a sibling temp dir, then swap by RENAME. Both copies
-    * exist on disk at every instant; the worst crash leaves the live
-    * path briefly absent — which the cluster stores' existence checks
-    * fail fast on — with the previous table intact at `<dir>_old` for
-    * manual recovery. */
+    * table itself) as at most `nFiles` files (coalesce, no shuffle),
+    * each sorted by all of its columns so its bytes do not depend on
+    * the order the scan met its rows in: write them to a sibling temp
+    * dir, then swap by RENAME. Both copies exist on disk at every
+    * instant; the worst crash leaves the live path briefly absent —
+    * which the cluster stores' existence checks fail fast on — with
+    * the previous table intact at `<dir>_old` for manual recovery. */
   private[graft] def replaceUnpartitioned(s: SparkSession, dir: String,
       rows: DataFrame, nFiles: Int): Unit = {
     val live = new Path(dir)
     val fs = fsOf(s, live)
     val tmp = new Path(s"${dir}_replacing")
-    rows.coalesce(nFiles).write.mode("overwrite").parquet(tmp.toString)
+    rows.coalesce(nFiles).sortWithinPartitions(rows.columns.map(col): _*)
+      .write.mode("overwrite").parquet(tmp.toString)
     val old = new Path(s"${dir}_old")
     if (fs.exists(old)) fs.delete(old, true)
     require(fs.rename(live, old), s"could not move $live aside")
@@ -173,23 +263,23 @@ object BucketedStore {
   }
 
   /** Touched-bucket rewrite for a retraction: the `keys` buckets of
-    * `table` keep the rows whose `idCol` is not in `delete` (a
-    * one-column frame of ids), projected to `projCols` plus
+    * the table at `path` (read as [[table]] under `schema`, listing
+    * only those buckets) keep the rows whose `idCol` is not in
+    * `delete` (a one-column frame of ids), projected to `projCols` plus
     * `bucketCol` and written back sorted by `ordCols` with dynamic
     * partition overwrite; every touched bucket the rewrite emptied is
     * deleted explicitly — dynamic overwrite cannot remove a partition
     * it writes no rows for, and a ghost bucket would keep serving
-    * deleted rows. No keys, no work: `table` is not even opened (its
-    * file listing is the cost). */
+    * deleted rows. No keys, no work: the table is not even listed. */
   private[graft] def retractBucketRewrite(s: SparkSession, path: String,
-      table: => DataFrame, bucketCol: String, keys: Seq[Int],
+      schema: String, bucketCol: String, keys: Seq[Int],
       delete: DataFrame, idCol: String, projCols: Seq[String],
       ordCols: Seq[String]): Unit = {
     if (keys.isEmpty) return
     // surviving buckets via the materialization's own observe (round
     // 17, materializeWithKeys) — one job instead of two per rewrite
     val (rewritten, survivedKeys) = Dedup.materializeWithKeys(
-      table.filter(col(bucketCol).isin(keys: _*))
+      table(s, path, schema, bucketCol, Some(keys))
         .join(delete.toDF(idCol), Seq(idCol), "left_anti")
         .select((projCols :+ bucketCol).map(col): _*),
       bucketCol)

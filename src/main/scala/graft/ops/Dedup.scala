@@ -184,9 +184,8 @@ object Dedup {
     // can legitimately empty EVERY exact bucket, and a partitioned table
     // with zero rows keeps no schema-bearing files — post-retraction
     // admission must still see the index as readable-and-empty, not throw
-    val index = s.read.schema("content_hash STRING, bucket INT")
-      .parquet(store)
-      .filter(col("bucket").isin(buckets.toIndexedSeq: _*))
+    val index = BucketedStore.table(s, store, ExactIndexSchema, "bucket",
+      Some(buckets))
     batchFirst
       .join(index, Seq("bucket", "content_hash"), "left_anti")
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
@@ -317,8 +316,7 @@ object Dedup {
     val crossHit =
       if (keys.isEmpty) batch.select(col("doc_id")).limit(0)
       else {
-        bandIndexTable(s, store)
-          .filter(col("kb").isin(keys.toIndexedSeq: _*)).as("x")
+        bandIndexTable(s, store, Some(keys)).as("x")
           .join(batchBands.as("y").hint("shuffle_hash"),
             col("x.band") === col("y.band") &&
               col("x.k1") === col("y.k1") && col("x.k2") === col("y.k2"))
@@ -474,11 +472,12 @@ object Dedup {
     * the fail-fast checks to run. One definition per table layout,
     * shared by the build/check/merge/update/probe paths and the s15
     * readback. */
-  private[graft] def bandIndexTable(s: SparkSession,
-      path: String): DataFrame =
-    s.read.schema("doc_id BIGINT, mins ARRAY<BIGINT>, band INT, " +
-        "k1 BIGINT, k2 BIGINT, kb INT")
-      .parquet(path)
+  private[graft] def bandIndexTable(s: SparkSession, path: String,
+      keys: Option[Seq[Int]] = None): DataFrame =
+    BucketedStore.table(s, path, BandIndexSchema, "kb", keys)
+  private val BandIndexSchema =
+    "doc_id BIGINT, mins ARRAY<BIGINT>, band INT, k1 BIGINT, k2 BIGINT, kb INT"
+  private val ExactIndexSchema = "content_hash STRING, bucket INT"
   private[graft] def clusterEdgesTable(s: SparkSession,
       store: String): DataFrame =
     s.read.schema("doc_a BIGINT, doc_b BIGINT")
@@ -495,9 +494,9 @@ object Dedup {
     * read-back path must mirror that refusal. */
   private[graft] def clusterLabelsTable(s: SparkSession,
       store: String): DataFrame =
-    s.read.schema("doc_id BIGINT, cluster_id BIGINT, " +
-        "cluster_size BIGINT, is_canonical BOOLEAN, kb INT")
-      .parquet(s"$store/clusters")
+    BucketedStore.table(s, s"$store/clusters", "doc_id BIGINT, " +
+      "cluster_id BIGINT, cluster_size BIGINT, is_canonical BOOLEAN, kb INT",
+      "kb")
 
   /** The batch's new verified edges as an UNmaterialized plan — the
     * pruned-band-index join shape PlanShapeSpec pins (the merge itself
@@ -533,8 +532,7 @@ object Dedup {
           .select(col("doc_id").as("doc_a"), col("doc_id").as("doc_b"))
           .limit(0)
       else
-        bandIndexTable(s, s"$store/bands")
-          .filter(col("kb").isin(keys.toIndexedSeq: _*)).as("x")
+        bandIndexTable(s, s"$store/bands", Some(keys)).as("x")
           .join(batchBands.as("y").hint("shuffle_hash"),
             col("x.band") === col("y.band") &&
               col("x.k1") === col("y.k1") && col("x.k2") === col("y.k2"))
@@ -1445,9 +1443,9 @@ object Dedup {
     * writes zero band rows and partitionBy keeps no schema. */
   private[graft] def minhashBandsTable(s: SparkSession,
       storeDir: String): DataFrame =
-    s.read.schema("doc_id BIGINT, mins ARRAY<BIGINT>, " +
-        "k1 BIGINT, k2 BIGINT, band INT")
-      .parquet(s"$storeDir/bands")
+    BucketedStore.table(s, s"$storeDir/bands",
+      "doc_id BIGINT, mins ARRAY<BIGINT>, k1 BIGINT, k2 BIGINT, band INT",
+      "band")
 
   def minhashWrite(docs: DataFrame, storeDir: String): Unit =
     writeBucketed(bandRows(q36bSig(docs)), s"$storeDir/bands", "overwrite",
@@ -1839,18 +1837,12 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"))
       .observe("cc_pair_count", count(lit(1)).as("n"))
     val pairs0 = Span(pairs.sparkSession, "cc.pairs")(
-      ccMaterialize(pairs.sparkSession, pairs0Plan))
+      materializeBounded(pairs0Plan))
     val pairCount = {
       val row = pairs0Plan.queryExecution.observedMetrics("cc_pair_count")
       if (row.isNullAt(0)) 0L else row.getLong(0)
     }
     connectedComponentsMaterialized(pairs0, pairCount)
-  }
-
-  private def ccMaterialize(ss: SparkSession, df: DataFrame): DataFrame = {
-    val ckptDir = ss.conf.getOption("spark.graft.cc.checkpointDir")
-    ckptDir.foreach(ss.sparkContext.setCheckpointDir)
-    if (ckptDir.isDefined) df.checkpoint() else df.localCheckpoint()
   }
 
   /** [[connectedComponents]] over an ALREADY-MATERIALIZED canonical
@@ -2006,7 +1998,7 @@ object Dedup {
       .filter(col("src") =!= col("dst"))
       .distinct()
       .observe("ccs_edges", count(lit(1)).as("n"))
-    var edges = Span(ss, "cc.star edges")(ccMaterialize(ss, edges0))
+    var edges = Span(ss, "cc.star edges")(materializeBounded(edges0))
     val edgeCount = {
       val row = edges0.queryExecution.observedMetrics("ccs_edges")
       if (row.isNullAt(0)) 0L else row.getLong(0)
@@ -2066,7 +2058,7 @@ object Dedup {
           .distinct()
           .observe(s"ccs_$round", metricExprs.head, metricExprs.tail: _*)
         val next = Span(ss, s"cc.star round ${round + 1}")(
-          ccMaterialize(ss, ssOut))
+          materializeBounded(ssOut))
         val row = ssOut.queryExecution.observedMetrics(s"ccs_$round")
         val cur = (dec(row, 0), dec(row, 1), dec(row, 2))
         converged = cur == prev
@@ -2912,9 +2904,7 @@ object Dedup {
     // promotion are decided entirely inside this set: hb-pruned
     // ledger point-reads, O(deleted hashes' buckets)
     val carriers = materializeBounded(
-      (if (ledgerHbs.isEmpty) hashLedgerTable(s, stores).limit(0)
-       else hashLedgerTable(s, stores)
-         .filter(col("hb").isin(ledgerHbs: _*)))
+      hashLedgerTable(s, stores, Some(ledgerHbs))
         .select(col("doc_id"), col("h").as("content_hash"))
         .join(delHp.select(col("content_hash")).distinct(),
           Seq("content_hash"), "left_semi"))
@@ -2931,16 +2921,13 @@ object Dedup {
     // promotion: deleted MANIFESTED survivors hand survivorship to
     // their exact group's min-id surviving member (schema'd read: a
     // previous retraction can have emptied every manifest bucket)
-    val manifest = s.read
-      .schema("doc_id BIGINT, source STRING, h STRING, kb INT")
-      .parquet(s"$stores/manifest")
     // deletedSurvHashes is single-consumer — inlined into the
     // promotedIds plan (round 17: its standalone materialization was
     // one more job); promotedIds' emptiness check rides its
     // materialization as the observed count
     val deletedSurvHashes =
-      (if (delKb.isEmpty) manifest.limit(0)
-       else manifest.filter(col("kb").isin(delKb: _*)))
+      BucketedStore.table(s, s"$stores/manifest", ManifestSchema, "kb",
+          Some(delKb))
         .join(delIds, Seq("doc_id"), "left_semi")
         .select(col("h")).distinct()
     val (promotedIds, nPromoted) = materializeWithCount(
@@ -2967,8 +2954,7 @@ object Dedup {
     // (no ordering constraint existed ACROSS these tables).
     graft.ops.UnifiedClusters.inParallel(Seq(
       () => retractBucketRewrite(s, s"$stores/exact",
-        s.read.schema("content_hash STRING, bucket INT")
-          .parquet(s"$stores/exact"), "bucket", hashKeys,
+        ExactIndexSchema, "bucket", hashKeys,
         dropHashes.select(col("content_hash")), "content_hash",
         Seq("content_hash"), Seq("content_hash")),
       () => {
@@ -2984,7 +2970,7 @@ object Dedup {
             .cast("int").as("kb"))
           .distinct().collect().map(_.getInt(0)).toIndexedSeq.sorted
         retractBucketRewrite(s, s"$stores/neardup",
-          bandIndexTable(s, s"$stores/neardup"), "kb", bandKeys, delIds,
+          BandIndexSchema, "kb", bandKeys, delIds,
           "doc_id", Seq("doc_id", "mins", "band", "k1", "k2"),
           Seq("band", "k1", "k2"))
         promotedDocs.foreach(
@@ -2992,7 +2978,7 @@ object Dedup {
       },
       () => {
         // manifest: drop the deleted rows, admit the promoted ones
-        retractBucketRewrite(s, s"$stores/manifest", manifest, "kb",
+        retractBucketRewrite(s, s"$stores/manifest", ManifestSchema, "kb",
           delKb, delIds, "doc_id", Seq("doc_id", "source", "h"),
           Seq("doc_id"))
         promotedDocs.foreach(
@@ -3003,7 +2989,7 @@ object Dedup {
       // surviving corpus's projection, so the NEXT retraction prunes
       // correctly too)
       () => retractBucketRewrite(s, s"$stores/hashes",
-        hashLedgerTable(s, stores), "hb", ledgerHbs, delIds, "doc_id",
+        HashLedgerSchema, "hb", ledgerHbs, delIds, "doc_id",
         Seq("doc_id", "h"), Seq("h", "doc_id")),
       // eval suite: recompute wholesale from the surviving src0 slice
       () => sourcedShingleRows(corpusScrubbed
@@ -3022,10 +3008,11 @@ object Dedup {
     * ~72 B/doc; the retraction's answer to "who else carries this
     * hash" without rescanning corpus text. SCHEMA'D read: a
     * retract-all can empty every bucket. */
-  private[graft] def hashLedgerTable(s: SparkSession,
-      stores: String): DataFrame =
-    s.read.schema("doc_id BIGINT, h STRING, hb INT")
-      .parquet(s"$stores/hashes")
+  private[graft] def hashLedgerTable(s: SparkSession, stores: String,
+      keys: Option[Seq[Int]] = None): DataFrame =
+    BucketedStore.table(s, s"$stores/hashes", HashLedgerSchema, "hb", keys)
+  private val HashLedgerSchema = "doc_id BIGINT, h STRING, hb INT"
+  private val ManifestSchema = "doc_id BIGINT, source STRING, h STRING, kb INT"
 
   /** Write/append the hash ledger from a (doc_id, ..., text) corpus
     * view — the manifestWrite posture (write-time DISTINCT, 64-way
@@ -3146,8 +3133,8 @@ object Dedup {
     val kbs = batchIds
       .select(pmod(xxhash64(col("doc_id")), lit(64)).cast("int").as("kb"))
       .distinct().collect().map(_.getInt(0))
-    s.read.parquet(s"$stores/manifest")
-      .filter(col("kb").isin(kbs.toIndexedSeq: _*))
+    BucketedStore.table(s, s"$stores/manifest", ManifestSchema, "kb",
+        Some(kbs.toIndexedSeq))
       .join(batchIds.select(col("doc_id")), Seq("doc_id"), "left_semi")
       .select(col("doc_id")).distinct()
   }

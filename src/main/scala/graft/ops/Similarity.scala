@@ -445,7 +445,7 @@ object Similarity {
         .select(col("vec_id"), col("cell_id").cast("int").as("cell_id")),
       "cell_id")
     BucketedStore.retractBucketRewrite(s, s"$storeDir/vectors",
-      s.read.schema(schema).parquet(s"$storeDir/vectors"), "cell_id", cells,
+      schema, "cell_id", cells,
       delAssigned.select(col("vec_id")), "vec_id", projCols, Seq("vec_id"))
   }
 

@@ -151,21 +151,15 @@ object UnifiedClusters {
           t
         }))
 
-  // ---- schema'd readers (empty-partitioned-write safe) -------------
-  private def shingleIndexTable(s: SparkSession, store: String): DataFrame =
-    s.read.schema("doc_id BIGINT, c BIGINT, h BIGINT, kb INT")
-      .parquet(s"$store/shingle")
-  private def sigIndexTable(s: SparkSession, store: String,
-      family: String, sigCol: String): DataFrame =
-    s.read.schema(s"doc_id BIGINT, $sigCol BIGINT, band INT, " +
-        "ckey BIGINT, kb INT")
-      .parquet(s"$store/$family")
-  private def lshIndexTable(s: SparkSession, store: String): DataFrame =
-    s.read.schema("vec_id BIGINT, band INT, bkey BIGINT, kb INT")
-      .parquet(s"$store/emb_lsh")
-  private def vecTable(s: SparkSession, store: String): DataFrame =
-    s.read.schema("vec_id BIGINT, qe ARRAY<BIGINT>, kv INT")
-      .parquet(s"$store/emb_vec")
+  // ---- family table layouts (schema'd: empty-partitioned-write safe;
+  // read through BucketedStore.table) ----------------------------------
+  private val ShingleSchema = "doc_id BIGINT, c BIGINT, h BIGINT, kb INT"
+  private val LshSchema = "vec_id BIGINT, band INT, bkey BIGINT, kb INT"
+  private val VecSchema = "vec_id BIGINT, qe ARRAY<BIGINT>, kv INT"
+  // the edge table's in-file order: an edges file's bytes (and so the
+  // store's size) are a function of its rows, not of the order a
+  // shuffle fetched them in; a micro-batch's new edges land as one file
+  private val EdgeOrder = Seq("doc_a", "doc_b", "family")
   private[graft] def edgesTable(s: SparkSession, store: String): DataFrame =
     s.read.schema("doc_a BIGINT, doc_b BIGINT, family STRING")
       .parquet(s"$store/edges")
@@ -346,8 +340,8 @@ object UnifiedClusters {
     val (cand, kvs) = Dedup.materializeWithKeys(
       lshCrossCandidates(prunedIdx, batch)
         .withColumn("kv", pmod(col("a"), lit(64)).cast("int")), "kv")
-    val vecsA = (if (kvs.isEmpty) vecTable(s, store).limit(0)
-      else vecTable(s, store).filter(col("kv").isin(kvs: _*)))
+    val vecsA = BucketedStore.table(s, s"$store/emb_vec", VecSchema, "kv",
+        Some(kvs))
       .select(col("vec_id").as("a"), col("qe").as("qe_a"))
     val vecsB = batchVec
       .select(col("vec_id").as("b"), col("qe").as("qe_b"))
@@ -409,7 +403,8 @@ object UnifiedClusters {
         .unionByName(famLit(sigPairs("ehash", Multimodal.EhashScheme,
           self = true)(aud, aud), "ehash"))))
     Span(s, "uni.build.edges_write")(
-      fams.write.mode("overwrite").parquet(s"$store/edges"))
+      fams.sortWithinPartitions(EdgeOrder.map(col): _*)
+        .write.mode("overwrite").parquet(s"$store/edges"))
     Span(s, "uni.build.cc_clusters")(writeBucketed(
       Dedup.connectedComponents(
         fams.select(col("doc_a"), col("doc_b")).distinct())
@@ -428,18 +423,6 @@ object UnifiedClusters {
             "build it with unifiedClusterStoreWrite before merging")
       }
   }
-
-  /** Prune a standing index read to the batch's touched buckets (the
-    * <= 64-int static-IN, the q83 convention); the key sets for all
-    * five families come from ONE collect over the union of the
-    * materialized batch rows (4 scheduler rounds folded into 1). */
-  private def prunedTo(index: DataFrame, keys: Seq[Int]): DataFrame =
-    if (keys.isEmpty) index.limit(0)
-    else index.filter(col("kb").isin(keys: _*))
-
-  // (the one-job touchedKeys collect is gone — round 17: each
-  // family's bucket set now rides its batch-row materialization as an
-  // observed collect_set, see batchRowsOf)
 
   /** The batch's new verified edges across all five families — each
     * family's pruned cross join against its standing index plus its
@@ -482,33 +465,36 @@ object UnifiedClusters {
     // subsumes them (round 17: two exchanges+aggs per family removed
     // from the merge's hot plan; the build path keeps its per-rule
     // dedup so stored edge bytes are unchanged)
-    def cross(index: => DataFrame, batch: DataFrame, fam: String,
+    // each family's standing index, listed and read only in its batch's
+    // buckets (a <= 64-int static IN, the q83 convention); each family's
+    // bucket set rides its batch-row materialization (batchRowsOf)
+    def index(fam: String, schema: String): DataFrame =
+      BucketedStore.table(s, s"$store/$fam", schema, "kb", Some(keys(fam)))
+    def cross(schema: String, batch: DataFrame, fam: String,
         rule: Boolean => (DataFrame, DataFrame) => DataFrame): DataFrame =
       if (keys(fam).isEmpty) noEdges
-      else rule(false)(prunedTo(index, keys(fam)), batch)
+      else rule(false)(index(fam, schema), batch)
         .unionByName(rule(true)(batch, batch))
         .distinct()
     Seq(
-      ("shingle", () => famLit(cross(shingleIndexTable(s, store),
-        batchSh, "shingle",
+      ("shingle", () => famLit(cross(ShingleSchema, batchSh, "shingle",
         self => shinglePairs(self, dedup = false)), "shingle")),
-      ("simhash", () => famLit(cross(sigIndexTable(s, store, "simhash",
-          "simhash"), batchSim, "simhash",
+      ("simhash", () => famLit(cross(Multimodal.sigStoreSchema("simhash"),
+          batchSim, "simhash",
         self => sigPairs("simhash", SimScheme, self, dedup = false)),
         "simhash")),
       ("emb_lsh", () => famLit(
         if (keys("emb_lsh").isEmpty) noEdges
-        else lshCrossPairs(s, store,
-            prunedTo(lshIndexTable(s, store), keys("emb_lsh")), batchLsh,
-            batchVec, dedup = false)
+        else lshCrossPairs(s, store, index("emb_lsh", LshSchema),
+            batchLsh, batchVec, dedup = false)
           .unionByName(lshSelfPairs(batchLsh, dedup = false))
           .distinct(), "emb_lsh")),
-      ("img_ahash", () => famLit(cross(sigIndexTable(s, store,
-          "img_ahash", "ahash"), batchImg, "img_ahash",
+      ("img_ahash", () => famLit(cross(Multimodal.sigStoreSchema("ahash"),
+          batchImg, "img_ahash",
         self => sigPairs("ahash", Multimodal.AhashScheme, self,
           dedup = false)), "img_ahash")),
-      ("ehash", () => famLit(cross(sigIndexTable(s, store, "ehash",
-          "ehash"), batchAud, "ehash",
+      ("ehash", () => famLit(cross(Multimodal.sigStoreSchema("ehash"),
+          batchAud, "ehash",
         self => sigPairs("ehash", Multimodal.EhashScheme, self,
           dedup = false)), "ehash")))
   }
@@ -800,7 +786,8 @@ object UnifiedClusters {
       () => writeBucketed(batchAud.select(col("doc_id"),
         col("ehash"), col("band"), col("ckey"), col("kb")),
         s"$store/ehash", "append", "kb", Seq("band", "ckey"))))(
-      newEdges.write.mode("append").parquet(s"$store/edges"))
+      newEdges.coalesce(1).sortWithinPartitions(EdgeOrder.map(col): _*)
+        .write.mode("append").parquet(s"$store/edges"))
   }
 
   /** Bound file counts under daily merges: the five index tables
@@ -942,24 +929,24 @@ object UnifiedClusters {
     BucketedStore.commitLabels(s, store, torn, staged, stagedKeys,
       "uni.retract")(Seq(
       () => BucketedStore.retractBucketRewrite(s, s"$store/shingle",
-        shingleIndexTable(s, store), "kb", keys("shingle"), delIds,
+        ShingleSchema, "kb", keys("shingle"), delIds,
         "doc_id", Seq("doc_id", "c", "h"), Seq("h")),
       () => BucketedStore.retractBucketRewrite(s, s"$store/simhash",
-        sigIndexTable(s, store, "simhash", "simhash"), "kb",
+        Multimodal.sigStoreSchema("simhash"), "kb",
         keys("simhash"), delIds, "doc_id",
         Seq("doc_id", "simhash", "band", "ckey"), Seq("band", "ckey")),
       () => BucketedStore.retractBucketRewrite(s, s"$store/emb_lsh",
-        lshIndexTable(s, store), "kb", keys("emb_lsh"), delIds, "vec_id",
+        LshSchema, "kb", keys("emb_lsh"), delIds, "vec_id",
         Seq("vec_id", "band", "bkey"), Seq("band", "bkey")),
       () => BucketedStore.retractBucketRewrite(s, s"$store/emb_vec",
-        vecTable(s, store), "kv", kvKeys, delIds, "vec_id",
+        VecSchema, "kv", kvKeys, delIds, "vec_id",
         Seq("vec_id", "qe"), Seq("vec_id")),
       () => BucketedStore.retractBucketRewrite(s, s"$store/img_ahash",
-        sigIndexTable(s, store, "img_ahash", "ahash"), "kb",
+        Multimodal.sigStoreSchema("ahash"), "kb",
         keys("img_ahash"), delIds, "doc_id",
         Seq("doc_id", "ahash", "band", "ckey"), Seq("band", "ckey")),
       () => BucketedStore.retractBucketRewrite(s, s"$store/ehash",
-        sigIndexTable(s, store, "ehash", "ehash"), "kb",
+        Multimodal.sigStoreSchema("ehash"), "kb",
         keys("ehash"), delIds, "doc_id",
         Seq("doc_id", "ehash", "band", "ckey"), Seq("band", "ckey"))))(
       // the edge table: unpartitioned rename-swap rewrite (edge-bounded

@@ -16,7 +16,9 @@ import org.apache.spark.sql.SparkSession
   * stage running), and per job description — the engine's
   * [[graft.util.Span]] names — the jobs, stages, tasks, executor run
   * time, shuffle read/write and spill of the stages those jobs ran.
-  * Jobs submitted outside any span are listed under "". */
+  * Jobs submitted outside any span are listed under "", Spark's
+  * file-listing jobs under `spark.listing` and a streaming query's
+  * own batch jobs under `stream.batch` ([[keyOf]]). */
 object TimeOne {
   private final class Acc {
     var jobs, stages, tasks, execMs, shuffleRead, shuffleWrite, spill = 0L
@@ -25,6 +27,17 @@ object TimeOne {
       "shuffle_read_mb" -> mb(shuffleRead),
       "shuffle_write_mb" -> mb(shuffleWrite), "spill_mb" -> mb(spill))
   }
+
+  /** The profile key of a job description. Spark names its parallel
+    * file-listing jobs "Listing leaf files and directories for N
+    * paths:<br/>..." and a streaming query's batch jobs "[name]\nid =
+    * ..\nrunId = ..\nbatch = N"; each kind folds into one key, so a
+    * profile shows at a glance whether any listing job is left. */
+  private[graft] def keyOf(desc: String): String =
+    if (desc.startsWith("Listing leaf files")) "spark.listing"
+    else if (desc.contains("\nrunId = ") && desc.contains("\nbatch = "))
+      "stream.batch"
+    else desc
 
   private def mb(b: Long): Double = math.round(b / 1048576.0 * 1e3) / 1e3
 
@@ -41,9 +54,9 @@ object TimeOne {
     private def touch(): Unit = lastEventMs = System.currentTimeMillis()
 
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-      val d = Option(e.properties)
+      val d = keyOf(Option(e.properties)
         .flatMap(p => Option(p.getProperty("spark.job.description")))
-        .getOrElse("")
+        .getOrElse(""))
       byDesc.getOrElseUpdate(d, new Acc).jobs += 1
       e.stageIds.foreach(stageDesc(_) = d)
       openJobs += 1

@@ -452,6 +452,37 @@ class UnifiedClustersSpec extends SparkSpec {
       === oneShot())
   }
 
+  test("update, compaction of an oversized store, retraction and " +
+    "read-back list the 64-bucket tables on the driver: no Spark " +
+    "listing job") {
+    val (cd, bd, ce, be, ci, bi, ca, ba) = fixture()
+    val store = java.nio.file.Files
+      .createTempDirectory("uni_cluster_listing_").toString
+    ops.UnifiedClusters.unifiedClusterStoreWrite(cd, ce, ci, ca, store)
+    def listing(body: => Unit): Seq[String] =
+      nonQueryJobs(body)._2.map(_._1)
+        .filter(_.startsWith("Listing leaf files"))
+    val update = listing(ops.UnifiedClusters.unifiedClusterStoreUpdate(
+      spark, store, bd, be, bi, ba))
+    // the compaction rewrites more than 32 buckets of a table, the
+    // width at which Spark's own reader lists with a job
+    def oversized(table: String): Int =
+      new java.io.File(s"$store/$table").listFiles.count(d =>
+        d.isDirectory && d.list().count(_.endsWith(".parquet")) > 1)
+    assert(oversized("shingle") > 32)
+    val compact = listing(
+      ops.UnifiedClusters.unifiedClusterStoreCompact(spark, store, 1))
+    assert(oversized("shingle") === 0)
+    val retract = listing(ops.UnifiedClusters.unifiedClusterStoreRetract(
+      spark, store, bd.filter(col("doc_id") >= 260),
+      be.filter(col("vec_id") >= 260), bi.filter(col("doc_id") >= 60),
+      ba.filter(col("doc_id") >= 40)))
+    val readback = listing(ops.UnifiedClusters
+      .unifiedClustersFromStore(spark, store).collect())
+    assert(Seq(update, compact, retract, readback).forall(_.isEmpty),
+      (update, compact, retract, readback))
+  }
+
   // ---- O-140 (q61f): retraction --------------------------------------
 
   test("q61f: retracting a bridge doc SPLITS its component — the " +
