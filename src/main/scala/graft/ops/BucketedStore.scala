@@ -5,7 +5,8 @@ import scala.collection.mutable
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{Column, DataFrame, DataFrameReader, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameReader,
+  DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
   PartitionPath, PartitionSpec, PartitioningAwareFileIndex}
@@ -14,7 +15,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, IntegerType, StructField,
   StructType}
 
-import graft.util.Span
+import graft.util.{NioLocalFileSystem, Span}
 
 /** The lifecycle of the engine's parquet stores, one definition each:
   * the bucketed write, the schema'd read, compaction, the
@@ -76,6 +77,17 @@ object BucketedStore {
   private[graft] def reader(s: SparkSession, dir: Path,
       partition: Option[StructField]): DataFrameReader =
     schemaOf(s, dir, partition).fold(s.read)(s.read.schema(_))
+
+  /** The one writer of every parquet store, `rows.storeWrite`:
+    * `rows.write` with the per-write Hadoop options of
+    * [[NioLocalFileSystem]], so a `file:` store sets the permissions of
+    * the files and dirs it creates in-process instead of forking
+    * `chmod` for each. Other schemes are untouched. */
+  private[graft] implicit final class StoreWriter(private val rows: DataFrame)
+      extends AnyVal {
+    def storeWrite: DataFrameWriter[Row] =
+      rows.write.options(NioLocalFileSystem.writeOptions)
+  }
 
   /** The one reader of a hash-bucketed table: `schema` (DDL, its last
     * column the INT `bucketCol`) over the `bucketCol=N` dirs under
@@ -174,7 +186,7 @@ object BucketedStore {
       dynamicOverwrite: Boolean = false): Unit = {
     val w = rows.repartition(col(bucketCol))
       .sortWithinPartitions((bucketCol +: ordCols).map(col): _*)
-      .write.mode(mode)
+      .storeWrite.mode(mode)
     (if (dynamicOverwrite) w.option("partitionOverwriteMode", "dynamic")
      else w).partitionBy(bucketCol).parquet(path)
   }
@@ -215,7 +227,7 @@ object BucketedStore {
     writeBucketed(compacted, tmp, "overwrite", partCol, ordCols)
     // read back with the written frame's schema: no inference job
     table(s, tmp, compacted.schema.toDDL, partCol)
-      .write.mode("overwrite")
+      .storeWrite.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partCol).parquet(store)
     // temp dir is scratch; best-effort recursive cleanup
@@ -252,7 +264,7 @@ object BucketedStore {
     val fs = fsOf(s, live)
     val tmp = new Path(s"${dir}_replacing")
     rows.coalesce(nFiles).sortWithinPartitions(rows.columns.map(col): _*)
-      .write.mode("overwrite").parquet(tmp.toString)
+      .storeWrite.mode("overwrite").parquet(tmp.toString)
     val old = new Path(s"${dir}_old")
     if (fs.exists(old)) fs.delete(old, true)
     require(fs.rename(live, old), s"could not move $live aside")
@@ -321,22 +333,44 @@ object BucketedStore {
     fsOf(s, p).exists(p)
   }
 
+  /** A live label bucket moved aside by [[swapStagedBuckets]], as
+    * `_aside_N`: hidden from every reader. [[table]] lists only `kb=`
+    * dirs, and Spark's listing skips a `_` name unless it holds a `=`
+    * (a partition dir). */
+  private val AsidePrefix = "_aside_"
+
   /** Swap the staging dir's `kb=N` dirs into the live label table by
-    * RENAME (round 17): delete the live dir, move the staged dir in —
-    * metadata only, no data bytes move on a rename-capable filesystem.
-    * Returns the staged bucket ids (partitionBy writes no dir for an
-    * empty bucket). */
+    * two RENAMES each: the live dir aside to `_aside_N`, the staged
+    * dir in, then the aside dir deleted — metadata only, no data bytes
+    * move on a rename-capable filesystem. Every bucket's labels stay on
+    * disk under a live or an aside name at every instant. Returns the
+    * staged bucket ids (partitionBy writes no dir for an empty
+    * bucket). */
   private def swapStagedBuckets(fs: FileSystem, staged: Path,
       live: Path): Seq[Int] =
     bucketDirs(fs, staged, "kb").map { case (k, dir) =>
       val target = new Path(live, dir.getName)
-      if (fs.exists(target))
-        require(fs.delete(target, true),
-          s"bucket swap: could not remove $target for replacement")
+      val aside = new Path(live, s"$AsidePrefix$k")
+      val replaced = fs.exists(target)
+      if (replaced)
+        require(fs.rename(target, aside),
+          s"bucket swap: could not move $target aside")
       require(fs.rename(dir, target),
         s"bucket swap: could not move $dir into place")
+      if (replaced)
+        require(fs.delete(aside, true),
+          s"bucket swap: could not delete $aside")
       k
     }
+
+  /** Delete the aside dirs a crashed [[swapStagedBuckets]] left in
+    * `live`, before a swap reuses their names. */
+  private def deleteAsideDirs(fs: FileSystem, live: Path): Unit =
+    if (fs.exists(live))
+      fs.listStatus(live)
+        .filter(_.getPath.getName.startsWith(AsidePrefix))
+        .foreach(st => require(fs.delete(st.getPath, true),
+          s"bucket swap: could not delete leftover ${st.getPath}"))
 
   /** The label commit of the cluster stores (the MinHash store's
     * update, the unified store's update and retraction). `staged` are
@@ -351,9 +385,10 @@ object BucketedStore {
     *     independent (disjoint paths, pre-materialized inputs);
     *  2. the caller's `edges` write (`<span>.edges`);
     *  3. the label swap (`<span>.label_swap`): each staged bucket dir
-    *     replaces its live dir by rename, and every key the swap did
-    *     not bring back is deleted — a bucket whose docs all left the
-    *     label table. Then one `refreshByPath`; DataFrames created
+    *     replaces its live dir by two renames ([[swapStagedBuckets]]),
+    *     and every key the swap did not bring back is deleted — a
+    *     bucket whose docs all left the label table. Then one
+    *     `refreshByPath`; DataFrames created
     *     before the swap still hold the pre-swap file listing (Spark's
     *     snapshot semantics), so collect them first or re-create them;
     *  4. the marker is deleted — unconditionally: a commit that staged
@@ -364,7 +399,8 @@ object BucketedStore {
     * (the heals of [[Dedup.relabelAgainst]] and of the retraction),
     * and the keys are every live bucket plus the staged ones: a bucket
     * the crashed commit should have emptied (a retracted doc's label)
-    * is deleted rather than left as a ghost.
+    * is deleted rather than left as a ghost. A torn commit first
+    * deletes any aside dir a crashed swap left behind.
     *
     * Crash posture. The steps are not atomic; the marker makes every
     * crash window visible. It exists from step 1 to step 4 whenever
@@ -377,11 +413,14 @@ object BucketedStore {
     * but not band-discoverable (retraction) until the same batch is
     * replayed. Indices change before edges, so a crash can never
     * persist an edge whose doc no future batch can band-match. A crash
-    * in steps 2-4 leaves the marker beside stale, mixed-generation or
-    * missing label buckets (step 3 deletes a live bucket dir before it
-    * renames the staged one in); read-backs refuse such a store, and
-    * the next completed update (any batch, empty included) or
-    * retraction rebuilds the whole label set as CC(edges). What a crash
+    * in steps 2-4 leaves the marker beside stale or mixed-generation
+    * label buckets. A crash between a bucket's two renames leaves its
+    * live dir absent and its previous labels in an aside dir that no
+    * reader sees; a swap runs only after the staging write that
+    * created the marker, so an aside dir never outlives its marker.
+    * Read-backs refuse a marked store, and the next completed update
+    * (any batch, empty included) or retraction deletes the aside dirs
+    * and rebuilds the whole label set as CC(edges). What a crash
     * can lose is the un-written tail of its own batch (its edges, or
     * its index rows and edges): replaying the same batch restores them
     * byte-identically (the at-least-once posture of the `foreachBatch`
@@ -398,8 +437,10 @@ object BucketedStore {
         "overwrite", "kb", Seq("cluster_id", "doc_id"))) +: writes))
     Span(s, s"$span.edges")(edges)
     val all =
-      if (torn) (keys ++ bucketDirs(fs, live, "kb").map(_._1)).distinct
-      else keys
+      if (torn) {
+        deleteAsideDirs(fs, live)
+        (keys ++ bucketDirs(fs, live, "kb").map(_._1)).distinct
+      } else keys
     if (all.nonEmpty) Span(s, s"$span.label_swap") {
       // with no keys nothing was staged: a crashed commit's leftovers
       // in the marker dir must not be swapped in

@@ -22,7 +22,7 @@ import graft.util.Span
   */
 object Dedup {
   import Tables._
-  import BucketedStore.{compactBuckets, compactUnpartitioned,
+  import BucketedStore.{StoreWriter, compactBuckets, compactUnpartitioned,
     retractBucketRewrite, tornMarker, writeBucketed}
 
   /** Re-key offset for the q83/q85 planted-duplicate fixtures: copies
@@ -445,7 +445,7 @@ object Dedup {
       .filter(nMatch * 2 >= NHashes)
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
       .distinct()
-      .write.mode("overwrite").parquet(s"$store/edges")
+      .storeWrite.mode("overwrite").parquet(s"$store/edges")
     writeBucketed(connectedComponents(clusterEdgesTable(s, store))
       .withColumn("kb", clusterBucket(col("doc_id"))),
       s"$store/clusters", "overwrite", "kb", Seq("cluster_id", "doc_id"))
@@ -485,11 +485,12 @@ object Dedup {
 
   /** CAVEAT (round-18 ADVICE): a DIRECT read of this table does not
     * check [[BucketedStore.tornMarker]]. After a crashed label commit
-    * ([[BucketedStore.commitLabels]]) the table can be stale, miss
-    * whole buckets (the swap deletes a live bucket dir before it
-    * renames the staged one in) or keep a bucket a crashed retraction
-    * emptied, until the next completed update or retraction rebuilds
-    * the whole label set. The merges heal in [[relabelAgainst]] and
+    * ([[BucketedStore.commitLabels]]) the table can be stale, miss a
+    * bucket (a crash between the swap's two renames leaves its labels
+    * in an `_aside_` dir, which no reader sees) or keep a bucket a
+    * crashed retraction emptied, until the next completed update or
+    * retraction rebuilds the whole label set. The merges heal in
+    * [[relabelAgainst]] and
     * unifiedClustersFromStore refuses on the marker; any other
     * read-back path must mirror that refusal. */
   private[graft] def clusterLabelsTable(s: SparkSession,
@@ -724,7 +725,7 @@ object Dedup {
           .select(col("doc_id"), col("mins"), col("band"), col("k1"),
             col("k2"), col("kb")), // neardupIndexWrite's column order
           s"$store/bands", "append", "kb", Seq("band", "k1", "k2"))))(
-        newEdges.write.mode("append").parquet(s"$store/edges"))
+        newEdges.storeWrite.mode("append").parquet(s"$store/edges"))
     }
   }
 
@@ -2654,13 +2655,13 @@ object Dedup {
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
         .drop("rn", "content_hash")
-        .write.mode("overwrite").parquet(s"$dir/s2")
+        .storeWrite.mode("overwrite").parquet(s"$dir/s2")
       sourcedShingleRows(s1)
         .filter(col("source") === "src0")
         .select(col("h")).distinct()
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/bench")
+        .coalesce(1).storeWrite.mode("overwrite").parquet(s"$dir/bench")
       Seq((d0.count(), s1.count())).toDF("n_input", "n_scrub")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+        .coalesce(1).storeWrite.mode("overwrite").parquet(s"$dir/meta")
     }
     val meta = s.read.parquet(s"$dir/meta").head()
     (meta.getAs[Long]("n_input"), meta.getAs[Long]("n_scrub"),
@@ -2732,7 +2733,7 @@ object Dedup {
         .unionByName(audDisp.filter(!col("is_canonical"))
           .select(col("doc_id")))
         .distinct()
-        .coalesce(1).write.mode("overwrite").parquet(s"$d/drop")
+        .coalesce(1).storeWrite.mode("overwrite").parquet(s"$d/drop")
     }
     s.read.parquet(s"$dir/drop")
   }
@@ -2836,7 +2837,7 @@ object Dedup {
     sourcedShingleRows(scrubbed)
       .filter(col("source") === "src0")
       .select(col("h")).distinct()
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/bench")
+      .coalesce(1).storeWrite.mode("overwrite").parquet(s"$dir/bench")
     manifestWrite(exactSurv, s"$dir/manifest")
     // the FULL corpus (not just exact survivors): dup-group members
     // are promotion candidates, so the ledger must know them
@@ -2996,7 +2997,7 @@ object Dedup {
           .join(delIds, Seq("doc_id"), "left_anti"))
         .filter(col("source") === "src0")
         .select(col("h")).distinct()
-        .coalesce(1).write.mode("overwrite")
+        .coalesce(1).storeWrite.mode("overwrite")
         .parquet(s"$stores/bench")))
   }
 
@@ -3212,12 +3213,12 @@ object Dedup {
           graft.functions.Multimodal.syntheticImages(s))
         .filter(col("doc_id") >= 50)
         .withColumn("doc_id", col("doc_id") + MediaReKeyOffset)
-        .coalesce(1).write.mode("overwrite").parquet(s"$d/img")
+        .coalesce(1).storeWrite.mode("overwrite").parquet(s"$d/img")
       graft.functions.Multimodal.audioSignatures(
           graft.functions.Multimodal.syntheticWavs(s))
         .filter(col("doc_id") >= 32)
         .withColumn("doc_id", col("doc_id") + MediaReKeyOffset)
-        .coalesce(1).write.mode("overwrite").parquet(s"$d/aud")
+        .coalesce(1).storeWrite.mode("overwrite").parquet(s"$d/aud")
     }
 
   private[graft] def mediaBatchImgSigs(s: SparkSession): DataFrame =

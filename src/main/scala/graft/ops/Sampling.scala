@@ -16,6 +16,7 @@ import org.apache.spark.sql.functions._
   */
 object Sampling {
   import Tables._
+  import BucketedStore.StoreWriter
 
   /** Stable per-doc bucket in [0, 100): first 8 hex chars of
     * md5(doc_id) as an integer, mod 100. */
@@ -420,7 +421,7 @@ object Sampling {
       .repartition(nShards, col("shard"))
       .sortWithinPartitions(col("shard"), col("k"), col("doc_id"))
       .drop("k")
-      .write.mode("overwrite").partitionBy("shard").parquet(store)
+      .storeWrite.mode("overwrite").partitionBy("shard").parquet(store)
   }
 
   def q90ShuffleShards(s: SparkSession, d: String): DataFrame =

@@ -18,6 +18,7 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
   import Tables._
+  import BucketedStore.StoreWriter
 
   // O-60: brute-force exact top-k by quantized cosine vs a fixed query
   // vector (vec_id 0). Integer dot product => engine-exact ordering.
@@ -335,9 +336,9 @@ object Similarity {
       .select(col("vec_id").as("cell_id"), col("qe").as("ce"))
     coarseAssign(quantized, centroids)
       .select(col("vec_id"), col("label"), col("qe"), col("cell_id"))
-      .write.mode("overwrite").partitionBy("cell_id")
+      .storeWrite.mode("overwrite").partitionBy("cell_id")
       .parquet(s"$storeDir/vectors")
-    centroids.write.mode("overwrite").parquet(s"$storeDir/centroids")
+    centroids.storeWrite.mode("overwrite").parquet(s"$storeDir/centroids")
   }
 
   /** O-82 incremental path (q88): append a batch of vectors to a
@@ -357,7 +358,7 @@ object Similarity {
     coarseAssignCollected(quantized,
       annModel(s, storeDir, codebook = false).centroids)
       .select(col("vec_id"), col("label"), col("qe"), col("cell_id"))
-      .write.mode("append").partitionBy("cell_id")
+      .storeWrite.mode("append").partitionBy("cell_id")
       .parquet(s"$storeDir/vectors")
   }
 
@@ -884,7 +885,7 @@ object Similarity {
         .select(col("vec_id"), col("label"),
           lit(null).cast("array<bigint>").as("codes"),
           lit(0).cast("int").as("cell_id"))
-        .write.mode("overwrite").parquet(s"$storeDir/vectors")
+        .storeWrite.mode("overwrite").parquet(s"$storeDir/vectors")
     else
       coarseAssignCollected(quantized, cents)
         .withColumn("codes", graft.functions.PqEncodeCodes(col("qe"),
@@ -893,17 +894,17 @@ object Similarity {
             _._2.slice(mi * subDim, (mi + 1) * subDim))), m, subDim))
         .select(col("vec_id"), col("label"), col("codes"),
           col("cell_id"))
-        .write.mode("overwrite").partitionBy("cell_id")
+        .storeWrite.mode("overwrite").partitionBy("cell_id")
         .parquet(s"$storeDir/vectors")
     seeds.flatMap { case (id, qe) =>
       (0 until m).map(mi =>
         (mi, id, qe.slice(mi * subDim, (mi + 1) * subDim)))
     }.toDF("m", "seed", "cv")
-      .write.mode("overwrite").parquet(s"$storeDir/codebook")
+      .storeWrite.mode("overwrite").parquet(s"$storeDir/codebook")
     // the centroids table writes from the collected rows — a local
     // relation, NOT a re-execution of the training aggregation
     cents.toSeq.toDF("cell_id", "ce")
-      .write.mode("overwrite").parquet(s"$storeDir/centroids")
+      .storeWrite.mode("overwrite").parquet(s"$storeDir/centroids")
   }
 
   /** O-82 incremental path for the IVF-PQ layout (the ivfAppend
@@ -936,7 +937,7 @@ object Similarity {
       .withColumn("codes", graft.functions.PqEncodeCodes(col("qe"),
         seedIds, cbRows.flatMap(_._3).toIndexedSeq, m, subDim))
       .select(col("vec_id"), col("label"), col("codes"), col("cell_id"))
-      .write.mode("append").partitionBy("cell_id")
+      .storeWrite.mode("append").partitionBy("cell_id")
       .parquet(s"$storeDir/vectors")
   }
 

@@ -773,7 +773,8 @@ object TextAnalysis {
   private def tfStoreWriteHwm(s: SparkSession, store: String,
       epoch: Long): Unit = {
     val p = tfHwmPath(store)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val fs = p.getFileSystem(
+      graft.util.NioLocalFileSystem.conf(s.sparkContext.hadoopConfiguration))
     val tmp = tfHwmStaging(p)
     val out = fs.create(tmp, true)
     try out.write(epoch.toString.getBytes(

@@ -76,7 +76,7 @@ import graft.util.Span
   * series, rg.py:43-50 — re-expressed as standing-index maintenance.
   */
 object UnifiedClusters {
-  import BucketedStore.writeBucketed
+  import BucketedStore.{StoreWriter, writeBucketed}
   import Dedup.materializeBounded
 
   private[graft] val SimScheme = BandScheme(Dedup.SimChunks, 15, 8)
@@ -404,7 +404,7 @@ object UnifiedClusters {
           self = true)(aud, aud), "ehash"))))
     Span(s, "uni.build.edges_write")(
       fams.sortWithinPartitions(EdgeOrder.map(col): _*)
-        .write.mode("overwrite").parquet(s"$store/edges"))
+        .storeWrite.mode("overwrite").parquet(s"$store/edges"))
     Span(s, "uni.build.cc_clusters")(writeBucketed(
       Dedup.connectedComponents(
         fams.select(col("doc_a"), col("doc_b")).distinct())
@@ -787,7 +787,7 @@ object UnifiedClusters {
         col("ehash"), col("band"), col("ckey"), col("kb")),
         s"$store/ehash", "append", "kb", Seq("band", "ckey"))))(
       newEdges.coalesce(1).sortWithinPartitions(EdgeOrder.map(col): _*)
-        .write.mode("append").parquet(s"$store/edges"))
+        .storeWrite.mode("append").parquet(s"$store/edges"))
   }
 
   /** Bound file counts under daily merges: the five index tables

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DateType, StructField}
 
 import graft.ops.BucketedStore
+import graft.ops.BucketedStore.StoreWriter
 
 /** The engine's time-series store — the InfluxDB replacement
   * (SURVEY.md §1.4): a day-partitioned parquet table keyed by the
@@ -45,7 +46,7 @@ object TimeSeriesStore {
       .withColumn("day", anchoredDay(col("ts")))
       .repartition(col("day"))
       .observe(rows, count(lit(1)).as("n"))
-      .write
+      .storeWrite
       .partitionBy("day")
       .option("partitionOverwriteMode", "dynamic")
       .mode(if (overwritePartitions) "overwrite" else "append")

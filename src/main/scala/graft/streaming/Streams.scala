@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
+import graft.ops.BucketedStore.StoreWriter
+
 /** Structured Streaming surface (SURVEY.md §2.9, O-48..O-54).
   *
   * The reference's incremental mode is a hand-rolled stream processor:
@@ -206,7 +208,7 @@ object Streams {
       .writeStream
       .option("checkpointLocation", ephemeralCheckpointDir())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(dir)
+        batch.storeWrite.mode("append").parquet(dir)
       }
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
@@ -613,7 +615,7 @@ object Streams {
           val admitted = graft.ops.Dedup
             .corpusMerge(batch.sparkSession, store, batch)
             .localCheckpoint()
-          admitted.write.mode("append").parquet(admittedDir)
+          admitted.storeWrite.mode("append").parquet(admittedDir)
           graft.ops.Dedup.dedupIndexWriteHashes(
             admitted.select(col("content_hash")), store, "append")
         }
@@ -789,7 +791,7 @@ object Streams {
       store)
     val inDir = graft.util.Ephemeral.dir(s"graft_${tag}_stream_in_")
     all.filter(col("doc_id") >= corpusBound).toDF()
-      .coalesce(1).write.mode("overwrite").parquet(inDir)
+      .coalesce(1).storeWrite.mode("overwrite").parquet(inDir)
     val admittedDir = graft.util.Ephemeral.dir(s"graft_${tag}_admit_")
     val q = s.readStream.schema(mediaSchema).parquet(inDir)
       .writeStream
@@ -802,7 +804,7 @@ object Streams {
             sigCol, scheme,
             sigsOf(batch.as[graft.functions.Multimodal.MediaRecord]))
             .localCheckpoint()
-          admitted.write.mode("append").parquet(admittedDir)
+          admitted.storeWrite.mode("append").parquet(admittedDir)
           graft.functions.Multimodal.sigIndexWrite(
             admitted, sigCol, scheme, store, mode = "append")
         }
@@ -893,12 +895,12 @@ object Streams {
     imgSigs.filter(col("doc_id") >= 50)
       .select(lit("img").as("kind"), col("doc_id"), col("ahash"),
         lit(null).cast("long").as("ehash"))
-      .coalesce(1).write.mode("append").parquet(attDir)
+      .coalesce(1).storeWrite.mode("append").parquet(attDir)
     val imgNames = attFiles().map(_.getName).toSet
     audSigs.filter(col("doc_id") >= 32)
       .select(lit("aud").as("kind"), col("doc_id"),
         lit(null).cast("long").as("ahash"), col("ehash"))
-      .coalesce(1).write.mode("append").parquet(attDir)
+      .coalesce(1).storeWrite.mode("append").parquet(attDir)
     // enforce the arrival order however close the two writes landed:
     // the file source admits oldest-mtime first
     attFiles().foreach { f =>
@@ -1012,13 +1014,13 @@ object Streams {
     // copies (ReKeyOffset ids — the largest, so arrival order stays
     // id order, the split-invariance precondition)
     docs.filter(col("doc_id") >= 250 && col("doc_id") < 275)
-      .coalesce(1).write.mode("append").parquet(stageDir)
+      .coalesce(1).storeWrite.mode("append").parquet(stageDir)
     val aNames = stageFiles().map(_.getName).toSet
     docs.filter(col("doc_id") >= 275)
       .unionByName(docs.filter(col("doc_id") < 50)
         .withColumn("doc_id",
           col("doc_id") + graft.ops.Dedup.ReKeyOffset))
-      .coalesce(1).write.mode("append").parquet(stageDir)
+      .coalesce(1).storeWrite.mode("append").parquet(stageDir)
     stageFiles().foreach { f =>
       val late = if (aNames.contains(f.getName)) 60000 else 30000
       require(f.setLastModified(System.currentTimeMillis() - late),
@@ -1104,7 +1106,7 @@ object Streams {
         s"$countsDir/_wal/staged_$batchId")
       if (!fs.exists(new org.apache.hadoop.fs.Path(staged, "_SUCCESS")))
         graft.ops.Dedup.funnelCounts(frames)
-          .coalesce(1).write.mode("overwrite").parquet(staged.toString)
+          .coalesce(1).storeWrite.mode("overwrite").parquet(staged.toString)
       val admitted = appendsAndAdmitted(frames)
       val tmp = new org.apache.hadoop.fs.Path(
         s"$countsDir/_wal/commit_$batchId")
@@ -1112,7 +1114,7 @@ object Streams {
         .parquet(staged.toString)
         .unionByName(graft.ops.Dedup.funnelCounts(
           Seq((7, "manifest_append", admitted))))
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+        .coalesce(1).storeWrite.mode("overwrite").parquet(tmp.toString)
       require(fs.rename(tmp, commit),
         s"counts commit: could not move $tmp into place for " +
           s"batch $batchId")
@@ -1175,14 +1177,14 @@ object Streams {
     // the largest, so arrival order stays id order, the
     // split-invariance precondition)
     docs.filter(col("doc_id") >= 250 && col("doc_id") < 275)
-      .coalesce(1).write.mode("append").parquet(stageDir)
+      .coalesce(1).storeWrite.mode("append").parquet(stageDir)
     val aNames = stageFiles().map(_.getName).toSet
     docs.filter(col("doc_id") >= 275)
       .unionByName(docs.filter(col("doc_id") < 50)
         .withColumn("doc_id",
           col("doc_id") + graft.ops.Dedup.ReKeyOffset))
       .unionByName(graft.ops.Dedup.mediaBatchDocs(s))
-      .coalesce(1).write.mode("append").parquet(stageDir)
+      .coalesce(1).storeWrite.mode("append").parquet(stageDir)
     stageFiles().foreach { f =>
       val late = if (aNames.contains(f.getName)) 60000 else 30000
       require(f.setLastModified(System.currentTimeMillis() - late),
@@ -1346,7 +1348,7 @@ object Streams {
         .writeStream
         .option("checkpointLocation", ckpt)
         .foreachBatch { (b: DataFrame, _: Long) =>
-          b.withColumn("run", lit(run)).write.mode("append").parquet(sinkDir)
+          b.withColumn("run", lit(run)).storeWrite.mode("append").parquet(sinkDir)
         }
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
@@ -1355,10 +1357,10 @@ object Streams {
     // is about FILES, so fewer, bigger files mean less offset-log and
     // listing floor in both runs (the projection is 2 narrow columns;
     // a real deployment's delta is however many files landed)
-    base.coalesce(1).write.mode("append").parquet(inDir) // run-1 corpus
+    base.coalesce(1).storeWrite.mode("append").parquet(inDir) // run-1 corpus
     runOnce(1)
     base.filter(col("event_type") === "click") // the arriving delta
-      .coalesce(1).write.mode("append").parquet(inDir)
+      .coalesce(1).storeWrite.mode("append").parquet(inDir)
     runOnce(2) // same checkpoint: offset log admits only the delta file
     s.read.parquet(sinkDir)
       .groupBy(col("run"))

@@ -125,4 +125,77 @@ class BucketedStoreSpec extends SparkSpec {
     assert(listing.isEmpty, listing)
     cached.unpersist()
   }
+
+  /** A label table `store/clusters` of docs 0..127 (kb = doc % 64),
+    * each its own cluster. */
+  private def labelStore(): String = {
+    val store = Files.createTempDirectory("label_swap_").toString
+    ops.BucketedStore.writeBucketed(labels((0L until 128L).map(d => d -> d)),
+      s"$store/clusters", "overwrite", "kb", Seq("cluster_id", "doc_id"))
+    store
+  }
+
+  private def labels(rows: Seq[(Long, Long)]): DataFrame = {
+    import spark.implicits._
+    rows.toDF("doc_id", "cluster_id")
+      .withColumn("kb", pmod(col("doc_id"), lit(64)).cast("int"))
+  }
+
+  private def readLabels(store: String): Seq[(Long, Long)] =
+    ops.BucketedStore.table(spark, s"$store/clusters",
+      "doc_id BIGINT, cluster_id BIGINT, kb INT", "kb")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+
+  private def commit(store: String, torn: Boolean, rows: Seq[(Long, Long)],
+      keys: Seq[Int]): Unit =
+    ops.BucketedStore.commitLabels(spark, store, torn, labels(rows), keys,
+      "spec.commit")(Nil)(())
+
+  /** Each bucket dir's data files (name and bytes), hidden names kept. */
+  private def bucketBytes(store: String): Map[String, Seq[(String, Seq[Byte])]] =
+    new java.io.File(s"$store/clusters").listFiles.filter(_.isDirectory)
+      .map(d => d.getName -> d.listFiles.filter(_.isFile).sortBy(_.getName)
+        .toSeq.map(f => (f.getName, Files.readAllBytes(f.toPath).toSeq)))
+      .toMap
+
+  test("a label commit swaps by two renames: untouched buckets stay " +
+    "byte-identical and no aside dir is left") {
+    val store = labelStore()
+    val before = bucketBytes(store)
+    // docs 3 and 67 (kb 3) join cluster 5; doc 5 (kb 5) keeps its label
+    val relabeled = Seq(3L -> 5L, 67L -> 5L, 5L -> 5L, 69L -> 69L)
+    commit(store, torn = false, relabeled, Seq(3, 5))
+    val after = bucketBytes(store)
+    assert(after.keySet === before.keySet, "no aside or extra dir")
+    (0 until 64).filterNot(Set(3, 5)).foreach(k =>
+      assert(after(s"kb=$k") === before(s"kb=$k"), s"kb=$k changed"))
+    assert(after("kb=3") !== before("kb=3"))
+    assert(readLabels(store) === ((0L until 128L).map(d => d -> d).toMap ++
+      relabeled).toSeq.sorted)
+    assert(!ops.BucketedStore.tornMarker(spark, store))
+  }
+
+  test("a crashed swap's aside dir is never read, and the next commit " +
+    "deletes it and restores the bucket it moved aside") {
+    val store = labelStore()
+    val want = readLabels(store)
+    // a crash between kb=7's two renames: its live dir moved aside, the
+    // staged one not yet in, the staging marker still present; a second
+    // leftover carries rows no bucket holds
+    val live = java.nio.file.Paths.get(s"$store/clusters")
+    Files.move(live.resolve("kb=7"), live.resolve("_aside_7"))
+    Files.createDirectories(live.resolve("_aside_9"))
+    Files.list(live.resolve("kb=9")).iterator().forEachRemaining(f =>
+      Files.copy(f, live.resolve("_aside_9").resolve(f.getFileName)))
+    assert(new java.io.File(s"$store/clusters_staging").mkdirs())
+    assert(ops.BucketedStore.tornMarker(spark, store))
+    assert(readLabels(store) === want.filterNot(_._1 % 64 == 7))
+    assert(spark.read.parquet(s"$store/clusters").count() === 126L)
+    // the torn commit stages the whole label set
+    commit(store, torn = true, want, (0 until 64))
+    assert(new java.io.File(s"$store/clusters").list()
+      .filter(_.startsWith("_aside_")).isEmpty)
+    assert(readLabels(store) === want)
+    assert(!ops.BucketedStore.tornMarker(spark, store))
+  }
 }
