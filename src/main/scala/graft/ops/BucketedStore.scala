@@ -15,25 +15,28 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, IntegerType, StructField,
   StructType}
 
-import graft.util.{NioLocalFileSystem, Span}
+import graft.util.NioLocalFileSystem
 
 /** The lifecycle of the engine's parquet stores, one definition each:
-  * the bucketed write, the schema'd read, compaction, the
-  * touched-bucket retraction rewrite, the unpartitioned rename swap,
-  * and the cluster stores' label commit with its torn marker.
+  * the bucketed write, the schema'd read, compaction and the
+  * touched-bucket retraction rewrite. The cluster stores commit through
+  * their log instead ([[StoreLog]]), and share the read and write here.
   *
   * All store I/O goes through the Hadoop FileSystem API resolved from
   * the store path's own scheme: the stores live on HDFS/S3 at the
   * claimed scale, where a local-filesystem listing would silently see
-  * nothing. Listings are bounded and run on the driver, for writes
+  * nothing. Every operation builds its driver-side `FileSystem` once,
+  * from [[NioLocalFileSystem.conf]], so one class sees every store
+  * mutation. Listings are bounded and run on the driver, for writes
   * and reads alike: one `listStatus` of the table dir (at most 64
   * bucket dirs), plus one per bucket a pass touches. A read
   * ([[table]]) lists every bucket dir it reads — a pruned read only
   * its keys' dirs — and starts no Spark listing job. */
 object BucketedStore {
 
-  private def fsOf(s: SparkSession, p: Path): FileSystem =
-    p.getFileSystem(s.sparkContext.hadoopConfiguration)
+  private[ops] def fsOf(s: SparkSession, p: Path): FileSystem =
+    p.getFileSystem(
+      NioLocalFileSystem.conf(s.sparkContext.hadoopConfiguration))
 
   /** The ids of the `bucketCol=N` dirs directly under `dir` (none when
     * `dir` is absent), with each dir's path. */
@@ -50,14 +53,27 @@ object BucketedStore {
       .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
       .map(_.getPath)
 
+  /** A name Spark's file listing reads as data: neither hidden (`_`,
+    * `.`) nor a copy in flight. */
+  private[ops] def isData(name: String): Boolean =
+    !name.startsWith("_") && !name.startsWith(".") &&
+      !name.endsWith("._COPYING_")
+
+  /** The listing-path ops refuse the tables of a store with a commit
+    * log: an unlogged write there would be invisible to its readers, or
+    * delete files its log still names. */
+  private def requireUnlogged(fs: FileSystem, table: Path): Unit =
+    require(!fs.exists(new Path(table.getParent, StoreLog.Dir)),
+      s"$table belongs to a store with a commit log " +
+        s"(${StoreLog.Dir}): read and write it through the log")
+
   /** The schema Spark recorded in one parquet footer of `dir` (its row
     * metadata), plus `partition` when the table is partitioned; None
     * when `dir` is absent or holds no file Spark wrote. Read on the
     * driver, so a store read starts no schema-inference job. */
-  private def schemaOf(s: SparkSession, dir: Path,
+  private def schemaOf(s: SparkSession, fs: FileSystem, dir: Path,
       partition: Option[StructField]): Option[StructType] = {
     val conf = s.sparkContext.hadoopConfiguration
-    val fs = fsOf(s, dir)
     (if (fs.exists(dir)) parquetFiles(fs, dir) else Nil).headOption
       .flatMap { f =>
         val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
@@ -73,10 +89,12 @@ object BucketedStore {
 
   /** A reader carrying the schema of [[schemaOf]] `dir`; without one,
     * Spark's own schema inference (and its errors, a missing path's
-    * included). */
+    * included). It only reads, so it probes through the session's own
+    * cached filesystem. */
   private[graft] def reader(s: SparkSession, dir: Path,
       partition: Option[StructField]): DataFrameReader =
-    schemaOf(s, dir, partition).fold(s.read)(s.read.schema(_))
+    schemaOf(s, dir.getFileSystem(s.sparkContext.hadoopConfiguration), dir,
+      partition).fold(s.read)(s.read.schema(_))
 
   /** The one writer of every parquet store, `rows.storeWrite`:
     * `rows.write` with the per-write Hadoop options of
@@ -112,52 +130,67 @@ object BucketedStore {
       bucketCol: String, keys: Option[Seq[Int]] = None): DataFrame = {
     val root = new Path(path)
     val fs = fsOf(s, root)
+    requireUnlogged(fs, root)
     if (!fs.exists(root)) return s.read.schema(schema).parquet(path)
-    val full = StructType.fromDDL(schema)
-    require(full.last.name == bucketCol &&
-      full.last.dataType == IntegerType,
-      s"bucketed table $path: the last column of '$schema' must be the " +
-        s"INT bucket column $bucketCol")
-    val index = new BucketIndex(s, fs.makeQualified(root), bucketCol, keys)
-    val df = s.baseRelationToDataFrame(HadoopFsRelation(index,
-      StructType(Seq(full.last)), StructType(full.init), None,
-      new ParquetFileFormat, Map.empty)(s))
-    keys.fold(df)(ks =>
-      if (ks.isEmpty) df.limit(0) else df.filter(col(bucketCol).isin(ks: _*)))
+    val qualified = fs.makeQualified(root)
+    relation(s, qualified, schema, Some(bucketCol), keys) { () =>
+      keys.fold(bucketDirs(fs, qualified, bucketCol))(
+        _.distinct.map(k => (k, new Path(qualified, s"$bucketCol=$k"))))
+        .flatMap { case (k, dir) =>
+          val data =
+            try fs.listStatus(dir).filter(f => f.isFile &&
+              isData(f.getPath.getName))
+            catch {
+              case _: java.io.FileNotFoundException => Array.empty[FileStatus]
+            }
+          Option.when(data.nonEmpty)((k, dir, data))
+        }
+    }
   }
 
-  /** [[table]]'s file index: the bucket dirs of `root` (or only the
-    * `keys` dirs) and their data files, listed on the driver when built
-    * and on every `refresh()`. */
-  private final class BucketIndex(s: SparkSession, root: Path,
-      bucketCol: String, keys: Option[Seq[Int]])
-      extends PartitioningAwareFileIndex(s, Map.empty, None) {
-    @volatile private var listed = list()
-
-    private def list(): (PartitionSpec, Map[Path, Array[FileStatus]],
-        mutable.LinkedHashMap[Path, FileStatus]) = {
-      val fs = root.getFileSystem(hadoopConf)
-      val dirs = keys.fold(bucketDirs(fs, root, bucketCol))(
-        _.distinct.map(k => (k, new Path(root, s"$bucketCol=$k"))))
-      val files = dirs.flatMap { case (k, dir) =>
-        val data =
-          try fs.listStatus(dir)
-            .filter(f => f.isFile && isData(f.getPath.getName))
-          catch {
-            case _: java.io.FileNotFoundException => Array.empty[FileStatus]
-          }
-        Option.when(data.nonEmpty)((k, dir, data))
-      }
-      (PartitionSpec(StructType(Seq(StructField(bucketCol, IntegerType))),
-        files.map { case (k, dir, _) => PartitionPath(InternalRow(k), dir) }),
-        files.map { case (_, dir, data) => dir -> data }.toMap,
-        mutable.LinkedHashMap.from(
-          files.flatMap(_._3).map(f => f.getPath -> f)))
+  /** A parquet table over the files `files` gives — (bucket, dir, data
+    * files) per non-empty bucket dir of `root`, or one (_, `root`,
+    * files) entry without `bucketCol` — read under `schema` (DDL; with
+    * `bucketCol`, its last column is that INT partition column) and
+    * filtered to `keys` when given. `files` runs when the frame is
+    * built and on every `refresh()`. */
+  private[ops] def relation(s: SparkSession, root: Path, schema: String,
+      bucketCol: Option[String], keys: Option[Seq[Int]])(
+      files: () => Seq[(Int, Path, Array[FileStatus])]): DataFrame = {
+    val full = StructType.fromDDL(schema)
+    bucketCol.foreach(c => require(full.last.name == c &&
+      full.last.dataType == IntegerType,
+      s"bucketed table $root: the last column of '$schema' must be the " +
+        s"INT bucket column $c"))
+    val partition = StructType(bucketCol.map(_ => full.last).toSeq)
+    val df = s.baseRelationToDataFrame(HadoopFsRelation(
+      new BucketIndex(s, root, bucketCol, files), partition,
+      StructType(full.filterNot(partition.contains)), None,
+      new ParquetFileFormat, Map.empty)(s))
+    (bucketCol, keys) match {
+      case (Some(c), Some(ks)) =>
+        if (ks.isEmpty) df.limit(0) else df.filter(col(c).isin(ks: _*))
+      case _ => df
     }
+  }
 
-    private def isData(name: String): Boolean =
-      !name.startsWith("_") && !name.startsWith(".") &&
-        !name.endsWith("._COPYING_")
+  /** [[relation]]'s file index. */
+  private final class BucketIndex(s: SparkSession, root: Path,
+      bucketCol: Option[String],
+      files: () => Seq[(Int, Path, Array[FileStatus])])
+      extends PartitioningAwareFileIndex(s, Map.empty, None) {
+    @volatile private var listed = index()
+
+    private def index(): (PartitionSpec, Map[Path, Array[FileStatus]],
+        mutable.LinkedHashMap[Path, FileStatus]) = {
+      val dirs = files()
+      (bucketCol.fold(PartitionSpec.emptySpec)(c =>
+        PartitionSpec(StructType(Seq(StructField(c, IntegerType))),
+          dirs.map { case (k, dir, _) => PartitionPath(InternalRow(k), dir) })),
+        dirs.map { case (_, dir, data) => dir -> data }.toMap,
+        mutable.LinkedHashMap.from(
+          dirs.flatMap(_._3).map(f => f.getPath -> f)))
+    }
 
     override def rootPaths: Seq[Path] = Seq(root)
     override def partitionSpec(): PartitionSpec = listed._1
@@ -165,7 +198,7 @@ object BucketedStore {
         : Map[Path, Array[FileStatus]] = listed._2
     override protected def leafFiles
         : mutable.LinkedHashMap[Path, FileStatus] = listed._3
-    override def refresh(): Unit = listed = list()
+    override def refresh(): Unit = listed = index()
   }
 
   /** The one write of every bucketed store: `rows` land under `path`
@@ -180,16 +213,26 @@ object BucketedStore {
     * its data: coalescing only merges whole hash partitions, so a
     * bucket never splits across tasks at any width (a fixed 64 paid 64
     * tasks for a 40-row micro-batch append). `dynamicOverwrite`
-    * replaces only the buckets `rows` holds and leaves the rest. */
+    * replaces only the buckets `rows` holds and leaves the rest;
+    * `options` are further per-write Hadoop options (a logged
+    * commit's file-name prefix). */
   private[graft] def writeBucketed(rows: DataFrame, path: String,
       mode: String, bucketCol: String, ordCols: Seq[String],
-      dynamicOverwrite: Boolean = false): Unit = {
+      dynamicOverwrite: Boolean = false,
+      options: Map[String, String] = Map.empty): Unit = {
     val w = rows.repartition(col(bucketCol))
       .sortWithinPartitions((bucketCol +: ordCols).map(col): _*)
-      .storeWrite.mode(mode)
+      .storeWrite.options(options).mode(mode)
     (if (dynamicOverwrite) w.option("partitionOverwriteMode", "dynamic")
      else w).partitionBy(bucketCol).parquet(path)
   }
+
+  /** The rows of `rows` whose `idCol` is not in `delete` (a one-column
+    * frame of ids), projected to `cols`: a retraction's survivors. */
+  private[ops] def survivors(rows: DataFrame, delete: DataFrame,
+      idCol: String, cols: Seq[String]): DataFrame =
+    rows.join(delete.toDF(idCol), Seq(idCol), "left_anti")
+      .select(cols.map(col): _*)
 
   /** Compaction of a hash-bucket-partitioned store: enumerate bucket
     * dirs DRIVER-SIDE (bounded listing, no scan), read ONLY the
@@ -211,13 +254,14 @@ object BucketedStore {
       fold: Option[DataFrame => DataFrame] = None): Seq[Int] = {
     val root = new Path(store)
     val fs = fsOf(s, root)
+    requireUnlogged(fs, root)
     val over = bucketDirs(fs, root, partCol)
       .filter { case (_, dir) =>
         parquetFiles(fs, dir).size > maxFilesPerBucket }
       .sortBy(_._1)
     if (over.isEmpty) return Seq.empty
     val tmp = store + "_compacting"
-    val schema = schemaOf(s, over.head._2,
+    val schema = schemaOf(s, fs, over.head._2,
         Some(StructField(partCol, IntegerType)))
       .getOrElse(sys.error(s"compaction: no Spark footer in ${over.head._2}"))
     val pruned = table(s, store, schema.toDDL, partCol, Some(over.map(_._1)))
@@ -234,44 +278,6 @@ object BucketedStore {
     try fs.delete(new Path(tmp), true)
     catch { case _: java.io.IOException => () }
     over.map(_._1)
-  }
-
-  /** Compaction of an UNPARTITIONED parquet table that gains one
-    * file-set per append (the cluster stores' edge tables): when it
-    * holds more than `maxFiles` parquet files, rewrite it DISTINCT
-    * (idempotent; reclaims replayed appends) through
-    * [[replaceUnpartitioned]]. */
-  private[graft] def compactUnpartitioned(s: SparkSession, dir: String,
-      maxFiles: Int): Unit = {
-    val live = new Path(dir)
-    val fs = fsOf(s, live)
-    if (fs.exists(live) && parquetFiles(fs, live).size > maxFiles)
-      replaceUnpartitioned(s, dir,
-        reader(s, live, None).parquet(dir).distinct(), maxFiles)
-  }
-
-  /** Replace an unpartitioned table with `rows` (which may read the
-    * table itself) as at most `nFiles` files (coalesce, no shuffle),
-    * each sorted by all of its columns so its bytes do not depend on
-    * the order the scan met its rows in: write them to a sibling temp
-    * dir, then swap by RENAME. Both copies exist on disk at every
-    * instant; the worst crash leaves the live path briefly absent —
-    * which the cluster stores' existence checks fail fast on — with
-    * the previous table intact at `<dir>_old` for manual recovery. */
-  private[graft] def replaceUnpartitioned(s: SparkSession, dir: String,
-      rows: DataFrame, nFiles: Int): Unit = {
-    val live = new Path(dir)
-    val fs = fsOf(s, live)
-    val tmp = new Path(s"${dir}_replacing")
-    rows.coalesce(nFiles).sortWithinPartitions(rows.columns.map(col): _*)
-      .storeWrite.mode("overwrite").parquet(tmp.toString)
-    val old = new Path(s"${dir}_old")
-    if (fs.exists(old)) fs.delete(old, true)
-    require(fs.rename(live, old), s"could not move $live aside")
-    require(fs.rename(tmp, live),
-      s"could not move $tmp into place — previous table preserved at $old")
-    try fs.delete(old, true)
-    catch { case _: java.io.IOException => () }
   }
 
   /** Touched-bucket rewrite for a retraction: the `keys` buckets of
@@ -291,9 +297,8 @@ object BucketedStore {
     // surviving buckets via the materialization's own observe (round
     // 17, materializeWithKeys) — one job instead of two per rewrite
     val (rewritten, survivedKeys) = Dedup.materializeWithKeys(
-      table(s, path, schema, bucketCol, Some(keys))
-        .join(delete.toDF(idCol), Seq(idCol), "left_anti")
-        .select((projCols :+ bucketCol).map(col): _*),
+      survivors(table(s, path, schema, bucketCol, Some(keys)), delete,
+        idCol, projCols :+ bucketCol),
       bucketCol)
     val survived = survivedKeys.toSet
     if (survived.nonEmpty)
@@ -312,146 +317,10 @@ object BucketedStore {
     * right-to-be-forgotten path that failure must surface, not
     * vanish). An already-absent directory IS success: a replayed
     * retraction re-names buckets its first delivery removed, and
-    * replay-idempotence requires treating them as done. Best-effort
-    * try/ignore remains appropriate only for `_old`/staging cleanup,
-    * where a leftover dir is garbage, not a correctness hazard. */
+    * replay-idempotence requires treating them as done. */
   private def deleteEmptiedBucket(fs: FileSystem, path: Path): Unit =
     if (fs.exists(path))
       require(fs.delete(path, true),
         s"retraction: could not delete emptied bucket $path — a ghost " +
           "bucket would keep serving retracted rows")
-
-  private val StagingDir = "clusters_staging"
-
-  /** The cluster stores' crashed-commit marker: [[commitLabels]]
-    * writes the `clusters_staging` dir before the edges change and
-    * deletes it after the label swap, so a clean store never carries
-    * it and every torn window does. Clean commits therefore pay one FS
-    * existence probe instead of any O(edges) invariant work. */
-  private[graft] def tornMarker(s: SparkSession, store: String): Boolean = {
-    val p = new Path(s"$store/$StagingDir")
-    fsOf(s, p).exists(p)
-  }
-
-  /** A live label bucket moved aside by [[swapStagedBuckets]], as
-    * `_aside_N`: hidden from every reader. [[table]] lists only `kb=`
-    * dirs, and Spark's listing skips a `_` name unless it holds a `=`
-    * (a partition dir). */
-  private val AsidePrefix = "_aside_"
-
-  /** Swap the staging dir's `kb=N` dirs into the live label table by
-    * two RENAMES each: the live dir aside to `_aside_N`, the staged
-    * dir in, then the aside dir deleted — metadata only, no data bytes
-    * move on a rename-capable filesystem. Every bucket's labels stay on
-    * disk under a live or an aside name at every instant. Returns the
-    * staged bucket ids (partitionBy writes no dir for an empty
-    * bucket). */
-  private def swapStagedBuckets(fs: FileSystem, staged: Path,
-      live: Path): Seq[Int] =
-    bucketDirs(fs, staged, "kb").map { case (k, dir) =>
-      val target = new Path(live, dir.getName)
-      val aside = new Path(live, s"$AsidePrefix$k")
-      val replaced = fs.exists(target)
-      if (replaced)
-        require(fs.rename(target, aside),
-          s"bucket swap: could not move $target aside")
-      require(fs.rename(dir, target),
-        s"bucket swap: could not move $dir into place")
-      if (replaced)
-        require(fs.delete(aside, true),
-          s"bucket swap: could not delete $aside")
-      k
-    }
-
-  /** Delete the aside dirs a crashed [[swapStagedBuckets]] left in
-    * `live`, before a swap reuses their names. */
-  private def deleteAsideDirs(fs: FileSystem, live: Path): Unit =
-    if (fs.exists(live))
-      fs.listStatus(live)
-        .filter(_.getPath.getName.startsWith(AsidePrefix))
-        .foreach(st => require(fs.delete(st.getPath, true),
-          s"bucket swap: could not delete leftover ${st.getPath}"))
-
-  /** The label commit of the cluster stores (the MinHash store's
-    * update, the unified store's update and retraction). `staged` are
-    * the new label rows of the `keys` buckets of `store/clusters`
-    * (kb = pmod(doc_id, 64)); `torn` is [[tornMarker]] as read ONCE,
-    * before this commit's staging write — the staging dir IS the
-    * marker, so a later read would call every commit torn. Steps, in
-    * order:
-    *  1. the label staging write and the caller's `writes` (index
-    *     appends or rewrites) as ONE concurrent wave
-    *     (`<span>.stage_and_writes`). The writes are mutually
-    *     independent (disjoint paths, pre-materialized inputs);
-    *  2. the caller's `edges` write (`<span>.edges`);
-    *  3. the label swap (`<span>.label_swap`): each staged bucket dir
-    *     replaces its live dir by two renames ([[swapStagedBuckets]]),
-    *     and every key the swap did not bring back is deleted — a
-    *     bucket whose docs all left the label table. Then one
-    *     `refreshByPath`; DataFrames created
-    *     before the swap still hold the pre-swap file listing (Spark's
-    *     snapshot semantics), so collect them first or re-create them;
-    *  4. the marker is deleted — unconditionally: a commit that staged
-    *     nothing still certifies the store, because its relabel ran
-    *     against the marker it read.
-    *
-    * When `torn`, `staged` must be the WHOLE label set, CC(edges)
-    * (the heals of [[Dedup.relabelAgainst]] and of the retraction),
-    * and the keys are every live bucket plus the staged ones: a bucket
-    * the crashed commit should have emptied (a retracted doc's label)
-    * is deleted rather than left as a ghost. A torn commit first
-    * deletes any aside dir a crashed swap left behind.
-    *
-    * Crash posture. The steps are not atomic; the marker makes every
-    * crash window visible. It exists from step 1 to step 4 whenever
-    * step 2, the only step that can break labels = CC(edges), changes
-    * the edge set: a changed edge touches a component, and a touched
-    * component stages its label buckets. A crash inside
-    * step 1 can leave index rows changed with no marker; index rows are
-    * idempotent facts that cannot break that invariant: the batch's
-    * docs are band-discoverable but unclustered (update) or edge-visible
-    * but not band-discoverable (retraction) until the same batch is
-    * replayed. Indices change before edges, so a crash can never
-    * persist an edge whose doc no future batch can band-match. A crash
-    * in steps 2-4 leaves the marker beside stale or mixed-generation
-    * label buckets. A crash between a bucket's two renames leaves its
-    * live dir absent and its previous labels in an aside dir that no
-    * reader sees; a swap runs only after the staging write that
-    * created the marker, so an aside dir never outlives its marker.
-    * Read-backs refuse a marked store, and the next completed update
-    * (any batch, empty included) or retraction deletes the aside dirs
-    * and rebuilds the whole label set as CC(edges). What a crash
-    * can lose is the un-written tail of its own batch (its edges, or
-    * its index rows and edges): replaying the same batch restores them
-    * byte-identically (the at-least-once posture of the `foreachBatch`
-    * callers; replayed appends anti-join away, and compaction's
-    * DISTINCT reclaims duplicate index rows). */
-  private[graft] def commitLabels(s: SparkSession, store: String,
-      torn: Boolean, staged: DataFrame, keys: Seq[Int], span: String)(
-      writes: Seq[() => Unit])(edges: => Unit): Unit = {
-    val tmp = new Path(s"$store/$StagingDir")
-    val live = new Path(s"$store/clusters")
-    val fs = fsOf(s, tmp)
-    Span(s, s"$span.stage_and_writes")(UnifiedClusters.inParallel(
-      (() => if (keys.nonEmpty) writeBucketed(staged, tmp.toString,
-        "overwrite", "kb", Seq("cluster_id", "doc_id"))) +: writes))
-    Span(s, s"$span.edges")(edges)
-    val all =
-      if (torn) {
-        deleteAsideDirs(fs, live)
-        (keys ++ bucketDirs(fs, live, "kb").map(_._1)).distinct
-      } else keys
-    if (all.nonEmpty) Span(s, s"$span.label_swap") {
-      // with no keys nothing was staged: a crashed commit's leftovers
-      // in the marker dir must not be swapped in
-      val survived =
-        if (keys.isEmpty) Set.empty[Int]
-        else swapStagedBuckets(fs, tmp, live).toSet
-      all.filterNot(survived).foreach(k =>
-        deleteEmptiedBucket(fs, new Path(live, s"kb=$k")))
-      s.catalog.refreshByPath(store)
-    }
-    try fs.delete(tmp, true)
-    catch { case _: java.io.IOException => () }
-  }
 }

@@ -22,8 +22,8 @@ import graft.util.Span
   */
 object Dedup {
   import Tables._
-  import BucketedStore.{StoreWriter, compactBuckets, compactUnpartitioned,
-    retractBucketRewrite, tornMarker, writeBucketed}
+  import BucketedStore.{StoreWriter, compactBuckets, retractBucketRewrite,
+    writeBucketed}
 
   /** Re-key offset for the q83/q85 planted-duplicate fixtures: copies
     * of low-id corpus docs join the arriving batch under
@@ -432,7 +432,8 @@ object Dedup {
     * pipeline runs exactly once at build time; CC then runs over the
     * written edge table (lineage break — no signature or join
     * re-runs for the label pass). */
-  def neardupClusterStoreWrite(docs: DataFrame, store: String): Unit = {
+  def neardupClusterStoreWrite(docs: DataFrame, store: String): Unit =
+      StoreLog.build(docs.sparkSession, store) {
     val s = docs.sparkSession
     neardupIndexWrite(docs, s"$store/bands")
     val bands = bandIndexTable(s, s"$store/bands")
@@ -446,7 +447,8 @@ object Dedup {
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
       .distinct()
       .storeWrite.mode("overwrite").parquet(s"$store/edges")
-    writeBucketed(connectedComponents(clusterEdgesTable(s, store))
+    writeBucketed(connectedComponents(
+        s.read.schema(NdEdges.schema).parquet(s"$store/edges"))
       .withColumn("kb", clusterBucket(col("doc_id"))),
       s"$store/clusters", "overwrite", "kb", Seq("cluster_id", "doc_id"))
   }
@@ -478,26 +480,28 @@ object Dedup {
   private val BandIndexSchema =
     "doc_id BIGINT, mins ARRAY<BIGINT>, band INT, k1 BIGINT, k2 BIGINT, kb INT"
   private val ExactIndexSchema = "content_hash STRING, bucket INT"
-  private[graft] def clusterEdgesTable(s: SparkSession,
-      store: String): DataFrame =
-    s.read.schema("doc_a BIGINT, doc_b BIGINT")
-      .parquet(s"$store/edges")
+  private val Bands = StoreLog.Layout("bands", BandIndexSchema, Some("kb"),
+    Seq("band", "k1", "k2"))
+  private val NdEdges = StoreLog.Layout("edges",
+    "doc_a BIGINT, doc_b BIGINT", None, Seq("doc_a", "doc_b"))
 
-  /** CAVEAT (round-18 ADVICE): a DIRECT read of this table does not
-    * check [[BucketedStore.tornMarker]]. After a crashed label commit
-    * ([[BucketedStore.commitLabels]]) the table can be stale, miss a
-    * bucket (a crash between the swap's two renames leaves its labels
-    * in an `_aside_` dir, which no reader sees) or keep a bucket a
-    * crashed retraction emptied, until the next completed update or
-    * retraction rebuilds the whole label set. The merges heal in
-    * [[relabelAgainst]] and
-    * unifiedClustersFromStore refuses on the marker; any other
-    * read-back path must mirror that refusal. */
+  /** The MinHash cluster store's committed version; fails with the
+    * layout's own vocabulary when `store` was never built — a raw
+    * parquet path error from deep inside the merge would name none of
+    * it. */
+  private def openClusterStore(s: SparkSession, store: String) =
+    StoreLog.open(s, store, "cluster store", "neardupClusterStoreWrite")
+
+  /** The label table of a cluster store (the MinHash and the unified
+    * store share its layout). */
+  private[graft] val ClusterLabels = StoreLog.Layout("clusters",
+    "doc_id BIGINT, cluster_id BIGINT, cluster_size BIGINT, " +
+      "is_canonical BOOLEAN, kb INT", Some("kb"), Seq("cluster_id", "doc_id"))
+
+  /** The label table of the MinHash cluster store's newest version. */
   private[graft] def clusterLabelsTable(s: SparkSession,
       store: String): DataFrame =
-    BucketedStore.table(s, s"$store/clusters", "doc_id BIGINT, " +
-      "cluster_id BIGINT, cluster_size BIGINT, is_canonical BOOLEAN, kb INT",
-      "kb")
+    openClusterStore(s, store).read(ClusterLabels)
 
   /** The batch's new verified edges as an UNmaterialized plan — the
     * pruned-band-index join shape PlanShapeSpec pins (the merge itself
@@ -506,7 +510,7 @@ object Dedup {
   private[graft] def clusterMergeNewEdgesPlan(s: SparkSession,
       store: String, newDocs: DataFrame): DataFrame = {
     val (batchBands, keys) = batchBandsOf(newDocs)
-    newEdgesFromBands(s, store, batchBands, keys)
+    newEdgesFromBands(openClusterStore(s, store), batchBands, keys)
   }
 
   /** The batch's materialized band table (the q85 merge shape): band
@@ -523,7 +527,7 @@ object Dedup {
           pmod(xxhash64(col("band"), col("k1")), lit(64)).cast("int")),
       "kb")
 
-  private def newEdgesFromBands(s: SparkSession, store: String,
+  private def newEdgesFromBands(v: StoreLog.Version,
       batchBands: DataFrame, keys: Seq[Int]): DataFrame = {
     val nMatch = graft.functions.LongArrayEqCount(
       col("x.mins"), col("y.mins"))
@@ -533,7 +537,7 @@ object Dedup {
           .select(col("doc_id").as("doc_a"), col("doc_id").as("doc_b"))
           .limit(0)
       else
-        bandIndexTable(s, s"$store/bands", Some(keys)).as("x")
+        v.read(Bands, Some(keys)).as("x")
           .join(batchBands.as("y").hint("shuffle_hash"),
             col("x.band") === col("y.band") &&
               col("x.k1") === col("y.k1") && col("x.k2") === col("y.k2"))
@@ -553,25 +557,11 @@ object Dedup {
     crossEdges.unionByName(intraEdges).distinct()
   }
 
-  /** Fail fast with the store layout's own vocabulary when a cluster
-    * store is missing or partial — a raw parquet path error from deep
-    * inside the merge would name none of it. Torn stores (a crashed
-    * update's appends beside a stale label table) are not an error:
-    * clusterMergeParts HEALS them — see the marker contract there. */
-  private def requireClusterStore(s: SparkSession, store: String): Unit = {
-    val conf = s.sparkContext.hadoopConfiguration
-    Seq("bands", "edges", "clusters").foreach { part =>
-      val p = new org.apache.hadoop.fs.Path(s"$store/$part")
-      require(p.getFileSystem(conf).exists(p),
-        s"cluster store at '$store' has no '$part' table — build it " +
-          "with neardupClusterStoreWrite before merging")
-    }
-  }
-
   /** The merge computation, exposed as parts so the persist path can
-    * reuse them: (batch band table, new verified edges, untouched
-    * label rows WITH their kb bucket, relabeled touched-subgraph
-    * rows). Plan shape: the band-index read is partition-pruned to
+    * reuse them: (the store's version, batch band table and its kb
+    * buckets, new verified edges, untouched label rows WITH their kb
+    * bucket, relabeled touched-subgraph rows). Plan shape: the
+    * band-index read is partition-pruned to
     * the batch's kb buckets (q85's static-IN argument); the batch's
     * band table is materialized once and feeds the bucket collect +
     * both verify joins; touched-cluster ids and new-edge endpoints
@@ -581,16 +571,15 @@ object Dedup {
     * probe and the untouched pass-through) — pair-graph-bounded scans,
     * never the corpus. */
   private def clusterMergeParts(s: SparkSession, store: String,
-      newDocs: DataFrame)
-      : (DataFrame, DataFrame, DataFrame, DataFrame, Boolean) = {
-    requireClusterStore(s, store)
+      newDocs: DataFrame): (StoreLog.Version, DataFrame, Seq[Int],
+      DataFrame, DataFrame, DataFrame) = {
+    val v = openClusterStore(s, store)
     val (batchBands, bandKeys) = batchBandsOf(newDocs)
     val newEdges = materializeBounded(
-      newEdgesFromBands(s, store, batchBands, bandKeys))
-    val torn = tornMarker(s, store)
+      newEdgesFromBands(v, batchBands, bandKeys))
     val (untouched, relabeled) = relabelAgainst(newEdges,
-      clusterEdgesTable(s, store), clusterLabelsTable(s, store), torn)
-    (batchBands, newEdges, untouched, relabeled, torn)
+      v.read(NdEdges), v.read(ClusterLabels))
+    (v, batchBands, bandKeys, newEdges, untouched, relabeled)
   }
 
   /** The touched-component relabel, FAMILY-AGNOSTIC (round 13 — the
@@ -602,47 +591,10 @@ object Dedup {
     * touched-subgraph rows). Shared by the MinHash cluster store
     * (q89/s15) and the unified multi-signal store (q61d). Both
     * edge inputs must be bare (doc_a, doc_b) — provenance-carrying
-    * callers project the family column away first.
-    *
-    * TORN-store heal (ADVICE r10, reworked round 11): when the
-    * staging marker says a previous update crashed between its first
-    * append and its completed swap, the label table is UNTRUSTED —
-    * it can be stale (crash before the swap) or, worse,
-    * mixed-generation (crash mid-way through the dynamic partition
-    * overwrite: some buckets new, some old), in which case ANY
-    * label-driven touched/untouched attribution can both duplicate
-    * docs and under-pull their components. So the heal does not
-    * attribute at all: it rebuilds the ENTIRE label set as
-    * CC(standing edges ∪ new edges) — labels = CC(edges) is the
-    * store invariant, so the rebuild is exact by definition, a merge
-    * over a torn store still returns the full-recompute answer, and
-    * ANY completed persisting update repairs the store (a fail-fast
-    * here would have killed the s15 replay path that is documented
-    * to do the repairing). Cost: pair-graph-bounded CC, paid only on
-    * the crash-recovery path; clean stores skip all of this on one
-    * FS existence probe. Rows the crashed batch never got to append
-    * (its bands, or its edges) are NOT reconstructable here — replay
-    * restores them byte-identically (the at-least-once posture);
-    * the heal guarantees consistency, not recovery of unpersisted
-    * data. */
+    * callers project the family column away first. */
   private[graft] def relabelAgainst(newEdges: DataFrame,
-      standingEdges: DataFrame, clusters: DataFrame,
-      torn: Boolean): (DataFrame, DataFrame) = {
-    if (torn) {
-      // edge tables are strict doc_a < doc_b by construction, so the
-      // materialized union satisfies connectedComponentsMaterialized's
-      // no-self-pair leaf contract; the count rides the
-      // materialization (round 17 — the public wrapper would
-      // re-materialize this leaf a second time)
-      val (allEdges, nAll) = materializeWithCount(
-        newEdges.unionByName(standingEdges).distinct())
-      return (clusters.limit(0)
-        .select(col("doc_id"), col("cluster_id"), col("cluster_size"),
-          col("is_canonical"), col("kb")),
-        connectedComponentsMaterialized(allEdges, nAll)
-          .select(col("doc_id"), col("cluster_id"), col("cluster_size"),
-            col("is_canonical")))
-    }
+      standingEdges: DataFrame, clusters: DataFrame)
+      : (DataFrame, DataFrame) = {
     val endpoints = newEdges.select(col("doc_a").as("doc_id"))
       .unionByName(newEdges.select(col("doc_b").as("doc_id"))).distinct()
     val touched = materializeBounded(
@@ -685,47 +637,40 @@ object Dedup {
     * [[neardupClusterStoreUpdate]] for the persisting twin. */
   def neardupClusterMerge(s: SparkSession, store: String,
       newDocs: DataFrame): DataFrame = {
-    val (_, _, untouched, relabeled, _) =
+    val (_, _, _, _, untouched, relabeled) =
       clusterMergeParts(s, store, newDocs)
     untouched.drop("kb").unionByName(relabeled)
       .orderBy(col("cluster_id"), col("doc_id"))
   }
 
-  /** Persist the merge: append the batch's band rows (future merges
-    * near-dup-check against them), append the new edges, and rewrite
-    * ONLY the cluster-table buckets that hold a relabeled doc
-    * (VERDICT r10 #2 — this closes the O(new) story for WRITES, not
-    * just the CC compute). The relabeled rows are the touched
-    * subgraph — pair-graph-bounded, orders below the corpus — so the
-    * set of dirty pmod(doc_id, 64) buckets is collected driver-side
-    * (<= 64 ints, the corpusMerge convention); each dirty bucket's
-    * new content is its untouched pass-through rows (a PARTITION-
-    * PRUNED read of the standing label table) plus its relabeled
-    * rows, staged to a sibling dir (Spark refuses a read-and-
-    * overwrite of the same path) and swapped in by rename, so
-    * untouched buckets' files are never rewritten (byte-identical
-    * across a merge, pinned in GenericApiSpec). The bands append rides the
-    * label commit's first wave and the edges append is its edges
-    * step; crash posture: [[BucketedStore.commitLabels]]. */
+  /** Persist the merge in one commit of the store's log: append the
+    * batch's band rows (future merges near-dup-check against them),
+    * append the new edges, and replace ONLY the cluster-table buckets
+    * that hold a relabeled doc (VERDICT r10 #2 — this closes the O(new)
+    * story for WRITES, not just the CC compute). The relabeled rows are
+    * the touched subgraph — pair-graph-bounded, orders below the
+    * corpus — so the set of dirty pmod(doc_id, 64) buckets is collected
+    * driver-side (<= 64 ints, the corpusMerge convention); each dirty
+    * bucket's new content is its untouched pass-through rows (a
+    * PARTITION-PRUNED read of the standing label table) plus its
+    * relabeled rows, so untouched buckets' files are never rewritten
+    * (byte-identical across a merge, pinned in GenericApiSpec). */
   def neardupClusterStoreUpdate(s: SparkSession, store: String,
       newDocs: DataFrame): Unit = {
-    val (batchBands, newEdges, untouched, relabeled, torn) =
+    val (v, batchBands, bandKeys, newEdges, untouched, relabeled) =
       clusterMergeParts(s, store, newDocs)
     Span(s, "nd.update") {
       val (staged, buckets) = labelStaging(untouched, relabeled)
-      BucketedStore.commitLabels(s, store, torn, staged, buckets,
-        "nd.update")(Seq(
+      v.commit("nd.update")(Seq(
+        v.write(ClusterLabels, staged, buckets, replace = true),
         // ALWAYS append the batch's band rows — an edgeless batch is
         // still admitted corpus that future merges must match against
         // — reusing the merge's OWN materialized band table
         // (neardupIndexWrite layout) instead of re-running the batch's
         // signature pipeline a second time: one signature pass per
         // persisted merge.
-        () => writeBucketed(batchBands
-          .select(col("doc_id"), col("mins"), col("band"), col("k1"),
-            col("k2"), col("kb")), // neardupIndexWrite's column order
-          s"$store/bands", "append", "kb", Seq("band", "k1", "k2"))))(
-        newEdges.storeWrite.mode("append").parquet(s"$store/edges"))
+        v.write(Bands, batchBands, bandKeys),
+        v.write(NdEdges, newEdges, phase = "edges")))
     }
   }
 
@@ -742,20 +687,17 @@ object Dedup {
       buckets)
   }
 
-  /** Bound the cluster store's file counts under daily merges: bands
-    * compact via the shared bucket pass (neardupIndexCompact), and the
-    * unpartitioned edge table — which gains one file-set per merge —
-    * via [[BucketedStore.compactUnpartitioned]]. The cluster table
-    * needs no compaction: every bucket it has was last written as one
-    * file (store write and label staging both co-locate each bucket
-    * into one task), and the label swap REPLACES a bucket's dir rather
-    * than appending to it. Returns the compacted band-bucket ids. */
+  /** Bound the cluster store's file counts under daily merges, in one
+    * commit: band buckets over `maxFilesPerBucket` files are rewritten
+    * as one file each, and the unpartitioned edge table — which gains
+    * one file-set per merge — as at most `maxFilesPerBucket` files,
+    * both DISTINCT. The cluster table needs no compaction: a label
+    * commit replaces each bucket it touches with one file. */
   def neardupClusterStoreCompact(s: SparkSession, store: String,
-      maxFilesPerBucket: Int = 4): Seq[Int] = {
-    val bandBuckets = neardupIndexCompact(s, s"$store/bands",
-      maxFilesPerBucket)
-    compactUnpartitioned(s, s"$store/edges", maxFilesPerBucket)
-    bandBuckets
+      maxFilesPerBucket: Int = 4): Unit = {
+    val v = openClusterStore(s, store)
+    v.commit("nd.compact")(
+      Seq(Bands, NdEdges).flatMap(v.compaction(_, maxFilesPerBucket)))
   }
 
   /** Declared write-then-merge binding (the q85 pattern lifted to the

@@ -69,8 +69,10 @@ import graft.util.Span
   * its band/hash join; the relabel's CC sees only new + touched
   * edges. Nothing rescans corpus text, pixels, or float vectors.
   *
-  * Crash posture: update and retraction persist through the MinHash
-  * store's label commit, [[BucketedStore.commitLabels]].
+  * Crash posture: the build, update, retraction and compaction commit
+  * through the store's log ([[StoreLog]]): the index writes, the edges
+  * and the dirty label buckets of one mutation land in one entry, so
+  * labels = CC(edges) holds at every version a reader can see.
   *
   * Ref intended semantics: continuous point upserts into standing
   * series, rg.py:43-50 — re-expressed as standing-index maintenance.
@@ -151,18 +153,33 @@ object UnifiedClusters {
           t
         }))
 
-  // ---- family table layouts (schema'd: empty-partitioned-write safe;
-  // read through BucketedStore.table) ----------------------------------
-  private val ShingleSchema = "doc_id BIGINT, c BIGINT, h BIGINT, kb INT"
-  private val LshSchema = "vec_id BIGINT, band INT, bkey BIGINT, kb INT"
-  private val VecSchema = "vec_id BIGINT, qe ARRAY<BIGINT>, kv INT"
+  // ---- table layouts (schema'd: empty-partitioned-write safe; read
+  // through the store's log) ------------------------------------------
+  private def sigIndex(table: String, sigCol: String) = StoreLog.Layout(
+    table, Multimodal.sigStoreSchema(sigCol), Some("kb"), Seq("band", "ckey"))
+  /** The six index tables, in [[batchRowsOf]]'s order; each table's
+    * first column is the id a retraction deletes by. */
+  private val Indices = Seq(
+    StoreLog.Layout("shingle", "doc_id BIGINT, c BIGINT, h BIGINT, kb INT",
+      Some("kb"), Seq("h")),
+    sigIndex("simhash", "simhash"),
+    StoreLog.Layout("emb_lsh", "vec_id BIGINT, band INT, bkey BIGINT, kb INT",
+      Some("kb"), Seq("band", "bkey")),
+    sigIndex("img_ahash", "ahash"),
+    sigIndex("ehash", "ehash"),
+    StoreLog.Layout("emb_vec", "vec_id BIGINT, qe ARRAY<BIGINT>, kv INT",
+      Some("kv"), Seq("vec_id")))
+  private val Index = Indices.map(l => l.table -> l).toMap
   // the edge table's in-file order: an edges file's bytes (and so the
   // store's size) are a function of its rows, not of the order a
   // shuffle fetched them in; a micro-batch's new edges land as one file
-  private val EdgeOrder = Seq("doc_a", "doc_b", "family")
+  private val Edges = StoreLog.Layout("edges",
+    "doc_a BIGINT, doc_b BIGINT, family STRING", None,
+    Seq("doc_a", "doc_b", "family"))
+  private def edges(v: StoreLog.Version): DataFrame = v.read(Edges)
+  /** The edge table of the store's newest version. */
   private[graft] def edgesTable(s: SparkSession, store: String): DataFrame =
-    s.read.schema("doc_a BIGINT, doc_b BIGINT, family STRING")
-      .parquet(s"$store/edges")
+    edges(openUnifiedStore(s, store))
 
   // ---- per-family index rows (batch and build share these) ---------
   /** Shingle index rows with the 64-way h-hash bucket. */
@@ -331,7 +348,7 @@ object UnifiedClusters {
     * the update's emb_vec append, so the groupBy runs once per
     * merge; review finding), and the same NdMinDot dot verify — now
     * over O(candidates) rows instead of riding every band row. */
-  private[graft] def lshCrossPairs(s: SparkSession, store: String,
+  private[graft] def lshCrossPairs(v: StoreLog.Version,
       prunedIdx: DataFrame, batch: DataFrame,
       batchVec: DataFrame, dedup: Boolean = true): DataFrame = {
     // the candidates' kv bucket set rides the materialization job as
@@ -340,8 +357,7 @@ object UnifiedClusters {
     val (cand, kvs) = Dedup.materializeWithKeys(
       lshCrossCandidates(prunedIdx, batch)
         .withColumn("kv", pmod(col("a"), lit(64)).cast("int")), "kv")
-    val vecsA = BucketedStore.table(s, s"$store/emb_vec", VecSchema, "kv",
-        Some(kvs))
+    val vecsA = v.read(Index("emb_vec"), Some(kvs))
       .select(col("vec_id").as("a"), col("qe").as("qe_a"))
     val vecsB = batchVec
       .select(col("vec_id").as("b"), col("qe").as("qe_b"))
@@ -367,7 +383,8 @@ object UnifiedClusters {
     * of q61d's fixed cost); CC likewise runs over the same
     * materialized edge set the edge table is written from. */
   def unifiedClusterStoreWrite(docs: DataFrame, emb: DataFrame,
-      imgSigs: DataFrame, audSigs: DataFrame, store: String): Unit = {
+      imgSigs: DataFrame, audSigs: DataFrame, store: String): Unit =
+      StoreLog.build(docs.sparkSession, store) {
     val s = docs.sparkSession
     val Seq(sh, sim, lsh, img, aud) = Span(s, "uni.build.rows")(inParallel(Seq(
       () => Span(s, "uni.build.rows.shingle")(
@@ -379,19 +396,11 @@ object UnifiedClusters {
         sigRowsOf(imgSigs, "ahash", Multimodal.AhashScheme))),
       () => Span(s, "uni.build.rows.aud")(materializeBounded(
         sigRowsOf(audSigs, "ehash", Multimodal.EhashScheme))))))
-    Span(s, "uni.build.writes")(inParallel(Seq(
-      () => writeBucketed(sh, s"$store/shingle", "overwrite", "kb",
-        Seq("h")),
-      () => writeBucketed(sim, s"$store/simhash", "overwrite", "kb",
-        Seq("band", "ckey")),
-      () => writeBucketed(lsh.drop("qe"), s"$store/emb_lsh",
-        "overwrite", "kb", Seq("band", "bkey")),
-      () => writeBucketed(vecRowsOf(lsh), s"$store/emb_vec",
-        "overwrite", "kv", Seq("vec_id")),
-      () => writeBucketed(img, s"$store/img_ahash", "overwrite", "kb",
-        Seq("band", "ckey")),
-      () => writeBucketed(aud, s"$store/ehash", "overwrite", "kb",
-        Seq("band", "ckey")))))
+    Span(s, "uni.build.writes")(inParallel(
+      Indices.zip(Seq(sh, sim, lsh, img, aud, vecRowsOf(lsh))).map {
+        case (l, rows) => () => writeBucketed(rows.select(l.cols.map(col): _*),
+          s"$store/${l.table}", "overwrite", l.bucketCol.get, l.ordCols)
+      }))
     val fams = Span(s, "uni.build.fams")(materializeBounded(
       famLit(shinglePairs(freshSelf = true)(sh, sh), "shingle")
         .unionByName(famLit(
@@ -403,7 +412,7 @@ object UnifiedClusters {
         .unionByName(famLit(sigPairs("ehash", Multimodal.EhashScheme,
           self = true)(aud, aud), "ehash"))))
     Span(s, "uni.build.edges_write")(
-      fams.sortWithinPartitions(EdgeOrder.map(col): _*)
+      fams.sortWithinPartitions(Edges.ordCols.map(col): _*)
         .storeWrite.mode("overwrite").parquet(s"$store/edges"))
     Span(s, "uni.build.cc_clusters")(writeBucketed(
       Dedup.connectedComponents(
@@ -412,40 +421,23 @@ object UnifiedClusters {
       s"$store/clusters", "overwrite", "kb", Seq("cluster_id", "doc_id")))
   }
 
-  private def requireUnifiedStore(s: SparkSession, store: String): Unit = {
-    val conf = s.sparkContext.hadoopConfiguration
-    Seq("shingle", "simhash", "emb_lsh", "emb_vec", "img_ahash", "ehash",
-      "edges", "clusters")
-      .foreach { part =>
-        val p = new org.apache.hadoop.fs.Path(s"$store/$part")
-        require(p.getFileSystem(conf).exists(p),
-          s"unified cluster store at '$store' has no '$part' table — " +
-            "build it with unifiedClusterStoreWrite before merging")
-      }
-  }
+  /** The store's committed version; fails with the layout's own
+    * vocabulary when `store` was never built. */
+  private def openUnifiedStore(s: SparkSession, store: String) =
+    StoreLog.open(s, store, "unified cluster store", "unifiedClusterStoreWrite")
 
-  /** The batch's new verified edges across all five families — each
+  /** The five family branches of the batch's new verified edges, each
     * family's pruned cross join against its standing index plus its
-    * intra-batch self pair set, provenance-tagged. Exposed
-    * unmaterialized for the plan-shape pin. */
-  private[graft] def unifiedNewEdgesPlan(s: SparkSession, store: String,
-      batchSh: DataFrame, batchSim: DataFrame, batchLsh: DataFrame,
-      batchImg: DataFrame, batchAud: DataFrame,
-      batchVec: DataFrame, keys: Map[String, Seq[Int]]): DataFrame =
-    unifiedNewEdgesFamilies(s, store, batchSh, batchSim, batchLsh,
-      batchImg, batchAud, batchVec, keys).map(_._2())
-      .reduce(_ unionByName _)
-
-  /** The five family branches of [[unifiedNewEdgesPlan]], one thunk
+    * intra-batch self pair set, provenance-tagged; one thunk
     * per family (round 18): each branch is a self-contained
     * provenance-tagged pair plan (its own cross ∪ intra DISTINCT), so
     * the merge can materialize the branches as CONCURRENT jobs —
     * guide §2.6 — instead of one fused 50-exchange plan whose AQE
     * stage-by-stage replanning serializes on the driver. The fused
-    * union ([[unifiedNewEdgesPlan]]) remains the plan-shape pin's
+    * union ([[unifiedMergeNewEdgesPlan]]) remains the plan-shape pin's
     * probe; both forms compute the identical row set. */
-  private[graft] def unifiedNewEdgesFamilies(s: SparkSession,
-      store: String, batchSh: DataFrame, batchSim: DataFrame,
+  private[graft] def unifiedNewEdgesFamilies(v: StoreLog.Version,
+      batchSh: DataFrame, batchSim: DataFrame,
       batchLsh: DataFrame, batchImg: DataFrame, batchAud: DataFrame,
       batchVec: DataFrame, keys: Map[String, Seq[Int]])
       : Seq[(String, () => DataFrame)] = {
@@ -458,7 +450,7 @@ object UnifiedClusters {
     // instead of scheduling its cross/self join stages. This is what
     // keeps an attachment-only micro-batch (s22's late-attachment
     // stream) from paying the three text families' empty-join rounds.
-    def noEdges = s.emptyDataFrame
+    def noEdges = batchSh.sparkSession.emptyDataFrame
       .select(lit(0L).as("doc_a"), lit(0L).as("doc_b"))
     // per-branch canonicalize-DISTINCTs inside the rules are skipped
     // (dedup = false) — each family's one cross ∪ intra DISTINCT
@@ -468,33 +460,29 @@ object UnifiedClusters {
     // each family's standing index, listed and read only in its batch's
     // buckets (a <= 64-int static IN, the q83 convention); each family's
     // bucket set rides its batch-row materialization (batchRowsOf)
-    def index(fam: String, schema: String): DataFrame =
-      BucketedStore.table(s, s"$store/$fam", schema, "kb", Some(keys(fam)))
-    def cross(schema: String, batch: DataFrame, fam: String,
+    def index(fam: String): DataFrame = v.read(Index(fam), Some(keys(fam)))
+    def cross(batch: DataFrame, fam: String,
         rule: Boolean => (DataFrame, DataFrame) => DataFrame): DataFrame =
       if (keys(fam).isEmpty) noEdges
-      else rule(false)(index(fam, schema), batch)
+      else rule(false)(index(fam), batch)
         .unionByName(rule(true)(batch, batch))
         .distinct()
     Seq(
-      ("shingle", () => famLit(cross(ShingleSchema, batchSh, "shingle",
+      ("shingle", () => famLit(cross(batchSh, "shingle",
         self => shinglePairs(self, dedup = false)), "shingle")),
-      ("simhash", () => famLit(cross(Multimodal.sigStoreSchema("simhash"),
-          batchSim, "simhash",
+      ("simhash", () => famLit(cross(batchSim, "simhash",
         self => sigPairs("simhash", SimScheme, self, dedup = false)),
         "simhash")),
       ("emb_lsh", () => famLit(
         if (keys("emb_lsh").isEmpty) noEdges
-        else lshCrossPairs(s, store, index("emb_lsh", LshSchema),
+        else lshCrossPairs(v, index("emb_lsh"),
             batchLsh, batchVec, dedup = false)
           .unionByName(lshSelfPairs(batchLsh, dedup = false))
           .distinct(), "emb_lsh")),
-      ("img_ahash", () => famLit(cross(Multimodal.sigStoreSchema("ahash"),
-          batchImg, "img_ahash",
+      ("img_ahash", () => famLit(cross(batchImg, "img_ahash",
         self => sigPairs("ahash", Multimodal.AhashScheme, self,
           dedup = false)), "img_ahash")),
-      ("ehash", () => famLit(cross(Multimodal.sigStoreSchema("ehash"),
-          batchAud, "ehash",
+      ("ehash", () => famLit(cross(batchAud, "ehash",
         self => sigPairs("ehash", Multimodal.EhashScheme, self,
           dedup = false)), "ehash")))
   }
@@ -508,19 +496,19 @@ object UnifiedClusters {
     * shingle 3.0 s + simhash 1.75 + lsh 1.5 + img 0.66 + aud 0.5
     * serial vs ~max(family) concurrent. Empty families (no collected
     * buckets) skip their job entirely. Row set identical to
-    * [[unifiedNewEdgesPlan]]; each branch thunk is built INSIDE its
+    * [[unifiedMergeNewEdgesPlan]]; each branch thunk is built INSIDE its
     * task so the emb_lsh branch's eager candidate materialization
     * (see lshCrossCandidates) overlaps the other families too. */
-  private[graft] def unifiedNewEdgesConcurrent(s: SparkSession,
-      store: String, batchSh: DataFrame, batchSim: DataFrame,
+  private[graft] def unifiedNewEdgesConcurrent(v: StoreLog.Version,
+      batchSh: DataFrame, batchSim: DataFrame,
       batchLsh: DataFrame, batchImg: DataFrame, batchAud: DataFrame,
       batchVec: DataFrame, keys: Map[String, Seq[Int]]): DataFrame = {
-    val fams = unifiedNewEdgesFamilies(s, store, batchSh, batchSim,
+    val fams = unifiedNewEdgesFamilies(v, batchSh, batchSim,
       batchLsh, batchImg, batchAud, batchVec, keys)
     val nonEmpty = fams.filter { case (fam, _) => keys(fam).nonEmpty }
     if (nonEmpty.isEmpty)
       // schema-correct empty set (zero rows; the tag never surfaces)
-      return famLit(s.emptyDataFrame
+      return famLit(batchSh.sparkSession.emptyDataFrame
         .select(lit(0L).as("doc_a"), lit(0L).as("doc_b")), "shingle")
     inParallel(nonEmpty.map { case (_, thunk) =>
       () => materializeBounded(thunk())
@@ -532,11 +520,11 @@ object UnifiedClusters {
     * decode pass per family per merge), WITH each family's touched
     * bucket set observed during its own materialization job (round
     * 17, the materializeWithKeys shape — the separate five-way-union
-    * bucket collect job is folded away), plus the batch vec map's kv
-    * bucket set (ditto, for the retraction path's emb_vec rewrite). */
+    * bucket collect job is folded away), plus the batch vec map and its
+    * kv bucket set (ditto), keyed by index table name. */
   private[graft] def batchRowsOf(batchDocs: DataFrame, batchEmb: DataFrame,
       batchImgSigs: DataFrame, batchAudSigs: DataFrame)
-      : (Seq[DataFrame], Map[String, Seq[Int]], Seq[Int]) = {
+      : (Seq[DataFrame], Map[String, Seq[Int]]) = {
     val five = inParallel[(DataFrame, Seq[Int])](Seq(
       () => Dedup.materializeWithKeys(shingleRowsOf(batchDocs), "kb"),
       () => Dedup.materializeWithKeys(
@@ -555,8 +543,8 @@ object UnifiedClusters {
     val keys = Map(
       "shingle" -> five(0)._2, "simhash" -> five(1)._2,
       "emb_lsh" -> five(2)._2, "img_ahash" -> five(3)._2,
-      "ehash" -> five(4)._2).withDefaultValue(Seq.empty)
-    (five.map(_._1) :+ vec, keys, kvKeys)
+      "ehash" -> five(4)._2, "emb_vec" -> kvKeys).withDefaultValue(Seq.empty)
+    (five.map(_._1) :+ vec, keys)
   }
 
   /** The batch's new-edges plan from raw batch inputs — the
@@ -573,10 +561,10 @@ object UnifiedClusters {
       store: String, batchDocs: DataFrame, batchEmb: DataFrame,
       batchImgSigs: DataFrame, batchAudSigs: DataFrame): DataFrame = {
     val (Seq(batchSh, batchSim, batchLsh, batchImg, batchAud, batchVec),
-      keys, _) =
-      batchRowsOf(batchDocs, batchEmb, batchImgSigs, batchAudSigs)
-    unifiedNewEdgesPlan(s, store, batchSh, batchSim, batchLsh, batchImg,
-      batchAud, batchVec, keys)
+      keys) = batchRowsOf(batchDocs, batchEmb, batchImgSigs, batchAudSigs)
+    unifiedNewEdgesFamilies(openUnifiedStore(s, store), batchSh, batchSim,
+      batchLsh, batchImg, batchAud, batchVec, keys).map(_._2())
+      .reduce(_ unionByName _)
   }
 
   /** O-136/O-137 (q87g/s24): the batch ids that WELD to a lower-id
@@ -609,31 +597,36 @@ object UnifiedClusters {
   def unifiedWeldDropIds(s: SparkSession, store: String,
       batchDocs: DataFrame, batchEmb: DataFrame,
       batchImgSigs: DataFrame, batchAudSigs: DataFrame): DataFrame = {
-    requireUnifiedStore(s, store)
+    val v = openUnifiedStore(s, store)
     // concurrent per-family materialization (round 18, §2.6 — the
     // merge path's unifiedNewEdgesConcurrent reasoning; identical row
     // set to the fused plan this wrapped before)
     val (Seq(batchSh, batchSim, batchLsh, batchImg, batchAud, batchVec),
-      keys, _) =
-      batchRowsOf(batchDocs, batchEmb, batchImgSigs, batchAudSigs)
-    unifiedNewEdgesConcurrent(s, store, batchSh, batchSim, batchLsh,
+      keys) = batchRowsOf(batchDocs, batchEmb, batchImgSigs, batchAudSigs)
+    unifiedNewEdgesConcurrent(v, batchSh, batchSim, batchLsh,
         batchImg, batchAud, batchVec, keys)
       .select(col("doc_b").as("doc_id"))
       .join(batchDocs.select(col("doc_id")), Seq("doc_id"), "left_semi")
       .distinct()
   }
 
-  /** The merge computation's parts: (batch index rows x4, new edges
-    * WITH family, untouched label rows WITH kb, relabeled rows). The
-    * relabel is [[Dedup.relabelAgainst]] — the same algorithm (and
-    * torn-store heal) the MinHash store runs. */
+  /** The merge computation's parts, over version `v` of the store:
+    * the batch index rows (five families plus the vec map) with their
+    * buckets, the new edges WITH family and their count (which may
+    * over-report; zero means none), the untouched label rows WITH kb,
+    * and the relabeled rows. The relabel is [[Dedup.relabelAgainst]] —
+    * the same algorithm the MinHash store runs. */
+  private final case class MergeParts(v: StoreLog.Version,
+      rows: Seq[DataFrame], keys: Map[String, Seq[Int]],
+      newEdges: DataFrame, nNew: Long, untouched: DataFrame,
+      relabeled: DataFrame)
+
   private def unifiedMergeParts(s: SparkSession, store: String,
       batchDocs: DataFrame, batchEmb: DataFrame, batchImgSigs: DataFrame,
-      batchAudSigs: DataFrame)
-      : (Seq[DataFrame], DataFrame, DataFrame, DataFrame, Boolean) = {
-    requireUnifiedStore(s, store)
-    val (Seq(batchSh, batchSim, batchLsh, batchImg, batchAud, batchVec),
-      keys, _) =
+      batchAudSigs: DataFrame): MergeParts = {
+    val v = openUnifiedStore(s, store)
+    val (rows @ Seq(batchSh, batchSim, batchLsh, batchImg, batchAud,
+      batchVec), keys) =
       Span(s, "uni.merge.batch_rows")(
         batchRowsOf(batchDocs, batchEmb, batchImgSigs, batchAudSigs))
     // LEFT ANTI vs the standing edge table (round-13 ADVICE): a batch
@@ -643,19 +636,16 @@ object UnifiedClusters {
     // compaction) and a replayed batch's relabel re-touches every
     // component it already welded. Edge-bounded: the standing table
     // is scanned by the relabel anyway.
-    val newEdges = Span(s, "uni.merge.new_edges")(
-      materializeBounded(unifiedNewEdgesConcurrent(s, store,
+    val (newEdges, nNew) = Span(s, "uni.merge.new_edges")(
+      Dedup.materializeWithCount(unifiedNewEdgesConcurrent(v,
           batchSh, batchSim, batchLsh, batchImg, batchAud, batchVec, keys)
-        .join(edgesTable(s, store),
-          Seq("doc_a", "doc_b", "family"), "left_anti")))
-    val torn = BucketedStore.tornMarker(s, store)
+        .join(edges(v), Seq("doc_a", "doc_b", "family"), "left_anti")))
     val (untouched, relabeled) = Span(s, "uni.merge.relabel")(
       Dedup.relabelAgainst(
         newEdges.select(col("doc_a"), col("doc_b")).distinct(),
-        edgesTable(s, store).select(col("doc_a"), col("doc_b")).distinct(),
-        Dedup.clusterLabelsTable(s, store), torn))
-    (Seq(batchSh, batchSim, batchLsh, batchImg, batchAud, batchVec),
-      newEdges, untouched, relabeled, torn)
+        edges(v).select(col("doc_a"), col("doc_b")).distinct(),
+        v.read(Dedup.ClusterLabels)))
+    MergeParts(v, rows, keys, newEdges, nNew, untouched, relabeled)
   }
 
   /** The q61c output shape (cluster_id, cluster_size, n_shingle,
@@ -677,52 +667,40 @@ object UnifiedClusters {
   def unifiedClusterMerge(s: SparkSession, store: String,
       batchDocs: DataFrame, batchEmb: DataFrame,
       batchImgSigs: DataFrame, batchAudSigs: DataFrame): DataFrame = {
-    val (_, newEdges, untouched, relabeled, _) =
-      unifiedMergeParts(s, store, batchDocs, batchEmb, batchImgSigs,
-        batchAudSigs)
+    val p = unifiedMergeParts(s, store, batchDocs, batchEmb, batchImgSigs,
+      batchAudSigs)
     val labels = materializeBounded(
-      untouched.drop("kb").unionByName(relabeled))
-    provenanceRollup(labels,
-      edgesTable(s, store).unionByName(newEdges))
+      p.untouched.drop("kb").unionByName(p.relabeled))
+    provenanceRollup(labels, edges(p.v).unionByName(p.newEdges))
   }
 
   /** The unified cluster table READ BACK from the persisted store —
     * the O(0)-compute path a downstream consumer takes between
     * merges: labels are a label-table scan, provenance is the one
     * edge-table rollup, no signature pipeline runs. Equals the
-    * one-shot recompute whenever the store is clean (every completed
-    * update maintains labels = CC(edges)); duplicate edge rows from
+    * one-shot recompute at every version (each commit keeps labels =
+    * CC(edges)); duplicate edge rows from
     * un-compacted at-least-once replays are harmless here too since
     * round 15 — the rollup DISTINCTs the edge set (verdict r14 #5),
     * so n_* counts are replay-exact BEFORE compaction; compaction
     * still reclaims the duplicate bytes. */
   def unifiedClustersFromStore(s: SparkSession, store: String): DataFrame = {
-    // a torn store (crashed label commit) would silently serve stale,
-    // mixed-generation or ghost labels inconsistent with the edge table
-    // here — update and retraction heal, but this read path runs no
-    // relabel, so it must refuse instead (round-13 ADVICE)
-    require(!BucketedStore.tornMarker(s, store),
-      s"unified cluster store at '$store' is torn (staging marker " +
-        "present — a previous update or retraction crashed before its " +
-        "label commit completed); run unifiedClusterStoreUpdate with " +
-        "any batch (empty is fine), or replay the retraction, to heal " +
-        "before reading back")
+    val v = openUnifiedStore(s, store)
     provenanceRollup(
-      Dedup.clusterLabelsTable(s, store)
+      v.read(Dedup.ClusterLabels)
         .select(col("doc_id"), col("cluster_id"), col("cluster_size"),
           col("is_canonical")),
-      edgesTable(s, store))
+      edges(v))
   }
 
   /** Persist the merge: append each family's batch index rows (future
     * merges match against them), append the provenance-tagged new
-    * edges, and rewrite ONLY the dirty cluster buckets — through the
-    * label commit neardupClusterStoreUpdate uses
-    * ([[BucketedStore.commitLabels]]). */
+    * edges, and replace ONLY the dirty cluster buckets — one commit of
+    * the store's log. */
   def unifiedClusterStoreUpdate(s: SparkSession, store: String,
       batchDocs: DataFrame, batchEmb: DataFrame,
       batchImgSigs: DataFrame, batchAudSigs: DataFrame): Unit = {
-    persistMerge(s, store, unifiedMergeParts(s, store, batchDocs,
+    persistMerge(s, unifiedMergeParts(s, store, batchDocs,
       batchEmb, batchImgSigs, batchAudSigs))
   }
 
@@ -747,77 +725,38 @@ object UnifiedClusters {
       batchImgSigs: DataFrame, batchAudSigs: DataFrame): DataFrame = {
     val parts = unifiedMergeParts(s, store, batchDocs, batchEmb,
       batchImgSigs, batchAudSigs)
-    persistMerge(s, store, parts)
-    parts._2.select(col("doc_b").as("doc_id"))
+    persistMerge(s, parts)
+    parts.newEdges.select(col("doc_b").as("doc_id"))
       .join(batchDocs.select(col("doc_id")), Seq("doc_id"), "left_semi")
       .distinct()
   }
 
-  private def persistMerge(s: SparkSession, store: String,
-      parts: (Seq[DataFrame], DataFrame, DataFrame, DataFrame, Boolean))
-      : Unit = Span(s, "uni.update") {
-    val (batchRows, newEdges, untouched, relabeled, torn) = parts
-    val (staged, buckets) = Dedup.labelStaging(untouched, relabeled)
-    val Seq(batchSh, batchSim, batchLsh, batchImg, batchAud, batchVec) =
-      batchRows
-    // the five family index appends ride the commit's staging wave
-    // (round 18: seven independent writes, one wave). Layout-v2 note:
-    // emb_lsh and emb_vec append with no order between them, so a
-    // crash can leave a band row whose vec_id has no emb_vec row yet —
-    // the candidate verify's inner join skips such candidates
-    // (band-discoverable, not yet verifiable), and the replay restores
-    // the vec rows and re-derives the skipped pairs (the anti-join
-    // keeps persisted edges from duplicating).
-    BucketedStore.commitLabels(s, store, torn, staged, buckets,
-      "uni.update")(Seq(
-      () => writeBucketed(batchSh.select(col("doc_id"), col("c"),
-        col("h"), col("kb")), s"$store/shingle", "append", "kb", Seq("h")),
-      () => writeBucketed(batchSim.select(col("doc_id"),
-        col("simhash"), col("band"), col("ckey"), col("kb")),
-        s"$store/simhash", "append", "kb", Seq("band", "ckey")),
-      () => writeBucketed(batchLsh.select(col("vec_id"),
-        col("band"), col("bkey"), col("kb")), s"$store/emb_lsh",
-        "append", "kb", Seq("band", "bkey")),
-      () => writeBucketed(batchVec, s"$store/emb_vec",
-        "append", "kv", Seq("vec_id")),
-      () => writeBucketed(batchImg.select(col("doc_id"),
-        col("ahash"), col("band"), col("ckey"), col("kb")),
-        s"$store/img_ahash", "append", "kb", Seq("band", "ckey")),
-      () => writeBucketed(batchAud.select(col("doc_id"),
-        col("ehash"), col("band"), col("ckey"), col("kb")),
-        s"$store/ehash", "append", "kb", Seq("band", "ckey"))))(
-      newEdges.coalesce(1).sortWithinPartitions(EdgeOrder.map(col): _*)
-        .storeWrite.mode("append").parquet(s"$store/edges"))
+  private def persistMerge(s: SparkSession, p: MergeParts): Unit =
+      Span(s, "uni.update") {
+    val (staged, buckets) = Dedup.labelStaging(p.untouched, p.relabeled)
+    // the label write, the six index appends and the edges append are
+    // one wave and one commit: a family with no batch rows writes
+    // nothing, and neither does an update with no new edges
+    val v = p.v
+    v.commit("uni.update")(
+      Seq(v.write(Dedup.ClusterLabels, staged, buckets, replace = true)) ++
+        Indices.zip(p.rows).map { case (l, rows) =>
+          v.write(l, rows, p.keys(l.table)) } ++
+        Option.when(p.nNew > 0)(v.write(Edges, p.newEdges, phase = "edges")))
   }
 
-  /** Bound file counts under daily merges: the five index tables
-    * compact via the shared bucket pass, the unpartitioned edge table
-    * via the rename-swap rewrite (both [[BucketedStore]] passes — the
-    * DISTINCT also reclaims replayed appends; family rides in the
-    * edge rows so provenance survives). The cluster table needs no
-    * pass (every bucket was last written as one file). */
+  /** Bound file counts under daily merges, in one commit: each index
+    * table's buckets over `maxFilesPerBucket` files are rewritten as
+    * one file each, and the unpartitioned edge table as at most
+    * `maxFilesPerBucket` files (all DISTINCT, which also reclaims
+    * replayed appends; family rides in the edge rows so provenance
+    * survives). The cluster table needs no pass: a label commit
+    * replaces each bucket it touches with one file. */
   def unifiedClusterStoreCompact(s: SparkSession, store: String,
       maxFilesPerBucket: Int = 4): Unit = {
-    // projection and SORT keys stated per family (review finding: a
-    // generic last-two-columns sort picked the shingle family's
-    // per-doc count over its h join key, scattering h across row
-    // groups) — each family compacts back to its own write order
-    val fams: Seq[(String, String, Seq[String], Seq[String])] = Seq(
-      ("emb_lsh", "kb", Seq("vec_id", "band", "bkey"),
-        Seq("band", "bkey")),
-      ("emb_vec", "kv", Seq("vec_id", "qe"), Seq("vec_id")),
-      ("img_ahash", "kb", Seq("doc_id", "ahash", "band", "ckey"),
-        Seq("band", "ckey")),
-      ("ehash", "kb", Seq("doc_id", "ehash", "band", "ckey"),
-        Seq("band", "ckey")),
-      ("shingle", "kb", Seq("doc_id", "c", "h"), Seq("h")),
-      ("simhash", "kb", Seq("doc_id", "simhash", "band", "ckey"),
-        Seq("band", "ckey")))
-    fams.foreach { case (fam, bucketCol, projCols, ordCols) =>
-      BucketedStore.compactBuckets(s, s"$store/$fam", bucketCol,
-        projCols.map(col), ordCols, maxFilesPerBucket)
-    }
-    BucketedStore.compactUnpartitioned(s, s"$store/edges", maxFilesPerBucket)
+    val v = openUnifiedStore(s, store)
+    v.commit("uni.compact")(
+      (Indices :+ Edges).flatMap(v.compaction(_, maxFilesPerBucket)))
   }
 
   // O-140 (q61f): RETRACTION — the store-lifecycle gap every
@@ -852,20 +791,16 @@ object UnifiedClusters {
     * it). Replay-idempotent: every removal is an anti-join, so
     * re-retracting is a no-op.
     *
-    * Crash posture: [[BucketedStore.commitLabels]]; the index
-    * rewrites ride its staging wave and the edge-table rewrite is its
-    * edges step. Over a torn store (a crashed update or retraction)
-    * the relabel is not scoped to the touched components: the label
-    * set is rebuilt whole as CC(surviving edges), so replaying a
-    * crashed retraction heals every crash point. */
+    * One commit of the store's log: the index rewrites, the edge-table
+    * rewrite and the dirty label buckets replace the old ones together,
+    * so replaying a crashed retraction starts from the version before
+    * it. */
   def unifiedClusterStoreRetract(s: SparkSession, store: String,
       delDocs: DataFrame, delEmb: DataFrame,
       delImgSigs: DataFrame, delAudSigs: DataFrame)
       : Unit = Span(s, "uni.retract") {
-    requireUnifiedStore(s, store)
-    val torn = BucketedStore.tornMarker(s, store)
-    val (Seq(delSh, delSim, delLsh, delImg, delAud, delVec), keys,
-      kvKeys) =
+    val v = openUnifiedStore(s, store)
+    val (_, keys) =
       Span(s, "uni.retract.batch_rows")(
         batchRowsOf(delDocs, delEmb, delImgSigs, delAudSigs))
     // the deleted ids' label-bucket set rides the materialization job
@@ -879,10 +814,9 @@ object UnifiedClusters {
         .distinct()
         .withColumn("kb", Dedup.clusterBucket(col("doc_id"))), "kb")
     val delIds = delIds0.select(col("doc_id"))
-    // keys and kvKeys observed during batchRowsOf's own jobs above
+    // keys observed during batchRowsOf's own jobs above
 
-    // relabel parts read the PRE-retraction store, computed up front
-    val labels = Dedup.clusterLabelsTable(s, store)
+    val labels = v.read(Dedup.ClusterLabels)
     val touchedClusters = materializeBounded(
       (if (delKb.isEmpty) labels.limit(0)
        else labels.filter(col("kb").isin(delKb: _*)))
@@ -899,64 +833,37 @@ object UnifiedClusters {
     // connectedComponentsMaterialized's contract, and its count rides
     // the materialization (round 17: one job instead of CC's own
     // re-materialize + count of the same leaf)
-    val edgePairs = edgesTable(s, store)
-      .select(col("doc_a"), col("doc_b")).distinct()
     val (survEdges, nSurv) = Dedup.materializeWithCount(
-      (if (torn) edgePairs
-       else edgePairs.join(touchedMembers.select(col("doc_id").as("doc_a")),
-         Seq("doc_a"), "left_semi"))
+      edges(v).select(col("doc_a"), col("doc_b")).distinct()
+        .join(touchedMembers.select(col("doc_id").as("doc_a")),
+          Seq("doc_a"), "left_semi")
         .join(delIds.withColumnRenamed("doc_id", "doc_a"),
           Seq("doc_a"), "left_anti")
         .join(delIds.withColumnRenamed("doc_id", "doc_b"),
           Seq("doc_b"), "left_anti"))
-    val (newLabels, newKeys) = Span(s, "uni.retract.relabel")(
-      Dedup.materializeWithKeys(
-        Dedup.connectedComponentsMaterialized(survEdges, nSurv)
-          .select(col("doc_id"), col("cluster_id"), col("cluster_size"),
-            col("is_canonical"))
-          .withColumn("kb", Dedup.clusterBucket(col("doc_id"))), "kb"))
+    val newLabels = Span(s, "uni.retract.relabel")(materializeBounded(
+      Dedup.connectedComponentsMaterialized(survEdges, nSurv)
+        .select(col("doc_id"), col("cluster_id"), col("cluster_size"),
+          col("is_canonical"))
+        .withColumn("kb", Dedup.clusterBucket(col("doc_id")))))
     // a dirty bucket keeps its rows outside the touched components
-    val (staged, stagedKeys) =
-      if (torn) (newLabels, newKeys)
-      else (labels.filter(col("kb").isin(dirty: _*))
-        .join(touchedMembers.select(col("doc_id")), Seq("doc_id"),
-          "left_anti")
-        .unionByName(newLabels), dirty)
+    val staged = labels.filter(col("kb").isin(dirty: _*))
+      .join(touchedMembers.select(col("doc_id")), Seq("doc_id"),
+        "left_anti")
+      .unionByName(newLabels)
 
     // per-family touched-bucket rewrites, concurrent with the label
-    // staging; each opens its table inside its task, so the six file
-    // listings run concurrently too
-    BucketedStore.commitLabels(s, store, torn, staged, stagedKeys,
-      "uni.retract")(Seq(
-      () => BucketedStore.retractBucketRewrite(s, s"$store/shingle",
-        ShingleSchema, "kb", keys("shingle"), delIds,
-        "doc_id", Seq("doc_id", "c", "h"), Seq("h")),
-      () => BucketedStore.retractBucketRewrite(s, s"$store/simhash",
-        Multimodal.sigStoreSchema("simhash"), "kb",
-        keys("simhash"), delIds, "doc_id",
-        Seq("doc_id", "simhash", "band", "ckey"), Seq("band", "ckey")),
-      () => BucketedStore.retractBucketRewrite(s, s"$store/emb_lsh",
-        LshSchema, "kb", keys("emb_lsh"), delIds, "vec_id",
-        Seq("vec_id", "band", "bkey"), Seq("band", "bkey")),
-      () => BucketedStore.retractBucketRewrite(s, s"$store/emb_vec",
-        VecSchema, "kv", kvKeys, delIds, "vec_id",
-        Seq("vec_id", "qe"), Seq("vec_id")),
-      () => BucketedStore.retractBucketRewrite(s, s"$store/img_ahash",
-        Multimodal.sigStoreSchema("ahash"), "kb",
-        keys("img_ahash"), delIds, "doc_id",
-        Seq("doc_id", "ahash", "band", "ckey"), Seq("band", "ckey")),
-      () => BucketedStore.retractBucketRewrite(s, s"$store/ehash",
-        Multimodal.sigStoreSchema("ehash"), "kb",
-        keys("ehash"), delIds, "doc_id",
-        Seq("doc_id", "ehash", "band", "ckey"), Seq("band", "ckey"))))(
-      // the edge table: unpartitioned rename-swap rewrite (edge-bounded
-      // — the same wholesale pass compaction performs)
-      BucketedStore.replaceUnpartitioned(s, s"$store/edges",
-        edgesTable(s, store)
-          .join(delIds.withColumnRenamed("doc_id", "doc_a"),
-            Seq("doc_a"), "left_anti")
-          .join(delIds.withColumnRenamed("doc_id", "doc_b"),
-            Seq("doc_b"), "left_anti"), 4))
+    // write and the edge-table rewrite (edge-bounded — the same
+    // wholesale pass compaction performs)
+    v.commit("uni.retract")(
+      Seq(v.write(Dedup.ClusterLabels, staged, dirty, replace = true)) ++
+        Indices.map(l => v.retraction(l, keys(l.table), delIds)) :+
+        v.write(Edges, edges(v)
+            .join(delIds.withColumnRenamed("doc_id", "doc_a"),
+              Seq("doc_a"), "left_anti")
+            .join(delIds.withColumnRenamed("doc_id", "doc_b"),
+              Seq("doc_b"), "left_anti"),
+          replace = true, nFiles = 4, phase = "edges"))
   }
 
   /** Declared O-140 binding: the full q61c store (every document,

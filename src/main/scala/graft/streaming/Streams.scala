@@ -1006,27 +1006,7 @@ object Streams {
     val stageDir = graft.util.Ephemeral.dir("graft_s23_stage_")
     val docs = graft.ops.TextAnalysis.injectPii(
       graft.ops.Tables.documents(s, d))
-    def stageFiles() = new java.io.File(stageDir).listFiles()
-      .filter(f => f.isFile && f.getName.endsWith(".parquet")).toSeq
-    // two mtime-ordered staging files split at id 275 so every scale
-    // factor yields two NON-EMPTY micro-batches of real documents:
-    // A = ids [250, 275), B = ids >= 275 plus the re-keyed corpus
-    // copies (ReKeyOffset ids — the largest, so arrival order stays
-    // id order, the split-invariance precondition)
-    docs.filter(col("doc_id") >= 250 && col("doc_id") < 275)
-      .coalesce(1).storeWrite.mode("append").parquet(stageDir)
-    val aNames = stageFiles().map(_.getName).toSet
-    docs.filter(col("doc_id") >= 275)
-      .unionByName(docs.filter(col("doc_id") < 50)
-        .withColumn("doc_id",
-          col("doc_id") + graft.ops.Dedup.ReKeyOffset))
-      .coalesce(1).storeWrite.mode("append").parquet(stageDir)
-    stageFiles().foreach { f =>
-      val late = if (aNames.contains(f.getName)) 60000 else 30000
-      require(f.setLastModified(System.currentTimeMillis() - late),
-        s"failed to set mtime on $f — micro-batch arrival order " +
-          "would be undefined")
-    }
+    stageTwoBatches(docs, stageDir, extraB = None)
     val batchIn = s.readStream.schema(documentsSchema)
       .option("maxFilesPerTrigger", "1").parquet(stageDir)
     val q = batchIn.writeStream
@@ -1065,6 +1045,33 @@ object Streams {
     committedCountsReadBack(s, countsDir)
   }
 
+  /** The s23/s24 staging: two mtime-ordered staging files in
+    * `stageDir`, split at id 275 so every scale factor yields two
+    * NON-EMPTY micro-batches of real documents: A = ids [250, 275), B =
+    * ids >= 275 plus the re-keyed corpus copies (ReKeyOffset ids — the
+    * largest, so arrival order stays id order, the split-invariance
+    * precondition) plus `extraB`. */
+  private def stageTwoBatches(docs: DataFrame, stageDir: String,
+      extraB: Option[DataFrame]): Unit = {
+    def stageFiles() = new java.io.File(stageDir).listFiles()
+      .filter(f => f.isFile && f.getName.endsWith(".parquet")).toSeq
+    docs.filter(col("doc_id") >= 250 && col("doc_id") < 275)
+      .coalesce(1).storeWrite.mode("append").parquet(stageDir)
+    val aNames = stageFiles().map(_.getName).toSet
+    val b = docs.filter(col("doc_id") >= 275)
+      .unionByName(docs.filter(col("doc_id") < 50)
+        .withColumn("doc_id",
+          col("doc_id") + graft.ops.Dedup.ReKeyOffset))
+    extraB.fold(b)(b.unionByName(_))
+      .coalesce(1).storeWrite.mode("append").parquet(stageDir)
+    stageFiles().foreach { f =>
+      val late = if (aNames.contains(f.getName)) 60000 else 30000
+      require(f.setLastModified(System.currentTimeMillis() - late),
+        s"failed to set mtime on $f — micro-batch arrival order " +
+          "would be undefined")
+    }
+  }
+
   /** Write-once, batchId-keyed counts commit (round 17, VERDICT r16
     * #4). foreachBatch is at-least-once, and a replayed micro-batch
     * recomputes its read-only stage frames AGAINST A STORE ITS FIRST
@@ -1089,13 +1096,14 @@ object Streams {
     * than before: a crash INSIDE the frames computation of a fused
     * screen-update binding (s24's stage 3 persists as it screens)
     * can replay to a healed-store recount whose drop set
-    * under-reports — the store itself stays correct via the update's
-    * staging-marker protocol. */
+    * under-reports — the store itself stays correct through its commit
+    * log. */
   private[graft] def committedFunnelCounts(ss: SparkSession, countsDir: String,
       batchId: Long)(framesOf: => Seq[(Int, String, DataFrame)])(
       appendsAndAdmitted: Seq[(Int, String, DataFrame)] => DataFrame)
       : Unit = {
-    val conf = ss.sparkContext.hadoopConfiguration
+    val conf = graft.util.NioLocalFileSystem.conf(
+      ss.sparkContext.hadoopConfiguration)
     val commit = new org.apache.hadoop.fs.Path(
       s"$countsDir/batch_id=$batchId")
     val fs = commit.getFileSystem(conf)
@@ -1125,10 +1133,13 @@ object Streams {
 
   /** The declared aggregation over the committed per-batch counts —
     * no DISTINCT needed: write-once means exactly one file-set per
-    * batch, and the scan skips the `_wal` dir. */
+    * batch, and the scan skips the `_wal` dir. Read under the counts'
+    * declared schema, so no schema-inference job runs. */
   private[graft] def committedCountsReadBack(s: SparkSession,
       countsDir: String): DataFrame =
-    s.read.parquet(countsDir)
+    s.read.schema(
+        "stage INT, stage_name STRING, n_docs BIGINT, batch_id BIGINT")
+      .parquet(countsDir)
       .groupBy(col("stage"), col("stage_name"))
       .agg(sum(col("n_docs")).as("n_docs"))
       .orderBy(col("stage"))
@@ -1169,28 +1180,10 @@ object Streams {
     val stageDir = graft.util.Ephemeral.dir("graft_s24_stage_")
     val docs = graft.ops.TextAnalysis.injectPii(
       graft.ops.Tables.documents(s, d))
-    def stageFiles() = new java.io.File(stageDir).listFiles()
-      .filter(f => f.isFile && f.getName.endsWith(".parquet")).toSeq
-    // two mtime-ordered staging files split at id 275 (the s23
-    // geometry): A = ids [250, 275); B = ids >= 275, the re-keyed
-    // corpus copies, and the media-only rows (MediaReKeyOffset ids —
-    // the largest, so arrival order stays id order, the
-    // split-invariance precondition)
-    docs.filter(col("doc_id") >= 250 && col("doc_id") < 275)
-      .coalesce(1).storeWrite.mode("append").parquet(stageDir)
-    val aNames = stageFiles().map(_.getName).toSet
-    docs.filter(col("doc_id") >= 275)
-      .unionByName(docs.filter(col("doc_id") < 50)
-        .withColumn("doc_id",
-          col("doc_id") + graft.ops.Dedup.ReKeyOffset))
-      .unionByName(graft.ops.Dedup.mediaBatchDocs(s))
-      .coalesce(1).storeWrite.mode("append").parquet(stageDir)
-    stageFiles().foreach { f =>
-      val late = if (aNames.contains(f.getName)) 60000 else 30000
-      require(f.setLastModified(System.currentTimeMillis() - late),
-        s"failed to set mtime on $f — micro-batch arrival order " +
-          "would be undefined")
-    }
+    // batch B also carries the media-only rows (MediaReKeyOffset ids —
+    // the largest, so arrival order stays id order)
+    stageTwoBatches(docs, stageDir,
+      extraB = Some(graft.ops.Dedup.mediaBatchDocs(s)))
     val batchIn = s.readStream.schema(documentsSchema)
       .option("maxFilesPerTrigger", "1").parquet(stageDir)
     val q = batchIn.writeStream

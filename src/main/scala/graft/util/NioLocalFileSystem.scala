@@ -44,16 +44,21 @@ object NioLocalFileSystem {
     set
   }
 
-  /** Hadoop options that resolve `file:` paths to this filesystem. The
+  /** The class `file:` paths resolve to under [[writeOptions]]: this
+    * one, or a test's subclass that counts or fails its calls. */
+  @volatile private[graft] var impl: Class[_ <: NioLocalFileSystem] =
+    classOf[NioLocalFileSystem]
+
+  /** Hadoop options that resolve `file:` paths to [[impl]]. The
     * `FileSystem` cache is keyed by scheme and user, not by conf, so it
     * is bypassed for `file:` or the cached stock instance would come
     * back. */
-  val writeOptions: Map[String, String] = Map(
-    "fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+  def writeOptions: Map[String, String] = Map(
+    "fs.file.impl" -> impl.getName,
     "fs.file.impl.disable.cache" -> "true")
 
-  /** A copy of `base` carrying [[writeOptions]], for driver-side
-    * `create`/`mkdirs`. */
+  /** A copy of `base` carrying [[writeOptions]]: the conf of every
+    * driver-side store operation, built once per operation. */
   def conf(base: Configuration): Configuration = {
     val c = new Configuration(base)
     writeOptions.foreach { case (k, v) => c.set(k, v) }

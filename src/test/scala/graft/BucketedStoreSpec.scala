@@ -126,30 +126,30 @@ class BucketedStoreSpec extends SparkSpec {
     cached.unpersist()
   }
 
-  /** A label table `store/clusters` of docs 0..127 (kb = doc % 64),
-    * each its own cluster. */
+  /** A logged store whose label table `store/clusters` holds docs
+    * 0..127 (kb = doc % 64), each its own cluster. */
   private def labelStore(): String = {
-    val store = Files.createTempDirectory("label_swap_").toString
-    ops.BucketedStore.writeBucketed(labels((0L until 128L).map(d => d -> d)),
-      s"$store/clusters", "overwrite", "kb", Seq("cluster_id", "doc_id"))
+    val store = Files.createTempDirectory("label_commit_").toString
+    ops.StoreLog.build(spark, store)(ops.BucketedStore.writeBucketed(
+      labels((0L until 128L).map(d => d -> d)), s"$store/clusters",
+      "overwrite", "kb", Seq("cluster_id", "doc_id")))
     store
   }
 
   private def labels(rows: Seq[(Long, Long)]): DataFrame = {
     import spark.implicits._
     rows.toDF("doc_id", "cluster_id")
+      .withColumn("cluster_size", lit(1L))
+      .withColumn("is_canonical", col("doc_id") === col("cluster_id"))
       .withColumn("kb", pmod(col("doc_id"), lit(64)).cast("int"))
   }
 
-  private def readLabels(store: String): Seq[(Long, Long)] =
-    ops.BucketedStore.table(spark, s"$store/clusters",
-      "doc_id BIGINT, cluster_id BIGINT, kb INT", "kb")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+  private def open(store: String) =
+    ops.StoreLog.open(spark, store, "store", "a build")
 
-  private def commit(store: String, torn: Boolean, rows: Seq[(Long, Long)],
-      keys: Seq[Int]): Unit =
-    ops.BucketedStore.commitLabels(spark, store, torn, labels(rows), keys,
-      "spec.commit")(Nil)(())
+  private def readLabels(store: String): Seq[(Long, Long)] =
+    open(store).read(ops.Dedup.ClusterLabels)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
 
   /** Each bucket dir's data files (name and bytes), hidden names kept. */
   private def bucketBytes(store: String): Map[String, Seq[(String, Seq[Byte])]] =
@@ -158,44 +158,50 @@ class BucketedStoreSpec extends SparkSpec {
         .toSeq.map(f => (f.getName, Files.readAllBytes(f.toPath).toSeq)))
       .toMap
 
-  test("a label commit swaps by two renames: untouched buckets stay " +
-    "byte-identical and no aside dir is left") {
+  test("a label commit through the store log: untouched buckets stay " +
+    "byte-identical, a replaced bucket holds one new file, and the log " +
+    "holds one new entry") {
     val store = labelStore()
     val before = bucketBytes(store)
     // docs 3 and 67 (kb 3) join cluster 5; doc 5 (kb 5) keeps its label
     val relabeled = Seq(3L -> 5L, 67L -> 5L, 5L -> 5L, 69L -> 69L)
-    commit(store, torn = false, relabeled, Seq(3, 5))
+    val v = open(store)
+    v.commit("spec.commit")(Seq(v.write(ops.Dedup.ClusterLabels,
+      labels(relabeled), Seq(3, 5), replace = true)))
     val after = bucketBytes(store)
-    assert(after.keySet === before.keySet, "no aside or extra dir")
+    assert(after.keySet === before.keySet, "no extra dir")
     (0 until 64).filterNot(Set(3, 5)).foreach(k =>
       assert(after(s"kb=$k") === before(s"kb=$k"), s"kb=$k changed"))
-    assert(after("kb=3") !== before("kb=3"))
+    Seq(3, 5).foreach { k =>
+      assert(after(s"kb=$k").count(_._1.endsWith(".parquet")) === 1)
+      assert(after(s"kb=$k") !== before(s"kb=$k"))
+    }
     assert(readLabels(store) === ((0L until 128L).map(d => d -> d).toMap ++
       relabeled).toSeq.sorted)
-    assert(!ops.BucketedStore.tornMarker(spark, store))
+    assert(new java.io.File(s"$store/${ops.StoreLog.Dir}").list()
+      .filterNot(_.startsWith(".")).toSeq === Seq("1"))
   }
 
-  test("a crashed swap's aside dir is never read, and the next commit " +
-    "deletes it and restores the bucket it moved aside") {
+  test("the listing-path ops refuse a logged store's tables and write " +
+    "nothing there") {
     val store = labelStore()
-    val want = readLabels(store)
-    // a crash between kb=7's two renames: its live dir moved aside, the
-    // staged one not yet in, the staging marker still present; a second
-    // leftover carries rows no bucket holds
-    val live = java.nio.file.Paths.get(s"$store/clusters")
-    Files.move(live.resolve("kb=7"), live.resolve("_aside_7"))
-    Files.createDirectories(live.resolve("_aside_9"))
-    Files.list(live.resolve("kb=9")).iterator().forEachRemaining(f =>
-      Files.copy(f, live.resolve("_aside_9").resolve(f.getFileName)))
-    assert(new java.io.File(s"$store/clusters_staging").mkdirs())
-    assert(ops.BucketedStore.tornMarker(spark, store))
-    assert(readLabels(store) === want.filterNot(_._1 % 64 == 7))
-    assert(spark.read.parquet(s"$store/clusters").count() === 126L)
-    // the torn commit stages the whole label set
-    commit(store, torn = true, want, (0 until 64))
-    assert(new java.io.File(s"$store/clusters").list()
-      .filter(_.startsWith("_aside_")).isEmpty)
-    assert(readLabels(store) === want)
-    assert(!ops.BucketedStore.tornMarker(spark, store))
+    val table = s"$store/clusters"
+    val before = bucketBytes(store)
+    import spark.implicits._
+    val refusals = Seq(
+      () => ops.BucketedStore.table(spark, table,
+        "doc_id BIGINT, cluster_id BIGINT, kb INT", "kb"),
+      () => ops.BucketedStore.compactBuckets(spark, table, "kb",
+        Seq(col("doc_id"), col("cluster_id")), Seq("doc_id"), 0),
+      () => ops.BucketedStore.retractBucketRewrite(spark, table,
+        "doc_id BIGINT, cluster_id BIGINT, kb INT", "kb", Seq(3),
+        Seq(3L).toDF("doc_id"), "doc_id", Seq("doc_id", "cluster_id"),
+        Seq("doc_id")))
+    refusals.foreach { op =>
+      val e = intercept[IllegalArgumentException](op())
+      assert(e.getMessage.contains(ops.StoreLog.Dir), e.getMessage)
+    }
+    assert(bucketBytes(store) === before)
+    assert(!new java.io.File(s"${table}_compacting").exists())
   }
 }

@@ -512,29 +512,6 @@ class GenericApiSpec extends SparkSpec {
     assert(after === rows(
       ops.Dedup.connectedComponents(ops.Dedup.minhashLshPairs(
         corpus.unionByName(docsOf(200L -> txt("alpha")))))))
-    // torn-store HEAL: a crashed update leaves appended edges whose
-    // endpoints never entered the label table, beside the staging
-    // marker (written before any append, deleted after the swap).
-    // The next merge must fold those orphans back into the touched
-    // subgraph — correct answer, no fail-fast (a fail-fast would also
-    // kill the s15 replay that repairs the store) — and the next
-    // COMPLETED update must repair the store and clear the marker.
-    Seq((900L, 901L)).toDF("doc_a", "doc_b")
-      .write.mode("append").parquet(s"$store/edges")
-    new java.io.File(s"$store/clusters_staging").mkdirs()
-    val healBatch = docsOf(300L -> txt("gamma"))
-    val healed = rows(ops.Dedup.neardupClusterMerge(spark, store,
-      healBatch))
-    assert(healed.contains((900L, 900L, 2L, true)))
-    assert(healed.contains((901L, 900L, 2L, false)))
-    ops.Dedup.neardupClusterStoreUpdate(spark, store, healBatch)
-    assert(!new java.io.File(s"$store/clusters_staging").exists())
-    val repaired = rows(spark.read.parquet(s"$store/clusters"))
-    assert(repaired.contains((900L, 900L, 2L, true)))
-    // the marker is gone, so a clean follow-up merge sees the healed
-    // store without any orphan work
-    assert(rows(ops.Dedup.neardupClusterMerge(spark, store,
-      docsOf(301L -> txt("zeta")))) === repaired)
   }
 
   test("shuffleShardWrite materializes one file per shard in the " +

@@ -351,4 +351,19 @@ class IncrementalFunnelSpec extends SparkSpec {
         .orderBy("doc_id").collect().map(_.toString).toSeq
     assert(ledgerRows(honest) === ledgerRows(rebuilt))
   }
+
+  test("s23/s24 counts read-back reads the committed counts under their " +
+    "declared schema: no schema-inference job") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("counts_read_").toString
+    Seq((1, "scrub", 5L), (2, "exact", 3L))
+      .toDF("stage", "stage_name", "n_docs").write.parquet(s"$dir/batch_id=0")
+    Seq((1, "scrub", 2L)).toDF("stage", "stage_name", "n_docs")
+      .write.parquet(s"$dir/batch_id=1")
+    val (df, jobs) = nonQueryJobs(
+      streaming.Streams.committedCountsReadBack(spark, dir))
+    assert(jobs.isEmpty, jobs)
+    assert(df.collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2)))
+      .toSeq === Seq((1, "scrub", 7L), (2, "exact", 3L)))
+  }
 }

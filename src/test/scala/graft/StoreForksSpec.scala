@@ -10,7 +10,7 @@ import jdk.jfr.consumer.RecordingFile
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.ops.{BucketedStore, Similarity, Tables, UnifiedClusters}
+import graft.ops.{BucketedStore, Dedup, Similarity, Tables, UnifiedClusters}
 import graft.sources.TimeSeriesStore
 
 /** Store writes start no process: without Hadoop's native library the
@@ -98,16 +98,26 @@ class StoreForksSpec extends SparkSpec {
     assert(forks.isEmpty, forks)
   }
 
-  test("replaceUnpartitioned forks no process") {
+  test("a cluster-store compaction through the log forks no process") {
     import spark.implicits._
-    val dir = tmp("store_forks_replace_") + "/edges"
-    (0L until 10L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-      .write.parquet(dir)
-    val forks = forksOn(dir) {
-      BucketedStore.replaceUnpartitioned(spark, dir,
-        spark.read.parquet(dir).filter(col("doc_a") < 5L), 2)
-    }
-    assert(spark.read.parquet(dir).count() === 5L)
+    def docsOf(rs: (Long, String)*): DataFrame =
+      rs.toSeq.toDF("doc_id", "text")
+        .withColumn("lang", lit("en")).withColumn("source", lit("t"))
+        .withColumn("n_chars", length(col("text")).cast("long"))
+    def txt(p: String) = (1 to 40).map(i => s"$p$i").mkString(" ")
+    val store = tmp("store_forks_compact_")
+    Dedup.neardupClusterStoreWrite(docsOf(1L -> txt("alpha"),
+      2L -> txt("alpha")), store)
+    Dedup.neardupClusterStoreUpdate(spark, store, docsOf(3L -> txt("alpha")))
+    def edgeFiles = new java.io.File(s"$store/edges").list()
+      .count(_.endsWith(".parquet"))
+    assert(edgeFiles > 1)
+    // the edge rewrite, the band rewrites, the log entry and the GC
+    // deletes all run inside
+    val forks = forksOn(store)(
+      Dedup.neardupClusterStoreCompact(spark, store, maxFilesPerBucket = 1))
+    assert(edgeFiles === 1)
+    assert(Dedup.clusterLabelsTable(spark, store).count() === 3L)
     assert(forks.isEmpty, forks)
   }
 
