@@ -670,7 +670,7 @@ object Dedup {
         // signature pipeline a second time: one signature pass per
         // persisted merge.
         v.write(Bands, batchBands, bandKeys),
-        v.write(NdEdges, newEdges, phase = "edges")))
+        v.write(NdEdges, newEdges)))
     }
   }
 

@@ -60,12 +60,12 @@ private[graft] object StoreLog {
         keys.distinct.map(k => k -> s"$table/$c=$k"))
   }
 
-  /** One write of a commit: `run` writes new files, with the Hadoop
-    * options it is given, into `dirs` (store-relative). With `replace`,
-    * the version's files in those dirs leave the store. Its jobs carry
-    * the description `<span>.<phase>`. */
-  final class Write private[StoreLog] (val dirs: Seq[String],
-      val replace: Boolean, val phase: String,
+  /** One write of a commit into `table`: `run` writes new files, with
+    * the Hadoop options it is given, into `dirs` (store-relative). With
+    * `replace`, the version's files in those dirs leave the store. Its
+    * jobs carry the description `<span>.<table>`. */
+  final class Write private[StoreLog] (val table: String,
+      val dirs: Seq[String], val replace: Boolean,
       val run: Map[String, String] => Unit)
 
   /** The newest complete version of `store`, a `kind` that `builder`
@@ -172,10 +172,9 @@ private[graft] object StoreLog {
       * buckets of `l` ([[BucketedStore.writeBucketed]]'s layout), or into
       * the unpartitioned `l` as `nFiles` files sorted by its `ordCols`. */
     def write(l: Layout, rows: DataFrame, keys: Seq[Int] = Nil,
-        replace: Boolean = false, nFiles: Int = 1,
-        phase: String = "stage_and_writes"): Write = {
+        replace: Boolean = false, nFiles: Int = 1): Write = {
       val out = rows.select(l.cols.map(col): _*)
-      new Write(l.dirs(keys).map(_._2), replace, phase, opts =>
+      new Write(l.table, l.dirs(keys).map(_._2), replace, opts =>
         l.bucketCol.fold(out.coalesce(nFiles)
             .sortWithinPartitions(l.ordCols.map(col): _*)
             .storeWrite.options(opts).mode("append")
@@ -211,7 +210,7 @@ private[graft] object StoreLog {
       val opts = Map("mapreduce.output.basename" -> tag,
         "mapreduce.fileoutputcommitter.marksuccessfuljobs" -> "false")
       UnifiedClusters.inParallel(todo.map(w =>
-        () => Span(s, s"$span.${w.phase}")(w.run(opts))))
+        () => Span(s, s"$span.${w.table}")(w.run(opts))))
       val listed = todo.flatMap(_.dirs).distinct.map { d =>
         d -> (try Some(fs.listStatus(new Path(root, d)).toSeq
             .filter(st => st.isFile && BucketedStore.isData(st.getPath.getName))

@@ -169,11 +169,11 @@ object UnifiedClusters {
     sigIndex("ehash", "ehash"),
     StoreLog.Layout("emb_vec", "vec_id BIGINT, qe ARRAY<BIGINT>, kv INT",
       Some("kv"), Seq("vec_id")))
-  private val Index = Indices.map(l => l.table -> l).toMap
+  private[graft] val Index = Indices.map(l => l.table -> l).toMap
   // the edge table's in-file order: an edges file's bytes (and so the
   // store's size) are a function of its rows, not of the order a
   // shuffle fetched them in; a micro-batch's new edges land as one file
-  private val Edges = StoreLog.Layout("edges",
+  private[graft] val Edges = StoreLog.Layout("edges",
     "doc_a BIGINT, doc_b BIGINT, family STRING", None,
     Seq("doc_a", "doc_b", "family"))
   private def edges(v: StoreLog.Version): DataFrame = v.read(Edges)
@@ -742,7 +742,7 @@ object UnifiedClusters {
       Seq(v.write(Dedup.ClusterLabels, staged, buckets, replace = true)) ++
         Indices.zip(p.rows).map { case (l, rows) =>
           v.write(l, rows, p.keys(l.table)) } ++
-        Option.when(p.nNew > 0)(v.write(Edges, p.newEdges, phase = "edges")))
+        Option.when(p.nNew > 0)(v.write(Edges, p.newEdges)))
   }
 
   /** Bound file counts under daily merges, in one commit: each index
@@ -863,7 +863,7 @@ object UnifiedClusters {
               Seq("doc_a"), "left_anti")
             .join(delIds.withColumnRenamed("doc_id", "doc_b"),
               Seq("doc_b"), "left_anti"),
-          replace = true, nFiles = 4, phase = "edges"))
+          replace = true, nFiles = 4))
   }
 
   /** Declared O-140 binding: the full q61c store (every document,

@@ -15,6 +15,7 @@ import org.apache.spark.sql.types.StructType
   * before the mutation or the one after it, and replaying the mutation
   * reads back the full-rebuild oracle. */
 class StoreCrashSpec extends SparkSpec {
+  import StoreCrashSpec.Doc
 
   private def docsOf(rs: (Long, String)*): DataFrame = {
     import spark.implicits._
@@ -22,21 +23,26 @@ class StoreCrashSpec extends SparkSpec {
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
   }
-  private def emb0 = {
+
+  /** The docs, embeddings, image and audio signatures of `ds`. */
+  private def families(ds: Seq[Doc])
+      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     import spark.implicits._
-    Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
-  }
-  private def sig0(c: String) = {
-    import spark.implicits._
-    Seq.empty[(Long, Long)].toDF("doc_id", c)
+    (docsOf(ds.map(d => d.id -> d.text): _*),
+      ds.map(d => (d.id, d.vec.toArray)).toDF("vec_id", "embedding"),
+      ds.map(d => (d.id, d.ahash)).toDF("doc_id", "ahash"),
+      ds.map(d => (d.id, d.ehash)).toDF("doc_id", "ehash"))
   }
 
-  // docs 1 and 2 are duplicates, doc 3 stands alone; the batch doc 4
-  // duplicates doc 3
-  private val alpha = "alpha bravo charlie delta echo"
-  private val foxtrot = "foxtrot golf hotel india juliet"
-  private val corpus = Seq(1L -> alpha, 2L -> alpha, 3L -> foxtrot)
-  private val batch = Seq(4L -> foxtrot)
+  // docs 1 and 2 are duplicates in every family, doc 3 stands alone;
+  // the batch doc 4 duplicates doc 3 in every family
+  private val sig = 0x0F0F0F0F0F0F0F0FL
+  private val one = Doc(1, "alpha bravo charlie delta echo",
+    Seq(1f, 0f, 0f, 0f), sig, ~sig)
+  private val three = Doc(3, "foxtrot golf hotel india juliet",
+    Seq(0f, 1f, 0f, 0f), ~sig, sig)
+  private val corpus = Seq(one, one.copy(id = 2), three)
+  private val batch = Seq(three.copy(id = 4))
 
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
@@ -66,9 +72,9 @@ class StoreCrashSpec extends SparkSpec {
   /** Fail `op` at each of its mutations on a fresh clone of `pristine`,
     * four clones at a time; check each crashed store against the clean
     * run's two versions, then replay `op` and check `readBack` against
-    * `oracle`. */
+    * `oracle`. Returns the tables whose rows the clean run changed. */
   private def everyCrash(name: String, pristine: String)(op: String => Unit)(
-      readBack: String => Seq[String], oracle: Seq[String]): Unit = {
+      readBack: String => Seq[String], oracle: Seq[String]): Set[String] = {
     val schemas = new ConcurrentHashMap[String, StructType]
     val clean = util.Ephemeral.cloneDir(pristine, s"crash_${name}_")
     val before = state(clean, schemas)
@@ -102,32 +108,45 @@ class StoreCrashSpec extends SparkSpec {
       sc.setLogLevel("WARN")
       pool.shutdown()
     }
+    (before.keySet ++ after.keySet).filter(t => before.get(t) != after.get(t))
   }
 
-  private def unifiedStore(docs: Seq[(Long, String)]): String = {
+  /** Every table of the unified store: the commits below write and
+    * rewrite each of them. */
+  private val unifiedTables = Set("shingle", "simhash", "emb_lsh",
+    "emb_vec", "img_ahash", "ehash", "edges", "clusters")
+
+  private def unifiedStore(ds: Seq[Doc]): String = {
     val store = util.Ephemeral.dir("crash_uni_pristine_")
-    ops.UnifiedClusters.unifiedClusterStoreWrite(docsOf(docs: _*), emb0,
-      sig0("ahash"), sig0("ehash"), store)
+    val (docs, emb, ahash, ehash) = families(ds)
+    ops.UnifiedClusters.unifiedClusterStoreWrite(docs, emb, ahash, ehash,
+      store)
     store
   }
   private def unifiedReadBack(store: String): Seq[String] =
     rows(ops.UnifiedClusters.unifiedClustersFromStore(spark, store))
-  private def unifiedUpdate(store: String): Unit =
-    ops.UnifiedClusters.unifiedClusterStoreUpdate(spark, store,
-      docsOf(batch: _*), emb0, sig0("ahash"), sig0("ehash"))
+  private def unifiedUpdate(store: String): Unit = {
+    val (docs, emb, ahash, ehash) = families(batch)
+    ops.UnifiedClusters.unifiedClusterStoreUpdate(spark, store, docs, emb,
+      ahash, ehash)
+  }
 
   test("a unified update crashed at any filesystem mutation reads the " +
     "old or the new version, and its replay equals the rebuild") {
-    everyCrash("uni_update", unifiedStore(corpus))(unifiedUpdate)(
-      unifiedReadBack, unifiedReadBack(unifiedStore(corpus ++ batch)))
+    val changed = everyCrash("uni_update", unifiedStore(corpus))(
+      unifiedUpdate)(unifiedReadBack,
+      unifiedReadBack(unifiedStore(corpus ++ batch)))
+    assert(changed === unifiedTables)
   }
 
   test("a unified retraction crashed at any filesystem mutation reads " +
     "the old or the new version, and its replay equals the rebuild") {
-    everyCrash("uni_retract", unifiedStore(corpus)) { store =>
-      ops.UnifiedClusters.unifiedClusterStoreRetract(spark, store,
-        docsOf(corpus.take(1): _*), emb0, sig0("ahash"), sig0("ehash"))
+    val changed = everyCrash("uni_retract", unifiedStore(corpus)) { store =>
+      val (docs, emb, ahash, ehash) = families(corpus.take(1))
+      ops.UnifiedClusters.unifiedClusterStoreRetract(spark, store, docs,
+        emb, ahash, ehash)
     }(unifiedReadBack, unifiedReadBack(unifiedStore(corpus.drop(1))))
+    assert(changed === unifiedTables)
   }
 
   test("a unified compaction crashed at any filesystem mutation reads " +
@@ -142,15 +161,22 @@ class StoreCrashSpec extends SparkSpec {
   test("a MinHash cluster-store update crashed at any filesystem " +
     "mutation reads the old or the new version, and its replay equals " +
     "the rebuild") {
-    def build(docs: Seq[(Long, String)]): String = {
+    def build(ds: Seq[Doc]): String = {
       val store = util.Ephemeral.dir("crash_nd_pristine_")
-      ops.Dedup.neardupClusterStoreWrite(docsOf(docs: _*), store)
+      ops.Dedup.neardupClusterStoreWrite(families(ds)._1, store)
       store
     }
     def readBack(store: String) =
       rows(ops.Dedup.clusterLabelsTable(spark, store).drop("kb"))
     everyCrash("nd_update", build(corpus))(store =>
-      ops.Dedup.neardupClusterStoreUpdate(spark, store, docsOf(batch: _*)))(
+      ops.Dedup.neardupClusterStoreUpdate(spark, store, families(batch)._1))(
       readBack, readBack(build(corpus ++ batch)))
   }
+}
+
+object StoreCrashSpec {
+  /** A document with a row in every family of the unified store: its
+    * text, its embedding, and its image and audio signatures. */
+  final case class Doc(id: Long, text: String, vec: Seq[Float],
+      ahash: Long, ehash: Long)
 }

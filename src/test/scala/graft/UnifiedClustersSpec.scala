@@ -94,8 +94,6 @@ class UnifiedClustersSpec extends SparkSpec {
     val replayed = rows(ops.UnifiedClusters.unifiedClusterMerge(
       spark, store, cd.limit(0), ce.limit(0), ci.limit(0), ca.limit(0)))
     assert(replayed === mergedRows)
-    // staging marker cleared
-    assert(!new java.io.File(s"$store/clusters_staging").exists())
   }
 
   test("untouched cluster buckets are byte-identical across an update") {
@@ -190,13 +188,16 @@ class UnifiedClustersSpec extends SparkSpec {
       bd, be, bi, ba)
     val before = rows(
       ops.UnifiedClusters.unifiedClustersFromStore(spark, store))
-    // plant the torn replay the normal update path can no longer
-    // produce (its append is anti-joined): re-append existing edge
-    // rows verbatim — the bytes a crash between the edge append and
-    // the marker delete leaves behind when the batch is replayed
-    val dupes = ops.UnifiedClusters.edgesTable(spark, store)
-      .limit(7).localCheckpoint()
-    dupes.write.mode("append").parquet(s"$store/edges")
+    // plant duplicated edge rows, which the update path does not
+    // produce (its append is anti-joined against the stored edges):
+    // re-append existing edge rows verbatim through a commit of the
+    // store's log, so every engine read sees them
+    val nEdges = ops.UnifiedClusters.edgesTable(spark, store).count()
+    val v = ops.StoreLog.open(spark, store, "store", "spec")
+    val dupes = v.read(ops.UnifiedClusters.Edges).limit(7).localCheckpoint()
+    v.commit("spec")(Seq(v.write(ops.UnifiedClusters.Edges, dupes)))
+    assert(ops.UnifiedClusters.edgesTable(spark, store).count() ===
+      nEdges + 7, "the planted edge rows must be visible")
     val after = rows(
       ops.UnifiedClusters.unifiedClustersFromStore(spark, store))
     assert(after === before,
@@ -305,14 +306,17 @@ class UnifiedClustersSpec extends SparkSpec {
     ops.UnifiedClusters.unifiedClusterStoreWrite(
       docsOf(1L -> (1 to 40).map(i => s"a$i").mkString(" ")),
       embOf(1L), img0, aud0, store)
-    // simulate the crash window: v2's BAND rows landed, its emb_vec
-    // row did not (the two appends share a barrier with no order)
-    graft.ops.Similarity.lshBandRows(embOf(2L))
-      .withColumn("kb", pmod(xxhash64(col("band"), col("bkey")),
-        lit(64)).cast("int"))
-      .select(col("vec_id"), col("band"), col("bkey"), col("kb"))
-      .repartition(1)
-      .write.mode("append").partitionBy("kb").parquet(s"$store/emb_lsh")
+    // plant v2's BAND rows without its emb_vec row, committed through
+    // the store's log so every engine read sees them (a whole update
+    // commits both tables in one entry, so no crash leaves this state)
+    val lsh = ops.UnifiedClusters.Index("emb_lsh")
+    val bands = ops.UnifiedClusters.lshRowsOf(embOf(2L)).localCheckpoint()
+    val v = ops.StoreLog.open(spark, store, "store", "spec")
+    v.commit("spec")(Seq(v.write(lsh, bands,
+      bands.select("kb").distinct().collect().map(_.getInt(0)).toSeq)))
+    assert(ops.StoreLog.open(spark, store, "store", "spec").read(lsh)
+      .filter(col("vec_id") === 2L).count() === bands.count(),
+      "the planted band rows must be visible")
     // batch v3 (identical direction): candidate (v1,v3) verifies —
     // v1 has its vec row — candidate (v2,v3) is SKIPPED silently
     ops.UnifiedClusters.unifiedClusterStoreUpdate(spark, store,
@@ -529,11 +533,12 @@ class UnifiedClustersSpec extends SparkSpec {
         throw new IllegalStateException("boom")))
       assert(sc.getLocalProperty(key) === null)
     }
-    // six family index appends always, plus the label staging write
-    // when any bucket is dirty — each at least one job, every one
-    // submitted from a pool thread
-    assert(descs.count(_ == "uni.update.stage_and_writes") >= 6, descs)
-    assert(descs.contains("uni.update.edges"), descs)
+    // the six family index appends, the label staging write and the
+    // edges append — each at least one job named after its table, every
+    // one submitted from a pool thread
+    Seq("shingle", "simhash", "emb_lsh", "img_ahash", "ehash", "emb_vec",
+      "clusters", "edges").foreach(t =>
+      assert(descs.contains(s"uni.update.$t"), descs))
   }
 
   test("bucketed writes: build, update and retract each add at most one " +
@@ -592,7 +597,7 @@ class UnifiedClustersSpec extends SparkSpec {
       .unifiedClusterStoreUpdate(spark, store, bd, be, bi, ba))
     val updated = gainsAtMostOne(built, "update")
     inSortOrder("update")
-    val wave = stages.filter(_._1 == "uni.update.stage_and_writes")
+    val wave = stages.filter(_._1.startsWith("uni.update."))
     val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
     assert(wave.nonEmpty, stages)
     assert(wave.forall(_._2 <= width), wave)
