@@ -561,31 +561,26 @@ object Multimodal {
   // one self-join, no fixpoint). This closes the SCALE.md claim that
   // an image's dedup probe is a handful of pruned band lookups: the
   // store below IS that layout.
-  /** Band rows of a (doc_id, <sigCol>) signature table: the SAME chunk
-    * explosion the pair join uses ([[graft.ops.Dedup.bandChunkRows]] —
-    * the stored layout and the pair rule share one definition), as
+  /** Band rows of a (doc_id, <sigCol>) signature table with their kb
+    * bucket: the SAME chunk explosion the pair join uses
+    * ([[graft.ops.Dedup.bandChunkRows]] — the stored layout and the pair
+    * rule share one definition, the unified store's sig tables too), as
     * persistent rows (~36 B/signature at any corpus size). The store
     * trio below is signature-column-parameterized since round 12, so
     * the image (ahash) and audio (ehash) admission families run ONE
     * definition of the layout, the pruned merge, and the append-back. */
   private def sigBandRows(sigs: DataFrame, sigCol: String,
       scheme: BandScheme): DataFrame =
-    graft.ops.Dedup.bandChunkRows(sigs, sigCol, scheme.nBands,
-      scheme.bits)
-      .withColumnRenamed("chunk", "band")
+    graft.ops.UnifiedClusters.sigRowsOf(sigs, sigCol, scheme)
 
   /** Write/append a perceptual admission index: band rows partitioned
     * by kb = xxhash64(band, ckey) mod 64 (the q85 layout — band folded
-    * into one 64-way bucket hash), written by
-    * [[graft.ops.BucketedStore.writeBucketed]]. */
+    * into one 64-way bucket hash), a logged one-table store. */
   def sigIndexWrite(sigs: DataFrame, sigCol: String,
       scheme: BandScheme, store: String,
       mode: String = "overwrite"): Unit =
-    graft.ops.BucketedStore.writeBucketed(
-      sigBandRows(sigs.filter(col("doc_id").isNotNull), sigCol, scheme)
-        .withColumn("kb",
-          pmod(xxhash64(col("band"), col("ckey")), lit(64)).cast("int")),
-      store, mode, "kb", Seq("band", "ckey"))
+    sigStore(sigCol).put(sigBandRows(sigs, sigCol, scheme), store, mode,
+      "sig.append")
 
   def ahashIndexWrite(sigs: DataFrame, store: String,
       mode: String = "overwrite"): Unit =
@@ -596,17 +591,14 @@ object Multimodal {
     * into each touched kb bucket, so under a steady ingest cadence
     * the 64 buckets accumulate files without bound — the same problem
     * the exact-hash and text band stores already solve. This is the
-    * SAME shared pass (driver-side bucket listing, partition-pruned
-    * rewrite of only the oversized buckets, dynamic-overwrite swap;
-    * DISTINCT keeps it idempotent and reclaims replayed appends),
-    * parameterized over the signature column — one compaction
-    * definition now serves all four bucket-partitioned index
-    * families. Returns the compacted bucket ids. */
+    * SAME shared pass (the log's compaction: a partition-pruned
+    * rewrite of only the oversized buckets in one commit; DISTINCT
+    * keeps it idempotent and reclaims replayed appends),
+    * parameterized over the signature column. Returns the compacted
+    * bucket ids. */
   def sigIndexCompact(s: SparkSession, store: String, sigCol: String,
       maxFilesPerBucket: Int = 4): Seq[Int] =
-    graft.ops.BucketedStore.compactBuckets(s, store, "kb",
-      Seq(col("doc_id"), col(sigCol), col("band"), col("ckey")),
-      Seq("band", "ckey"), maxFilesPerBucket)
+    sigStore(sigCol).compact(s, store, "sig.compact", maxFilesPerBucket)
 
   /** Admit the batch's perceptually-new images against the stored band
     * index: the index read is partition-pruned to the batch's <= 64 kb
@@ -626,21 +618,15 @@ object Multimodal {
     // touched buckets observed during the materialization job (round
     // 17, materializeWithKeys) — one job instead of two
     val (batchBands, keys) = graft.ops.Dedup.materializeWithKeys(
-      sigBandRows(batchSigs.filter(col("doc_id").isNotNull), sigCol,
-        scheme)
-        .withColumn("kb",
-          pmod(xxhash64(col("band"), col("ckey")), lit(64)).cast("int")),
-      "kb")
+      sigBandRows(batchSigs, sigCol, scheme), "kb")
     val near =
       expr(s"bit_count(x.$sigCol ^ y.$sigCol)") <= scheme.maxHamming
     val crossHit =
       if (keys.isEmpty) batchSigs.select(col("doc_id")).limit(0)
-      // SCHEMA'D store read: a retraction (sigRetract) can empty every
-      // bucket, and a partitioned table with zero rows keeps no
-      // schema-bearing files — post-retraction admission must treat
-      // the index as empty, not throw (the cfa41fc lesson)
-      else graft.ops.BucketedStore.table(s, store, sigStoreSchema(sigCol),
-          "kb", Some(keys)).as("x")
+      // read from the log under the layout's schema: a retraction
+      // (sigRetract) can empty every bucket, and post-retraction
+      // admission must treat the index as empty, not throw
+      else sigStore(sigCol).read(s, store, Some(keys)).as("x")
         .join(batchBands.as("y").hint("shuffle_hash"),
           col("x.band") === col("y.band") &&
             col("x.ckey") === col("y.ckey"))
@@ -667,6 +653,11 @@ object Multimodal {
   private[graft] def sigStoreSchema(sigCol: String): String =
     s"doc_id BIGINT, $sigCol BIGINT, band INT, ckey BIGINT, kb INT"
 
+  /** The perceptual admission index over `sigCol`, a one-table store. */
+  private def sigStore(sigCol: String) = graft.ops.StoreLog.OneTable(
+    s"$sigCol signature store", "sigIndexWrite", sigStoreSchema(sigCol),
+    "kb", Seq("band", "ckey"))
+
   // O-144 (VERDICT r16 #2): RETRACTION for the standalone perceptual
   // admission stores. Without it a deleted image/track's band rows
   // stay matchable forever — a future re-upload of retracted content
@@ -679,12 +670,11 @@ object Multimodal {
     * rows names EXACTLY the buckets holding their index rows (the
     * same determinism argument the text band family's retraction
     * makes). Touched buckets are rewritten with survivors anti-joined
-    * on doc_id; an emptied bucket's directory is deleted explicitly
-    * and loudly ([[graft.ops.BucketedStore.retractBucketRewrite]]). One
+    * on doc_id in one commit of the store's log, and an emptied
+    * bucket leaves the store ([[graft.ops.StoreLog.Version.retraction]]). One
     * sig-generic definition — the [[sigMerge]] trio's posture —
     * serves the image (ahash) and audio (ehash) families alike.
-    * Replay-idempotent: the removal is an anti-join and an
-    * already-absent bucket directory counts as done.
+    * Replay-idempotent: the removal is an anti-join.
     * Retract-equals-rebuild holds exactly (band rows are per-doc;
     * MultimodalSpec pins it for both families). */
   def sigRetract(s: SparkSession, store: String, sigCol: String,
@@ -692,15 +682,9 @@ object Multimodal {
     // touched buckets observed during the materialization job (round
     // 17, materializeWithKeys) — one job instead of two
     val (delBands, keys) = graft.ops.Dedup.materializeWithKeys(
-      sigBandRows(delSigs.filter(col("doc_id").isNotNull), sigCol,
-        scheme)
-        .withColumn("kb",
-          pmod(xxhash64(col("band"), col("ckey")), lit(64)).cast("int")),
-      "kb")
-    graft.ops.BucketedStore.retractBucketRewrite(s, store,
-      sigStoreSchema(sigCol), "kb", keys,
-      delBands.select(col("doc_id")).distinct(), "doc_id",
-      Seq("doc_id", sigCol, "band", "ckey"), Seq("band", "ckey"))
+      sigBandRows(delSigs, sigCol, scheme), "kb")
+    sigStore(sigCol).retract(s, store, "sig.retract", keys,
+      delBands.select(col("doc_id")).distinct())
   }
 
   def ahashRetract(s: SparkSession, store: String,

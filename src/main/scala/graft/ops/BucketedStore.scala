@@ -19,8 +19,11 @@ import graft.util.NioLocalFileSystem
 
 /** The lifecycle of the engine's parquet stores, one definition each:
   * the bucketed write, the schema'd read, compaction and the
-  * touched-bucket retraction rewrite. The cluster stores commit through
-  * their log instead ([[StoreLog]]), and share the read and write here.
+  * touched-bucket retraction rewrite. Every bucketed store but the IVF
+  * cells commits through its log instead ([[StoreLog]]) and shares the
+  * write and the relation here; the listing-path ops ([[table]],
+  * [[compactBuckets]], [[retractBucketRewrite]]) serve the IVF cell
+  * stores alone.
   *
   * All store I/O goes through the Hadoop FileSystem API resolved from
   * the store path's own scheme: the stores live on HDFS/S3 at the
@@ -60,10 +63,12 @@ object BucketedStore {
       !name.endsWith("._COPYING_")
 
   /** The listing-path ops refuse the tables of a store with a commit
-    * log: an unlogged write there would be invisible to its readers, or
-    * delete files its log still names. */
+    * log, in the table's own dir or its parent's: an unlogged write
+    * there would be invisible to its readers, or delete files its log
+    * still names. */
   private def requireUnlogged(fs: FileSystem, table: Path): Unit =
-    require(!fs.exists(new Path(table.getParent, StoreLog.Dir)),
+    require(Seq(table, table.getParent)
+        .forall(d => !fs.exists(new Path(d, StoreLog.Dir))),
       s"$table belongs to a store with a commit log " +
         s"(${StoreLog.Dir}): read and write it through the log")
 
@@ -107,12 +112,14 @@ object BucketedStore {
       rows.write.options(NioLocalFileSystem.writeOptions)
   }
 
-  /** The one reader of a hash-bucketed table: `schema` (DDL, its last
-    * column the INT `bucketCol`) over the `bucketCol=N` dirs under
-    * `path`, LISTED ON THE DRIVER — one `listStatus` of `path` plus one
-    * per bucket dir. With `keys`, only those keys' dirs are listed
-    * (no listing of `path`) and the frame is filtered to them, so the
-    * scan keeps its partition filter; empty `keys` read nothing.
+  /** The listing reader of an unlogged hash-bucketed table (the IVF
+    * cells, through [[compactBuckets]] and [[retractBucketRewrite]]):
+    * `schema` (DDL, its last column the INT `bucketCol`) over the
+    * `bucketCol=N` dirs under `path`, LISTED ON THE DRIVER — one
+    * `listStatus` of `path` plus one per bucket dir. With `keys`, only
+    * those keys' dirs are listed (no listing of `path`) and the frame
+    * is filtered to them, so the scan keeps its partition filter; empty
+    * `keys` read nothing.
     *
     * Why not `s.read.schema(..).parquet(..)`: Spark lists a table of
     * more than `spark.sql.sources.parallelPartitionDiscovery.threshold`
@@ -238,20 +245,16 @@ object BucketedStore {
     * dirs DRIVER-SIDE (bounded listing, no scan), read ONLY the
     * buckets holding more than `maxFilesPerBucket` parquet files
     * (partition-pruned, schema from one of their footers), rewrite
-    * each as one sorted file via a sibling temp dir (Spark refuses a
-    * read-and-overwrite of the same path), and swap with dynamic
-    * partition overwrite so healthy buckets' files stay untouched.
-    * The bucket column must be INT. Returns the compacted bucket ids.
-    *
-    * `fold` is the per-bucket rewrite: DISTINCT over `projection` by
-    * default (idempotent-fact stores: hashes, band rows — it also
-    * reclaims an at-least-once replayed append's duplicate rows); the
-    * tf store passes a SUM fold because its delta rows compact by
-    * addition, not dedup. */
+    * each as one sorted file, DISTINCT over `projection` (which also
+    * reclaims an at-least-once replayed append's duplicate rows), via a
+    * sibling temp dir (Spark refuses a read-and-overwrite of the same
+    * path), and swap with dynamic partition overwrite so healthy
+    * buckets' files stay untouched. The temp dir is deleted after the
+    * swap, and a failed delete fails the pass, naming the dir. The
+    * bucket column must be INT. Returns the compacted bucket ids. */
   private[graft] def compactBuckets(s: SparkSession, store: String,
       partCol: String, projection: Seq[Column], ordCols: Seq[String],
-      maxFilesPerBucket: Int,
-      fold: Option[DataFrame => DataFrame] = None): Seq[Int] = {
+      maxFilesPerBucket: Int): Seq[Int] = {
     val root = new Path(store)
     val fs = fsOf(s, root)
     requireUnlogged(fs, root)
@@ -265,18 +268,15 @@ object BucketedStore {
         Some(StructField(partCol, IntegerType)))
       .getOrElse(sys.error(s"compaction: no Spark footer in ${over.head._2}"))
     val pruned = table(s, store, schema.toDDL, partCol, Some(over.map(_._1)))
-    val compacted = fold.fold(
-      pruned.select(projection :+ col(partCol): _*).distinct())(
-      f => f(pruned))
+    val compacted = pruned.select(projection :+ col(partCol): _*).distinct()
     writeBucketed(compacted, tmp, "overwrite", partCol, ordCols)
     // read back with the written frame's schema: no inference job
     table(s, tmp, compacted.schema.toDDL, partCol)
       .storeWrite.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partCol).parquet(store)
-    // temp dir is scratch; best-effort recursive cleanup
-    try fs.delete(new Path(tmp), true)
-    catch { case _: java.io.IOException => () }
+    require(fs.delete(new Path(tmp), true),
+      s"compaction: could not delete the temp dir $tmp")
     over.map(_._1)
   }
 

@@ -22,8 +22,7 @@ import graft.util.Span
   */
 object Dedup {
   import Tables._
-  import BucketedStore.{StoreWriter, compactBuckets, retractBucketRewrite,
-    writeBucketed}
+  import BucketedStore.{StoreWriter, writeBucketed}
 
   /** Re-key offset for the q83/q85 planted-duplicate fixtures: copies
     * of low-id corpus docs join the arriving batch under
@@ -134,10 +133,10 @@ object Dedup {
   // the O(new data) steady-state version a 100 TB ingest actually runs
   // — the batch never rescans the corpus, only its hash index.
   /** Write/append the exact-dedup index: DISTINCT sha256 content hashes
-    * in 64 hash-range partitions. At 100 TB the index is ~32 bytes per
-    * unique document — orders smaller than the corpus — and the bucket
-    * layout lets a merge read only the partitions its batch hashes
-    * into. */
+    * in 64 hash-range partitions, a logged one-table store. At 100 TB
+    * the index is ~32 bytes per unique document — orders smaller than
+    * the corpus — and the bucket layout lets a merge read only the
+    * partitions its batch hashes into. */
   def dedupIndexWrite(docs: DataFrame, store: String,
       mode: String = "overwrite"): Unit =
     dedupIndexWriteHashes(
@@ -151,11 +150,11 @@ object Dedup {
     * and co-location as dedupIndexWrite. */
   def dedupIndexWriteHashes(hashes: DataFrame, store: String,
       mode: String): Unit =
-    writeBucketed(hashes.select(col("content_hash"))
+    ExactIndex.put(hashes.select(col("content_hash"))
       .distinct()
       .withColumn("bucket",
         pmod(xxhash64(col("content_hash")), lit(64)).cast("int")),
-      store, mode, "bucket", Seq.empty)
+      store, mode, "exact.append")
 
   /** Admit the batch's new documents: keep-first within the batch (the
     * q35 rule), then LEFT ANTI against the stored index on
@@ -180,12 +179,11 @@ object Dedup {
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("content_hash")).orderBy(col("doc_id"))))
       .filter(col("rn") === 1), "bucket")
-    // SCHEMA'D read (ADVICE r16): a retraction (incrementalStoresRetract)
-    // can legitimately empty EVERY exact bucket, and a partitioned table
-    // with zero rows keeps no schema-bearing files — post-retraction
-    // admission must still see the index as readable-and-empty, not throw
-    val index = BucketedStore.table(s, store, ExactIndexSchema, "bucket",
-      Some(buckets))
+    // read from the log under the layout's schema: a retraction
+    // (incrementalStoresRetract) can legitimately empty EVERY exact
+    // bucket, and post-retraction admission must still see the index as
+    // readable-and-empty
+    val index = ExactIndex.read(s, store, Some(buckets))
     batchFirst
       .join(index, Seq("bucket", "content_hash"), "left_anti")
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
@@ -200,23 +198,19 @@ object Dedup {
     * append-only layout lacked (the reference's InfluxDB compacts
     * internally; a parquet-directory index must do it explicitly).
     *
-    * Pass shape: enumerate bucket directories DRIVER-SIDE (at most 64
-    * — a bounded listing, no scan), pick the buckets whose parquet
-    * file count exceeds `maxFilesPerBucket`, read ONLY those buckets
-    * (partition-pruned the same way corpusMerge's anti-join side is),
-    * and rewrite each as one file via a bucket-keyed repartition
-    * staged through a sibling temp dir (Spark refuses a direct
-    * read-and-overwrite of the same path; dynamic partition overwrite
-    * then swaps ONLY the compacted buckets, leaving healthy buckets'
-    * files untouched). DISTINCT on the way through makes the pass
-    * idempotent and tolerant of a duplicate hash that slipped into two
-    * appends. Cost is O(oversized buckets' index bytes) — 32 B/doc,
-    * never corpus text; at 100 TB this is the nightly housekeeping job
-    * that keeps corpusMerge's per-bucket read at one-or-few files. */
+    * Pass shape ([[StoreLog.Version.compaction]]): the buckets whose
+    * file count in the log entry exceeds `maxFilesPerBucket` are read
+    * (partition-pruned the same way corpusMerge's anti-join side is)
+    * and rewritten as one file each in one commit, leaving healthy
+    * buckets' files untouched. DISTINCT on the way through makes the
+    * pass idempotent and tolerant of a duplicate hash that slipped
+    * into two appends. Cost is O(oversized buckets' index bytes) —
+    * 32 B/doc, never corpus text; at 100 TB this is the nightly
+    * housekeeping job that keeps corpusMerge's per-bucket read at
+    * one-or-few files. */
   def dedupIndexCompact(s: SparkSession, store: String,
       maxFilesPerBucket: Int = 4): Seq[Int] =
-    compactBuckets(s, store, "bucket", Seq(col("content_hash")),
-      Seq.empty, maxFilesPerBucket)
+    ExactIndex.compact(s, store, "exact.compact", maxFilesPerBucket)
 
   /** The near-dup band store's compaction pass (the dedupIndexCompact
     * reasoning applied to the q85 layout): rewrite kb buckets whose
@@ -226,9 +220,7 @@ object Dedup {
     * appends and makes the pass idempotent. */
   def neardupIndexCompact(s: SparkSession, store: String,
       maxFilesPerBucket: Int = 4): Seq[Int] =
-    compactBuckets(s, store, "kb",
-      Seq(col("doc_id"), col("mins"), col("band"), col("k1"), col("k2")),
-      Seq("band", "k1", "k2"), maxFilesPerBucket)
+    NdIndex.compact(s, store, "nd_index.compact", maxFilesPerBucket)
 
   /** Declared write-then-merge binding (the q67/q74 pattern): docs
     * 0-249 are the standing corpus (index written to run-scoped
@@ -271,10 +263,13 @@ object Dedup {
     * than the text. */
   def neardupIndexWrite(docs: DataFrame, store: String,
       mode: String = "overwrite"): Unit =
-    writeBucketed(bandRows(q36bSig(docs.filter(col("doc_id").isNotNull)))
+    NdIndex.put(ndIndexRows(docs), store, mode, "nd_index.append")
+
+  /** The near-dup index rows of `docs`: band rows with their kb. */
+  private def ndIndexRows(docs: DataFrame): DataFrame =
+    bandRows(q36bSig(docs.filter(col("doc_id").isNotNull)))
       .withColumn("kb",
-        pmod(xxhash64(col("band"), col("k1")), lit(64)).cast("int")),
-      store, mode, "kb", Seq("band", "k1", "k2"))
+        pmod(xxhash64(col("band"), col("k1")), lit(64)).cast("int"))
 
   /** Admit the batch's genuinely-new documents against the stored band
     * index. The index read is EXPLICITLY partition-pruned to the
@@ -303,9 +298,7 @@ object Dedup {
     // collect (measured ~1s of the query at sf0.1)
     // touched buckets collected via the materialization's own observe
     // (round 17, materializeWithKeys) — one job instead of two
-    val (batchBands, keys) = materializeWithKeys(bandRows(q36bSig(batch))
-      .withColumn("kb",
-        pmod(xxhash64(col("band"), col("k1")), lit(64)).cast("int")), "kb")
+    val (batchBands, keys) = materializeWithKeys(ndIndexRows(batch), "kb")
     // codegen agreement count (round-10): the previous
     // aggregate(zip_with(...)) form was an interpreted CodegenFallback
     // lambda per candidate pair — see LongArrayEqCount scaladoc
@@ -426,29 +419,29 @@ object Dedup {
   // scratch reproduces exactly the full graph's components.
   /** Write the standing cluster store: band index (q85 layout) +
     * verified edge set + resolved cluster table. ONE signature pass
-    * over the corpus: the edge set derives from the just-WRITTEN band
-    * table (8-byte keys + mins — the q36b self-join re-expressed over
-    * the stored rows, identical pair set), so the shingle/digest
-    * pipeline runs exactly once at build time; CC then runs over the
-    * written edge table (lineage break — no signature or join
-    * re-runs for the label pass). */
+    * over the corpus: the band rows are materialized once and feed both
+    * the band table write and the q36b self-join (8-byte keys + mins,
+    * identical pair set), so the shingle/digest pipeline runs exactly
+    * once at build time; CC then runs over the same materialized edge
+    * set the edge table is written from (lineage break — no signature
+    * or join re-runs for the label pass). The inner tables are plain
+    * writes: the store's one log covers them all. */
   def neardupClusterStoreWrite(docs: DataFrame, store: String): Unit =
       StoreLog.build(docs.sparkSession, store) {
-    val s = docs.sparkSession
-    neardupIndexWrite(docs, s"$store/bands")
-    val bands = bandIndexTable(s, s"$store/bands")
+    val bands = materializeBounded(ndIndexRows(docs))
+    writeBucketed(bands, s"$store/bands", "overwrite", "kb", Bands.ordCols)
     val nMatch = graft.functions.LongArrayEqCount(
       col("x.mins"), col("y.mins"))
-    bands.as("x").hint("shuffle_hash")
-      .join(bands.as("y").hint("shuffle_hash"),
-        col("x.band") === col("y.band") && col("x.k1") === col("y.k1") &&
-          col("x.k2") === col("y.k2") && col("x.doc_id") < col("y.doc_id"))
-      .filter(nMatch * 2 >= NHashes)
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .distinct()
-      .storeWrite.mode("overwrite").parquet(s"$store/edges")
-    writeBucketed(connectedComponents(
-        s.read.schema(NdEdges.schema).parquet(s"$store/edges"))
+    val (edges, nEdges) = materializeWithCount(
+      bands.as("x").hint("shuffle_hash")
+        .join(bands.as("y").hint("shuffle_hash"),
+          col("x.band") === col("y.band") && col("x.k1") === col("y.k1") &&
+            col("x.k2") === col("y.k2") && col("x.doc_id") < col("y.doc_id"))
+        .filter(nMatch * 2 >= NHashes)
+        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
+        .distinct())
+    edges.storeWrite.mode("overwrite").parquet(s"$store/edges")
+    writeBucketed(connectedComponentsMaterialized(edges, nEdges)
       .withColumn("kb", clusterBucket(col("doc_id"))),
       s"$store/clusters", "overwrite", "kb", Seq("cluster_id", "doc_id"))
   }
@@ -464,24 +457,22 @@ object Dedup {
   private[graft] def clusterBucket(docId: Column): Column =
     pmod(docId, lit(64)).cast("int")
 
-  /** Schema'd readers for the standing near-dup tables: an EMPTY
-    * table must stay readable — a corpus can legitimately have ZERO
-    * verified near-dup edges (the sf0.1 q89 fixture corpus does) or
-    * ZERO band rows (every document under 3 tokens), and a
-    * partitionBy write of zero rows emits NO schema-bearing files
-    * (unlike a non-partitioned write, which keeps one empty file), so
-    * schema inference would fail on exactly the stores that most need
-    * the fail-fast checks to run. One definition per table layout,
-    * shared by the build/check/merge/update/probe paths and the s15
-    * readback. */
-  private[graft] def bandIndexTable(s: SparkSession, path: String,
+  /** The near-dup band index at `store`, read from its log under the
+    * layout's schema: an EMPTY table must stay readable — a corpus can
+    * legitimately have ZERO band rows (every document under 3 tokens),
+    * and a partitionBy write of zero rows emits NO schema-bearing
+    * files. */
+  private[graft] def bandIndexTable(s: SparkSession, store: String,
       keys: Option[Seq[Int]] = None): DataFrame =
-    BucketedStore.table(s, path, BandIndexSchema, "kb", keys)
+    NdIndex.read(s, store, keys)
   private val BandIndexSchema =
     "doc_id BIGINT, mins ARRAY<BIGINT>, band INT, k1 BIGINT, k2 BIGINT, kb INT"
-  private val ExactIndexSchema = "content_hash STRING, bucket INT"
-  private val Bands = StoreLog.Layout("bands", BandIndexSchema, Some("kb"),
-    Seq("band", "k1", "k2"))
+  private val NdIndex = StoreLog.OneTable("near-dup band index",
+    "neardupIndexWrite", BandIndexSchema, "kb", Seq("band", "k1", "k2"))
+  private val ExactIndex = StoreLog.OneTable("exact-dedup index",
+    "dedupIndexWrite", "content_hash STRING, bucket INT", "bucket", Seq.empty)
+  /** The cluster store's band table: the near-dup index layout. */
+  private val Bands = NdIndex.layout.copy(table = "bands")
   private val NdEdges = StoreLog.Layout("edges",
     "doc_a BIGINT, doc_b BIGINT", None, Seq("doc_a", "doc_b"))
 
@@ -521,11 +512,7 @@ object Dedup {
   private def batchBandsOf(newDocs: DataFrame): (DataFrame, Seq[Int]) =
     // touched buckets observed during the materialization job (round
     // 17, materializeWithKeys) — one job instead of two per merge
-    materializeWithKeys(
-      bandRows(q36bSig(newDocs.filter(col("doc_id").isNotNull)))
-        .withColumn("kb",
-          pmod(xxhash64(col("band"), col("k1")), lit(64)).cast("int")),
-      "kb")
+    materializeWithKeys(ndIndexRows(newDocs), "kb")
 
   private def newEdgesFromBands(v: StoreLog.Version,
       batchBands: DataFrame, keys: Seq[Int]): DataFrame = {
@@ -1229,7 +1216,11 @@ object Dedup {
     * build step to piggyback on). */
   def manifestWrite(docs: DataFrame, store: String,
       mode: String = "overwrite"): Unit =
-    writeBucketed(docs.filter(col("doc_id").isNotNull)
+    Manifest.put(manifestRows(docs), store, mode, "manifest.append")
+
+  /** The manifest rows of `docs`, with their kb. */
+  private def manifestRows(docs: DataFrame): DataFrame =
+    docs.filter(col("doc_id").isNotNull)
       .select(col("doc_id"), col("source"),
         sha2(col("text").cast("binary"), 256).as("h"))
       // exact-duplicate rows dedup AT WRITE TIME (round-13 review
@@ -1242,8 +1233,7 @@ object Dedup {
       // appends compaction's DISTINCT reclaims. No-op for well-formed
       // generations; rows are 40 B.
       .distinct()
-      .withColumn("kb", pmod(xxhash64(col("doc_id")), lit(64)).cast("int")),
-      store, mode, "kb", Seq("doc_id"))
+      .withColumn("kb", pmod(xxhash64(col("doc_id")), lit(64)).cast("int"))
 
   /** Diff two PERSISTED generation manifests — the no-rescan gate.
     * Each side is a 3-column 40-byte-row scan; the full-outer join
@@ -1251,7 +1241,7 @@ object Dedup {
   def manifestDiff(s: SparkSession, oldStore: String,
       newStore: String): DataFrame = {
     def side(store: String, tag: String): DataFrame =
-      s.read.parquet(store)
+      Manifest.read(s, store)
         .select(col("doc_id"), col("source").as(s"src_$tag"),
           col("h").as(s"h_$tag"))
     snapshotDiffProjected(side(oldStore, "o"), side(newStore, "n"))
@@ -1266,9 +1256,7 @@ object Dedup {
     * standing posture, same as the hash/band/edge stores). */
   def manifestCompact(s: SparkSession, store: String,
       maxFilesPerBucket: Int = 4): Seq[Int] =
-    compactBuckets(s, store, "kb",
-      Seq(col("doc_id"), col("source"), col("h")),
-      Seq("doc_id"), maxFilesPerBucket)
+    Manifest.compact(s, store, "manifest.compact", maxFilesPerBucket)
 
   /** Declared O-119 binding: materialize both generations' manifests
     * (the q95 snapshot views, so both bindings describe the same
@@ -1381,18 +1369,21 @@ object Dedup {
     * 16 mins, band explode — runs at WRITE time, once; band rows land
     * partitioned by band and sorted by (k1, k2) inside each band file,
     * so parquet row-group stats make a band-key lookup a pruned read. */
-  /** Schema'd reader for the q67 minhash store (band-partitioned
-    * layout) — the bandIndexTable reasoning: an all-short-docs corpus
-    * writes zero band rows and partitionBy keeps no schema. */
+  /** The q67 minhash store's band table (band-partitioned layout), a
+    * logged one-table store at `storeDir/bands`, read from its log —
+    * the bandIndexTable reasoning: an all-short-docs corpus writes zero
+    * band rows and partitionBy keeps no schema. */
   private[graft] def minhashBandsTable(s: SparkSession,
       storeDir: String): DataFrame =
-    BucketedStore.table(s, s"$storeDir/bands",
-      "doc_id BIGINT, mins ARRAY<BIGINT>, k1 BIGINT, k2 BIGINT, band INT",
-      "band")
+    MinhashBands.read(s, s"$storeDir/bands")
+  private val MinhashBands = StoreLog.OneTable("MinHash band store",
+    "minhashWrite",
+    "doc_id BIGINT, mins ARRAY<BIGINT>, k1 BIGINT, k2 BIGINT, band INT",
+    "band", Seq("k1", "k2"))
 
   def minhashWrite(docs: DataFrame, storeDir: String): Unit =
-    writeBucketed(bandRows(q36bSig(docs)), s"$storeDir/bands", "overwrite",
-      "band", Seq("k1", "k2"))
+    MinhashBands.put(bandRows(q36bSig(docs)), s"$storeDir/bands",
+      "overwrite", "minhash.write")
 
   /** Join-free INCREMENTAL near-dup check against the stored signature
     * table: signature the one new document (driver-side collect of a
@@ -2605,10 +2596,17 @@ object Dedup {
       Seq((d0.count(), s1.count())).toDF("n_input", "n_scrub")
         .coalesce(1).storeWrite.mode("overwrite").parquet(s"$dir/meta")
     }
-    val meta = s.read.parquet(s"$dir/meta").head()
+    val meta = scratch(s, s"$dir/meta").head()
     (meta.getAs[Long]("n_input"), meta.getAs[Long]("n_scrub"),
-      s.read.parquet(s"$dir/s2"), s.read.parquet(s"$dir/bench"))
+      scratch(s, s"$dir/s2"), scratch(s, s"$dir/bench"))
   }
+
+  /** An unpartitioned scratch table the engine wrote, under the schema
+    * of one of its footers ([[BucketedStore.reader]]): no
+    * schema-inference job. */
+  private def scratch(s: SparkSession, dir: String): DataFrame =
+    BucketedStore.reader(s, new org.apache.hadoop.fs.Path(dir), None)
+      .parquet(dir)
 
   /** [[funnelCounts]] with the first rows PRE-COUNTED (the shared
     * prefix carries stage-0/1 counts as scalars, not frames). */
@@ -2677,7 +2675,7 @@ object Dedup {
         .distinct()
         .coalesce(1).storeWrite.mode("overwrite").parquet(s"$d/drop")
     }
-    s.read.parquet(s"$dir/drop")
+    scratch(s, s"$dir/drop")
   }
 
   def q87dFunnelMultimodal(s: SparkSession, d: String): DataFrame =
@@ -2812,19 +2810,18 @@ object Dedup {
     * corrupting every non-deleted/non-promoted doc's text changes
     * nothing). A store without the ledger is refused. The eval suite
     * recomputes wholesale from the surviving src0 slice — suite-
-    * sized by definition. Replay-idempotent: removals are
-    * anti-joins; a replayed promotion append lands value-identical
-    * rows (manifest compaction's DISTINCT and the band family's
-    * candidate DISTINCT reclaim them — the s14/s21 posture).
+    * sized by definition. Each logged store commits its removal and
+    * its promoted append in one entry of its own log. Replay-
+    * idempotent: removals are anti-joins; a replayed promotion append
+    * lands value-identical rows (manifest compaction's DISTINCT and
+    * the band family's candidate DISTINCT reclaim them — the s14/s21
+    * posture).
     * Retract-equals-rebuild over the surviving corpus is the
     * contract (IncrementalFunnelSpec pins it, promotion included;
     * the q87h oracle replays it at the driver gate). */
   private[graft] def incrementalStoresRetract(s: SparkSession,
       stores: String, corpusScrubbed: DataFrame,
       delIds0: DataFrame): Unit = Span(s, "funnel.retract") {
-    val ledger = new org.apache.hadoop.fs.Path(s"$stores/hashes")
-    require(ledger.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .exists(ledger), s"retraction: no hash ledger at $ledger")
     // the deleted ids' manifest-bucket set rides the materialization
     // (round 17, materializeWithKeys; consumed by the manifest
     // rewrite below)
@@ -2845,7 +2842,8 @@ object Dedup {
         pmod(xxhash64(col("content_hash")), lit(64)).cast("int")), "hb")
     // every corpus doc CARRYING a deleted hash — survivorship and
     // promotion are decided entirely inside this set: hb-pruned
-    // ledger point-reads, O(deleted hashes' buckets)
+    // ledger point-reads, O(deleted hashes' buckets); a store without
+    // a ledger fails here, naming its path, before any mutation
     val carriers = materializeBounded(
       hashLedgerTable(s, stores, Some(ledgerHbs))
         .select(col("doc_id"), col("h").as("content_hash"))
@@ -2862,15 +2860,13 @@ object Dedup {
           pmod(xxhash64(col("content_hash")), lit(64)).cast("int")),
       "bucket")
     // promotion: deleted MANIFESTED survivors hand survivorship to
-    // their exact group's min-id surviving member (schema'd read: a
-    // previous retraction can have emptied every manifest bucket)
+    // their exact group's min-id surviving member (a previous
+    // retraction can have emptied every manifest bucket)
     // deletedSurvHashes is single-consumer — inlined into the
     // promotedIds plan (round 17: its standalone materialization was
     // one more job); promotedIds' emptiness check rides its
     // materialization as the observed count
-    val deletedSurvHashes =
-      BucketedStore.table(s, s"$stores/manifest", ManifestSchema, "kb",
-          Some(delKb))
+    val deletedSurvHashes = Manifest.read(s, s"$stores/manifest", Some(delKb))
         .join(delIds, Seq("doc_id"), "left_semi")
         .select(col("h")).distinct()
     val (promotedIds, nPromoted) = materializeWithCount(
@@ -2888,52 +2884,35 @@ object Dedup {
     // 18, §2.6): exact index, band index, manifest, hash ledger, and
     // the eval suite are mutually independent tables, and every input
     // (delIds, delHp, carriers, promotedIds/Docs) is materialized
-    // above, BEFORE any mutation. Each promoted append stays ordered
-    // AFTER its own table's rewrite inside the task (the dynamic
-    // overwrite reads then replaces touched buckets — an append
-    // landing between would be clobbered). Crash posture unchanged:
-    // removals are anti-joins and replaying the same retraction heals
-    // any completed subset, exactly as under the sequential order
-    // (no ordering constraint existed ACROSS these tables).
+    // above, BEFORE any mutation. Each logged store's removal and
+    // promoted append are one commit of its own log: the removal reads
+    // the version's files, so the append's new files cannot be
+    // clobbered, and a crash leaves the old version or the new one.
+    // Replaying the same retraction heals any completed subset (no
+    // ordering constraint exists ACROSS these tables).
     graft.ops.UnifiedClusters.inParallel(Seq(
-      () => retractBucketRewrite(s, s"$stores/exact",
-        ExactIndexSchema, "bucket", hashKeys,
-        dropHashes.select(col("content_hash")), "content_hash",
-        Seq("content_hash"), Seq("content_hash")),
+      () => ExactIndex.retract(s, s"$stores/exact", "funnel.retract.exact",
+        hashKeys, dropHashes.select(col("content_hash"))),
       () => {
         // band index: the deleted docs' recomputed band rows name the
         // touched buckets (keys only — one collect job, no
         // checkpoint: nothing downstream re-reads these rows);
-        // survivors rewritten in place, promoted docs appended
-        // through the same writer the build used
-        val bandKeys = bandRows(q36bSig(
-            corpusScrubbed.filter(col("doc_id").isNotNull)
-              .join(delIds, Seq("doc_id"), "left_semi")))
-          .select(pmod(xxhash64(col("band"), col("k1")), lit(64))
-            .cast("int").as("kb"))
+        // survivors rewritten, promoted docs appended in the same commit
+        val bandKeys = ndIndexRows(
+            corpusScrubbed.join(delIds, Seq("doc_id"), "left_semi"))
+          .select(col("kb"))
           .distinct().collect().map(_.getInt(0)).toIndexedSeq.sorted
-        retractBucketRewrite(s, s"$stores/neardup",
-          BandIndexSchema, "kb", bandKeys, delIds,
-          "doc_id", Seq("doc_id", "mins", "band", "k1", "k2"),
-          Seq("band", "k1", "k2"))
-        promotedDocs.foreach(
-          neardupIndexWrite(_, s"$stores/neardup", mode = "append"))
+        NdIndex.retract(s, s"$stores/neardup", "funnel.retract.neardup",
+          bandKeys, delIds, promotedDocs.map(ndIndexRows))
       },
-      () => {
-        // manifest: drop the deleted rows, admit the promoted ones
-        retractBucketRewrite(s, s"$stores/manifest", ManifestSchema, "kb",
-          delKb, delIds, "doc_id", Seq("doc_id", "source", "h"),
-          Seq("doc_id"))
-        promotedDocs.foreach(
-          manifestWrite(_, s"$stores/manifest", mode = "append"))
-      },
+      () => manifestRetract(s, s"$stores/manifest", delIds, delKb,
+        promotedDocs),
       // hash ledger: drop the deleted rows from their hashes' buckets
       // (same touched-bucket pass — the ledger stays exactly the
       // surviving corpus's projection, so the NEXT retraction prunes
       // correctly too)
-      () => retractBucketRewrite(s, s"$stores/hashes",
-        HashLedgerSchema, "hb", ledgerHbs, delIds, "doc_id",
-        Seq("doc_id", "h"), Seq("h", "doc_id")),
+      () => HashLedger.retract(s, s"$stores/hashes", "funnel.retract.ledger",
+        ledgerHbs, delIds),
       // eval suite: recompute wholesale from the surviving src0 slice
       () => sourcedShingleRows(corpusScrubbed
           .join(delIds, Seq("doc_id"), "left_anti"))
@@ -2943,19 +2922,31 @@ object Dedup {
         .parquet(s"$stores/bench")))
   }
 
+  /** Drop the rows of `delIds` (a one-column id frame; `delKb` their
+    * kb buckets) from the manifest at `store` and admit `promoted`'s
+    * rows, in one commit: the retraction reads the version's files, so
+    * the append's new files are never clobbered. */
+  private[graft] def manifestRetract(s: SparkSession, store: String,
+      delIds: DataFrame, delKb: Seq[Int], promoted: Option[DataFrame])
+      : Unit =
+    Manifest.retract(s, store, "funnel.retract.manifest", delKb, delIds,
+      promoted.map(manifestRows))
+
   /** The full-corpus hash ledger (round 17, VERDICT r16 #3): one
     * (doc_id, h) row per corpus doc — INCLUDING exact-dup group
     * members the manifest omits, which is exactly what promotion
     * needs — partitioned by hb = hash-bucket so a retraction's
     * carrier lookup is pruned to the deleted hashes' <= 64 buckets.
     * ~72 B/doc; the retraction's answer to "who else carries this
-    * hash" without rescanning corpus text. SCHEMA'D read: a
-    * retract-all can empty every bucket. */
+    * hash" without rescanning corpus text. Read from its log under the
+    * layout's schema: a retract-all can empty every bucket. */
   private[graft] def hashLedgerTable(s: SparkSession, stores: String,
       keys: Option[Seq[Int]] = None): DataFrame =
-    BucketedStore.table(s, s"$stores/hashes", HashLedgerSchema, "hb", keys)
-  private val HashLedgerSchema = "doc_id BIGINT, h STRING, hb INT"
-  private val ManifestSchema = "doc_id BIGINT, source STRING, h STRING, kb INT"
+    HashLedger.read(s, s"$stores/hashes", keys)
+  private val HashLedger = StoreLog.OneTable("hash ledger", "hashLedgerWrite",
+    "doc_id BIGINT, h STRING, hb INT", "hb", Seq("h", "doc_id"))
+  private val Manifest = StoreLog.OneTable("manifest", "manifestWrite",
+    "doc_id BIGINT, source STRING, h STRING, kb INT", "kb", Seq("doc_id"))
 
   /** Write/append the hash ledger from a (doc_id, ..., text) corpus
     * view — the manifestWrite posture (write-time DISTINCT, 64-way
@@ -2963,21 +2954,20 @@ object Dedup {
     * bucket because the ledger's one consumer looks up by hash. */
   private[graft] def hashLedgerWrite(docs: DataFrame, store: String,
       mode: String = "overwrite"): Unit =
-    writeBucketed(docs.filter(col("doc_id").isNotNull)
+    HashLedger.put(docs.filter(col("doc_id").isNotNull)
       .select(col("doc_id"),
         sha2(col("text").cast("binary"), 256).as("h"))
       .distinct()
       .withColumn("hb", pmod(xxhash64(col("h")), lit(64)).cast("int")),
-      store, mode, "hb", Seq("h", "doc_id"))
+      store, mode, "ledger.append")
 
   /** Bound the ledger's per-bucket file count under daily appends —
-    * the family-standard pass (compactBuckets' DISTINCT also reclaims
+    * the family-standard pass (the compaction's DISTINCT also reclaims
     * an at-least-once replayed append's duplicate rows). */
   private[graft] def hashLedgerCompact(s: SparkSession, stores: String,
       maxFilesPerBucket: Int = 4): Seq[Int] =
-    compactBuckets(s, s"$stores/hashes", "hb",
-      Seq(col("doc_id"), col("h")),
-      Seq("h", "doc_id"), maxFilesPerBucket)
+    HashLedger.compact(s, s"$stores/hashes", "ledger.compact",
+      maxFilesPerBucket)
 
   /** Declared O-142 binding: clone the q87e-geometry pristine stores,
     * retract corpus ids 100-149 across them, then run the standard
@@ -3042,7 +3032,7 @@ object Dedup {
     val (s4, s5) = fusedRepetitionQuality(s3, "funnel.e_s4s5_flags")
     // the suite is id-list sized by construction (a benchmark set,
     // not a corpus) — same broadcast posture as q87c's bench side
-    val bench = s.read.parquet(s"$stores/bench")
+    val bench = scratch(s, s"$stores/bench")
     val flagged = sourcedShingleRows(s5)
       .filter(col("source") =!= "src0")
       .join(broadcast(bench), "h")
@@ -3076,8 +3066,7 @@ object Dedup {
     val kbs = batchIds
       .select(pmod(xxhash64(col("doc_id")), lit(64)).cast("int").as("kb"))
       .distinct().collect().map(_.getInt(0))
-    BucketedStore.table(s, s"$stores/manifest", ManifestSchema, "kb",
-        Some(kbs.toIndexedSeq))
+    Manifest.read(s, s"$stores/manifest", Some(kbs.toIndexedSeq))
       .join(batchIds.select(col("doc_id")), Seq("doc_id"), "left_semi")
       .select(col("doc_id")).distinct()
   }
@@ -3164,10 +3153,10 @@ object Dedup {
     }
 
   private[graft] def mediaBatchImgSigs(s: SparkSession): DataFrame =
-    s.read.parquet(s"${mediaSigsDir(s)}/img")
+    scratch(s, s"${mediaSigsDir(s)}/img")
 
   private[graft] def mediaBatchAudSigs(s: SparkSession): DataFrame =
-    s.read.parquet(s"${mediaSigsDir(s)}/aud")
+    scratch(s, s"${mediaSigsDir(s)}/aud")
 
   /** The unified-screen stage body, shared verbatim by the one-shot
     * binding (q87g) and the stream twin's per-micro-batch body (s24):

@@ -701,102 +701,60 @@ object TextAnalysis {
   // work for non-idempotent counts by tagging the delta's origin.
   // Compaction erases epochs (folds them into a -1 total), so it must
   // run only behind the replay window (after the stream's checkpoint
-  // commits) — the one ordering constraint this store adds. Round 12
-  // (VERDICT r11 #3): that constraint is now ENFORCED, not just
-  // documented — compaction persists a last-compacted-epoch
-  // HIGH-WATER MARK (a 1-line sidecar, written BEFORE any fold so a
-  // mid-compaction crash can only over-refuse, never double-count),
-  // and tfStoreMerge no-ops any epoch at or below it: a batch
-  // replayed AFTER the compaction that absorbed its first delivery
-  // appends nothing instead of double-counting.
-  /** Write (or append, for a merge) the tf store: one partially
-    * aggregated groupBy(token) pass over the given docs — the q72
-    * train pass — bucketed by token hash
-    * ([[BucketedStore.writeBucketed]]). */
+  // commits) — the one ordering constraint this store adds. That
+  // constraint is ENFORCED: the fold writes the largest epoch it
+  // absorbed into its own log entry (the compacted-epoch mark,
+  // [[StoreLog.Version.mark]]), and tfStoreMerge no-ops any epoch at or
+  // below it: a batch replayed AFTER the compaction that absorbed its
+  // first delivery appends nothing instead of double-counting. Mark and
+  // fold commit together, so no crash can separate them.
+  /** Write (or append) the tf store, a logged one-table store: one
+    * partially aggregated groupBy(token) pass over the given docs — the
+    * q72 train pass — bucketed by token hash. An overwrite build starts
+    * a log with no mark, so the replay ledger resets with the rows. */
   def tfStoreWrite(docs: DataFrame, store: String,
       mode: String = "overwrite", epoch: Long = 0L,
-      sign: Long = 1L): Unit = {
-    // a fresh store build resets the replay ledger: the hwm sidecar
-    // must not outlive the epoch rows it summarizes (Bench/q92 rebuild
-    // the same fixedDir every invocation)
-    if (mode == "overwrite") {
-      val p = tfHwmPath(store)
-      val fs = p.getFileSystem(
-        docs.sparkSession.sparkContext.hadoopConfiguration)
-      Seq(p, tfHwmStaging(p)).filter(fs.exists)
-        .foreach(fs.delete(_, false))
-    }
-    BucketedStore.writeBucketed(tokenPositions(docs)
+      sign: Long = 1L): Unit =
+    TfStore.put(tfRows(docs, epoch, sign), store, mode, "tf.append")
+
+  private val TfStore = StoreLog.OneTable("tf store", "tfStoreWrite",
+    "tok STRING, c BIGINT, epoch BIGINT, bucket INT", "bucket", Seq("tok"))
+
+  /** The (tok, c, epoch, bucket) delta rows of `docs`, counts times
+    * `sign`. */
+  private def tfRows(docs: DataFrame, epoch: Long, sign: Long): DataFrame =
+    tokenPositions(docs)
       .groupBy(col("tok")).agg((count(lit(1)) * lit(sign)).as("c"))
       .withColumn("epoch", lit(epoch))
-      .withColumn("bucket", pmod(xxhash64(col("tok")), lit(64)).cast("int")),
-      store, mode, "bucket", Seq("tok"))
-  }
+      .withColumn("bucket", pmod(xxhash64(col("tok")), lit(64)).cast("int"))
 
-  /** The hwm sidecar (leading underscore: Spark's file index treats it
-    * as hidden, so `read.parquet(store)` never sees it). */
-  private def tfHwmPath(store: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(s"$store/_graft_compacted_hwm")
+  /** Last-compacted-epoch mark; Long.MinValue for a store that has
+    * never compacted. Epochs are the caller's batch ids (>= 0 by the
+    * foreachBatch contract). */
+  private[graft] def tfStoreHwm(s: SparkSession, store: String): Long =
+    TfStore.open(s, store).mark.getOrElse(Long.MinValue)
 
-  private def tfHwmStaging(p: org.apache.hadoop.fs.Path) =
-    new org.apache.hadoop.fs.Path(p.getParent, p.getName + "_staging")
-
-  /** Last-compacted-epoch high-water mark; Long.MinValue for a store
-    * that has never compacted. Epochs are the caller's batch ids
-    * (>= 0 by the foreachBatch contract). The mark is the larger of
-    * the committed sidecar and its staged successor: a crash between
-    * [[tfStoreWriteHwm]]'s delete and rename leaves only the staged
-    * file, which was complete before the delete began. A staged file
-    * that does not parse is torn, and a torn one can only exist while
-    * the committed mark still does, so it is ignored. */
-  private[graft] def tfStoreHwm(s: SparkSession, store: String): Long = {
-    val p = tfHwmPath(store)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    def read(f: org.apache.hadoop.fs.Path): String = {
-      val in = fs.open(f)
-      try new String(in.readAllBytes,
-        java.nio.charset.StandardCharsets.UTF_8).trim
-      finally in.close()
-    }
-    val staged = tfHwmStaging(p)
-    (Option.when(fs.exists(p))(read(p).toLong) ++
-      Option.when(fs.exists(staged))(read(staged).toLongOption).flatten)
-      .maxOption.getOrElse(Long.MinValue)
-  }
-
-  /** Write-new-then-rename, never truncate-in-place (ADVICE r16):
-    * `fs.create(p, true)` on the local filesystem truncates the
-    * existing sidecar through its inode, which would corrupt a
-    * hard-link clone's pristine source (Ephemeral.cloneDir shares
-    * inodes). Staging to a sibling and renaming over keeps every
-    * mutation file-granular — the invariant cloneDir documents. */
-  private def tfStoreWriteHwm(s: SparkSession, store: String,
-      epoch: Long): Unit = {
-    val p = tfHwmPath(store)
-    val fs = p.getFileSystem(
-      graft.util.NioLocalFileSystem.conf(s.sparkContext.hadoopConfiguration))
-    val tmp = tfHwmStaging(p)
-    val out = fs.create(tmp, true)
-    try out.write(epoch.toString.getBytes(
-      java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    if (fs.exists(p)) fs.delete(p, false): Unit
-    require(fs.rename(tmp, p),
-      s"tf store: could not move hwm sidecar $tmp into place")
+  /** Append `docs`' deltas times `sign` as `epoch`, unless a fold has
+    * absorbed that epoch already. */
+  private def tfAppend(s: SparkSession, store: String, docs: DataFrame,
+      epoch: Long, sign: Long): Unit = {
+    val v = TfStore.open(s, store)
+    if (epoch > v.mark.getOrElse(Long.MinValue))
+      v.commit("tf.merge")(Seq(
+        v.append(TfStore.layout, tfRows(docs, epoch, sign))))
   }
 
   /** Merge a batch into the standing model: O(batch tokens), zero
     * store data reads. Distinct epoch per batch is the caller's
     * contract (a streaming binding passes its batchId) — it is what
     * makes a replayed append reclaimable. An epoch at or below the
-    * compaction high-water mark NO-OPS (its first delivery is already
+    * compacted-epoch mark NO-OPS (its first delivery is already
     * folded into the store's epoch −1 totals; re-appending would
     * double-count because the DISTINCT reclaim needs the original
     * tagged rows, which compaction erased). */
   def tfStoreMerge(s: SparkSession, store: String, newDocs: DataFrame,
       epoch: Long): Unit =
-    if (epoch <= tfStoreHwm(s, store)) ()
-    else tfStoreWrite(newDocs, store, mode = "append", epoch = epoch)
+    tfAppend(s, store, newDocs, epoch, 1L)
 
   // O-141 (q92b): MODEL RETRACTION — the additive store's payoff:
   // deleting documents from the standing model IS a merge of NEGATED
@@ -808,19 +766,17 @@ object TextAnalysis {
     * O(deleted docs' tokens). Same replay ledger as [[tfStoreMerge]]
     * (a re-delivered retraction re-appends IDENTICAL (epoch, tok,
     * -c) rows — the model fold's DISTINCT reclaims them; an epoch at
-    * or below the compaction high-water mark refuses, its first
-    * delivery already folded). Caller contract: retract only
-    * documents whose counts were previously merged — retracting
-    * never-merged docs drives counts negative, the same corruption
-    * class as double-merging a batch outside the ledger. Compaction's
-    * SUM fold absorbs the negatives; a token whose total reaches
-    * zero leaves [[tfModel]] entirely (the dictionary a from-scratch
-    * retrain without those docs produces). */
+    * or below the compacted-epoch mark refuses, its first delivery
+    * already folded). Caller contract: retract only documents whose
+    * counts were previously merged — retracting never-merged docs
+    * drives counts negative, the same corruption class as
+    * double-merging a batch outside the ledger. Compaction's SUM fold
+    * absorbs the negatives; a token whose total reaches zero leaves
+    * [[tfModel]] entirely (the dictionary a from-scratch retrain
+    * without those docs produces). */
   def tfStoreRetract(s: SparkSession, store: String, delDocs: DataFrame,
       epoch: Long): Unit =
-    if (epoch <= tfStoreHwm(s, store)) ()
-    else tfStoreWrite(delDocs, store, mode = "append", epoch = epoch,
-      sign = -1L)
+    tfAppend(s, store, delDocs, epoch, -1L)
 
   /** The standing model, dictionary-sized: DISTINCT delta rows (the
     * replay reclaim), then sum per token. Tokens whose deltas sum to
@@ -829,43 +785,35 @@ object TextAnalysis {
     * the scorer either way, since scoreAgainstModel coalesces absent
     * tokens to 0, but the MODEL itself should equal the retrain). */
   def tfModel(s: SparkSession, store: String): DataFrame =
-    s.read.parquet(store)
+    TfStore.read(s, store)
       .select(col("epoch"), col("tok"), col("c")).distinct()
       .groupBy(col("tok")).agg(sum(col("c")).as("c"))
       .filter(col("c") =!= 0L)
 
-  /** Compact oversized buckets: the shared partition-pruned
-    * enumerate-stage-swap pass (BucketedStore.compactBuckets), with a SUM
+  /** Compact oversized buckets through the log's compaction, with a SUM
     * fold instead of DISTINCT — delta rows compact by addition. Each
     * folded bucket is rewritten WHOLE as epoch -1 totals (one row per
     * token), so repeated folds cannot double-count: a bucket never
     * holds two (-1, tok) rows.
     *
-    * Replay-window enforcement: BEFORE any fold, the store-wide max
-    * epoch is persisted as the high-water mark — every epoch whose
-    * rows a fold could absorb is <= it, so [[tfStoreMerge]] refuses
-    * exactly the replays that could double-count. Writing it first
-    * makes a mid-compaction crash safe in the only possible
-    * direction: the mark can OVER-refuse (a refused replay's rows are
-    * by definition already in the store — no data is lost), never
-    * under-refuse. Store-wide (rather than per-folded-bucket) max is
-    * the same conservative trade: a merge spans all 64 buckets, so a
-    * partially-folded epoch must be refused wholesale anyway. */
+    * Replay-window enforcement: the fold observes the largest epoch
+    * among the rows it absorbs, on its own write job, and its commit
+    * writes it as the compacted-epoch mark (kept when larger). Every
+    * epoch whose rows the fold erased is <= the mark, so
+    * [[tfStoreMerge]] refuses exactly the replays that could
+    * double-count; an epoch whose rows sit only in unfolded buckets and
+    * is below the mark is refused too — its rows are in the store
+    * already, so no data is lost. */
   def tfStoreCompact(s: SparkSession, store: String,
       maxFilesPerBucket: Int = 4): Seq[Int] = {
-    val maxRow = s.read.parquet(store).agg(max(col("epoch"))).head()
-    val maxEpoch =
-      if (maxRow.isNullAt(0)) Long.MinValue else maxRow.getLong(0)
-    if (maxEpoch > tfStoreHwm(s, store))
-      tfStoreWriteHwm(s, store, maxEpoch)
-    BucketedStore.compactBuckets(s, store, "bucket", Seq.empty,
-      Seq("tok"), maxFilesPerBucket,
-      fold = Some(df => df
+    val absorbed = org.apache.spark.sql.Observation()
+    TfStore.compact(s, store, "tf.compact", maxFilesPerBucket,
+      fold = _.observe(absorbed, max(col("epoch")).as("e"))
         .select(col("epoch"), col("tok"), col("c"), col("bucket"))
         .distinct()
         .groupBy(col("bucket"), col("tok")).agg(sum(col("c")).as("c"))
-        .withColumn("epoch", lit(-1L))
-        .select(col("tok"), col("c"), col("epoch"), col("bucket"))))
+        .withColumn("epoch", lit(-1L)),
+      mark = Option(absorbed.get("e")).map(_.asInstanceOf[Long]))
   }
 
   /** q72's SCORE pass bound to the STANDING model instead of an

@@ -204,7 +204,8 @@ object UnifiedClusters {
     lshRows.groupBy(col("vec_id")).agg(first(col("qe")).as("qe"))
       .withColumn("kv", pmod(col("vec_id"), lit(64)).cast("int"))
 
-  /** Sig-family band rows with [[Multimodal.sigIndexWrite]]'s bucket. */
+  /** Sig-family band rows with their kb bucket: the layout of the
+    * unified store's sig tables and of [[Multimodal.sigIndexWrite]]. */
   private[graft] def sigRowsOf(sigs: DataFrame, sigCol: String,
       scheme: BandScheme): DataFrame =
     Dedup.bandChunkRows(sigs.filter(col("doc_id").isNotNull), sigCol,

@@ -488,7 +488,7 @@ object Streams {
       graft.ops.Dedup.neardupIndexWrite(
         graft.ops.Tables.documents(s, d).filter(col("doc_id") < 250), dir)
     }
-    val index = s.read.parquet(store)
+    val index = graft.ops.Dedup.bandIndexTable(s, store)
     val docStream = s.readStream.schema(documentsSchema)
       .option("pathGlobFilter", "documents.parquet")
       .parquet(d)
@@ -1090,7 +1090,9 @@ object Streams {
     *     admitted read-back, which is replay-invariant by itself
     *     (kb-pruned DISTINCT — manifestAppendReadBack's contract);
     *  4. WAL rows + the admitted row land in a temp dir and RENAME
-    *     atomically into the commit partition; the WAL is deleted.
+    *     atomically into the commit partition; the WAL is deleted,
+    *     and a failed delete fails the batch loudly, naming the WAL
+    *     (the commit stands, so a restart skips the batch).
     * Every kill point between micro-batches replays to the same
     * committed counts (StreamResumeSpec). Remaining caveat, narrower
     * than before: a crash INSIDE the frames computation of a fused
@@ -1126,8 +1128,8 @@ object Streams {
       require(fs.rename(tmp, commit),
         s"counts commit: could not move $tmp into place for " +
           s"batch $batchId")
-      try fs.delete(staged, true)
-      catch { case _: java.io.IOException => () } // WAL is garbage now
+      require(fs.delete(staged, true),
+        s"counts commit: could not delete the spent WAL $staged")
     }
   }
 
@@ -1274,8 +1276,10 @@ object Streams {
         docs.filter(pmod(col("doc_id"), lit(10)) =!= 7), dir)
     }
     // fresh per invocation: the new-generation store accumulates via
-    // per-batch appends (the s16 admitted-sink convention)
+    // per-batch appends (the s16 admitted-sink convention), so it is
+    // built empty first — an append needs a store to append to
     val newStore = graft.util.Ephemeral.dir("graft_manifest_n_s21")
+    graft.ops.Dedup.manifestWrite(docs.limit(0), newStore)
     val docStream = s.readStream.schema(documentsSchema)
       .option("pathGlobFilter", "documents.parquet")
       .parquet(d)

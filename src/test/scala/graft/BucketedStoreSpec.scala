@@ -197,11 +197,51 @@ class BucketedStoreSpec extends SparkSpec {
         "doc_id BIGINT, cluster_id BIGINT, kb INT", "kb", Seq(3),
         Seq(3L).toDF("doc_id"), "doc_id", Seq("doc_id", "cluster_id"),
         Seq("doc_id")))
-    refusals.foreach { op =>
+    // a one-table store holds its log in the table's own dir
+    val exact = Files.createTempDirectory("exact_logged_").toString
+    ops.Dedup.dedupIndexWrite(Seq((1L, "alpha")).toDF("doc_id", "text"),
+      exact)
+    val exactFiles = Files.walk(Paths.get(exact)).count()
+    val rootRefusals = Seq(
+      () => ops.BucketedStore.table(spark, exact,
+        "content_hash STRING, bucket INT", "bucket"),
+      () => ops.BucketedStore.compactBuckets(spark, exact, "bucket",
+        Seq(col("content_hash")), Nil, 0),
+      () => ops.BucketedStore.retractBucketRewrite(spark, exact,
+        "content_hash STRING, bucket INT", "bucket", Seq(3),
+        Seq("x").toDF("content_hash"), "content_hash", Seq("content_hash"),
+        Nil))
+    (refusals ++ rootRefusals).foreach { op =>
       val e = intercept[IllegalArgumentException](op())
       assert(e.getMessage.contains(ops.StoreLog.Dir), e.getMessage)
     }
     assert(bucketBytes(store) === before)
     assert(!new java.io.File(s"${table}_compacting").exists())
+    assert(Files.walk(Paths.get(exact)).count() === exactFiles)
+    assert(!new java.io.File(s"${exact}_compacting").exists())
+  }
+
+  test("compactBuckets fails loudly, naming its temp dir, when the temp " +
+    "dir cannot be deleted; the compacted table stands") {
+    def oversized(): String = {
+      val dir = table64(64)
+      write(64L until 128L, dir, "append")
+      dir
+    }
+    def compact(dir: String): Seq[Int] = ops.BucketedStore.compactBuckets(
+      spark, dir, "kb", Seq(col("id"), col("v")), Seq("id"), 1)
+    val clean = oversized()
+    val parent = new java.io.File(clean).getParent
+    val (ok, _, n) = ChaosFileSystem.run(parent)(compact(clean))
+    assert(ok.get.size === 64)
+    // the temp dir's delete is the pass's last mutation
+    val dir = oversized()
+    val (failed, _, _) = ChaosFileSystem.run(
+      new java.io.File(dir).getParent, failAt = n)(compact(dir))
+    val e = failed.failed.get
+    assert(e.getMessage.contains(s"${dir}_compacting"), e.getMessage)
+    assert(table(dir).count() === 128L)
+    assert(new java.io.File(s"$dir/kb=3").list()
+      .count(_.endsWith(".parquet")) === 1)
   }
 }

@@ -272,6 +272,18 @@ class IncrementalFunnelSpec extends SparkSpec {
     assert(byName("neardup_screen") === 1L)
   }
 
+  test("q87e runs no job outside its queries: its scratch tables and " +
+    "logged stores are read without a schema-inference job") {
+    // the first run builds the pristine stores, once per JVM
+    counts(ops.Dedup.q87eIncrementalFunnel(spark, sf))
+    val (_, jobs) = nonQueryJobs(
+      counts(ops.Dedup.q87eIncrementalFunnel(spark, sf)))
+    // the fixture documents table is input, not engine-written: its
+    // reader (Tables.documents) infers the schema
+    val engine = jobs.filterNot(_._2 == "parquet at Tables.scala:18")
+    assert(engine.isEmpty, jobs)
+  }
+
   test("q87h hash ledger: retraction reads NO corpus text beyond the " +
     "deleted + promoted docs, refuses a store without the ledger, " +
     "ledger tracks survivors") {

@@ -8,12 +8,13 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-/** Crash points of the cluster stores' log commit: each mutation is
-  * failed in turn at every filesystem mutation it makes (create,
-  * rename, delete, mkdirs — executor tasks included), as a crash there
-  * would stop it. After each crash the store reads exactly the version
-  * before the mutation or the one after it, and replaying the mutation
-  * reads back the full-rebuild oracle. */
+/** Crash points of the stores' log commit (the cluster stores and the
+  * one-table stores): each mutation is failed in turn at every
+  * filesystem mutation it makes (create, rename, delete, mkdirs —
+  * executor tasks included), as a crash there would stop it. After each
+  * crash the store reads exactly the version before the mutation or the
+  * one after it, and replaying the mutation reads back the full-rebuild
+  * oracle. */
 class StoreCrashSpec extends SparkSpec {
   import StoreCrashSpec.Doc
 
@@ -47,13 +48,17 @@ class StoreCrashSpec extends SparkSpec {
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
 
+  private def log(store: String) =
+    ops.StoreLog.open(spark, store, "store", "a build")
+
   /** Every table of the store's newest version, read from the files its
-    * log entry names, each row as JSON. `schemas` holds each table's
-    * schema once a read has inferred it. */
+    * log entry names, each row as JSON (a one-table store's bucket dirs
+    * each count as a table), plus the entry's mark. `schemas` holds each
+    * table's schema once a read has inferred it. */
   private def state(store: String,
       schemas: ConcurrentHashMap[String, StructType])
       : Map[String, Seq[String]] = {
-    val v = ops.StoreLog.open(spark, store, "store", "a build")
+    val v = log(store)
     val tables = v.files.toSeq.groupBy(_._1.takeWhile(_ != '/')).toSeq.map {
       case (table, dirs) =>
         val files = dirs.flatMap { case (d, fs) =>
@@ -63,10 +68,12 @@ class StoreCrashSpec extends SparkSpec {
         spark.read.schema(schema).parquet(files: _*)
           .select(lit(table).as("t"), to_json(struct(col("*"))).as("r"))
     }
-    if (tables.isEmpty) Map.empty
-    else tables.reduce(_ unionByName _).collect().toSeq
-      .groupMap(_.getString(0))(_.getString(1))
-      .map { case (t, rs) => t -> rs.sorted }
+    val rows: Map[String, Seq[String]] =
+      if (tables.isEmpty) Map.empty
+      else tables.reduce(_ unionByName _).collect().toSeq
+        .groupMap(_.getString(0))(_.getString(1))
+        .map { case (t, rs) => t -> rs.sorted }
+    rows ++ v.mark.map(m => "mark" -> Seq(m.toString))
   }
 
   /** Fail `op` at each of its mutations on a fresh clone of `pristine`,
@@ -171,6 +178,105 @@ class StoreCrashSpec extends SparkSpec {
     everyCrash("nd_update", build(corpus))(store =>
       ops.Dedup.neardupClusterStoreUpdate(spark, store, families(batch)._1))(
       readBack, readBack(build(corpus ++ batch)))
+  }
+
+  test("an exact-index append and then its compaction, each crashed at " +
+    "any filesystem mutation, read the old or the new version, and " +
+    "their replays admit as the rebuild does") {
+    val corpus = docsOf(1L -> "alpha bravo", 2L -> "charlie delta")
+    val batch = docsOf(3L -> "echo foxtrot", 4L -> "golf hotel")
+    def build(docs: DataFrame): String = {
+      val store = util.Ephemeral.dir("crash_exact_pristine_")
+      ops.Dedup.dedupIndexWrite(docs, store)
+      store
+    }
+    def append(store: String): Unit = ops.Dedup.dedupIndexWrite(batch,
+      store, "append")
+    // the engine's view: which docs of every text ever seen are admitted
+    val probe = docsOf(10L -> "alpha bravo", 11L -> "echo foxtrot",
+      12L -> "india juliet")
+    def readBack(store: String): Seq[String] =
+      rows(ops.Dedup.corpusMerge(spark, store, probe).select("doc_id"))
+    val oracle = readBack(build(corpus.unionByName(batch)))
+    assert(oracle === Seq("[12]"))
+    val pristine = build(corpus)
+    everyCrash("exact_append", pristine)(append)(readBack, oracle)
+    val appended = util.Ephemeral.cloneDir(pristine, "crash_exact_appended_")
+    append(appended)
+    everyCrash("exact_compact", appended)(store =>
+      assert(ops.Dedup.dedupIndexCompact(spark, store, 0).nonEmpty))(
+      readBack, oracle)
+  }
+
+  test("a manifest retraction that empties a bucket, committed with a " +
+    "promoted append, crashed at any filesystem mutation reads the old " +
+    "or the new version, and its replay equals the rebuild") {
+    import spark.implicits._
+    def gen(ids: Long*): DataFrame =
+      docsOf(ids.map(i => i -> s"text $i"): _*)
+        .withColumn("source", concat(lit("s"), col("doc_id")))
+    def kb(id: Long): Int = Seq(id).toDF("doc_id")
+      .select(pmod(xxhash64(col("doc_id")), lit(64)).cast("int"))
+      .head().getInt(0)
+    // doc 1 is alone in its bucket; doc 4 is the promoted survivor
+    assert(!Seq(2L, 3L, 4L).map(kb).contains(kb(1L)))
+    def build(docs: DataFrame): String = {
+      val store = util.Ephemeral.dir("crash_manifest_pristine_")
+      ops.Dedup.manifestWrite(docs, store)
+      store
+    }
+    def retract(store: String): Unit = ops.Dedup.manifestRetract(spark,
+      store, Seq(1L).toDF("doc_id"), Seq(kb(1L)), Some(gen(4L)))
+    // the gate over the store against itself: one row per doc (each its
+    // own source), its n_same the square of the doc's row copies — after
+    // the compaction a replayed promotion append needs
+    def readBack(store: String): Seq[String] = {
+      ops.Dedup.manifestCompact(spark, store, 1)
+      rows(ops.Dedup.manifestDiff(spark, store, store))
+    }
+    val pristine = build(gen(1L, 2L, 3L))
+    val changed = everyCrash("manifest_retract", pristine)(retract)(
+      readBack, readBack(build(gen(2L, 3L, 4L))))
+    assert(changed === Set(s"kb=${kb(1L)}", s"kb=${kb(4L)}"))
+    val clean = util.Ephemeral.cloneDir(pristine, "crash_manifest_clean_")
+    retract(clean)
+    assert(!new java.io.File(s"$clean/kb=${kb(1L)}").exists,
+      "the emptied bucket's dir is gone")
+  }
+
+  test("a tf merge and then its fold compaction, each crashed at any " +
+    "filesystem mutation, read the old or the new version; their " +
+    "replays equal the retrained model, and a replay of the folded " +
+    "epoch appends nothing") {
+    import spark.implicits._
+    val base = Seq((1L, "a a b"), (2L, "b c")).toDF("doc_id", "text")
+    val batch = Seq((3L, "a c c d")).toDF("doc_id", "text")
+    def build(docs: DataFrame): String = {
+      val store = util.Ephemeral.dir("crash_tf_pristine_")
+      ops.TextAnalysis.tfStoreWrite(docs, store)
+      store
+    }
+    def merge(store: String): Unit =
+      ops.TextAnalysis.tfStoreMerge(spark, store, batch, epoch = 1L)
+    def model(store: String): Seq[String] =
+      rows(ops.TextAnalysis.tfModel(spark, store))
+    val oracle = model(build(base.unionByName(batch)))
+    val pristine = build(base)
+    everyCrash("tf_merge", pristine)(merge)(model, oracle)
+    val merged = util.Ephemeral.cloneDir(pristine, "crash_tf_merged_")
+    merge(merged)
+    def replayed(store: String): Seq[String] = {
+      val before = log(store).files
+      merge(store)
+      assert(log(store).files === before,
+        "a replay of the folded epoch appended")
+      model(store)
+    }
+    val changed = everyCrash("tf_fold", merged)(store =>
+      assert(ops.TextAnalysis.tfStoreCompact(spark, store, 0).nonEmpty))(
+      replayed, oracle)
+    assert(changed.contains("mark"))
+    assert(log(merged).mark.isEmpty)
   }
 }
 

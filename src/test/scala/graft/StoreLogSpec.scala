@@ -31,11 +31,32 @@ class StoreLogSpec extends SparkSpec {
       s"$store/clusters", "overwrite", "kb", Seq("cluster_id", "doc_id")))
     assert(new java.io.File(s"$store/clusters").list()
       .count(_.startsWith("kb=")) === 64)
-    val (n, calls, _) = ChaosFileSystem.run(store)(
-      ops.Dedup.clusterLabelsTable(spark, store).count())
-    assert(n.get === 256L)
-    assert(calls.map { case (op, p) => (op, p.getName) } ===
-      Seq(("listStatus", ops.StoreLog.Dir), ("open", "0")), calls)
+    // and a one-table store, the near-dup band index: its log sits in
+    // the table's own dir
+    val index = Files.createTempDirectory("store_log_read_one_").toString
+    val docs = docsOf((0L until 40L).map(d => d -> txt(s"d${d}w")): _*)
+    ops.Dedup.neardupIndexWrite(docs, index)
+    val bandRows = ops.Dedup.bandedSignatures(docs).count()
+    Seq(store -> ((() => ops.Dedup.clusterLabelsTable(spark, store).count()),
+          256L),
+        index -> ((() => ops.Dedup.bandIndexTable(spark, index).count()),
+          bandRows)).foreach { case (root, (read, want)) =>
+      val (n, calls, _) = ChaosFileSystem.run(root)(read())
+      assert(n.get === want)
+      assert(calls.map { case (op, p) => (op, p.getName) } ===
+        Seq(("listStatus", ops.StoreLog.Dir), ("open", "0")), calls)
+    }
+  }
+
+  test("an append to a one-table store with no log entry fails loudly, " +
+    "naming the store and its builder, and writes nothing") {
+    import spark.implicits._
+    val store = Files.createTempDirectory("store_log_unbuilt_").toString
+    val e = intercept[IllegalArgumentException](ops.Dedup.manifestWrite(
+      Seq((1L, "t", "x")).toDF("doc_id", "source", "text"), store, "append"))
+    assert(e.getMessage.contains(store) &&
+      e.getMessage.contains("manifestWrite"), e.getMessage)
+    assert(new java.io.File(store).list().isEmpty)
   }
 
   test("a commit adds one entry and deletes the replaced files without " +

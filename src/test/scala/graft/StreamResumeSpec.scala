@@ -58,6 +58,27 @@ class StreamResumeSpec extends SparkSpec {
       .toSeq === Seq((0, "input", 2L), (7, "manifest_append", 1L)))
   }
 
+  test("s23/s24 counts commit fails loudly, naming the WAL, when the " +
+    "spent WAL cannot be deleted; the commit itself stands") {
+    import spark.implicits._
+    val docs = Seq(1L, 2L).toDF("doc_id")
+    def commit(countsDir: String): Unit =
+      streaming.Streams.committedFunnelCounts(spark, countsDir, 0L)(
+        Seq((0, "input", docs)))(_ => docs.limit(1))
+    val clean = Files.createTempDirectory("wal_clean_").toString
+    val (ok, _, n) = ChaosFileSystem.run(clean)(commit(clean))
+    ok.get
+    // the WAL's delete is the commit's last mutation
+    val countsDir = Files.createTempDirectory("wal_loud_").toString
+    val (failed, _, _) =
+      ChaosFileSystem.run(countsDir, failAt = n)(commit(countsDir))
+    val e = failed.failed.get
+    assert(e.getMessage.contains(s"$countsDir/_wal/staged_0"), e.getMessage)
+    assert(streaming.Streams.committedCountsReadBack(spark, countsDir)
+      .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2)))
+      .toSeq === Seq((0, "input", 2L), (7, "manifest_append", 1L)))
+  }
+
   test("s23/s24 counts sink is replay-exact: a killed-and-restarted " +
     "stream re-delivers its last micro-batch and the committed " +
     "counts do not change (VERDICT r16 #4)") {

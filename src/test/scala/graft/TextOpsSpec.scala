@@ -163,10 +163,10 @@ class TextOpsSpec extends SparkSpec {
     assert(model() === merged)
     TextAnalysis.tfStoreCompact(spark, store, maxFilesPerBucket = 0)
     assert(model() === merged)
-    // VERDICT r11 #3: compaction persisted the high-water mark, so a
-    // replay of an epoch whose tagged rows the fold ERASED is refused
-    // — without the hwm this re-append would double-count (DISTINCT
-    // has nothing left to reclaim against)
+    // VERDICT r11 #3: the fold's commit wrote the compacted-epoch mark,
+    // so a replay of an epoch whose tagged rows the fold ERASED is
+    // refused — without the mark this re-append would double-count
+    // (DISTINCT has nothing left to reclaim against)
     assert(TextAnalysis.tfStoreHwm(spark, store) === 1L)
     TextAnalysis.tfStoreMerge(spark, store, batch, epoch = 1L)
     assert(model() === merged)
@@ -186,41 +186,6 @@ class TextOpsSpec extends SparkSpec {
     // a fresh overwrite build resets the replay ledger with the rows
     TextAnalysis.tfStoreWrite(base, store)
     assert(TextAnalysis.tfStoreHwm(spark, store) === Long.MinValue)
-  }
-
-  test("tf store hwm: a crash between the mark's delete and rename " +
-      "still refuses a folded epoch; a torn staged mark is ignored") {
-    import spark.implicits._
-    val store = java.nio.file.Files.createTempDirectory("tf_h_").toString
-    val base = Seq((1L, "a a b"), (2L, "b c")).toDF("doc_id", "text")
-    val batch = Seq((3L, "a c c")).toDF("doc_id", "text")
-    def model(): Map[String, Long] =
-      TextAnalysis.tfModel(spark, store).as[(String, Long)]
-        .collect().toMap
-    TextAnalysis.tfStoreWrite(base, store)
-    TextAnalysis.tfStoreMerge(spark, store, batch, epoch = 1L)
-    TextAnalysis.tfStoreCompact(spark, store, maxFilesPerBucket = 1)
-    val merged = Map("a" -> 3L, "b" -> 2L, "c" -> 3L)
-    assert(model() === merged)
-    // the state a crash leaves after tfStoreWriteHwm deleted the
-    // committed mark and before it renamed the staged one in
-    val mark = java.nio.file.Paths.get(store, "_graft_compacted_hwm")
-    val staged = java.nio.file.Paths.get(store,
-      "_graft_compacted_hwm_staging")
-    java.nio.file.Files.move(mark, staged)
-    assert(TextAnalysis.tfStoreHwm(spark, store) === 1L)
-    // epoch 1 was folded into the -1 totals: a replay must not land
-    TextAnalysis.tfStoreMerge(spark, store, batch, epoch = 1L)
-    assert(model() === merged)
-    // a torn staged mark next to the committed one is ignored
-    java.nio.file.Files.writeString(mark, "1")
-    java.nio.file.Files.writeString(staged, "")
-    assert(TextAnalysis.tfStoreHwm(spark, store) === 1L)
-    // an overwrite build clears both files with the rows
-    java.nio.file.Files.writeString(staged, "1")
-    TextAnalysis.tfStoreWrite(base, store)
-    assert(TextAnalysis.tfStoreHwm(spark, store) === Long.MinValue)
-    assert(!java.nio.file.Files.exists(staged))
   }
 
   test("tf store retraction: negated deltas equal a retrain without " +
